@@ -340,7 +340,6 @@ def min_label_components(
     edges: DataFrame,
     id_col: str = "id",
     nb_col: str = "nb",
-    max_iter: int = 20,
 ) -> DataFrame:
     """Connected components over a SYMMETRIC edge set by iterative min-label
     propagation with pointer jumping: every node starts labeled with itself;
@@ -349,6 +348,9 @@ def min_label_components(
     compression). The jump halves the effective distance to the component
     minimum, so convergence takes O(log diameter) rounds instead of
     O(diameter) — for a 1000-node chain, ~10 shuffle rounds, not 1000.
+    Rounds repeat until none lowers a label: labels only decrease and are
+    bounded below by the component minimum, so the loop terminates, and it
+    never returns unconverged labels.
     Returns (id, component) for nodes that appear in at least one edge;
     isolated nodes are the caller's left-join default.
 
@@ -421,7 +423,7 @@ def min_label_components(
         .withColumn("lbl", F.col("id"))
         .localCheckpoint(eager=False)
     )
-    for _ in range(max_iter):
+    while True:
         nb_min = (
             e.join(labels.withColumnRenamed("id", "dst_id"), F.col("dst") == F.col("dst_id"))
             .groupBy(F.col("src").alias("id"))

@@ -77,8 +77,13 @@ def _as_double(col: str) -> Column:
     return F.col(col).cast("array<double>")
 
 
+def _quote(name: str) -> str:
+    """Backtick-quote a caller-supplied column name for a SQL fragment."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _as_double_sql(col: str) -> str:
-    return f"cast({col} as array<double>)"
+    return f"cast({_quote(col)} as array<double>)"
 
 
 def sq_dist(a: Column | str, b: Column | str) -> Column:
@@ -493,38 +498,13 @@ _LUT_ROW_BYTES = 48
 
 
 def _broadcast_bytes_threshold(spark) -> int:
-    """``spark.sql.autoBroadcastJoinThreshold`` in bytes (0 if disabled).
-    Parses the full Spark byte-suffix set (b/k/kb/m/mb/g/gb/t/tb/p/pb,
-    case-insensitive — the same grammar as ``byteStringAsBytes``) and
-    RAISES on anything else: Spark validates the conf value itself, so an
-    unparseable string here means THIS parser is incomplete, and silently
-    defaulting would quietly mis-size every batch-conditional hint
-    (r15 review finding: '1tb' once fell through to the 10MB default)."""
-    raw = str(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    ).strip().lower()
-    mult = 1
-    for suf, mul in (
-        ("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-        ("tb", 1 << 40), ("pb", 1 << 50),
-        ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
-        ("t", 1 << 40), ("p", 1 << 50), ("b", 1),
-    ):
-        if raw.endswith(suf):
-            raw, mult = raw[: -len(suf)], mul
-            break
-    # int(raw), not int(float(raw)): Spark's byteStringAsBytes grammar is
-    # an INTEGER mantissa, and flooring a fractional one here (e.g.
-    # '0.5g' -> 0) would silently disable every batch-conditional hint
-    # instead of hitting the loud-failure path this docstring promises
-    # (r15 ADVICE).
-    try:
-        return max(int(raw) * mult, 0)
-    except ValueError:
-        raise ValueError(
-            "unparseable spark.sql.autoBroadcastJoinThreshold value "
-            f"{raw!r} — extend _broadcast_bytes_threshold's suffix table"
-        ) from None
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes (0 if disabled),
+    as Spark's own SQLConf parsed it — Spark rejects malformed values at
+    ``conf.set``, so there is no second grammar to keep in step."""
+    return max(
+        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold(),
+        0,
+    )
 
 
 #: memo for `_small_query_batch`: (plan semanticHash, lut rows, byte cap)
@@ -1088,7 +1068,9 @@ def semdedup_screen(
             {id_col: ids, cell_col: cells_out, "max_prev": max_prev}
         )
 
-    schema = f"{id_col} long, {cell_col} {cell_type}, max_prev double"
+    schema = (
+        f"{_quote(id_col)} long, {_quote(cell_col)} {cell_type}, max_prev double"
+    )
     from multi_source_financial_data_pipeline_spark.operators.grouped import _fold_partitions
 
     screened = (
@@ -1139,7 +1121,7 @@ def lsh_bucket(
     for p, plane in enumerate(planes):
         arr = ", ".join(f"cast({c:.1f} as double)" for c in plane)
         proj = (
-            f"aggregate(zip_with(cast({vec_col} as array<double>), array({arr}),"
+            f"aggregate(zip_with({_as_double_sql(vec_col)}, array({arr}),"
             f" (x, y) -> x * y), cast(0.0 as double), (acc, z) -> acc + z)"
         )
         terms.append(

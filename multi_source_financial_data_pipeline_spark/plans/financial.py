@@ -22,16 +22,10 @@ from multi_source_financial_data_pipeline_spark.plans.spec import QuerySpec
 from multi_source_financial_data_pipeline_spark.sources import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # session-timezone independence: date casts below must agree with the
-    # (timezone-naive) DuckDB oracle regardless of the driver's session tz
-    return load_table(spark, sf_dir, name)
-
-
 # --- W1-W4: flagship time-series feature query ------------------------------
 
 def q_ts_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     feat = timeseries_features(
         ev,
         key="user_id",
@@ -71,7 +65,7 @@ WINDOW
 # --- A1/A3/P5: null + predicate counts --------------------------------------
 
 def q_validation_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     total = F.count(F.lit(1))
     return ev.agg(
         total.alias("n_rows"),
@@ -95,7 +89,7 @@ FROM events
 # --- A2: duplicate stats + keep-last dedup ----------------------------------
 
 def q_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
+    ev = load_table(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
     return validation.duplicate_stats(ev, ["user_id", "event_date"])
 
 
@@ -111,7 +105,7 @@ FROM sizes WHERE n > 1
 
 
 def q_dedup_keep_last(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
+    ev = load_table(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
     out = validation.dedup_keep_last(ev, ["user_id", "event_date"], "event_id")
     return out.select("event_id", "user_id", "event_date", "value")
 
@@ -130,7 +124,7 @@ FROM (
 # --- A4: pooled z-score outliers --------------------------------------------
 
 def q_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("value", 1).over(w)
     ret = ev.withColumn("ret", F.col("value") / F.nullif(prev, F.lit(0.0)) - 1)
@@ -152,7 +146,7 @@ FROM base
 # --- A5/F5: missing business days -------------------------------------------
 
 def q_missing_bdays(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").withColumn("date", F.to_date("ts"))
+    ev = load_table(spark, sf_dir, "events").withColumn("date", F.to_date("ts"))
     return validation.missing_business_days(ev, "user_id", "date")
 
 
@@ -181,7 +175,7 @@ GROUP BY bo.user_id
 # --- A8/A9: per-series + global summaries -----------------------------------
 
 def q_series_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").withColumn("date", F.to_date("ts"))
+    ev = load_table(spark, sf_dir, "events").withColumn("date", F.to_date("ts"))
     return series_stats.per_series_summary(
         ev, series_col="event_type", date_col="date", value_col="value"
     )
@@ -200,7 +194,7 @@ FROM events GROUP BY event_type
 
 
 def q_global_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").withColumn("date", F.to_date("ts"))
+    ev = load_table(spark, sf_dir, "events").withColumn("date", F.to_date("ts"))
     return series_stats.global_summary(
         ev, series_col="event_type", date_col="date", value_col="value"
     )
@@ -219,7 +213,7 @@ FROM events
 # --- S7/A7: table stats ------------------------------------------------------
 
 def q_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("l_orderkey").alias("n_orders"),
@@ -252,7 +246,7 @@ def q_database_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     parts = []
     for name, key, datecol in specs:
-        t = _t(spark, sf_dir, name)
+        t = load_table(spark, sf_dir, name)
         # dates emitted as ISO strings: a dateless table's NULL range then
         # stays a plain string NULL in both engines (typed NULL DATE columns
         # drift between pandas dtypes across engines)
@@ -313,8 +307,8 @@ CROSS_TOLERANCE_PCT = 0.5
 
 
 def _order_sources(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     primary = orders.select("o_orderkey", F.col("o_totalprice").alias("yahoo_close"))
     secondary = li.groupBy("l_orderkey").agg(
         F.sum(F.col("l_extendedprice").cast("decimal(12,2)"))
@@ -370,7 +364,7 @@ def q_discrepancy_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     disc = crossval.compare_sources(
         primary, secondary, on=["o_orderkey"], tolerance_pct=CROSS_TOLERANCE_PCT
     )
-    base = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    base = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     out = crossval.merge_discrepancy_flags(base, disc, on=["o_orderkey"])
     return out.select("o_orderkey", "o_totalprice", "discrepancy_flag")
 
@@ -395,7 +389,7 @@ FROM orders o LEFT JOIN disc d ON o.o_orderkey = d.o_orderkey
 # --- K2/J3: first-request-wins anti-join ------------------------------------
 
 def q_first_request_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
+    ev = load_table(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
     incoming = ev.filter(F.col("event_id") % 2 == 1)
     existing = ev.filter(F.col("event_id") % 2 == 0)
     kept = crossval.first_request_wins(incoming, existing, ["user_id", "event_date"])
@@ -422,7 +416,7 @@ WHERE NOT EXISTS (
 # --- K6: ledger latest-status view ------------------------------------------
 
 def q_ledger_latest_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders").withColumn(
+    orders = load_table(spark, sf_dir, "orders").withColumn(
         "o_orderdate", F.to_date("o_orderdate")
     )
     latest = series_stats.latest_per_key(
@@ -463,7 +457,7 @@ def q_return_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a scale axis)."""
     from multi_source_financial_data_pipeline_spark.operators.timeseries import pct_change
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy("event_type", F.to_date("ts").alias("date")).agg(
         (
             F.sum(F.col("value").cast("decimal(12,2)")).cast("double")
@@ -501,7 +495,7 @@ def q_vol_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolling sample stds (20-row frame, pandas min_periods semantics), the
     membership decision taken on 6-decimal-rounded statistics on both
     engines."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     out = series_stats.rolling_vol_outliers(
         ev, key="user_id", order=["ts", "event_id"], value_col="value",
         window_n=20, sigmas=3.0,
@@ -532,7 +526,7 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-score arithmetic (src/output_manager.py:149-190) with the
     reference's dead-branch wiring fixed (SURVEY.md §4): inputs are this
     engine's own validation aggregates."""
-    ev = _t(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
+    ev = load_table(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
     # null / nonpositive / duplicate counts all derive from ONE per-(user,
     # day) pre-aggregate — one scan + one map-side-combined shuffle, where
     # the three-separate-aggregates formulation reads events three times
@@ -623,7 +617,7 @@ def q_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     collection; for 100 TB-scale groups the sketch path
     (`percentile_approx`, accuracy-bounded in tests/test_scale_ops.py) is
     the substitute, one pass and mergeable."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy("event_type")
         .agg(
@@ -664,7 +658,7 @@ def q_trailing_7d_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical regardless of either engine's within-frame accumulation order
     (DuckDB windows aggregate via segment trees — float order differs).
     """
-    ev = _t(spark, sf_dir, "events").withColumn("ts_us", F.unix_micros(F.col("ts")))
+    ev = load_table(spark, sf_dir, "events").withColumn("ts_us", F.unix_micros(F.col("ts")))
     w = trailing_range_frame("user_id", "ts_us", _7D_US)
     return ev.select(
         "event_id",
@@ -694,7 +688,7 @@ def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     day, unobserved days forward-filled. Spine rows are generated per key
     from 2-row bounds (sequence + explode) — never collected, never a
     calendar-table join; fill is one unbounded-preceding window pass."""
-    ev = _t(spark, sf_dir, "events").withColumn("date", F.to_date("ts"))
+    ev = load_table(spark, sf_dir, "events").withColumn("date", F.to_date("ts"))
     return gap_fill_daily(
         ev, "user_id", "date", "value", order_cols=("ts", "event_id")
     )
@@ -731,7 +725,7 @@ def q_gap_fill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     the time-weighted line between their surrounding observations (see
     operators/timeseries.gap_fill_interp for the two-direction window
     shape — both fills ride ONE key-ordered exchange)."""
-    ev = _t(spark, sf_dir, "events").withColumn("date", F.to_date("ts"))
+    ev = load_table(spark, sf_dir, "events").withColumn("date", F.to_date("ts"))
     from multi_source_financial_data_pipeline_spark.operators.timeseries import gap_fill_interp
 
     return gap_fill_interp(
@@ -796,7 +790,7 @@ def q_weekly_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a groupBy on the SAME keys folds open/high/low/close/volume in one
     aggregate — Catalyst reuses the window's hash partitioning, so the
     whole query is one exchange. Monday week-start in both engines."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         # project the bar key FIRST so the window partitioning and the
         # final groupBy share the exact same attribute — otherwise the
@@ -837,7 +831,7 @@ def q_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy min reuses the window's user partitioning (one exchange, same
     pattern as weekly_bars). Bit-exact with no rounding: the ratio's
     operands are raw input doubles, min/max are comparisons."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.col("ts").asc(), F.col("event_id").asc())
@@ -866,7 +860,7 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     is engine-independent without rounding; NO quantile_cont interpolation,
     whose a+(b−a)·q formula differs in the last ulp). Two ranked window
     passes + two small per-user joins (AQE-decided), no collects."""
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "value")
+    ev = load_table(spark, sf_dir, "events").select("user_id", "event_id", "value")
 
     def _median(df: DataFrame, col: str, out: str) -> DataFrame:
         w = Window.partitionBy("user_id").orderBy(F.col(col).asc(), F.col("event_id").asc())
@@ -979,7 +973,7 @@ def q_bars_4h(spark: SparkSession, sf_dir: str) -> DataFrame:
     bars. Bar identity crosses engines as epoch SECONDS (bar starts are
     whole multiples of 14400) — no timestamp/timezone surface."""
     bars = resample_bars(
-        _t(spark, sf_dir, "events"),
+        load_table(spark, sf_dir, "events"),
         "user_id",
         "ts",
         "value",
@@ -1036,7 +1030,7 @@ def q_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange shape as ts_features); bands are null until a full window
     (min_periods), classification compares against the ROUNDED bands so
     both engines branch on bit-identical values."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.col("ts").asc(), F.col("event_id").asc())
@@ -1097,7 +1091,7 @@ def q_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     null until 14 diffs exist, 100 when losses are zero, null when the
     series is flat (0/0). Two stacked windows on ONE user partitioning
     (lag, then the rolling sums) — single exchange."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w_ord = Window.partitionBy("user_id").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
     )
@@ -1221,7 +1215,7 @@ def q_atr(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag window, and the rolling window (stacked same-partitioning windows).
     TR operands are raw doubles (comparisons + identical IEEE ops → exact);
     the 14-bar mean rounds at 6 (window-frame summation-order convention)."""
-    bars = _daily_bars(_t(spark, sf_dir, "events"))
+    bars = _daily_bars(load_table(spark, sf_dir, "events"))
     w_ord = Window.partitionBy("user_id").orderBy(F.col("day").asc())
     prev_close = F.lag("close_value").over(w_ord)
     h, low = F.col("high_value"), F.col("low_value")
@@ -1279,7 +1273,7 @@ _W_LO = repr(float(RSI_N))  # 14.0
 
 def q_rsi_wilder(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = grouped.rsi_wilder_last(
-        _t(spark, sf_dir, "events"),
+        load_table(spark, sf_dir, "events"),
         key="user_id",
         ts_col="ts",
         tiebreak="event_id",
@@ -1348,7 +1342,7 @@ def q_rsi_bars_4h(spark: SparkSession, sf_dir: str) -> DataFrame:
     observation), and the oracle replays the identical mean-seeded
     EWMA fold over the same bar-ordered list."""
     bars = resample_bars(
-        _t(spark, sf_dir, "events"),
+        load_table(spark, sf_dir, "events"),
         "user_id",
         "ts",
         "value",
@@ -1423,7 +1417,7 @@ FROM wd
 
 
 def q_atr_wilder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bars = _daily_bars(_t(spark, sf_dir, "events"))
+    bars = _daily_bars(load_table(spark, sf_dir, "events"))
     w_ord = Window.partitionBy("user_id").orderBy(F.col("day").asc())
     prev_close = F.lag("close_value").over(w_ord)
     h, low = F.col("high_value"), F.col("low_value")
@@ -1475,7 +1469,7 @@ def q_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
     running-summed per user in day order (volume = bar event count). All
     integer/comparison arithmetic — bit-exact, no rounding. Same single
     user-hash exchange as q_atr."""
-    bars = _daily_bars(_t(spark, sf_dir, "events"))
+    bars = _daily_bars(load_table(spark, sf_dir, "events"))
     w_ord = Window.partitionBy("user_id").orderBy(F.col("day").asc())
     prev_close = F.lag("close_value").over(w_ord)
     sign = (
@@ -1531,7 +1525,7 @@ def q_stochastic(spark: SparkSession, sf_dir: str) -> DataFrame:
     %D = 3-row SMA of %K. %K is bit-exact (window min/max are comparisons,
     then identical IEEE ops); %D rounds at 6. Stacked windows on ONE user
     partitioning — single exchange, same shape as rsi_14."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w_n = (
         Window.partitionBy("user_id")
         .orderBy(F.col("ts").asc(), F.col("event_id").asc())
@@ -1588,7 +1582,7 @@ def q_rolling_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user return windows → beta from explicit window sums
     (n·Σxy − Σx·Σy)/(n·Σyy − Σy²), rounded at 6. The index side is bounded
     by the calendar, not the corpus — broadcast stays cheap at 100 TB."""
-    bars = _daily_bars(_t(spark, sf_dir, "events")).select(
+    bars = _daily_bars(load_table(spark, sf_dir, "events")).select(
         "user_id", "day", "close_value"
     )
     # equal-weight index: decimal-exact mean over the 2-decimal close grid
@@ -1695,7 +1689,7 @@ def q_seasonal_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact and the means are DECIMAL-summed (order-proof); the final ratio
     divides two exact doubles. One user-hash exchange end to end (the
     _daily_bars contract)."""
-    bars = _daily_bars(_t(spark, sf_dir, "events")).select(
+    bars = _daily_bars(load_table(spark, sf_dir, "events")).select(
         "user_id", "day", "close_value"
     )
     w = Window.partitionBy("user_id").orderBy(F.col("day").asc())

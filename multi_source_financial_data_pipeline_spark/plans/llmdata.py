@@ -21,10 +21,6 @@ from multi_source_financial_data_pipeline_spark.plans.spec import QuerySpec
 from multi_source_financial_data_pipeline_spark.sources import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # shared SQL fragments (mirror operators/text.py + operators/dedup.py)
 _SQL_TOKS = "regexp_split_to_array(text, '\\s+')"
 _SQL_SHINGLES = (
@@ -115,7 +111,7 @@ def _sql_x_as(prefix: str) -> str:
 # --- token counting ----------------------------------------------------------
 
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.token_stats(_t(spark, sf_dir, "documents"))
+    return text.token_stats(load_table(spark, sf_dir, "documents"))
 
 
 SQL_TOKEN_STATS = f"""
@@ -135,7 +131,7 @@ SAMPLE_RATES = {"en": 1.0, "de": 0.5, "fr": 0.5, "es": 0.25, "zh": 0.25}
 
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampling.stratified_sample(
-        _t(spark, sf_dir, "documents"), "lang", SAMPLE_RATES
+        load_table(spark, sf_dir, "documents"), "lang", SAMPLE_RATES
     ).select("doc_id", "lang", "source")
 
 
@@ -168,7 +164,7 @@ def q_sample_k_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     of corpus size."""
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     h = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
     ).cast("bigint")
@@ -223,7 +219,7 @@ def q_weighted_sample_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULLs but DuckDB raises on, a silent cross-engine divergence."""
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     h32 = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
     ).cast("bigint")
@@ -287,7 +283,7 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 100 TB pipeline keeps when the exact vocab count is too wide,
     alongside KMV for distincts. Everything after the token explode is
     O(d·w + k) state; the exact branch exists as measured ground truth."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(F.explode(text.tokens(F.col("text"))).alias("tok"))
     rows = toks.select(
         "tok",
@@ -357,7 +353,7 @@ GROUP BY p.tok, p.n_exact
 # --- BPE-ish subword counting ------------------------------------------------
 
 def q_subword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.subword_stats(_t(spark, sf_dir, "documents"))
+    return text.subword_stats(load_table(spark, sf_dir, "documents"))
 
 
 #: Java regex and RE2 (DuckDB) both run leftmost-first alternation over this
@@ -379,7 +375,7 @@ FROM d
 # --- language-ID heuristic ---------------------------------------------------
 
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.language_id(_t(spark, sf_dir, "documents"))
+    return text.language_id(load_table(spark, sf_dir, "documents"))
 
 
 _STOPLIST = ", ".join(f"'{w}'" for w in text.EN_STOPWORDS)
@@ -396,7 +392,7 @@ FROM d
 # --- structural quality scoring ---------------------------------------------
 
 def q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.doc_quality(_t(spark, sf_dir, "documents"))
+    return text.doc_quality(load_table(spark, sf_dir, "documents"))
 
 
 SQL_DOC_QUALITY = f"""
@@ -422,7 +418,7 @@ TFIDF_K = 5
 
 
 def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.tfidf_topk(_t(spark, sf_dir, "documents"), k=TFIDF_K)
+    return text.tfidf_topk(load_table(spark, sf_dir, "documents"), k=TFIDF_K)
 
 
 SQL_TFIDF_TOPK = f"""
@@ -450,7 +446,7 @@ SELECT doc_id, term, tf, df, tfidf, rank FROM (
 # --- fingerprint + exact dedup ----------------------------------------------
 
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = text.fingerprint(_t(spark, sf_dir, "documents"))
+    out = text.fingerprint(load_table(spark, sf_dir, "documents"))
     return out.select("doc_id", "fingerprint")
 
 
@@ -462,7 +458,7 @@ FROM documents
 
 
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fp = text.fingerprint(_t(spark, sf_dir, "documents"))
+    fp = text.fingerprint(load_table(spark, sf_dir, "documents"))
     return dedup.exact_dedup_groups(fp)
 
 
@@ -485,7 +481,7 @@ BAND_SIZE = 2
 
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = dedup.minhash_signatures(
-        _t(spark, sf_dir, "documents"), num_hashes=NUM_HASHES
+        load_table(spark, sf_dir, "documents"), num_hashes=NUM_HASHES
     )
     return sig.select("doc_id", *[f"mh{j}" for j in range(NUM_HASHES)])
 
@@ -501,7 +497,7 @@ FROM sh
 
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = dedup.minhash_signatures(
-        _t(spark, sf_dir, "documents"), num_hashes=NUM_HASHES, keep_all_docs=False
+        load_table(spark, sf_dir, "documents"), num_hashes=NUM_HASHES, keep_all_docs=False
     )
     return dedup.lsh_candidate_pairs(sig, num_hashes=NUM_HASHES, band_size=BAND_SIZE)
 
@@ -539,7 +535,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fine-grained and pair work stays linear-ish at corpus scale — unlike a
     low-cardinality key (language, source), which degenerates to near-all-
     pairs within each block."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sig = dedup.minhash_signatures(docs, num_hashes=1)
     return dedup.ngram_jaccard_pairs(
         sig, block_col="mh0", threshold=JACCARD_THRESHOLD
@@ -584,7 +580,7 @@ def q_semdedup_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
     is corpus-proportional (n x nlist dots); the hierarchical assign pays
     n * 2 * sqrt(nlist) dots instead. The oracle replays both levels with
     the shared round(cos, 6) / lowest-id tiebreak rule."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     nlist = _adaptive_nlist(emb.count())
     assign = similarity.semdedup_assign(emb, nlist=nlist)
     return similarity.semdedup_screen(assign, COS_THRESHOLD)
@@ -603,7 +599,7 @@ def q_semdedup_kept_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-nlist index and this one coexist)."""
     import os
 
-    nlist = _adaptive_nlist(_t(spark, sf_dir, "embeddings").count())
+    nlist = _adaptive_nlist(load_table(spark, sf_dir, "embeddings").count())
     index_dir = _ensure_ivf_index(spark, sf_dir, nlist=nlist, two_level=True)
     cells = spark.read.parquet(os.path.join(index_dir, "cells"))
     a = cells.select(
@@ -716,7 +712,7 @@ def q_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     join adds a linear scan, never a second signature shuffle. Exactness:
     est = equal-count/8.0 (/2^3 — exact), exact Jaccard = one division,
     per-pair error rounded to the 1e-6 grid and summed as DECIMAL."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sig = dedup.minhash_signatures(docs, num_hashes=NUM_HASHES, keep_all_docs=False)
     pairs = dedup.lsh_candidate_pairs(sig, num_hashes=NUM_HASHES, band_size=BAND_SIZE)
     def _mh(a: int, b: int):
@@ -822,7 +818,7 @@ def q_quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     largest duplicate group) — then a 1-row rollup, unpivoted to
     (stage, n_docs) rows. Counts are integers — engine-exact by
     construction."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     quality = text.quality_columns("text")["quality_score"]
     fp = F.md5(F.concat_ws(" ", text.tokens(F.lower(F.col("text")))))
     flagged = docs.select(
@@ -895,7 +891,7 @@ HIST_BUCKET = 10
 
 
 def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.vocab_topk(_t(spark, sf_dir, "documents"), k=VOCAB_K)
+    return text.vocab_topk(load_table(spark, sf_dir, "documents"), k=VOCAB_K)
 
 
 SQL_VOCAB_TOPK = f"""
@@ -914,7 +910,7 @@ SELECT t AS token, n_occurrences, n_docs, rank FROM (
 
 def q_token_len_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.token_length_histogram(
-        _t(spark, sf_dir, "documents"), bucket_width=HIST_BUCKET
+        load_table(spark, sf_dir, "documents"), bucket_width=HIST_BUCKET
     )
 
 
@@ -928,7 +924,7 @@ FROM n GROUP BY 1
 # --- text scrubbing + exact length quantiles ---------------------------------
 
 def q_doc_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.scrub(_t(spark, sf_dir, "documents"))
+    return text.scrub(load_table(spark, sf_dir, "documents"))
 
 
 SQL_DOC_SCRUB = """
@@ -946,7 +942,7 @@ QUANTILES = (0.5, 0.9, 0.99)
 
 
 def q_doc_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.length_quantiles(_t(spark, sf_dir, "documents"), qs=QUANTILES)
+    return text.length_quantiles(load_table(spark, sf_dir, "documents"), qs=QUANTILES)
 
 
 _SQL_QPICKS = ", ".join(
@@ -973,7 +969,7 @@ WINNOW_MOD = 8
 
 def q_doc_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.winnow_fingerprints(
-        _t(spark, sf_dir, "documents"), mod=WINNOW_MOD
+        load_table(spark, sf_dir, "documents"), mod=WINNOW_MOD
     )
 
 
@@ -988,7 +984,7 @@ SELECT DISTINCT doc_id, fp FROM h WHERE fp % {WINNOW_MOD} = 0
 # --- per-label embedding centroids (IVF coarse-quantizer construction) -------
 
 def q_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return similarity.label_centroids(_t(spark, sf_dir, "embeddings"))
+    return similarity.label_centroids(load_table(spark, sf_dir, "embeddings"))
 
 
 SQL_EMBEDDING_CENTROIDS = """
@@ -1062,7 +1058,7 @@ def q_neardup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     a fixpoint: canonical_id(canonical_id(x)) = canonical_id(x), safe for
     downstream "keep canonical only" dedup). Pair work is bounded by the
     LSH banding; the component loop runs only over edge endpoints."""
-    canon = _neardup_canon(_t(spark, sf_dir, "documents"))
+    canon = _neardup_canon(load_table(spark, sf_dir, "documents"))
     return canon.withColumn("is_dup", F.col("canonical_id") != F.col("doc_id"))
 
 
@@ -1119,7 +1115,7 @@ def q_curation_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding). Dedup is decided on the FULL corpus before quality filtering —
     the usual order, so a low-quality near-dup of a kept doc can't sneak in
     as 'novel' later."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     canon = (
         q_neardup_verified(spark, sf_dir)
         .filter(~F.col("is_dup"))
@@ -1173,7 +1169,7 @@ WHERE swr >= 0.05 AND quality_score >= {CURATION_QUALITY_MIN}
 # --- SimHash -----------------------------------------------------------------
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.simhash32(_t(spark, sf_dir, "documents"))
+    return dedup.simhash32(load_table(spark, sf_dir, "documents"))
 
 
 SQL_SIMHASH = f"""
@@ -1199,13 +1195,17 @@ TOPK = 10
 N_QUERIES = 10
 
 
-
-def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
+def _query_slice(vectors: DataFrame) -> DataFrame:
+    """The evaluation query batch: the first N_QUERIES rows of a
+    (vec_id, embedding) frame, keyed as ``query_id``."""
+    return vectors.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return similarity.brute_force_topk(emb, queries, k=TOPK)
+
+
+def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings")
+    return similarity.brute_force_topk(emb, _query_slice(emb), k=TOPK)
 
 
 SQL_ANN_TOPK = f"""
@@ -1244,17 +1244,14 @@ def _adaptive_nlist(n_vectors: int) -> int:
 
 def q_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivf_assign(
-        _t(spark, sf_dir, "embeddings"), nlist=IVF_NLIST
+        load_table(spark, sf_dir, "embeddings"), nlist=IVF_NLIST
     ).select("vec_id", "cell", "cell_sim")
 
 
 def q_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    emb = load_table(spark, sf_dir, "embeddings")
     return similarity.ivf_topk(
-        emb, queries, k=TOPK, nlist=IVF_NLIST, nprobe=IVF_NPROBE
+        emb, _query_slice(emb), k=TOPK, nlist=IVF_NLIST, nprobe=IVF_NPROBE
     )
 
 
@@ -1335,7 +1332,7 @@ def _ensure_ivf_index(
         ident.update({"refined": True, "km_iters": KM_ITERS})
 
     def _build(build_dir: str) -> None:
-        emb = _t(spark, sf_dir, "embeddings")
+        emb = load_table(spark, sf_dir, "embeddings")
         centers = (
             similarity.kmeans_centroids(
                 emb, k=nlist, iters=KM_ITERS
@@ -1392,7 +1389,7 @@ def _ensure_pq_index(
     )
 
     def _build(build_dir: str) -> None:
-        emb = _t(spark, sf_dir, "embeddings")
+        emb = load_table(spark, sf_dir, "embeddings")
         centers = (
             similarity.kmeans_centroids(
                 emb, k=IVF_NLIST, iters=KM_ITERS
@@ -1466,9 +1463,7 @@ def q_ann_topk_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     or re-assigned; only the tiny query slice reads the source table. Same
     nlist/nprobe, same results, shared oracle."""
     index_dir = _ensure_ivf_index(spark, sf_dir)
-    queries = _t(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") < N_QUERIES
-    ).select(F.col("vec_id").alias("query_id"), "embedding")
+    queries = _query_slice(load_table(spark, sf_dir, "embeddings"))
     return similarity.ivf_topk_probe(
         spark, index_dir, queries, k=TOPK, nprobe=IVF_NPROBE
     )
@@ -1489,9 +1484,7 @@ def q_ann_topk_ivf_refined_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe chain — assignment, probing and scoring all at the refined
     centers, bit-for-bit."""
     index_dir = _ensure_ivf_index(spark, sf_dir, refined=True)
-    queries = _t(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") < N_QUERIES
-    ).select(F.col("vec_id").alias("query_id"), "embedding")
+    queries = _query_slice(load_table(spark, sf_dir, "embeddings"))
     return similarity.ivf_topk_probe(
         spark, index_dir, queries, k=TOPK, nprobe=IVF_NPROBE
     )
@@ -1627,7 +1620,7 @@ def _ensure_ivf_upsert_index(spark: SparkSession, sf_dir: str) -> str:
     )
 
     def _build(build_dir: str) -> None:
-        base, delta = _upsert_frames(_t(spark, sf_dir, "embeddings"))
+        base, delta = _upsert_frames(load_table(spark, sf_dir, "embeddings"))
         similarity.build_ivf_index(spark, base, build_dir, nlist=IVF_NLIST)
         similarity.ivf_index_upsert(spark, build_dir, delta)
 
@@ -1655,9 +1648,7 @@ def q_ivf_index_upsert_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     between rewriting ~delta-sized partitions and re-materializing the
     corpus."""
     index_dir = _ensure_ivf_upsert_index(spark, sf_dir)
-    queries = _t(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") < N_QUERIES
-    ).select(F.col("vec_id").alias("query_id"), "embedding")
+    queries = _query_slice(load_table(spark, sf_dir, "embeddings"))
     return similarity.ivf_topk_probe(
         spark, index_dir, queries, k=TOPK, nprobe=IVF_NPROBE
     )
@@ -1684,42 +1675,37 @@ def _sql_ew_upserted_cte() -> str:
 SQL_IVF_INDEX_UPSERT = _sql_ann_topk_ivf(_sql_ew_upserted_cte())
 
 
-# --- ANN quality evaluation: IVF recall@k vs the exact baseline --------------
+# --- ANN quality evaluation: recall@k vs the exact baseline -----------------
 
-def q_ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Evaluation harness for the approximate index: recall@k of the
-    IVF-probed top-k against the brute-force exact top-k, in ONE plan
-    (the brute side IS the ground truth — this is how you tune
-    nlist/nprobe before deploying). Per-query hit counts via a left-semi
-    join of the exact result against the approximate one; the summary stays
-    integer until two final divisions (engine-exact)."""
+def _recall_at_k(spark: SparkSession, sf_dir: str, approx: DataFrame) -> DataFrame:
+    """The evaluation harness every approximate index shares: recall@k of
+    ``approx`` (a (query_id, cand_id) top-k over the `_query_slice` batch)
+    against the brute-force exact top-k, in ONE plan (the brute side IS the
+    ground truth). Per-query hit counts via a left-semi join of the exact
+    result against the approximate one; the summary stays integer until
+    two final divisions (engine-exact).
+
+    ``approx`` and the per-query counts are |queries|·k and |queries| rows
+    (bounded by the query batch, never the corpus), so both are broadcast:
+    the hit semi-join and the left-outer attach stay on the brute side's
+    query_id partitioning instead of paying sort-merge exchanges."""
     brute = q_ann_topk(spark, sf_dir).select("query_id", "cand_id")
-    approx = q_ann_topk_ivf(spark, sf_dir).select("query_id", "cand_id")
-    # approx is |queries|·k rows (bounded by the query batch, never the
-    # corpus) — broadcast it so the hit semi-join and the per-query count
-    # stay on the brute side's existing query_id partitioning instead
-    # of paying two sort-merge exchanges (guide §3.1; r19)
-    hits = brute.join(F.broadcast(approx), ["query_id", "cand_id"], "left_semi")
+    hits = brute.join(
+        F.broadcast(approx.select("query_id", "cand_id")),
+        ["query_id", "cand_id"],
+        "left_semi",
+    )
     # the query-id set comes straight from the source table — deriving it
     # from `brute` would reference that subtree twice and execute the whole
-    # exact pipeline twice (the mixture_weights double-scan bug, again)
-    qset = (
-        _t(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"))
-    )
-    per_q = (
-        qset.join(
-            # ≤|queries| rows after the count — broadcast keeps the
-            # left-outer attach exchange-free (guide §3.1; r19)
-            F.broadcast(
-                hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits"))
-            ),
-            "query_id",
-            "left",
-        )
-        .select("query_id", F.coalesce("n_hits", F.lit(0)).alias("n_hits"))
-    )
+    # exact pipeline twice
+    qset = _query_slice(load_table(spark, sf_dir, "embeddings")).select("query_id")
+    per_q = qset.join(
+        F.broadcast(
+            hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits"))
+        ),
+        "query_id",
+        "left",
+    ).select("query_id", F.coalesce("n_hits", F.lit(0)).alias("n_hits"))
     return per_q.agg(
         F.count(F.lit(1)).alias("n_queries"),
         (
@@ -1730,18 +1716,19 @@ def q_ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_ANN_RECALL_IVF = f"""
-WITH brute AS (SELECT query_id, cand_id FROM ({SQL_ANN_TOPK})),
-approx AS (SELECT query_id, cand_id FROM ({SQL_ANN_TOPK_IVF})),
+#: `_recall_at_k`'s oracle: follows any WITH chain whose last CTE is
+#: ``approx`` (query_id, cand_id); that chain must not define brute,
+#: joined, qset or per_q.
+_SQL_RECALL_TAIL = f"""brute AS (SELECT query_id, cand_id FROM ({SQL_ANN_TOPK})),
 joined AS (
   SELECT b.query_id FROM brute b
   JOIN approx a ON a.query_id = b.query_id AND a.cand_id = b.cand_id
 ),
-qs AS (SELECT vec_id AS query_id FROM embeddings WHERE vec_id < {N_QUERIES}),
+qset AS (SELECT vec_id AS query_id FROM embeddings WHERE vec_id < {N_QUERIES}),
 per_q AS (
-  SELECT qs.query_id, count(j.query_id) AS n_hits
-  FROM qs LEFT JOIN joined j ON j.query_id = qs.query_id
-  GROUP BY qs.query_id
+  SELECT qset.query_id, count(j.query_id) AS n_hits
+  FROM qset LEFT JOIN joined j ON j.query_id = qset.query_id
+  GROUP BY qset.query_id
 )
 SELECT count(*) AS n_queries,
        CAST(sum(n_hits) AS DOUBLE) / CAST(count(*) * {TOPK} AS DOUBLE)
@@ -1751,6 +1738,17 @@ FROM per_q
 """
 
 
+def q_ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """recall@k of the IVF-probed top-k — how you tune nlist/nprobe before
+    deploying."""
+    return _recall_at_k(spark, sf_dir, q_ann_topk_ivf(spark, sf_dir))
+
+
+SQL_ANN_RECALL_IVF = f"""
+WITH approx AS (SELECT query_id, cand_id FROM ({SQL_ANN_TOPK_IVF})),
+{_SQL_RECALL_TAIL}"""
+
+
 # --- embedding near-duplicate pairs -----------------------------------------
 
 COS_THRESHOLD = 0.3
@@ -1758,7 +1756,7 @@ COS_THRESHOLD = 0.3
 
 def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.cosine_neardup_pairs(
-        _t(spark, sf_dir, "embeddings"), threshold=COS_THRESHOLD
+        load_table(spark, sf_dir, "embeddings"), threshold=COS_THRESHOLD
     )
 
 
@@ -1804,7 +1802,7 @@ def _sql_bucket(num_planes: int, ref: str = "v") -> str:
 
 def q_lsh_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = similarity.lsh_bucket(
-        _t(spark, sf_dir, "embeddings"), num_planes=LSH_BUCKET_PLANES, dim=LSH_DIM
+        load_table(spark, sf_dir, "embeddings"), num_planes=LSH_BUCKET_PLANES, dim=LSH_DIM
     )
     return out.select("vec_id", "bucket")
 
@@ -1817,7 +1815,7 @@ SELECT vec_id, {_sql_bucket(LSH_BUCKET_PLANES)} AS bucket FROM e
 
 def q_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.lsh_neardup_pairs(
-        _t(spark, sf_dir, "embeddings"),
+        load_table(spark, sf_dir, "embeddings"),
         threshold=COS_THRESHOLD,
         num_planes=LSH_NEARDUP_PLANES,
         dim=LSH_DIM,
@@ -1842,7 +1840,7 @@ def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     repetition_stats). Entirely shuffle-free since r11: both metrics are
     doc-local array math (trigrams via array_distinct, bigram mode via a
     sorted-array max-run fold), one map-only pass over one scan."""
-    return text.repetition_stats(_t(spark, sf_dir, "documents"))
+    return text.repetition_stats(load_table(spark, sf_dir, "documents"))
 
 
 SQL_DOC_REPETITION = f"""
@@ -1891,7 +1889,7 @@ def q_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead would execute the full scan+tokenize subtree twice."""
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     per_source = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(text.tokens(F.col("text"))).cast("long")).alias("n_tokens"),
@@ -1921,7 +1919,7 @@ def q_mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     exist before any row can be filtered."""
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     per_source = docs.groupBy("source").agg(
         F.sum(F.size(text.tokens(F.col("text"))).cast("long")).alias("n_tokens"),
     )
@@ -1990,7 +1988,7 @@ def q_dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.dup_span_stats) — the substring-granularity dedup
     signal doc-level fingerprints miss."""
     return dedup.dup_span_stats(
-        _t(spark, sf_dir, "documents"), n=DUP_SPAN_N
+        load_table(spark, sf_dir, "documents"), n=DUP_SPAN_N
     )
 
 
@@ -2039,7 +2037,7 @@ def q_unigram_prob(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus tokens, three shuffles, no subtree executed twice."""
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     pairs = docs.select(
         "doc_id", F.explode(text.tokens(F.col("text"))).alias("tok")
     ).groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c_dt"))
@@ -2095,7 +2093,7 @@ def q_token_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Simpson stays INTEGER until one division, hence hash-exact). One
     explode → (source, token) hash-agg → per-source rollup; the squares
     sum as integers."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     counts = (
         docs.select("source", F.explode(text.tokens(F.col("text"))).alias("tok"))
         .groupBy("source", "tok")
@@ -2150,7 +2148,7 @@ def q_bigram_prob(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens throughout."""
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     pairs = (
         docs.select(
             "doc_id", F.explode(text.word_ngrams(F.col("text"), 2)).alias("gram")
@@ -2225,7 +2223,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     set from the corpus, not of the operator. Real decontamination runs a
     FIXED benchmark set against a growing corpus; the cap models exactly
     that (≤ 25 probe docs at ANY scale), restoring the linear contract."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     is_probe = (F.col("doc_id") % DECON_PROBE_MOD == 0) & (
         F.col("doc_id") < DECON_PROBE_CAP
     )
@@ -2283,7 +2281,7 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefilter→exact-verify deployment). False negatives are impossible
     (n_bloom_pos ≥ n_exact_pos row-wise — pinned in tests), so the
     prefilter never loses a contaminated document."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     is_probe = (F.col("doc_id") % DECON_PROBE_MOD == 0) & (
         F.col("doc_id") < DECON_PROBE_CAP
     )
@@ -2401,7 +2399,7 @@ def _ensure_bloom_filter(spark: SparkSession, sf_dir: str) -> str:
     )
 
     def _build(build_dir: str) -> None:
-        docs = _t(spark, sf_dir, "documents")
+        docs = load_table(spark, sf_dir, "documents")
         is_probe = (F.col("doc_id") % DECON_PROBE_MOD == 0) & (
             F.col("doc_id") < DECON_PROBE_CAP
         )
@@ -2437,7 +2435,7 @@ def q_bloom_decontaminate_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     filter_dir = _ensure_bloom_filter(spark, sf_dir)
     bloom = spark.read.parquet(os.path.join(filter_dir, "filter"))
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     is_probe = (F.col("doc_id") % DECON_PROBE_MOD == 0) & (
         F.col("doc_id") < DECON_PROBE_CAP
     )
@@ -2522,7 +2520,7 @@ def q_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup joins status back to the (doc_id, source) projection and
     reduces to |sources| x 4 rows. This is the primitive that turns a
     100 TB reprocess into an added+changed-only delta run."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     h = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
     ).cast("bigint")
@@ -2592,7 +2590,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash agg joined back, never a window. Only digests and ids shuffle.
     At 100 TB this replaces re-deduping the corpus with work proportional
     to the DELTA — the measured point of the whole snapshot family."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     h = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
     ).cast("bigint")
@@ -2704,7 +2702,7 @@ def q_dedup_after_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     over |touched members| docs only (bounded by |delta| × max component
     size, never the corpus), and its pair work is LSH-banded within
     that slice."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # ONE MinHash→LSH→verify pass (r18 VERDICT item 3; was two): the
     # verified edge list is computed once, lineage-cut (both component
     # passes and the endpoint restriction reference it), and the
@@ -2998,7 +2996,7 @@ def q_manifest_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     should widen h2 to the full 128-bit md5 folded as two 64-bit halves;
     the registered query keeps 32-bit h2 because the oracle replays the
     identical arithmetic."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     base = _snap_base(docs)
 
     def manifest(skip_col: str, fp_col: str) -> DataFrame:
@@ -3203,7 +3201,7 @@ def _ensure_manifest_index(spark: SparkSession, sf_dir: str) -> str:
     )
 
     def _build(build_dir: str) -> None:
-        base = _snap_base(_t(spark, sf_dir, "documents"))
+        base = _snap_base(load_table(spark, sf_dir, "documents"))
         old = base.filter(~F.col("__skip_old")).select(
             "shard", "doc_id", F.col("fp_old").alias("fp")
         )
@@ -3241,7 +3239,7 @@ def q_manifest_delta_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     index_dir = _ensure_manifest_index(spark, sf_dir)
-    base = _snap_base(_t(spark, sf_dir, "documents"))
+    base = _snap_base(load_table(spark, sf_dir, "documents"))
     new_digests = (
         base.filter(~F.col("__skip_new"))
         .select("shard", "doc_id", F.col("fp_new").alias("fp"))
@@ -3344,7 +3342,7 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB CTEs (generated below), bit-for-bit — integer counts and
     lexicographic tiebreaks, nothing float."""
     return text.bpe_merge_steps(
-        _t(spark, sf_dir, "documents"), BPE_N_MERGES
+        load_table(spark, sf_dir, "documents"), BPE_N_MERGES
     )
 
 
@@ -3424,7 +3422,7 @@ def q_bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     `subword_stats` reports the same fertility notion for the regex
     pretokenizer this trainer replaces)."""
     return text.bpe_encode_stats(
-        _t(spark, sf_dir, "documents"), BPE_N_MERGES
+        load_table(spark, sf_dir, "documents"), BPE_N_MERGES
     )
 
 
@@ -3465,7 +3463,7 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     through one task's sort (the same concentration class as the r07
     equi_depth_bins finding). md5-prefix hashing is the cross-engine idiom
     `operators/sampling.hash_uniform` already uses."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     h32 = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
     ).cast("bigint")
@@ -3552,7 +3550,7 @@ def q_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     KMEANS_Q), so the classic float-sum divergence of distributed k-means
     cannot occur; see kmeans_refine for the per-iteration scale shape."""
     return similarity.kmeans_refine(
-        _t(spark, sf_dir, "embeddings"), k=KM_K, iters=KM_ITERS
+        load_table(spark, sf_dir, "embeddings"), k=KM_K, iters=KM_ITERS
     )
 
 
@@ -3599,7 +3597,7 @@ def q_chunk_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew-splits, what the window had to buffer, at the documented price of
     a second row-local tokenize pass for the spread branch. Never
     materializes a pair space; all shuffles are linear."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks, seq, chunk, chunk_toks = text.token_chunks("text", width=CHUNK_W)
     # tokenize ONCE per doc; the exploded chunk rows slice the materialized
     # __toks attribute (O(width) each) instead of re-splitting the document
@@ -3709,7 +3707,7 @@ def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the 1e-9 rounding boundaries relative to libm's 1-ulp error."""
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     pairs = docs.select(
         "doc_id", F.explode(text.tokens(F.col("text"))).alias("tok")
     ).groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c_dt"))
@@ -3814,7 +3812,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_pii.py proves span parity on adversarial crafted strings;
     the synthetic corpus itself is PII-free, so counts here are honest
     zeros)."""
-    return text.pii_scrub(_t(spark, sf_dir, "documents"))
+    return text.pii_scrub(load_table(spark, sf_dir, "documents"))
 
 
 def _sql_pii() -> str:
@@ -3844,7 +3842,7 @@ def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimals (single correctly-rounded conversions in both engines), the
     two ratios divide exact integers, and the arithmetic order is
     mirrored, so the score is engine-identical."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     n_words = F.size(text.tokens(F.col("text"))).cast("long")
     n_sent = F.greatest(
         F.lit(1).cast("long"),
@@ -3933,7 +3931,7 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integers (one IEEE op, engine-identical)."""
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     dg = docs.select(
         "doc_id", F.explode(dedup.shingles(F.col("text"))).alias("gram")
     ).groupBy("doc_id", "gram").agg(F.count(F.lit(1)).alias("_n")).drop("_n")
@@ -3981,7 +3979,7 @@ def q_embedding_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the decimal-exact mean norm. (A z-score formulation is degenerate on a
     normalized store: the norm stddev is rounding noise.) Map-only per row
     + one 1-row aggregate — linear at any scale."""
-    e = _t(spark, sf_dir, "embeddings").select(
+    e = load_table(spark, sf_dir, "embeddings").select(
         F.round(
             F.sqrt(similarity.sq_norm("cast(embedding as array<double>)")), 6
         ).alias("norm"),
@@ -4037,7 +4035,7 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtering in near-dup systems). Both directions emitted; flagged at
     ≥ 0.8 either way. Pair space bounded by LSH banding as always; the
     ratios divide exact integers (one IEEE op each, engine-identical)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sig = dedup.minhash_signatures(docs, num_hashes=NUM_HASHES, keep_all_docs=False)
     pairs = dedup.lsh_candidate_pairs(sig, num_hashes=NUM_HASHES, band_size=BAND_SIZE)
     sh = docs.select("doc_id", dedup.shingles(F.col("text")).alias("s"))
@@ -4101,7 +4099,7 @@ def q_editdist_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     characters — identical on this ASCII corpus (verified corpus-wide); a
     multilingual deployment normalizes first or treats this as
     engine-local."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sig = dedup.minhash_signatures(docs, num_hashes=NUM_HASHES, keep_all_docs=False)
     pairs = dedup.lsh_candidate_pairs(sig, num_hashes=NUM_HASHES, band_size=BAND_SIZE)
     t = docs.select("doc_id", "text")
@@ -4163,7 +4161,7 @@ def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent (a set fingerprint validates the same membership; the
     order is re-derivable by sorting). One scan, one shard-key exchange,
     nothing grows with shard size."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     h = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
     ).cast("bigint")
@@ -4230,7 +4228,7 @@ def q_cluster_best_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite of the previous two-Window formulation, which buffered every
     member of a cluster in one task.)"""
     canon = q_neardup_verified(spark, sf_dir).select("doc_id", "canonical_id")
-    quality = _t(spark, sf_dir, "documents").select(
+    quality = load_table(spark, sf_dir, "documents").select(
         "doc_id", text.quality_columns()["quality_score"].alias("qs")
     )
     scored = canon.join(quality, "doc_id")
@@ -4290,7 +4288,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     DOUBLE."""
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     bucket = (
         F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("bigint")
         % DSIR_BUCKETS
@@ -4411,7 +4409,7 @@ def q_lr_width_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     other vocab token); ``picked`` marks the smallest injective width.
     One token scan → |V|-row distinct → one hash agg; never pairwise."""
     return text.stopword_bucket_injectivity(
-        _t(spark, sf_dir, "documents"), LRW_WIDTHS
+        load_table(spark, sf_dir, "documents"), LRW_WIDTHS
     )
 
 
@@ -4478,7 +4476,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     standardization, LR_Q-quantized BIGINT logit/gradient folds, and the
     algebraic sigmoid (no cross-engine `exp`); the oracle unrolls the
     same LRC_STEPS steps as CTEs."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return text.token_lr_classifier(
         docs,
         text.stopword_ratio(F.col("text")) >= LRC_TAU,
@@ -4619,7 +4617,7 @@ def _ensure_lr_model(
     )
 
     def _build(build_dir: str) -> None:
-        docs = _t(spark, sf_dir, "documents")
+        docs = load_table(spark, sf_dir, "documents")
         model = text.token_lr_train(
             docs,
             text.stopword_ratio(F.col("text")) >= LRC_TAU,
@@ -4671,7 +4669,7 @@ def q_quality_classifier_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     model = spark.read.parquet(os.path.join(model_dir, "model"))
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return text.token_lr_score(
         docs,
         model,
@@ -4708,7 +4706,7 @@ def q_quality_classifier_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     model = spark.read.parquet(os.path.join(model_dir, "model"))
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return text.token_lr_score(
         docs,
         model,
@@ -4745,7 +4743,7 @@ def q_source_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     summation-order-proof, engine-exact."""
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     bucket = (
         F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("bigint")
         % DSIR_BUCKETS
@@ -4844,7 +4842,7 @@ def _sq8_dequant_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     and dequantized back. Row-local transform — the corpus is never
     shuffled; at 100 TB the stats pass is a map-side-combined aggregate
     over dims, not rows."""
-    e = _t(spark, sf_dir, "embeddings").select(
+    e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     stats = e.select(F.posexplode("v").alias("pos", "x")).groupBy("pos").agg(
@@ -4883,40 +4881,8 @@ def q_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, same harness shape as `ann_recall_ivf`/`ann_recall_lsh` so the
     PERF.md frontier can compare all three reduction strategies."""
     deq = _sq8_dequant_frame(spark, sf_dir)
-    queries = deq.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    approx = similarity.brute_force_topk(deq, queries, k=TOPK).select(
-        "query_id", "cand_id"
-    )
-    brute = q_ann_topk(spark, sf_dir).select("query_id", "cand_id")
-    # approx is |queries|·k rows (bounded by the query batch, never the
-    # corpus) — broadcast it so the hit semi-join and the per-query count
-    # stay on the brute side's existing query_id partitioning instead
-    # of paying two sort-merge exchanges (guide §3.1; r19)
-    hits = brute.join(F.broadcast(approx), ["query_id", "cand_id"], "left_semi")
-    qset = (
-        _t(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"))
-    )
-    per_q = qset.join(
-        # ≤|queries| rows after the count — broadcast keeps the left-outer
-        # attach exchange-free (guide §3.1; r19)
-        F.broadcast(
-            hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits"))
-        ),
-        "query_id",
-        "left",
-    ).select("query_id", F.coalesce("n_hits", F.lit(0)).alias("n_hits"))
-    return per_q.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        (
-            F.sum("n_hits").cast("double")
-            / (F.count(F.lit(1)) * TOPK).cast("double")
-        ).alias("recall_at_k"),
-        (F.min("n_hits").cast("double") / F.lit(float(TOPK))).alias("min_recall"),
-    )
+    approx = similarity.brute_force_topk(deq, _query_slice(deq), k=TOPK)
+    return _recall_at_k(spark, sf_dir, approx)
 
 
 _SQL_SQ8_DEQ = (
@@ -4948,23 +4914,7 @@ approx AS (
     FROM scored
   ) WHERE rk <= {TOPK}
 ),
-brute AS (SELECT query_id, cand_id FROM ({SQL_ANN_TOPK})),
-joined AS (
-  SELECT b.query_id FROM brute b
-  JOIN approx a ON a.query_id = b.query_id AND a.cand_id = b.cand_id
-),
-qs AS (SELECT vec_id AS query_id FROM embeddings WHERE vec_id < {N_QUERIES}),
-per_q AS (
-  SELECT qs.query_id, count(j.query_id) AS n_hits
-  FROM qs LEFT JOIN joined j ON j.query_id = qs.query_id
-  GROUP BY qs.query_id
-)
-SELECT count(*) AS n_queries,
-       CAST(sum(n_hits) AS DOUBLE) / CAST(count(*) * {TOPK} AS DOUBLE)
-         AS recall_at_k,
-       CAST(min(n_hits) AS DOUBLE) / {TOPK}.0 AS min_recall
-FROM per_q
-"""
+{_SQL_RECALL_TAIL}"""
 
 
 # --- product quantization: ADC recall ----------------------------------------
@@ -4984,9 +4934,8 @@ def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     nibble codes (128× smaller than raw, 64× smaller than SQ8), searched
     by asymmetric distance over per-query lookup tables — the scan never
     touches a reconstructed vector (`operators/similarity.pq_adc_topk`).
-    Ground truth is the exact brute-force top-k; the harness tail (hit
-    semi-join, per-query hit counts, corpus-level recall + min) is
-    byte-the-same shape as `q_sq8_recall` so the three strategies read
+    Ground truth is the exact brute-force top-k, scored by the same
+    `_recall_at_k` harness as `q_sq8_recall`, so the three strategies read
     off one another directly."""
     return _pq_recall_df(spark, sf_dir, PQ_K)
 
@@ -5006,42 +4955,12 @@ def q_pq256_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_recall_df(spark: SparkSession, sf_dir: str, k_codebook: int) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    emb = load_table(spark, sf_dir, "embeddings")
     approx = similarity.pq_adc_topk(
-        emb, queries, m=PQ_M, k_codebook=k_codebook, iters=PQ_ITERS,
+        emb, _query_slice(emb), m=PQ_M, k_codebook=k_codebook, iters=PQ_ITERS,
         dim=EMB_DIM, k=TOPK,
-    ).select("query_id", "cand_id")
-    brute = q_ann_topk(spark, sf_dir).select("query_id", "cand_id")
-    # approx is |queries|·k rows (bounded by the query batch, never the
-    # corpus) — broadcast it so the hit semi-join and the per-query count
-    # stay on the brute side's existing query_id partitioning instead
-    # of paying two sort-merge exchanges (guide §3.1; r19)
-    hits = brute.join(F.broadcast(approx), ["query_id", "cand_id"], "left_semi")
-    qset = (
-        _t(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"))
     )
-    per_q = qset.join(
-        # ≤|queries| rows after the count — broadcast keeps the left-outer
-        # attach exchange-free (guide §3.1; r19)
-        F.broadcast(
-            hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits"))
-        ),
-        "query_id",
-        "left",
-    ).select("query_id", F.coalesce("n_hits", F.lit(0)).alias("n_hits"))
-    return per_q.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        (
-            F.sum("n_hits").cast("double")
-            / (F.count(F.lit(1)) * TOPK).cast("double")
-        ).alias("recall_at_k"),
-        (F.min("n_hits").cast("double") / F.lit(float(TOPK))).alias("min_recall"),
-    )
+    return _recall_at_k(spark, sf_dir, approx)
 
 
 def _sql_pq_assign(
@@ -5141,23 +5060,7 @@ approx AS (
     FROM scored
   ) WHERE rk <= {TOPK}
 ),
-brute AS (SELECT query_id, cand_id FROM ({SQL_ANN_TOPK})),
-joined AS (
-  SELECT b.query_id FROM brute b
-  JOIN approx a ON a.query_id = b.query_id AND a.cand_id = b.cand_id
-),
-qset AS (SELECT vec_id AS query_id FROM embeddings WHERE vec_id < {N_QUERIES}),
-per_q AS (
-  SELECT qset.query_id, count(j.query_id) AS n_hits
-  FROM qset LEFT JOIN joined j ON j.query_id = qset.query_id
-  GROUP BY qset.query_id
-)
-SELECT count(*) AS n_queries,
-       CAST(sum(n_hits) AS DOUBLE) / CAST(count(*) * {TOPK} AS DOUBLE)
-         AS recall_at_k,
-       CAST(min(n_hits) AS DOUBLE) / {TOPK}.0 AS min_recall
-FROM per_q
-"""
+{_SQL_RECALL_TAIL}"""
 
 
 SQL_PQ_RECALL = _sql_pq_recall(PQ_K)
@@ -5173,42 +5076,12 @@ def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes, full scan) this measures what the pruning costs ON TOP of
     the quantization — the last point on the PERF.md reduction
     frontier. Same harness tail as `q_sq8_recall`/`q_pq_recall`."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    emb = load_table(spark, sf_dir, "embeddings")
     approx = similarity.ivfpq_adc_topk(
-        emb, queries, m=PQ_M, k_codebook=PQ_K, iters=PQ_ITERS,
+        emb, _query_slice(emb), m=PQ_M, k_codebook=PQ_K, iters=PQ_ITERS,
         dim=EMB_DIM, nlist=IVF_NLIST, nprobe=IVF_NPROBE, k=TOPK,
-    ).select("query_id", "cand_id")
-    brute = q_ann_topk(spark, sf_dir).select("query_id", "cand_id")
-    # approx is |queries|·k rows (bounded by the query batch, never the
-    # corpus) — broadcast it so the hit semi-join and the per-query count
-    # stay on the brute side's existing query_id partitioning instead
-    # of paying two sort-merge exchanges (guide §3.1; r19)
-    hits = brute.join(F.broadcast(approx), ["query_id", "cand_id"], "left_semi")
-    qset = (
-        _t(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"))
     )
-    per_q = qset.join(
-        # ≤|queries| rows after the count — broadcast keeps the left-outer
-        # attach exchange-free (guide §3.1; r19)
-        F.broadcast(
-            hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits"))
-        ),
-        "query_id",
-        "left",
-    ).select("query_id", F.coalesce("n_hits", F.lit(0)).alias("n_hits"))
-    return per_q.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        (
-            F.sum("n_hits").cast("double")
-            / (F.count(F.lit(1)) * TOPK).cast("double")
-        ).alias("recall_at_k"),
-        (F.min("n_hits").cast("double") / F.lit(float(TOPK))).alias("min_recall"),
-    )
+    return _recall_at_k(spark, sf_dir, approx)
 
 
 #: `_sql_ivf_common` (coarse assignment + probes, the ann_topk_ivf
@@ -5227,9 +5100,7 @@ def q_ann_topk_pq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the training pipeline and the probe must reproduce its exact top-k
     rows from parquet."""
     index_dir = _ensure_pq_index(spark, sf_dir)
-    queries = _t(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") < N_QUERIES
-    ).select(F.col("vec_id").alias("query_id"), "embedding")
+    queries = _query_slice(load_table(spark, sf_dir, "embeddings"))
     return similarity.pq_topk_probe(
         spark, index_dir, queries, k=TOPK, nprobe=IVF_NPROBE
     )
@@ -5249,9 +5120,7 @@ def q_ann_topk_pq256_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     geometry off the index metadata, so the only thing this function
     chooses is WHICH index to open."""
     index_dir = _ensure_pq_index(spark, sf_dir, m=PQ256_M, k=PQ256_K)
-    queries = _t(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") < N_QUERIES
-    ).select(F.col("vec_id").alias("query_id"), "embedding")
+    queries = _query_slice(load_table(spark, sf_dir, "embeddings"))
     return similarity.pq_topk_probe(
         spark, index_dir, queries, k=TOPK, nprobe=IVF_NPROBE
     )
@@ -5275,9 +5144,7 @@ def q_ann_topk_pq_refined_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact ranked top-k rows from parquet — NO Lloyd iteration at probe
     time (same monkeypatch pin as the raw-vector probes)."""
     index_dir = _ensure_pq_index(spark, sf_dir, residual_refined=True)
-    queries = _t(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") < N_QUERIES
-    ).select(F.col("vec_id").alias("query_id"), "embedding")
+    queries = _query_slice(load_table(spark, sf_dir, "embeddings"))
     return similarity.pq_residual_topk_probe(
         spark, index_dir, queries, k=TOPK, nprobe=IVF_NPROBE
     )
@@ -5382,23 +5249,7 @@ approx AS (
     FROM adc
   ) WHERE rk <= {TOPK}
 ),
-brute AS (SELECT query_id, cand_id FROM ({SQL_ANN_TOPK})),
-joined AS (
-  SELECT b.query_id FROM brute b
-  JOIN approx a ON a.query_id = b.query_id AND a.cand_id = b.cand_id
-),
-qset AS (SELECT vec_id AS query_id FROM embeddings WHERE vec_id < {N_QUERIES}),
-per_q AS (
-  SELECT qset.query_id, count(j.query_id) AS n_hits
-  FROM qset LEFT JOIN joined j ON j.query_id = qset.query_id
-  GROUP BY qset.query_id
-)
-SELECT count(*) AS n_queries,
-       CAST(sum(n_hits) AS DOUBLE) / CAST(count(*) * {TOPK} AS DOUBLE)
-         AS recall_at_k,
-       CAST(min(n_hits) AS DOUBLE) / {TOPK}.0 AS min_recall
-FROM per_q
-"""
+{_SQL_RECALL_TAIL}"""
 
 #: serving-probe oracle: the SAME ADC chain, emitting the ranked top-k
 #: rows themselves — `q_ann_topk_pq_probe` must reproduce them from the
@@ -5437,7 +5288,7 @@ def _ensure_pq_upsert_index(spark: SparkSession, sf_dir: str) -> str:
     )
 
     def _build(build_dir: str) -> None:
-        base, delta = _upsert_frames(_t(spark, sf_dir, "embeddings"))
+        base, delta = _upsert_frames(load_table(spark, sf_dir, "embeddings"))
         similarity.build_pq_index(
             spark, base, build_dir, m=PQ_M, k_codebook=PQ_K,
             iters=PQ_ITERS, dim=EMB_DIM, nlist=IVF_NLIST,
@@ -5462,9 +5313,7 @@ def q_ann_topk_pq_upsert_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged `pq_topk_probe` (broadcast LUTs + partition-pruned code
     scan, Lloyd-free)."""
     index_dir = _ensure_pq_upsert_index(spark, sf_dir)
-    queries = _t(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") < N_QUERIES
-    ).select(F.col("vec_id").alias("query_id"), "embedding")
+    queries = _query_slice(load_table(spark, sf_dir, "embeddings"))
     return similarity.pq_topk_probe(
         spark, index_dir, queries, k=TOPK, nprobe=IVF_NPROBE
     )
@@ -5521,9 +5370,7 @@ def q_ann_topk_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine from the shared `ew` CTE, re-ranked — bit-for-bit."""
     pq_dir = _ensure_pq_index(spark, sf_dir)
     ivf_dir = _ensure_ivf_index(spark, sf_dir)
-    queries = _t(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") < N_QUERIES
-    ).select(F.col("vec_id").alias("query_id"), "embedding")
+    queries = _query_slice(load_table(spark, sf_dir, "embeddings"))
     return similarity.pq_topk_rerank(
         spark, pq_dir, ivf_dir, queries,
         k=TOPK, k_short=RERANK_SHORT, nprobe=IVF_NPROBE,
@@ -5566,42 +5413,12 @@ def q_ivfpq_residual_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes/vector — the per-cell-LUT trade named in
     `similarity.ivfpq_adc_topk`'s docstring, measured. Same harness
     tail as the other recall queries."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    emb = load_table(spark, sf_dir, "embeddings")
     approx = similarity.ivfpq_residual_adc_topk(
-        emb, queries, m=PQ_M, k_codebook=PQ_K, iters=PQ_ITERS,
+        emb, _query_slice(emb), m=PQ_M, k_codebook=PQ_K, iters=PQ_ITERS,
         dim=EMB_DIM, nlist=IVF_NLIST, nprobe=IVF_NPROBE, k=TOPK,
-    ).select("query_id", "cand_id")
-    brute = q_ann_topk(spark, sf_dir).select("query_id", "cand_id")
-    # approx is |queries|·k rows (bounded by the query batch, never the
-    # corpus) — broadcast it so the hit semi-join and the per-query count
-    # stay on the brute side's existing query_id partitioning instead
-    # of paying two sort-merge exchanges (guide §3.1; r19)
-    hits = brute.join(F.broadcast(approx), ["query_id", "cand_id"], "left_semi")
-    qset = (
-        _t(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"))
     )
-    per_q = qset.join(
-        # ≤|queries| rows after the count — broadcast keeps the left-outer
-        # attach exchange-free (guide §3.1; r19)
-        F.broadcast(
-            hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits"))
-        ),
-        "query_id",
-        "left",
-    ).select("query_id", F.coalesce("n_hits", F.lit(0)).alias("n_hits"))
-    return per_q.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        (
-            F.sum("n_hits").cast("double")
-            / (F.count(F.lit(1)) * TOPK).cast("double")
-        ).alias("recall_at_k"),
-        (F.min("n_hits").cast("double") / F.lit(float(TOPK))).alias("min_recall"),
-    )
+    return _recall_at_k(spark, sf_dir, approx)
 
 
 def q_ivfpq_residual_refined_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5617,44 +5434,14 @@ def q_ivfpq_residual_refined_recall(spark: SparkSession, sf_dir: str) -> DataFra
     refined centers 0.44/0.31 (raw-vector parity) at 500/2k vectors.
     Oracle: the `kmeans_refine` Lloyd replay composed into the residual
     ADC chain (refined centers as the seeds relation), bit-for-bit."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     refined = similarity.kmeans_centroids(emb, k=IVF_NLIST, iters=KM_ITERS)
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
     approx = similarity.ivfpq_residual_adc_topk(
-        emb, queries, m=PQ_M, k_codebook=PQ_K, iters=PQ_ITERS,
+        emb, _query_slice(emb), m=PQ_M, k_codebook=PQ_K, iters=PQ_ITERS,
         dim=EMB_DIM, nlist=IVF_NLIST, nprobe=IVF_NPROBE, k=TOPK,
         coarse_centers=refined,
-    ).select("query_id", "cand_id")
-    brute = q_ann_topk(spark, sf_dir).select("query_id", "cand_id")
-    # approx is |queries|·k rows (bounded by the query batch, never the
-    # corpus) — broadcast it so the hit semi-join and the per-query count
-    # stay on the brute side's existing query_id partitioning instead
-    # of paying two sort-merge exchanges (guide §3.1; r19)
-    hits = brute.join(F.broadcast(approx), ["query_id", "cand_id"], "left_semi")
-    qset = (
-        _t(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"))
     )
-    per_q = qset.join(
-        # ≤|queries| rows after the count — broadcast keeps the left-outer
-        # attach exchange-free (guide §3.1; r19)
-        F.broadcast(
-            hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits"))
-        ),
-        "query_id",
-        "left",
-    ).select("query_id", F.coalesce("n_hits", F.lit(0)).alias("n_hits"))
-    return per_q.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        (
-            F.sum("n_hits").cast("double")
-            / (F.count(F.lit(1)) * TOPK).cast("double")
-        ).alias("recall_at_k"),
-        (F.min("n_hits").cast("double") / F.lit(float(TOPK))).alias("min_recall"),
-    )
+    return _recall_at_k(spark, sf_dir, approx)
 
 
 def _sql_sqsum(a: str, b: str, width: int | None = None) -> str:
@@ -5764,23 +5551,7 @@ approx AS (
     FROM adc
   ) WHERE rk <= {TOPK}
 ),
-brute AS (SELECT query_id, cand_id FROM ({SQL_ANN_TOPK})),
-joined AS (
-  SELECT b.query_id FROM brute b
-  JOIN approx a ON a.query_id = b.query_id AND a.cand_id = b.cand_id
-),
-qset AS (SELECT vec_id AS query_id FROM embeddings WHERE vec_id < {N_QUERIES}),
-per_q AS (
-  SELECT qset.query_id, count(j.query_id) AS n_hits
-  FROM qset LEFT JOIN joined j ON j.query_id = qset.query_id
-  GROUP BY qset.query_id
-)
-SELECT count(*) AS n_queries,
-       CAST(sum(n_hits) AS DOUBLE) / CAST(count(*) * {TOPK} AS DOUBLE)
-         AS recall_at_k,
-       CAST(min(n_hits) AS DOUBLE) / {TOPK}.0 AS min_recall
-FROM per_q
-"""
+{_SQL_RECALL_TAIL}"""
 
 
 #: the refined-quantizer residual oracle: the `kmeans_refine` Lloyd replay
@@ -5907,23 +5678,7 @@ approx AS (
     FROM adc
   ) WHERE rk <= {TOPK}
 ),
-brute AS (SELECT query_id, cand_id FROM ({SQL_ANN_TOPK})),
-joined AS (
-  SELECT b.query_id FROM brute b
-  JOIN approx a ON a.query_id = b.query_id AND a.cand_id = b.cand_id
-),
-qset AS (SELECT vec_id AS query_id FROM embeddings WHERE vec_id < {N_QUERIES}),
-per_q AS (
-  SELECT qset.query_id, count(j.query_id) AS n_hits
-  FROM qset LEFT JOIN joined j ON j.query_id = qset.query_id
-  GROUP BY qset.query_id
-)
-SELECT count(*) AS n_queries,
-       CAST(sum(n_hits) AS DOUBLE) / CAST(count(*) * {TOPK} AS DOUBLE)
-         AS recall_at_k,
-       CAST(min(n_hits) AS DOUBLE) / {TOPK}.0 AS min_recall
-FROM per_q
-""",
+{_SQL_RECALL_TAIL}""",
     "topk": f"""
 SELECT query_id, cand_id, cos_sim, rank FROM (
   SELECT *, CAST(row_number() OVER (PARTITION BY query_id

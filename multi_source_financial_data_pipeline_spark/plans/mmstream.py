@@ -28,12 +28,13 @@ from multi_source_financial_data_pipeline_spark.plans.llmdata import (
     COS_THRESHOLD,
     IVF_NPROBE,
     N_QUERIES,
-    SQL_ANN_TOPK,
     SQL_ANN_TOPK_IVF,
     TOPK,
+    _SQL_RECALL_TAIL,
+    _query_slice,
+    _recall_at_k,
     _sql_bucket,
     _sql_cos,
-    q_ann_topk,
 )
 from multi_source_financial_data_pipeline_spark.plans.financial import RSI_N, SQL_RSI_BARS_4H
 from multi_source_financial_data_pipeline_spark.plans.spec import QuerySpec
@@ -795,16 +796,14 @@ FROM m GROUP BY kind
 # --- LSH-probed approximate top-k (ANN scale path) ---------------------------
 
 LSH_TOPK_PLANES = 4
-TOPK = 10
 
 
 def q_ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_utc(spark)
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "embedding"
+    return similarity.lsh_topk(
+        emb, _query_slice(emb), k=TOPK, num_planes=LSH_TOPK_PLANES
     )
-    return similarity.lsh_topk(emb, queries, k=TOPK, num_planes=LSH_TOPK_PLANES)
 
 
 SQL_ANN_TOPK_LSH = f"""
@@ -831,55 +830,13 @@ def q_ann_recall_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k against the brute-force exact top-k — with 4 hyperplanes the
     candidate set is one bucket, so this measures what the bucketing
     sacrifices (tune num_planes on exactly this number). A query whose
-    bucket holds < k neighbors contributes its misses. Integer-exact
-    summary, same structure as the IVF harness."""
-    brute = q_ann_topk(spark, sf_dir).select("query_id", "cand_id")
-    approx = q_ann_topk_lsh(spark, sf_dir).select("query_id", "cand_id")
-    hits = brute.join(approx, ["query_id", "cand_id"], "left_semi")
-    # query-id set straight from the source table — deriving it from
-    # `brute` would execute the whole exact pipeline twice
-    qset = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"))
-    )
-    per_q = (
-        qset.join(
-            hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits")),
-            "query_id",
-            "left",
-        )
-        .select("query_id", F.coalesce("n_hits", F.lit(0)).alias("n_hits"))
-    )
-    return per_q.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        (
-            F.sum("n_hits").cast("double")
-            / (F.count(F.lit(1)) * TOPK).cast("double")
-        ).alias("recall_at_k"),
-        (F.min("n_hits").cast("double") / F.lit(float(TOPK))).alias("min_recall"),
-    )
+    bucket holds < k neighbors contributes its misses."""
+    return _recall_at_k(spark, sf_dir, q_ann_topk_lsh(spark, sf_dir))
 
 
 SQL_ANN_RECALL_LSH = f"""
-WITH brute AS (SELECT query_id, cand_id FROM ({SQL_ANN_TOPK})),
-approx AS (SELECT query_id, cand_id FROM ({SQL_ANN_TOPK_LSH})),
-joined AS (
-  SELECT b.query_id FROM brute b
-  JOIN approx a ON a.query_id = b.query_id AND a.cand_id = b.cand_id
-),
-qs AS (SELECT vec_id AS query_id FROM embeddings WHERE vec_id < {N_QUERIES}),
-per_q AS (
-  SELECT qs.query_id, count(j.query_id) AS n_hits
-  FROM qs LEFT JOIN joined j ON j.query_id = qs.query_id
-  GROUP BY qs.query_id
-)
-SELECT count(*) AS n_queries,
-       CAST(sum(n_hits) AS DOUBLE) / CAST(count(*) * {TOPK} AS DOUBLE)
-         AS recall_at_k,
-       CAST(min(n_hits) AS DOUBLE) / {TOPK}.0 AS min_recall
-FROM per_q
-"""
+WITH approx AS (SELECT query_id, cand_id FROM ({SQL_ANN_TOPK_LSH})),
+{_SQL_RECALL_TAIL}"""
 
 
 # --- streaming: availableNow windowed aggregate ------------------------------

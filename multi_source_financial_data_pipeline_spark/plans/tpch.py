@@ -24,10 +24,6 @@ from multi_source_financial_data_pipeline_spark.plans.spec import QuerySpec
 from multi_source_financial_data_pipeline_spark.sources import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _dec(col: str, prec: str = "12,2"):
     return F.col(col).cast(f"decimal({prec})")
 
@@ -38,7 +34,7 @@ Q1_CUTOFF = "1998-09-02"
 
 
 def q_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     disc_price = _dec("l_extendedprice") * (F.lit(1).cast("decimal(4,2)") - _dec("l_discount", "4,2"))
     charge = disc_price * (F.lit(1).cast("decimal(4,2)") + _dec("l_tax", "4,2"))
     out = (
@@ -96,11 +92,11 @@ Q3_TOPK = 10
 
 
 def q_q3_top_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == Q3_SEGMENT)
-    orders = _t(spark, sf_dir, "orders").filter(
+    cust = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == Q3_SEGMENT)
+    orders = load_table(spark, sf_dir, "orders").filter(
         F.to_date("o_orderdate") < F.lit(Q3_DATE).cast("date")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         F.to_date("l_shipdate") > F.lit(Q3_DATE).cast("date")
     )
     revenue = _dec("l_extendedprice") * (
@@ -146,11 +142,11 @@ Q5_REGION = "ASIA"
 
 
 def q_q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == Q5_REGION)
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == Q5_REGION)
+    nation = load_table(spark, sf_dir, "nation")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     revenue = _dec("l_extendedprice") * (
         F.lit(1).cast("decimal(4,2)") - _dec("l_discount", "4,2")
     )
@@ -194,11 +190,11 @@ def q_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe side, semi join, rollup — is unchanged.) Semi-join never duplicates
     or carries right-side columns — strictly cheaper than inner join +
     distinct, and the returnflag filter is pushed into the parquet scan."""
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.to_date("o_orderdate") >= F.lit(Q4_START).cast("date"))
         & (F.to_date("o_orderdate") < F.lit(Q4_END).cast("date"))
     )
-    returned = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    returned = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     return (
         orders.join(
             returned, orders["o_orderkey"] == returned["l_orderkey"], "left_semi"
@@ -235,11 +231,11 @@ def q_q7_shipping_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both dimension chains fold into broadcasts; the only shuffle is
     lineitem⋈orders, and the disjunctive nation-pair predicate prunes rows
     inside the broadcast joins (either direction, never same-nation)."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation").filter(
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation").filter(
         F.col("n_name").isin(Q7_NATION_A, Q7_NATION_B)
     )
     supp_n = supp.join(
@@ -303,13 +299,13 @@ def q_q10_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Grouping by the customer natural key plus its functionally-dependent
     attributes adds no shuffle width at scale — the hash key is dominated by
     c_custkey cardinality."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    orders = _t(spark, sf_dir, "orders").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.to_date("o_orderdate") >= F.lit(Q10_START).cast("date"))
         & (F.to_date("o_orderdate") < F.lit(Q10_END).cast("date"))
     )
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
     revenue = _dec("l_extendedprice") * (
         F.lit(1).cast("decimal(4,2)") - _dec("l_discount", "4,2")
     )
@@ -353,11 +349,11 @@ def q_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension (|part| ~ |lineitem|/30) → broadcast; the conditional sum is a
     map-side combine, so the whole query is one scan + one local agg. Both
     sums are decimal-exact, divided only after the final cast."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.to_date("l_shipdate") >= F.lit(Q14_START).cast("date"))
         & (F.to_date("l_shipdate") < F.lit(Q14_END).cast("date"))
     )
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     revenue = _dec("l_extendedprice") * (
         F.lit(1).cast("decimal(4,2)") - _dec("l_discount", "4,2")
     )
@@ -412,14 +408,14 @@ def q_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivor set *before* any join, so the orders join broadcasts the
     survivors rather than shuffling lineitem against orders. customer is
     scale-proportional and carries no broadcast hint (AQE decides)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum(_dec("l_quantity")).cast("double").alias("total_qty"))
         .filter(F.col("total_qty") > Q18_QTY)
     )
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
     out = (
         orders.join(F.broadcast(big), orders.o_orderkey == big.l_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -464,7 +460,7 @@ def q_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     the candidate rows and the max — Spark broadcasts the 1-row max as a
     cross join (no second scan of lineitem, no correlated re-evaluation).
     Decimal-exact revenue makes the equality comparison safe cross-engine."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.to_date("l_shipdate") >= F.lit(Q15_START).cast("date"))
         & (F.to_date("l_shipdate") < F.lit(Q15_END).cast("date"))
     )
@@ -477,7 +473,7 @@ def q_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_rev = per_supp.agg(
         F.max("total_revenue_dec").alias("max_revenue_dec")
     )
-    supp = _t(spark, sf_dir, "supplier")
+    supp = load_table(spark, sf_dir, "supplier")
     return (
         per_supp.join(F.broadcast(max_rev))
         .filter(F.col("total_revenue_dec") == F.col("max_revenue_dec"))
@@ -515,8 +511,8 @@ def q_q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     the part scan, lineitem-only bounds (qty ≤ 30) are factored out and
     pushed to the lineitem scan, and the cross-table residual rides the
     join — one scan each, no union-of-three-queries plan."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     revenue = _dec("l_extendedprice") * (
         F.lit(1).cast("decimal(4,2)") - _dec("l_discount", "4,2")
     )
@@ -552,7 +548,7 @@ Q6_START, Q6_END = "1994-01-01", "1995-01-01"
 
 
 def q_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.to_date("l_shipdate") >= F.lit(Q6_START).cast("date"))

@@ -27,10 +27,6 @@ from multi_source_financial_data_pipeline_spark.plans.spec import QuerySpec
 from multi_source_financial_data_pipeline_spark.sources import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _dec(col: str, prec: str = "12,2"):
     return F.col(col).cast(f"decimal({prec})")
 
@@ -66,16 +62,16 @@ def q_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: the reference has no TPC-H surface; this extends the
     bench suite per SURVEY.md §7 round-2 guidance."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_type") == Q8_TYPE)
-    supp = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation")
-    reg = _t(spark, sf_dir, "region").filter(F.col("r_name") == Q8_REGION)
-    orders = _t(spark, sf_dir, "orders").filter(
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_type") == Q8_TYPE)
+    supp = load_table(spark, sf_dir, "supplier")
+    nat = load_table(spark, sf_dir, "nation")
+    reg = load_table(spark, sf_dir, "region").filter(F.col("r_name") == Q8_REGION)
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.to_date("o_orderdate") >= F.lit(Q8_START).cast("date"))
         & (F.to_date("o_orderdate") < F.lit(Q8_END).cast("date"))
     )
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
 
     supp_nat = supp.join(nat, supp.s_nationkey == nat.n_nationkey).select(
         "s_suppkey", F.col("n_name").alias("supp_nation")
@@ -147,11 +143,11 @@ def q_q9_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier→nation (both unhinted — scale-proportional, AQE-decided),
     single orderkey shuffle against orders, then a (nation, year) hash
     aggregate with map-side combine."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_name").contains(Q9_TOKEN))
-    supp = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation")
-    orders = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_name").contains(Q9_TOKEN))
+    supp = load_table(spark, sf_dir, "supplier")
+    nat = load_table(spark, sf_dir, "nation")
+    orders = load_table(spark, sf_dir, "orders")
 
     supp_nat = supp.join(nat, supp.s_nationkey == nat.n_nationkey).select(
         "s_suppkey", F.col("n_name").alias("nation")
@@ -199,11 +195,11 @@ def q_q12_ship_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     order), count high- vs low-priority orders. Orders⋈lineitem is the honest
     fact-fact shuffle on orderkey — both sides scale, neither is hinted; the
     date filter is pushed to the lineitem scan before the shuffle."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.to_date("l_shipdate") >= F.lit(Q12_START).cast("date"))
         & (F.to_date("l_shipdate") < F.lit(Q12_END).cast("date"))
     )
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     lag = F.datediff(F.to_date("l_shipdate"), F.to_date("o_orderdate"))
     bucket = F.when(lag > Q12_LATE_DAYS, F.lit("LATE")).otherwise(F.lit("ONTIME"))
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
@@ -241,8 +237,8 @@ def q_q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     side, not in a WHERE, or the zero bucket disappears). Two aggregates:
     per-customer count after a custkey shuffle, then a tiny re-agg on the
     count value. Neither side is broadcast-hinted: both scale with SF."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != Q13_EXCLUDE
     )
     per_cust = (
@@ -286,11 +282,11 @@ def q_q16_part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     (both sides unhinted — scale-proportional, AQE-decided), which replace
     the missing partsupp table.
     count(DISTINCT) over the shuffled group is exact."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
-    part = _t(spark, sf_dir, "part").filter(
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
+    part = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != Q16_BRAND) & (F.col("p_size").isin(*Q16_SIZES))
     )
-    bad_supp = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
+    bad_supp = load_table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
         "s_suppkey"
     )
     return (
@@ -335,10 +331,10 @@ def q_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined back onto the filtered lines (AQE broadcasts them while small —
     no hint, the subset is scale-proportional). Two lineitem scans at
     worst — never a per-row re-evaluation."""
-    part = _t(spark, sf_dir, "part").filter(
+    part = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") == Q17_BRAND) & (F.col("p_size") <= Q17_MAX_SIZE)
     ).select("p_partkey")
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     lines = li.join(part, li.l_partkey == part.p_partkey).select(
         "l_partkey", "l_quantity", "l_extendedprice"
     )
@@ -389,11 +385,11 @@ def q_q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE-decided) → threshold filter → DISTINCT suppkey → LEFT SEMI join
     against supplier.
     The fact table collapses to |survivors| before touching any dimension."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.to_date("l_shipdate") >= F.lit(Q20_START).cast("date"))
         & (F.to_date("l_shipdate") < F.lit(Q20_END).cast("date"))
     )
-    part = _t(spark, sf_dir, "part").filter(F.col("p_name").contains(Q20_TOKEN)).select(
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_name").contains(Q20_TOKEN)).select(
         "p_partkey"
     )
     shipped = (
@@ -404,7 +400,7 @@ def q_q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey")
         .distinct()
     )
-    supp = _t(spark, sf_dir, "supplier")
+    supp = load_table(spark, sf_dir, "supplier")
     return (
         supp.join(shipped, supp.s_suppkey == shipped.l_suppkey, "left_semi")
         .select("s_suppkey", "s_name")
@@ -443,8 +439,8 @@ def q_q21_late_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-order aggregate — distinct suppliers vs distinct late suppliers —
     which is the scale-right plan: a single orderkey shuffle instead of two
     self-joins of lineitem. Orders join is fact-fact, unhinted."""
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    li = load_table(spark, sf_dir, "lineitem")
     late = F.datediff(F.to_date("l_shipdate"), F.to_date("o_orderdate")) > Q21_LATE_DAYS
     per_order = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -456,7 +452,7 @@ def q_q21_late_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter((F.col("n_supp") > 1) & (F.col("n_late") == 1))
     )
-    supp = _t(spark, sf_dir, "supplier")
+    supp = load_table(spark, sf_dir, "supplier")
     return (
         per_order.groupBy("late_supp")
         .agg(F.count(F.lit(1)).alias("numwait"))
@@ -498,18 +494,18 @@ def q_q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row cross join (computed once, no correlated re-evaluation); the
     "no recent orders" NOT EXISTS is a LEFT ANTI join against the filtered
     orders projection, shuffled on custkey — both sides scale, no hint."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     avg_bal = cust.filter(F.col("c_acctbal") > 0).agg(
         (
             F.sum(_dec("c_acctbal")).cast("double") / F.count(F.lit(1))
         ).alias("avg_bal")
     )
     recent = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.to_date("o_orderdate") >= F.lit(Q22_CUTOFF).cast("date"))
         .select("o_custkey")
     )
-    nat = _t(spark, sf_dir, "nation")
+    nat = load_table(spark, sf_dir, "nation")
     return (
         cust.join(F.broadcast(avg_bal))
         .filter(F.col("c_acctbal") > F.col("avg_bal"))
@@ -553,7 +549,7 @@ def q_topn_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows before anything else sees them — no global sort at any scale, and
     the output is bounded by 3×|customers| regardless of order count.
     Deterministic tie-break on o_orderkey."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     from pyspark.sql import Window
 
     w = Window.partitionBy("o_custkey").orderBy(
@@ -599,13 +595,13 @@ def q_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter to the min → TakeOrderedAndProject top-{limit}."""
     from pyspark.sql import Window
 
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(
         (F.col("p_size") <= Q2_SIZE_MAX) & (F.col("p_type") == Q2_TYPE)
     ).select("p_partkey", "p_brand")
-    supp = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation")
-    reg = _t(spark, sf_dir, "region").filter(F.col("r_name") == Q2_REGION)
+    supp = load_table(spark, sf_dir, "supplier")
+    nat = load_table(spark, sf_dir, "nation")
+    reg = load_table(spark, sf_dir, "region").filter(F.col("r_name") == Q2_REGION)
     region_nations = F.broadcast(
         nat.join(reg, nat.n_regionkey == reg.r_regionkey).select(
             "n_nationkey", "n_name"
@@ -692,9 +688,9 @@ def q_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     still scale-proportional (|supplier|/25 grows with SF), so it carries
     NO hint — AQE broadcasts it while small; only the 25-row nation dim
     inside it is hinted."""
-    li = _t(spark, sf_dir, "lineitem")
-    nat = _t(spark, sf_dir, "nation").filter(F.col("n_name") == Q11_NATION)
-    supp = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    nat = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == Q11_NATION)
+    supp = load_table(spark, sf_dir, "supplier")
     nation_supp = supp.join(
         F.broadcast(nat), supp.s_nationkey == nat.n_nationkey
     ).select("s_suppkey")

@@ -3,8 +3,9 @@
 Replaces the reference's HTTP fetch layer (src/pipeline.py:28-42,
 src/validation.py:78-185, src/macro.py:113-163) for the offline harness: the
 "source" is a columnar scan with column pruning and predicate pushdown handled
-by Catalyst. Readers never infer schemas — TESTDATA StructTypes are asserted
-against the parquet footer so a drifting input fails loudly at plan time.
+by Catalyst. The reader takes each file's schema from its parquet footer,
+converts the timestamp columns TESTDATA declares, and projects TESTDATA's
+column order; it does not check the footer types against TESTDATA.
 """
 
 from __future__ import annotations
@@ -32,9 +33,11 @@ TABLE_NAMES = (
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one synthetic table. Parquet supplies its own (identical) schema;
-    we select the declared column order explicitly so downstream operators
-    never depend on file layout."""
+    """Scan one synthetic table. ``spark.read.parquet`` infers the schema
+    from the parquet footer; TESTDATA timestamp columns that arrive as
+    nanos (``bigint``) or ``timestamp_ntz`` are converted to TIMESTAMP, and
+    the declared column order is selected so downstream operators never
+    depend on file layout."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     tune_for_session_cores(spark)
     # the driver's parquet stamps TIMESTAMP(NANOS), which the Spark reader

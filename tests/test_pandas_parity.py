@@ -261,13 +261,13 @@ def test_bollinger_and_rsi_match_pandas(spark):
     ).withColumn("ts", F.to_timestamp("ts"))
 
     import multi_source_financial_data_pipeline_spark.plans.financial as fin
-    orig = fin._t
-    fin._t = lambda _s, _d, _n: df
+    orig = fin.load_table
+    fin.load_table = lambda _s, _d, _n: df
     try:
         boll = q_bollinger_bands(spark, "unused").toPandas().sort_values("event_id")
         rsi = q_rsi(spark, "unused").toPandas().sort_values("event_id")
     finally:
-        fin._t = orig
+        fin.load_table = orig
 
     s = pd.Series(vals)
     mid = s.rolling(BOLL_N, min_periods=BOLL_N).mean()

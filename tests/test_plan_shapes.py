@@ -620,47 +620,45 @@ def test_pq_probe_lut_broadcast_is_batch_conditional(spark, sf_dir):
         spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
 
 
-def test_broadcast_threshold_parser():
-    """The batch-cap arithmetic rides on parsing the session threshold
-    string; pin the formats Spark actually emits."""
+def test_broadcast_threshold_parser(spark):
+    """The batch-cap arithmetic rides on the session threshold; pin it
+    against the byte strings Spark accepts, and check that Spark itself
+    rejects the malformed ones before they can reach the cap."""
+    import pytest
+    from pyspark.errors import IllegalArgumentException
+
     from multi_source_financial_data_pipeline_spark.operators.similarity import (
         _broadcast_bytes_threshold,
     )
 
-    class _FakeConf:
-        def __init__(self, v):
-            self._v = v
-
-        def get(self, key, default=None):
-            return self._v if self._v is not None else default
-
-    class _FakeSpark:
-        def __init__(self, v):
-            self.conf = _FakeConf(v)
-
-    for raw, want in [
-        ("10485760", 10485760),
-        ("10MB", 10 << 20),
-        ("10mb", 10 << 20),
-        ("512k", 512 << 10),
-        ("1g", 1 << 30),
-        ("1tb", 1 << 40),
-        ("2pb", 2 << 50),
-        ("100b", 100),
-        ("-1", 0),
-        (None, 10 << 20),
-    ]:
-        assert _broadcast_bytes_threshold(_FakeSpark(raw)) == want, raw
-    # unparseable must be LOUD, not a silent 10MB (r15 review finding)
-    import pytest
-
-    with pytest.raises(ValueError):
-        _broadcast_bytes_threshold(_FakeSpark("10 megabytes"))
-    # fractional mantissa must also be LOUD, not floored to 0 — flooring
-    # '0.5g' would silently disable every batch-conditional hint
-    # (r15 ADVICE)
-    with pytest.raises(ValueError):
-        _broadcast_bytes_threshold(_FakeSpark("0.5g"))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    orig = spark.conf.get(key, None)
+    if orig is None:
+        assert _broadcast_bytes_threshold(spark) == 10 << 20  # Spark's default
+    try:
+        for raw, want in [
+            ("10485760", 10485760),
+            ("10MB", 10 << 20),
+            ("10mb", 10 << 20),
+            ("512k", 512 << 10),
+            ("1g", 1 << 30),
+            ("1tb", 1 << 40),
+            ("2pb", 2 << 50),
+            ("100b", 100),
+            ("-1", 0),
+        ]:
+            spark.conf.set(key, raw)
+            assert _broadcast_bytes_threshold(spark) == want, raw
+        spark.conf.set(key, "1tb")
+        for raw in ["10 megabytes", "0.5g"]:
+            with pytest.raises(IllegalArgumentException, match="INVALID_CONF_VALUE"):
+                spark.conf.set(key, raw)
+            assert _broadcast_bytes_threshold(spark) == 1 << 40, raw
+    finally:
+        if orig is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, orig)
 
 
 def test_small_query_batch_memoizes_count_job(spark, sf_dir, monkeypatch):

@@ -3,6 +3,7 @@ co-located joins (plan-shape assertions)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from multi_source_financial_data_pipeline_spark.operators.skew import salted_agg
@@ -96,10 +97,15 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
-def test_min_label_components_transitive_chain(spark, sf_dir):
+@pytest.mark.parametrize(
+    "threshold", [None, "-1"], ids=["union_find", "distributed"]
+)
+def test_min_label_components_transitive_chain(spark, sf_dir, threshold):
     """A–B, B–C with no direct A–C edge: all three must map to A (fixpoint),
     and an unrelated pair D–E must map to D — the one-hop star-merge bug
-    this operator replaces left C pointing at B."""
+    this operator replaces left C pointing at B. Run on both sides of the
+    broadcast-budget switch: the default budget takes the driver-side
+    union-find, a disabled one (-1) the distributed propagation loop."""
     from multi_source_financial_data_pipeline_spark.operators.dedup import min_label_components
 
     v = spark.createDataFrame(
@@ -112,9 +118,19 @@ def test_min_label_components_transitive_chain(spark, sf_dir):
     edges = v.unionByName(
         v.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
     ).select(F.col("id_a").alias("id"), F.col("id_b").alias("nb"))
-    got = {
-        r["id"]: r["lbl"] for r in min_label_components(edges).collect()
-    }
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key, None)
+    if threshold is not None:
+        spark.conf.set(key, threshold)
+    try:
+        got = {
+            r["id"]: r["lbl"] for r in min_label_components(edges).collect()
+        }
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
     expected = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
     expected.update({20 + i: 20 for i in range(7)})
     assert got == expected

@@ -94,6 +94,30 @@ def test_pq_identity_when_every_vector_is_a_seed(spark):
     assert got == want
 
 
+def test_brute_force_topk_quotes_vector_column(spark):
+    """A caller-supplied vector column name reaches SQL fragments quoted:
+    renaming ``embedding`` to one that needs quoting must not change the
+    top-k (an unquoted ``emb vec`` fails to parse)."""
+    from multi_source_financial_data_pipeline_spark.operators import similarity
+
+    rows = [
+        (i, [float((i * 5 + d * 3) % 7) - 3.0 + 0.25 * i for d in range(4)])
+        for i in range(10)
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    queries = emb.filter("vec_id < 3").selectExpr(
+        "vec_id AS query_id", "embedding"
+    )
+    want = sorted(similarity.brute_force_topk(emb, queries, k=3).collect())
+    renamed = similarity.brute_force_topk(
+        emb.withColumnRenamed("embedding", "emb vec"),
+        queries.withColumnRenamed("embedding", "emb vec"),
+        k=3,
+        vec_col="emb vec",
+    )
+    assert sorted(renamed.collect()) == want
+
+
 def test_ivfpq_full_probe_equals_pq(spark):
     """With nprobe == nlist the coarse level restricts nothing, so IVF-PQ
     must produce EXACTLY pq_adc_topk's ranking — the composition's
