@@ -14,20 +14,21 @@ centroid, probe a few buckets).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, Row, Window, functions as F
 
 _ZERO = "cast(0.0 as double)"
 
 
-#: Why every helper below has a STRING fast path (r19, guide §1.2/§7.3):
-#: building one higher-order function through the Column DSL costs ~27 ms
-#: of py4j round-trips (measured: `dot` 26.9 ms, `_best_cells` 58.4 ms),
-#: and the ANN family constructs dozens per query — plan CONSTRUCTION was
-#: ~2.5 s of a 7.6 s pq_recall. Parsing the SAME expression from one SQL
-#: string is ~0.6 ms and yields the identical Catalyst tree (verified:
-#: bit-equal results; the full oracle-parity suite pins exactness), so
-#: call sites that operate on plain column names pass strings; sites whose
-#: children are lambda variables or computed Columns keep the DSL path.
+#: One rule for every expression helper here: it takes column names or
+#: SQL text and parses ONE string — no Column-DSL folds. Building a
+#: higher-order function through the DSL costs ~27–58 ms of py4j round
+#: trips per call (measured: `dot` 26.9 ms, `_best_cells` 58.4 ms), and
+#: the ANN family builds dozens per query; parsing the same expression
+#: is ~0.6 ms and yields the identical Catalyst tree. Folds are left
+#: folds with a 0.0 seed: the same float-op order as DuckDB's
+#: ``list_reduce``, so results are bit-identical to the oracles.
 def _fold_sum_sql(arr: str) -> str:
     return f"aggregate({arr}, {_ZERO}, (acc, x) -> acc + x)"
 
@@ -44,33 +45,19 @@ def _sq_dist_sql(a: str, b: str) -> str:
     return _fold_sum_sql(f"zip_with({a}, {b}, (x, y) -> (x - y) * (x - y))")
 
 
-def _fold_sum(arr: Column) -> Column:
-    """Left-fold sum with 0.0 seed — same float-op order as DuckDB's
-    list_reduce, so results are bit-identical."""
-    return F.aggregate(arr, F.expr(_ZERO), lambda acc, x: acc + x)
+def _cos_sql(dp: str, an: str, bn: str) -> str:
+    """round(cosine, 6) from a dot-product term and two squared norms, all
+    double arithmetic; null for a zero vector (nullif divisor — ANSI-safe,
+    mirrored in the oracles)."""
+    return f"round({dp} / nullif(sqrt({an} * {bn}), {_ZERO}), 6)"
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_dot_sql(a, b))
-    return _fold_sum(F.zip_with(a, b, lambda x, y: x * y))
+def dot(a: str, b: str) -> Column:
+    return F.expr(_dot_sql(a, b))
 
 
-def sq_norm(a: Column | str) -> Column:
-    if isinstance(a, str):
-        return F.expr(_sq_norm_sql(a))
-    return _fold_sum(F.transform(a, lambda x: x * x))
-
-
-def cosine(a: Column | str, b: Column | str) -> Column:
-    """cos = dot / sqrt(|a|² * |b|²), all double arithmetic; null for a
-    zero vector (nullif divisor — ANSI-safe, mirrored in the oracles)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(
-            f"{_dot_sql(a, b)} / nullif(sqrt({_sq_norm_sql(a)} *"
-            f" {_sq_norm_sql(b)}), cast(0.0 as double))"
-        )
-    return dot(a, b) / F.nullif(F.sqrt(sq_norm(a) * sq_norm(b)), F.lit(0.0))
+def sq_norm(a: str) -> Column:
+    return F.expr(_sq_norm_sql(a))
 
 
 def _as_double(col: str) -> Column:
@@ -86,12 +73,46 @@ def _as_double_sql(col: str) -> str:
     return f"cast({_quote(col)} as array<double>)"
 
 
-def sq_dist(a: Column | str, b: Column | str) -> Column:
-    """Squared L2 distance as the same left fold as `dot` — bit-identical
-    to an unrolled left-associative sum in any engine."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_sq_dist_sql(a, b))
-    return _fold_sum(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)))
+def _vec_side(
+    df: DataFrame, id_col: str, vec_col: str, out: tuple[str, str, str],
+    *keep: str,
+) -> DataFrame:
+    """(id, array<double> vector, squared norm) named ``out``, plus the
+    ``keep`` columns — the one query or corpus side every scorer joins.
+    The norm is computed once per side, so each pair costs one fold."""
+    i, v, n = out
+    return df.select(
+        F.col(id_col).alias(i), _as_double(vec_col).alias(v), *keep
+    ).withColumn(n, sq_norm(v))
+
+
+def _subvectors(
+    df: DataFrame, keep: list, vec: str, m: int, sub: int, out: str
+) -> DataFrame:
+    """``keep`` plus (s, ``out``): the SQL vector ``vec`` split into its
+    ``m`` contiguous ``sub``-wide subvectors, one row each."""
+    return df.select(
+        *keep,
+        F.posexplode(
+            F.expr(
+                f"transform(sequence(0, {m - 1}),"
+                f" s -> slice({vec}, s * {sub} + 1, {sub}))"
+            )
+        ).alias("s", out),
+    )
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Top-``k`` per query of (query_id, cand_id, cos_sim) by rounded
+    cosine with the lowest-id tiebreak, so results are deterministic."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("cand_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "cand_id", "cos_sim", "rank")
+    )
 
 
 #: per-component quantization scale for order-proof centroid means: summing
@@ -219,7 +240,7 @@ def kmeans_refine(
         F.sum(F.col("d").cast("decimal(20,6)")).cast("double").alias("inertia"),
     )
     norms = cents.select(
-        "cell", F.round(F.sqrt(sq_norm(F.col("cv"))), 6).alias("centroid_norm")
+        "cell", F.round(F.sqrt(sq_norm("cv")), 6).alias("centroid_norm")
     )
     return out.join(F.broadcast(norms), "cell").select(
         "cell", "n_members", "inertia", "centroid_norm"
@@ -231,17 +252,9 @@ def _pq_subvectors(
 ) -> DataFrame:
     """(vec_id, s, sv): each vector split into its m contiguous
     subvectors — the shared explode for PQ training and encode-only."""
-    e = embeddings.select(
-        F.col(id_col).alias("vec_id"), _as_double(vec_col).alias("v")
-    )
-    return e.select(
-        "vec_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}),"
-                f" s -> slice(v, s * {sub} + 1, {sub}))"
-            )
-        ).alias("s", "sv"),
+    return _subvectors(
+        embeddings, [F.col(id_col).alias("vec_id")], _as_double_sql(vec_col),
+        m, sub, "sv",
     )
 
 
@@ -375,6 +388,32 @@ def pq_train_encode(
     return cents, codes
 
 
+class _PQIndex(NamedTuple):
+    """One PQ index as the ADC serving path consumes it — trained inline
+    (`_ivfpq_train`, `pq_adc_topk`) or read back from disk
+    (`_read_pq_index`): ``codes`` (vec_id, s, code[, ivf_cell]),
+    ``cents`` (s, code, cv), the 1-row coarse ``quantizer`` (None for flat
+    PQ), the (ivf_cell, ctr) cell ``centers`` of a residual index (None
+    for raw-vector codes), the subspace geometry and the per-query LUT
+    row count."""
+
+    codes: DataFrame
+    cents: DataFrame
+    quantizer: DataFrame | None
+    centers: DataFrame | None
+    m: int
+    sub: int
+    lut_rows: int
+
+
+def _seed_centers(quantizer: DataFrame) -> DataFrame:
+    """(ivf_cell, ctr): a quantizer row exploded back to its centers."""
+    return quantizer.select(F.explode("seeds").alias("sd")).select(
+        F.col("sd")["seed_id"].alias("ivf_cell"),
+        F.col("sd")["sv"].alias("ctr"),
+    )
+
+
 def pq_adc_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -421,46 +460,79 @@ def pq_adc_topk(
         embeddings, m=m, k=k_codebook, iters=iters, dim=dim,
         id_col=id_col, vec_col=vec_col,
     )
-    sub = dim // m
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        _as_double(vec_col).alias("qv"),
-        sq_norm(_as_double_sql(vec_col)).alias("qn"),
+    index = _PQIndex(
+        codes.withColumnRenamed("cell", "code"),
+        cents.withColumnRenamed("cell", "code"),
+        None, None, m, dim // m, m * k_codebook,
     )
-    qsub = q.select(
-        "query_id",
-        "qn",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}),"
-                f" s -> slice(qv, s * {sub} + 1, {sub}))"
-            )
-        ).alias("s", "qsv"),
+    return _adc_topk(index, queries, k, 0, query_id_col, vec_col)
+
+
+def _adc_topk(
+    index: _PQIndex,
+    queries: DataFrame,
+    k: int,
+    nprobe: int,
+    query_id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The one ADC lookup-and-fold path (see `pq_adc_topk`): per-query
+    dot LUTs against the codebooks, the codebook norm LUT, and — with a
+    quantizer — the probed-cell restriction; residual indexes add the
+    per-cell center-dot LUT and per-cell norm LUT (see
+    `ivfpq_residual_adc_topk`). The (query, cand) partials fold in s
+    order (engine-replayable left folds) into the cosine, ranked top-k.
+
+    The query-proportional frames (probes |q|·nprobe, center dots
+    |q|·nprobe·m, dot LUT |q|·m·k rows) are hinted only while the batch
+    provably fits the broadcast budget (r14 VERDICT item 3; see
+    `_small_query_batch`). The probes hint is also what drives dynamic
+    partition pruning on a persisted codes/ scan; an over-cap batch loses
+    the pruning along with the hint, which is the right trade — a batch
+    that large probes most cells anyway. The norm LUT stays
+    unconditionally hinted: m·k (residual: nlist·m·k) rows, a constant
+    of the index geometry."""
+    m, sub = index.m, index.sub
+    q = _vec_side(queries, query_id_col, vec_col, ("query_id", "qv", "qn"))
+    qsub = _subvectors(q, ["query_id", "qn"], "qv", m, sub, "qsv")
+    dot_lut = qsub.join(F.broadcast(index.cents), "s").select(
+        "query_id", "qn", "s", "code", dot("qsv", "cv").alias("dp"),
     )
-    dot_lut = qsub.join(F.broadcast(cents), "s").select(
-        "query_id", "qn", "s", "cell",
-        dot("qsv", "cv").alias("dp"),
-    )
-    norm_lut = cents.select("s", "cell", sq_norm("cv").alias("np"))
-    # dot_lut is QUERY-proportional (|q|·m·k rows) — hinted only while the
-    # batch provably fits the broadcast budget (r14 VERDICT item 3; see
-    # `_small_query_batch`). norm_lut is a codebook constant, always hinted.
-    hb = _lut_hint(queries, m * k_codebook)
+    hb = _lut_hint(queries, index.lut_rows)
+    parts, lut_keys = index.codes, ["s", "code"]
+    if index.quantizer is not None:
+        probes = _probe_cells(
+            q.join(F.broadcast(index.quantizer)), nprobe, ["query_id"],
+            "ivf_cell",
+        )
+        parts = parts.join(hb(probes), "ivf_cell")
+        lut_keys = ["query_id"] + lut_keys
+    if index.centers is not None:
+        csub = _subvectors(index.centers, ["ivf_cell"], "ctr", m, sub, "csv")
+        dlut_ctr = (
+            qsub.join(probes, "query_id")
+            .join(F.broadcast(csub), ["ivf_cell", "s"])
+            .select("query_id", "ivf_cell", "s", dot("qsv", "csv").alias("dpc"))
+        )
+        parts = parts.join(hb(dlut_ctr), ["query_id", "ivf_cell", "s"])
+        norm_lut = csub.join(index.cents, "s").select(
+            "ivf_cell", "s", "code",
+            sq_norm("zip_with(csv, cv, (x, y) -> x + y)").alias("np"),
+        )
+        norm_keys = ["ivf_cell", "s", "code"]
+    else:
+        norm_lut = index.cents.select("s", "code", sq_norm("cv").alias("np"))
+        norm_keys = ["s", "code"]
     parts = (
-        codes.join(hb(dot_lut), ["s", "cell"])
-        .join(F.broadcast(norm_lut), ["s", "cell"])
+        parts.join(hb(dot_lut), lut_keys)
+        .join(F.broadcast(norm_lut), norm_keys)
         .filter(F.col("vec_id") != F.col("query_id"))
     )
-    return _adc_fold_rank(parts, k)
-
-
-def _adc_fold_rank(parts: DataFrame, k: int) -> DataFrame:
-    """Shared ADC tail: fold the (query, cand) LUT partials in s order
-    (engine-replayable left folds — see `pq_adc_topk`), assemble the
-    cosine, rank top-k per query with the module's id tiebreak."""
+    if index.centers is not None:
+        parts = parts.withColumn("dp", F.col("dpc") + F.col("dp"))
 
     def _s_fold(value: str) -> Column:
-        return F.expr(  # parse path — identical tree, see module note
+        return F.expr(
             _fold_sum_sql(
                 f"transform(array_sort(collect_list(struct(s, {value}))),"
                 f" st -> st.{value})"
@@ -472,21 +544,13 @@ def _adc_fold_rank(parts: DataFrame, k: int) -> DataFrame:
         _s_fold("dp").alias("dps"),
         _s_fold("np").alias("nps"),
     )
-    cos = F.col("dps") / F.nullif(
-        F.sqrt(F.col("qn") * F.col("nps")), F.lit(0.0)
-    )
-    scored = folded.select(
-        "query_id",
-        F.col("vec_id").alias("cand_id"),
-        F.round(cos, 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cos_sim", "rank")
+    return _rank_topk(
+        folded.select(
+            "query_id",
+            F.col("vec_id").alias("cand_id"),
+            F.expr(_cos_sql("dps", "qn", "nps")).alias("cos_sim"),
+        ),
+        k,
     )
 
 
@@ -623,62 +687,75 @@ def ivfpq_adc_topk(
     that deployment split (no inline training, pruned code scan); THIS
     function keeps training inline as the recall-harness configuration,
     where the train+encode cost is part of what's measured."""
-    cents, codes = pq_train_encode(
-        embeddings, m=m, k=k_codebook, iters=iters, dim=dim,
-        id_col=id_col, vec_col=vec_col,
+    index = _ivfpq_train(
+        embeddings, m, k_codebook, iters, dim, nlist, id_col, vec_col
     )
-    codes = codes.withColumnRenamed("cell", "code")
-    cents = cents.withColumnRenamed("cell", "code")
-    sub = dim // m
-    cells = ivf_assign(embeddings, nlist, id_col, vec_col).select(
-        F.col(id_col).alias("vec_id"), F.col("cell").alias("ivf_cell")
-    )
-    seed_row = ivf_seed_row(embeddings, nlist, id_col, vec_col)
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        _as_double(vec_col).alias("qv"),
-        sq_norm(_as_double_sql(vec_col)).alias("qn"),
-    )
-    probes = (
-        q.join(F.broadcast(seed_row))
-        .select(
-            "query_id",
-            F.explode(
-                F.slice(_best_cells("qv", "qn"), 1, nprobe)
-            ).alias("p"),
+    return _adc_topk(index, queries, k, nprobe, query_id_col, vec_col)
+
+
+def _ivfpq_train(
+    embeddings: DataFrame,
+    m: int,
+    k_codebook: int,
+    iters: int,
+    dim: int,
+    nlist: int,
+    id_col: str,
+    vec_col: str,
+    coarse_centers: DataFrame | None = None,
+    by_residual: bool = False,
+) -> _PQIndex:
+    """The one IVF-PQ training step: the coarse quantizer (the seed
+    convention, or `centers_seed_row` of ``coarse_centers``) assigns each
+    vector its ``ivf_cell``; the sub-codebooks train on the raw vectors
+    or, ``by_residual``, on ``v − center(cell)`` against that same
+    quantizer row. `build_pq_index` persists the result; the inline
+    recall harnesses hand it straight to `_adc_topk`."""
+    # residual centers: refined ones come back out of their quantizer
+    # row, seed ones are a plain corpus filter — for each, the form with
+    # the fewest Exchanges in its recall plan (sf0.01: 15 vs 16, 6 vs 9)
+    if coarse_centers is not None:
+        quantizer = centers_seed_row(coarse_centers)
+        centers = _seed_centers(quantizer)
+    else:
+        quantizer = ivf_seed_row(embeddings, nlist, id_col, vec_col)
+        centers = embeddings.filter(F.col(id_col) < nlist).select(
+            F.col(id_col).alias("ivf_cell"), _as_double(vec_col).alias("ctr")
         )
-        .select("query_id", F.col("p")["cell"].alias("ivf_cell"))
+    assigned = ivf_assign(
+        embeddings, nlist, id_col, vec_col, centers_row=quantizer
+    ).select(
+        F.col(id_col).alias("vec_id"), "v", F.col("cell").alias("ivf_cell")
     )
-    qsub = q.select(
-        "query_id",
-        "qn",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}),"
-                f" s -> slice(qv, s * {sub} + 1, {sub}))"
-            )
-        ).alias("s", "qsv"),
+    if by_residual:
+        cents, codes = pq_train_encode(
+            _residuals(assigned, centers), m=m, k=k_codebook, iters=iters,
+            dim=dim, id_col="vec_id", vec_col="rv",
+        )
+    else:
+        cents, codes = pq_train_encode(
+            embeddings, m=m, k=k_codebook, iters=iters, dim=dim,
+            id_col=id_col, vec_col=vec_col,
+        )
+    return _PQIndex(
+        codes.withColumnRenamed("cell", "code").join(
+            assigned.select("vec_id", "ivf_cell"), "vec_id"
+        ),
+        cents.withColumnRenamed("cell", "code"),
+        quantizer, centers if by_residual else None, m, dim // m,
+        m * k_codebook,
     )
-    dot_lut = qsub.join(F.broadcast(cents), "s").select(
-        "query_id", "qn", "s", "code",
-        dot("qsv", "cv").alias("dp"),
+
+
+def _residuals(assigned: DataFrame, centers: DataFrame) -> DataFrame:
+    """(vec_id, ivf_cell, rv): each assigned (vec_id, v, ivf_cell) vector
+    minus its (ivf_cell, ctr) center — an elementwise subtract,
+    engine-replayable."""
+    return assigned.join(F.broadcast(centers), "ivf_cell").select(
+        "vec_id",
+        "ivf_cell",
+        F.expr("zip_with(v, ctr, (x, y) -> x - y)").alias("rv"),
     )
-    norm_lut = cents.select("s", "code", sq_norm("cv").alias("np"))
-    # probes and dot_lut are QUERY-proportional (|q|·nprobe and |q|·m·k
-    # rows) — hinted only while the batch provably fits the broadcast
-    # budget (r14 VERDICT item 3: an unconditional hint pins them into
-    # executor memory at ANY batch size, the class r05 purged from
-    # scale-proportional join sides). norm_lut stays unconditionally
-    # hinted: m·k rows, a constant of the codebook budget.
-    hb = _lut_hint(queries, m * k_codebook)
-    parts = (
-        codes.join(cells, "vec_id")
-        .join(hb(probes), "ivf_cell")
-        .join(hb(dot_lut), ["query_id", "s", "code"])
-        .join(F.broadcast(norm_lut), ["s", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-    )
-    return _adc_fold_rank(parts, k)
 
 
 def ivfpq_residual_adc_topk(
@@ -725,8 +802,8 @@ def ivfpq_residual_adc_topk(
     folds, and the norm partial is the same left fold over
     ``(center_i + cv_i)²`` that DuckDB's unrolled ``(0.0 + t₁ + …)``
     emits. Training runs inline (the recall-HARNESS configuration, same
-    contract as `ivfpq_adc_topk`); a deployment would persist the
-    residual codebooks exactly as `build_pq_index` does raw ones.
+    contract as `ivfpq_adc_topk`); `build_pq_index(by_residual=True)`
+    persists the same training step for `pq_residual_topk_probe`.
 
     ``coarse_centers`` (a (cell, cv) frame, e.g. `kmeans_centroids`)
     substitutes Lloyd-refined centers for the default seed convention in
@@ -735,122 +812,11 @@ def ivfpq_residual_adc_topk(
     attributed the residual recall collapse partly to unrefined seed
     centers; `scale_probe.py residual_refined` measures that claim
     through this seam)."""
-    if coarse_centers is not None:
-        centers_row = centers_seed_row(coarse_centers)
-        cells = ivf_assign(
-            embeddings, nlist, id_col, vec_col, centers_row=centers_row
-        ).select(F.col(id_col).alias("vec_id"), F.col("cell").alias("ivf_cell"))
-        ctrs = coarse_centers.select(
-            F.col("cell").cast("long").alias("ivf_cell"),
-            F.col("cv").alias("ctr"),
-        )
-    else:
-        centers_row = None
-        cells = ivf_assign(embeddings, nlist, id_col, vec_col).select(
-            F.col(id_col).alias("vec_id"), F.col("cell").alias("ivf_cell")
-        )
-        ctrs = embeddings.filter(F.col(id_col) < nlist).select(
-            F.col(id_col).alias("ivf_cell"), _as_double(vec_col).alias("ctr")
-        )
-    res = (
-        embeddings.select(
-            F.col(id_col).alias("vec_id"), _as_double(vec_col).alias("v")
-        )
-        .join(cells, "vec_id")
-        .join(F.broadcast(ctrs), "ivf_cell")
-        .select(
-            "vec_id", F.zip_with("v", "ctr", lambda x, y: x - y).alias("rv")
-        )
+    index = _ivfpq_train(
+        embeddings, m, k_codebook, iters, dim, nlist, id_col, vec_col,
+        coarse_centers=coarse_centers, by_residual=True,
     )
-    cents, codes = pq_train_encode(
-        res, m=m, k=k_codebook, iters=iters, dim=dim,
-        id_col="vec_id", vec_col="rv",
-    )
-    codes = codes.withColumnRenamed("cell", "code")
-    cents = cents.withColumnRenamed("cell", "code")
-    sub = dim // m
-    csub = ctrs.select(
-        "ivf_cell",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}),"
-                f" s -> slice(ctr, s * {sub} + 1, {sub}))"
-            )
-        ).alias("s", "csv"),
-    )
-    norm_lut = csub.join(cents, "s").select(
-        "ivf_cell",
-        "s",
-        "code",
-        sq_norm("zip_with(csv, cv, (x, y) -> x + y)").alias(
-            "np"
-        ),
-    )
-    seed_row = (
-        centers_row
-        if centers_row is not None
-        else ivf_seed_row(embeddings, nlist, id_col, vec_col)
-    )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        _as_double(vec_col).alias("qv"),
-        sq_norm(_as_double_sql(vec_col)).alias("qn"),
-    )
-    probes = (
-        q.join(F.broadcast(seed_row))
-        .select(
-            "query_id",
-            F.explode(
-                F.slice(_best_cells("qv", "qn"), 1, nprobe)
-            ).alias("p"),
-        )
-        .select("query_id", F.col("p")["cell"].alias("ivf_cell"))
-    )
-    qsub = q.select(
-        "query_id",
-        "qn",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}),"
-                f" s -> slice(qv, s * {sub} + 1, {sub}))"
-            )
-        ).alias("s", "qsv"),
-    )
-    dlut_res = qsub.join(F.broadcast(cents), "s").select(
-        "query_id", "qn", "s", "code",
-        dot("qsv", "cv").alias("dpr"),
-    )
-    dlut_ctr = (
-        qsub.join(probes, "query_id")
-        .join(F.broadcast(csub), ["ivf_cell", "s"])
-        .select(
-            "query_id", "ivf_cell", "s",
-            dot("qsv", "csv").alias("dpc"),
-        )
-    )
-    # probes / dlut_ctr / dlut_res are QUERY-proportional (|q|·nprobe,
-    # |q|·nprobe·m, |q|·m·k rows) — hinted only while the batch provably
-    # fits the broadcast budget (r14 VERDICT item 3; see
-    # `_small_query_batch`). norm_lut stays unconditionally hinted:
-    # nlist·m·k rows, a constant of the index geometry.
-    hb = _lut_hint(queries, m * k_codebook)
-    parts = (
-        codes.join(cells, "vec_id")
-        .join(hb(probes), "ivf_cell")
-        .join(hb(dlut_ctr), ["query_id", "ivf_cell", "s"])
-        .join(hb(dlut_res), ["query_id", "s", "code"])
-        .join(F.broadcast(norm_lut), ["ivf_cell", "s", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            "qn",
-            "s",
-            (F.col("dpc") + F.col("dpr")).alias("dp"),
-            "np",
-        )
-    )
-    return _adc_fold_rank(parts, k)
+    return _adc_topk(index, queries, k, nprobe, query_id_col, vec_col)
 
 
 def brute_force_topk(
@@ -864,34 +830,17 @@ def brute_force_topk(
     """Exact top-k neighbors per query by cosine. The query side is broadcast
     (queries ≪ corpus); ranking is a per-query window on the rounded
     similarity with an id tiebreak, so results are deterministic."""
-    # norms are precomputed once per side — the cosine per pair is then one
-    # fold (dot) instead of three; numerically identical to inline norms
-    cand = embeddings.select(
-        F.col(id_col).alias("cand_id"),
-        _as_double(vec_col).alias("cv"),
-        sq_norm(_as_double_sql(vec_col)).alias("cn"),
-    )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        _as_double(vec_col).alias("qv"),
-        sq_norm(_as_double_sql(vec_col)).alias("qn"),
-    )
-    cos = dot("qv", "cv") / F.nullif(
-        F.sqrt(F.col("qn") * F.col("cn")), F.lit(0.0)
-    )
-    scored = (
-        cand.join(F.broadcast(q), F.col("cand_id") != F.col("query_id"))
-        .withColumn("cos_sim", F.round(cos, 6))
-        .select("query_id", "cand_id", "cos_sim")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cos_sim", "rank")
-    )
+    cand = _vec_side(embeddings, id_col, vec_col, ("cand_id", "cv", "cn"))
+    q = _vec_side(queries, query_id_col, vec_col, ("query_id", "qv", "qn"))
+    scored = cand.join(
+        F.broadcast(q), F.col("cand_id") != F.col("query_id")
+    ).select("query_id", "cand_id", _cos("qv", "cv", "qn", "cn"))
+    return _rank_topk(scored, k)
+
+
+def _cos(a: str, b: str, an: str, bn: str) -> Column:
+    """The ``cos_sim`` column of two vector sides (see `_vec_side`)."""
+    return F.expr(_cos_sql(_dot_sql(a, b), an, bn)).alias("cos_sim")
 
 
 def _dim_ordered_dot(a_mat, b_mat):
@@ -1148,35 +1097,20 @@ def lsh_topk(
     corpus (recall < 1 by design; brute_force_topk is the exactness
     baseline). Few planes → big buckets → higher recall; the bucket join
     replaces the all-pairs crossjoin."""
-    b = lsh_bucket(embeddings, num_planes, dim, seed, id_col, vec_col)
-    cand = b.select(
-        F.col(id_col).alias("cand_id"),
-        _as_double(vec_col).alias("cv"),
-        sq_norm(_as_double_sql(vec_col)).alias("cn"),
-        "bucket",
+    cand = _vec_side(
+        lsh_bucket(embeddings, num_planes, dim, seed, id_col, vec_col),
+        id_col, vec_col, ("cand_id", "cv", "cn"), "bucket",
     )
-    qb = lsh_bucket(queries, num_planes, dim, seed, query_id_col, vec_col).select(
-        F.col(query_id_col).alias("query_id"),
-        _as_double(vec_col).alias("qv"),
-        sq_norm(_as_double_sql(vec_col)).alias("qn"),
-        "bucket",
-    )
-    cos = dot("qv", "cv") / F.nullif(
-        F.sqrt(F.col("qn") * F.col("cn")), F.lit(0.0)
+    qb = _vec_side(
+        lsh_bucket(queries, num_planes, dim, seed, query_id_col, vec_col),
+        query_id_col, vec_col, ("query_id", "qv", "qn"), "bucket",
     )
     scored = (
         qb.join(cand, ["bucket"])
         .filter(F.col("cand_id") != F.col("query_id"))
-        .withColumn("cos_sim", F.round(cos, 6))
+        .select("query_id", "cand_id", _cos("qv", "cv", "qn", "cn"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cos_sim", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def lsh_neardup_pairs(
@@ -1193,27 +1127,13 @@ def lsh_neardup_pairs(
     exactness baseline). Bucket sizes are data-independent-ish (2^planes
     buckets), so the within-bucket self-join is skew-bounded."""
     b = lsh_bucket(embeddings, num_planes, dim, seed, id_col, vec_col)
-    a = b.select(
-        F.col(id_col).alias("id_a"),
-        _as_double(vec_col).alias("va"),
-        sq_norm(_as_double_sql(vec_col)).alias("na"),
-        "bucket",
-    )
-    c = b.select(
-        F.col(id_col).alias("id_b"),
-        _as_double(vec_col).alias("vb"),
-        sq_norm(_as_double_sql(vec_col)).alias("nb"),
-        "bucket",
-    )
-    cos = dot("va", "vb") / F.nullif(
-        F.sqrt(F.col("na") * F.col("nb")), F.lit(0.0)
-    )
+    a = _vec_side(b, id_col, vec_col, ("id_a", "va", "na"), "bucket")
+    c = _vec_side(b, id_col, vec_col, ("id_b", "vb", "nb"), "bucket")
     return (
         a.join(c, ["bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos_sim", F.round(cos, 6))
+        .select("id_a", "id_b", _cos("va", "vb", "na", "nb"))
         .filter(F.col("cos_sim") >= threshold)
-        .select("id_a", "id_b", "cos_sim")
     )
 
 
@@ -1254,10 +1174,10 @@ def ivf_seed_row(
     the *index structure* is identical, only centroid quality differs).
     The row is broadcast wherever it is used: the quantizer is tiny
     (nlist × dim doubles) regardless of corpus size."""
-    seeds = embeddings.filter(F.col(id_col) < nlist).select(
-        F.col(id_col).alias("seed_id"), _as_double(vec_col).alias("sv")
+    seeds = _vec_side(
+        embeddings.filter(F.col(id_col) < nlist), id_col, vec_col,
+        ("seed_id", "sv", "sn"),
     )
-    seeds = seeds.withColumn("sn", sq_norm("sv"))
     return seeds.agg(
         F.sort_array(F.collect_list(F.struct("seed_id", "sv", "sn"))).alias("seeds")
     )
@@ -1281,36 +1201,30 @@ def centers_seed_row(
     )
 
 
-def _best_cells(vec: Column | str, vec_norm: Column | str) -> Column:
-    """Array of (neg_sim, cell) structs vs every seed, sorted best-first.
-    neg_sim = -round(cos, 6) so ascending struct order is (highest cosine,
-    lowest seed id) — the same tiebreak as every top-k in this module; a
-    null cosine (zero vector) sorts last via the +2.0 sentinel. String
-    inputs take the parse path (~60 ms/call of py4j saved — see the
-    module note above); both paths build the identical expression."""
-    if isinstance(vec, str) and isinstance(vec_norm, str):
-        return F.expr(
-            "array_sort(transform(seeds, s -> named_struct("
-            f"'neg_sim', coalesce(-round({_dot_sql(vec, 's.sv')}"
-            f" / nullif(sqrt({vec_norm} * s.sn), cast(0.0 as double)), 6),"
-            " cast(2.0 as double)),"
-            " 'cell', s.seed_id)))"
-        )
-    scored = F.transform(
-        F.col("seeds"),
-        lambda s: F.struct(
-            F.coalesce(
-                -F.round(
-                    dot(vec, s["sv"])
-                    / F.nullif(F.sqrt(vec_norm * s["sn"]), F.lit(0.0)),
-                    6,
-                ),
-                F.lit(2.0),
-            ).alias("neg_sim"),
-            s["seed_id"].alias("cell"),
-        ),
+def _best_cells(vec: str, vec_norm: str, seeds: str = "seeds") -> Column:
+    """Array of (neg_sim, cell) structs vs every seed of the ``seeds``
+    array (SQL text), sorted best-first. neg_sim = -round(cos, 6) so
+    ascending struct order is (highest cosine, lowest seed id) — the same
+    tiebreak as every top-k in this module; a null cosine (zero vector)
+    sorts last via the +2.0 sentinel."""
+    cos = _cos_sql(_dot_sql(vec, "s.sv"), vec_norm, "s.sn")
+    return F.expr(
+        f"array_sort(transform({seeds}, s -> named_struct("
+        f"'neg_sim', coalesce(-{cos}, cast(2.0 as double)),"
+        " 'cell', s.seed_id)))"
     )
-    return F.array_sort(scored)
+
+
+def _probe_cells(
+    df: DataFrame, nprobe: int, keep: list[str], cell: str = "cell"
+) -> DataFrame:
+    """``keep`` plus one ``cell`` row per probed cell: the ``nprobe``
+    best cells of each (qv, qn) row against the ``seeds`` column it
+    carries (a broadcast quantizer row or an inlined literal)."""
+    return df.select(
+        *keep,
+        F.explode(F.slice(_best_cells("qv", "qn"), 1, nprobe)).alias("p"),
+    ).select(*keep, F.col("p")["cell"].alias(cell))
 
 
 def ivf_assign(
@@ -1333,9 +1247,7 @@ def ivf_assign(
         if centers_row is not None
         else ivf_seed_row(embeddings, nlist, id_col, vec_col)
     )
-    e = embeddings.select(F.col(id_col), _as_double(vec_col).alias("v")).withColumn(
-        "vn", sq_norm("v")
-    )
+    e = _vec_side(embeddings, id_col, vec_col, (id_col, "v", "vn"))
     best = _best_cells("v", "vn")[0]
     return (
         e.join(F.broadcast(seed_row))
@@ -1377,9 +1289,10 @@ def semdedup_assign(
 
     k1 = math.isqrt(max(nlist - 1, 0)) + 1
     supers_row = ivf_seed_row(embeddings, k1, id_col, vec_col)
-    seeds = embeddings.filter(F.col(id_col) < nlist).select(
-        F.col(id_col).alias("seed_id"), _as_double(vec_col).alias("sv")
-    ).withColumn("sn", sq_norm("sv"))
+    seeds = _vec_side(
+        embeddings.filter(F.col(id_col) < nlist), id_col, vec_col,
+        ("seed_id", "sv", "sn"),
+    )
     seed_best = _best_cells("sv", "sn")[0]
     seed_super = (
         seeds.join(F.broadcast(supers_row))
@@ -1397,42 +1310,24 @@ def semdedup_assign(
             F.collect_list(F.struct("grp", "seed_id", "sv", "sn"))
         ).alias("all_seeds")
     ).select(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(k1 - 1)),
-            lambda g: F.filter(
-                F.col("all_seeds"), lambda x: x["grp"] == g
-            ),
+        F.expr(
+            f"transform(sequence(0, {k1 - 1}),"
+            " g -> filter(all_seeds, x -> x.grp = g))"
         ).alias("super_groups")
     )
-    e = embeddings.select(F.col(id_col), _as_double(vec_col).alias("v")).withColumn(
-        "vn", sq_norm("v")
-    )
-    vec_super = _best_cells("v", "vn")[0]["cell"]
-    my_seeds = F.element_at(
-        F.col("super_groups"), (vec_super + F.lit(1)).cast("int")
-    )
-    scored = F.array_sort(
-        F.transform(
-            my_seeds,
-            lambda x: F.struct(
-                F.coalesce(
-                    -F.round(
-                        dot(F.col("v"), x["sv"])
-                        / F.nullif(
-                            F.sqrt(F.col("vn") * x["sn"]), F.lit(0.0)
-                        ),
-                        6,
-                    ),
-                    F.lit(2.0),
-                ).alias("neg_sim"),
-                x["seed_id"].alias("cell"),
-            ),
-        )
-    )
-    best = scored[0]
+    e = _vec_side(embeddings, id_col, vec_col, (id_col, "v", "vn"))
+    # each vector scores only its super-cell's seeds: `_best_cells` over
+    # the super_groups entry its first-level argmax picks
+    best = _best_cells(
+        "v", "vn", "element_at(super_groups, cast(sup + 1 as int))"
+    )[0]
     return (
         e.join(F.broadcast(supers_row))
         .join(F.broadcast(groups_row))
+        .select(
+            F.col(id_col), "v", "vn", "super_groups",
+            _best_cells("v", "vn")[0]["cell"].alias("sup"),
+        )
         .select(
             F.col(id_col),
             F.col("v"),
@@ -1461,39 +1356,49 @@ def ivf_topk(
     The probe side is tiny (queries × nprobe rows) and hash-joins the
     cell-partitioned corpus on `cell` — the crossjoin of `brute_force_topk`
     is replaced by a ~nprobe/nlist fraction scan."""
-    assigned = ivf_assign(embeddings, nlist, id_col, vec_col).select(
+    cells = ivf_assign(embeddings, nlist, id_col, vec_col).select(
         F.col(id_col).alias("cand_id"), F.col("v").alias("cv"),
         F.col("vn").alias("cn"), "cell",
     )
     seed_row = ivf_seed_row(embeddings, nlist, id_col, vec_col)
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    ).withColumn("qn", sq_norm("qv"))
-    probes = (
-        q.join(F.broadcast(seed_row))
-        .select(
-            "query_id", "qv", "qn",
-            F.explode(F.slice(_best_cells("qv", "qn"), 1, nprobe)).alias(
-                "probe"
-            ),
-        )
-        .select("query_id", "qv", "qn", F.col("probe")["cell"].alias("cell"))
+    return _ivf_probe_topk(
+        cells, seed_row, queries, k, nprobe, query_id_col, vec_col
     )
-    cos = dot("qv", "cv") / F.nullif(
-        F.sqrt(F.col("qn") * F.col("cn")), F.lit(0.0)
+
+
+def _ivf_scored(
+    q: DataFrame, cells: DataFrame, nprobe: int, within: DataFrame | None = None
+) -> DataFrame:
+    """(query_id, cand_id, cos_sim) for every candidate in each query's
+    ``nprobe`` best cells: ``q`` carries (query_id, qv, qn, seeds),
+    ``cells`` is (cand_id, cv, cn, cell); ``within`` (query_id, cand_id)
+    restricts the pairs before they are scored."""
+    cand = _probe_cells(q, nprobe, ["query_id", "qv", "qn"]).join(
+        cells, ["cell"]
     )
-    scored = (
-        probes.join(assigned, ["cell"])
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .withColumn("cos_sim", F.round(cos, 6))
+    if within is not None:
+        cand = cand.join(within, ["query_id", "cand_id"])
+    return cand.filter(F.col("cand_id") != F.col("query_id")).select(
+        "query_id", "cand_id", _cos("qv", "cv", "qn", "cn")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cos_sim", "rank")
+
+
+def _ivf_probe_topk(
+    cells: DataFrame,
+    seed_row: DataFrame,
+    queries: DataFrame,
+    k: int,
+    nprobe: int,
+    query_id_col: str,
+    vec_col: str,
+    within: DataFrame | None = None,
+) -> DataFrame:
+    """The IVF serving body shared by `ivf_topk` (cells assigned in
+    memory), `ivf_topk_probe` (cells read from disk) and
+    `pq_topk_rerank`'s exact stage."""
+    q = _vec_side(queries, query_id_col, vec_col, ("query_id", "qv", "qn"))
+    return _rank_topk(
+        _ivf_scored(q.join(F.broadcast(seed_row)), cells, nprobe, within), k
     )
 
 
@@ -1584,36 +1489,10 @@ def ivf_topk_probe(
     partition pruning skip every unprobed cell's files."""
     import os
 
-    cells = spark.read.parquet(os.path.join(index_dir, "cells"))
-    seed_row = spark.read.parquet(os.path.join(index_dir, "quantizer"))
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    ).withColumn("qn", sq_norm("qv"))
-    probes = (
-        q.join(F.broadcast(seed_row))
-        .select(
-            "query_id", "qv", "qn",
-            F.explode(F.slice(_best_cells("qv", "qn"), 1, nprobe)).alias(
-                "probe"
-            ),
-        )
-        .select("query_id", "qv", "qn", F.col("probe")["cell"].alias("cell"))
-    )
-    cos = dot("qv", "cv") / F.nullif(
-        F.sqrt(F.col("qn") * F.col("cn")), F.lit(0.0)
-    )
-    scored = (
-        probes.join(cells, ["cell"])
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .withColumn("cos_sim", F.round(cos, 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cos_sim", "rank")
+    return _ivf_probe_topk(
+        spark.read.parquet(os.path.join(index_dir, "cells")),
+        spark.read.parquet(os.path.join(index_dir, "quantizer")),
+        queries, k, nprobe, query_id_col, vec_col,
     )
 
 
@@ -1755,18 +1634,9 @@ def pq_index_upsert(
     import os
 
     codes_dir = os.path.join(index_dir, "codes")
-    seed_row = spark.read.parquet(os.path.join(index_dir, "quantizer"))
-    cents = spark.read.parquet(
-        os.path.join(index_dir, "codebooks")
-    ).withColumnRenamed("code", "cell")
-    by_residual = _pq_index_is_residual(spark, index_dir)
-    # subspace geometry off the codebooks (index metadata, tiny collect —
-    # the pq_topk_probe discipline: the caller can't desynchronize it)
-    geo = cents.agg(
-        (F.max("s") + 1).alias("m"),
-        F.max(F.size("cv")).alias("sub"),
-    ).collect()[0]
-    m, dim = int(geo["m"]), int(geo["m"]) * int(geo["sub"])
+    index = _read_pq_index(spark, index_dir)
+    seed_row = index.quantizer
+    cents = index.cents.withColumnRenamed("code", "cell")
 
     def _coded(vectors: DataFrame) -> DataFrame:
         assigned = ivf_assign(
@@ -1776,23 +1646,14 @@ def pq_index_upsert(
             F.col("v"),
             F.col("cell").alias("ivf_cell"),
         )
-        if by_residual:
-            ctrs = seed_row.select(
-                F.explode("seeds").alias("sd")
-            ).select(
-                F.col("sd.seed_id").alias("ivf_cell"),
-                F.col("sd.sv").alias("ctr"),
-            )
-            src = assigned.join(F.broadcast(ctrs), "ivf_cell").select(
-                "vec_id",
-                "ivf_cell",
-                F.zip_with("v", "ctr", lambda x, y: x - y).alias("ev"),
-            )
-        else:
-            src = assigned.select("vec_id", "ivf_cell", F.col("v").alias("ev"))
+        src = (
+            _residuals(assigned, index.centers)
+            if index.centers is not None
+            else assigned.withColumnRenamed("v", "rv")
+        )
         codes = pq_encode(
-            src.select("vec_id", "ev"), cents, m=m, dim=dim,
-            id_col="vec_id", vec_col="ev",
+            src.select("vec_id", "rv"), cents, m=index.m,
+            dim=index.m * index.sub, id_col="vec_id", vec_col="rv",
         ).withColumnRenamed("cell", "code")
         return codes.join(src.select("vec_id", "ivf_cell"), "vec_id")
 
@@ -1870,7 +1731,7 @@ def build_pq_index(
     - ``quantizer/``: the 1-row coarse-quantizer seeds;
     - ``meta/``: one row of index-encoding metadata (``by_residual``) the
       probes check so a raw probe can never silently score a residual
-      index or vice versa (absent on pre-r16 indexes ⇒ raw).
+      index or vice versa.
 
     ``coarse_centers`` (a (cell, cv) frame, e.g. `kmeans_centroids`)
     substitutes a Lloyd-REFINED coarse quantizer for the default seed
@@ -1900,53 +1761,17 @@ def build_pq_index(
             "over unrefined seed centers collapses recall (r15 frontier, "
             "PERF.md 'residual encoding needs refined cells')"
         )
-    if coarse_centers is not None:
-        centers_row = centers_seed_row(coarse_centers)
-        quantizer = centers_row
-        cells = ivf_assign(
-            embeddings, nlist, id_col, vec_col, centers_row=centers_row
-        ).select(F.col(id_col).alias("vec_id"), F.col("cell").alias("ivf_cell"))
-    else:
-        quantizer = ivf_seed_row(embeddings, nlist, id_col, vec_col)
-        cells = ivf_assign(embeddings, nlist, id_col, vec_col).select(
-            F.col(id_col).alias("vec_id"), F.col("cell").alias("ivf_cell")
-        )
-    if by_residual:
-        ctrs = coarse_centers.select(
-            F.col("cell").cast("long").alias("ivf_cell"),
-            F.col("cv").alias("ctr"),
-        )
-        train_src = (
-            embeddings.select(
-                F.col(id_col).alias("vec_id"), _as_double(vec_col).alias("v")
-            )
-            .join(cells, "vec_id")
-            .join(F.broadcast(ctrs), "ivf_cell")
-            .select(
-                "vec_id",
-                F.zip_with("v", "ctr", lambda x, y: x - y).alias("rv"),
-            )
-        )
-        cents, codes = pq_train_encode(
-            train_src, m=m, k=k_codebook, iters=iters, dim=dim,
-            id_col="vec_id", vec_col="rv",
-        )
-    else:
-        cents, codes = pq_train_encode(
-            embeddings, m=m, k=k_codebook, iters=iters, dim=dim,
-            id_col=id_col, vec_col=vec_col,
-        )
-    (
-        codes.withColumnRenamed("cell", "code")
-        .join(cells, "vec_id")
-        .write.partitionBy("ivf_cell")
-        .mode("overwrite")
-        .parquet(os.path.join(index_dir, "codes"))
+    index = _ivfpq_train(
+        embeddings, m, k_codebook, iters, dim, nlist, id_col, vec_col,
+        coarse_centers=coarse_centers, by_residual=by_residual,
     )
-    cents.withColumnRenamed("cell", "code").write.mode("overwrite").parquet(
+    index.codes.write.partitionBy("ivf_cell").mode("overwrite").parquet(
+        os.path.join(index_dir, "codes")
+    )
+    index.cents.write.mode("overwrite").parquet(
         os.path.join(index_dir, "codebooks")
     )
-    quantizer.write.mode("overwrite").parquet(
+    index.quantizer.write.mode("overwrite").parquet(
         os.path.join(index_dir, "quantizer")
     )
     spark.createDataFrame(
@@ -1954,45 +1779,68 @@ def build_pq_index(
     ).write.mode("overwrite").parquet(os.path.join(index_dir, "meta"))
 
 
-#: (realpath, meta mtime_ns) -> by_residual: the guard costs one tiny
-#: read job per DISTINCT index build, not one per probe call (the two
-#: raw probes were benched before the guard existed; it must not tax
-#: them). The mtime key invalidates on rebuild — not because
-#: `_ensure_index`'s atomic directory rename touches the child dir's
-#: mtime (a rename does NOT), but because a rebuild writes a FRESH
-#: meta/ dir whose own creation time rides in with it (r16 ADVICE:
-#: comment corrected).
-_PQ_META_MEMO: dict[tuple[str, int], bool] = {}
+#: (realpath, mtime_ns) -> the one row of a one-row artifact directory (a
+#: PQ index's meta/, an index quantizer/, a model's meta/): one tiny read
+#: job per DISTINCT build, never one per serving call. The mtime key
+#: invalidates on rebuild — not because `_ensure_index`'s atomic directory
+#: rename touches the child dir's mtime (a rename does NOT), but because a
+#: rebuild writes a FRESH directory whose own creation time rides in with
+#: it. A missing directory raises: every served artifact carries its
+#: metadata.
+_ARTIFACT_ROWS: dict[tuple[str, int], Row] = {}
 
 
-def _pq_index_is_residual(spark, index_dir: str) -> bool:
-    """Read the index's encoding flag. A MISSING ``meta/`` is raw-vector
-    by construction (pre-r16 indexes: residual builds never existed
-    before the flag did) — but ONLY FileNotFoundError may take that
-    branch; any other OSError (permissions, I/O failure on a meta dir
-    that exists) raises, because silently answering 'raw' for a residual
-    index whose meta/ is unreadable would let `pq_topk_probe` score
-    residual codes as raw — the exact silent failure this guard exists
-    to prevent (r16 ADVICE)."""
+def _artifact_row(spark, path: str) -> Row:
     import os
 
-    meta_dir = os.path.join(index_dir, "meta")
-    try:
-        key = (os.path.realpath(meta_dir), os.stat(meta_dir).st_mtime_ns)
-    except FileNotFoundError:
-        return False
-    flag = _PQ_META_MEMO.get(key)
-    if flag is None:
-        flag = bool(spark.read.parquet(meta_dir).collect()[0]["by_residual"])
-        _PQ_META_MEMO[key] = flag
-    return flag
+    key = (os.path.realpath(path), os.stat(path).st_mtime_ns)
+    row = _ARTIFACT_ROWS.get(key)
+    if row is None:
+        row = _ARTIFACT_ROWS[key] = spark.read.parquet(path).collect()[0]
+    return row
 
 
-#: (realpath, quantizer-dir mtime_ns) -> fingerprint: same cost contract
-#: as `_PQ_META_MEMO` — one tiny 1-row read job per DISTINCT index
-#: build, never one per probe call; the mtime key invalidates on rebuild
-#: because a rebuild writes a fresh quantizer/ dir.
-_QUANTIZER_FP_MEMO: dict[tuple[str, int], int] = {}
+def _read_pq_index(
+    spark, index_dir: str, by_residual: bool | None = None
+) -> _PQIndex:
+    """The one serving read of a materialized PQ index: codes, codebooks
+    and quantizer frames, the subspace geometry (m, sub-width, LUT rows)
+    read off the codebooks themselves — index metadata, one tiny collect,
+    so the caller can't desynchronize it from the build — and the
+    ``meta/`` encoding flag. With ``by_residual`` given, an index of the
+    other encoding raises: an ADC fold over the wrong encoding scores
+    garbage silently."""
+    import os
+
+    def part(name: str) -> DataFrame:
+        return spark.read.parquet(os.path.join(index_dir, name))
+
+    flag = bool(
+        _artifact_row(spark, os.path.join(index_dir, "meta"))["by_residual"]
+    )
+    if by_residual is not None and flag != by_residual:
+        kind, probe = (
+            ("RESIDUAL", "pq_residual_topk_probe")
+            if flag
+            else ("RAW-VECTOR", "pq_topk_probe")
+        )
+        raise ValueError(
+            f"index at {index_dir!r} holds {kind} codes — probe it with "
+            f"{probe} (an ADC fold over the wrong encoding scores garbage "
+            "silently)"
+        )
+    cents = part("codebooks")
+    geo = cents.agg(
+        (F.max("s") + 1).alias("m"),
+        F.max(F.size("cv")).alias("sub"),
+        F.count(F.lit(1)).alias("lut_rows"),
+    ).collect()[0]
+    quantizer = part("quantizer")
+    return _PQIndex(
+        part("codes"), cents, quantizer,
+        _seed_centers(quantizer) if flag else None,
+        int(geo["m"]), int(geo["sub"]), int(geo["lut_rows"]),
+    )
 
 
 def _quantizer_fingerprint(spark, index_dir: str) -> int:
@@ -2002,18 +1850,11 @@ def _quantizer_fingerprint(spark, index_dir: str) -> int:
     runtime a PQ/IVF index pair built with divergent quantizers would
     make the rerank's inner join silently drop shortlist candidates).
     The quantizer row is nlist·dim doubles — index geometry, never
-    corpus-proportional — so collecting it driver-side is the same tiny
-    job `_pq_index_is_residual` already pays, memoized the same way."""
+    corpus-proportional — read once per build via `_artifact_row`."""
     import os
 
-    qdir = os.path.join(index_dir, "quantizer")
-    key = (os.path.realpath(qdir), os.stat(qdir).st_mtime_ns)
-    fp = _QUANTIZER_FP_MEMO.get(key)
-    if fp is None:
-        seeds = spark.read.parquet(qdir).collect()[0]["seeds"]
-        fp = hash(tuple((s["seed_id"], tuple(s["sv"])) for s in seeds))
-        _QUANTIZER_FP_MEMO[key] = fp
-    return fp
+    seeds = _artifact_row(spark, os.path.join(index_dir, "quantizer"))["seeds"]
+    return hash(tuple((s["seed_id"], tuple(s["sv"])) for s in seeds))
 
 
 def pq_topk_probe(
@@ -2038,70 +1879,10 @@ def pq_topk_probe(
     (m, sub-width) is read off the codebooks themselves — index metadata,
     one tiny collect — so the caller can't desynchronize it from the
     build."""
-    import os
-
-    if _pq_index_is_residual(spark, index_dir):
-        raise ValueError(
-            "index at %r holds RESIDUAL codes — probe it with "
-            "pq_residual_topk_probe (a raw ADC fold over residual codes "
-            "scores garbage silently)" % index_dir
-        )
-    codes = spark.read.parquet(os.path.join(index_dir, "codes"))
-    cents = spark.read.parquet(os.path.join(index_dir, "codebooks"))
-    seed_row = spark.read.parquet(os.path.join(index_dir, "quantizer"))
-    meta = cents.agg(
-        (F.max("s") + 1).alias("m"),
-        F.max(F.size("cv")).alias("sub"),
-        F.count(F.lit(1)).alias("lut_rows"),
-    ).collect()[0]
-    m, sub = int(meta["m"]), int(meta["sub"])
-    lut_rows_per_query = int(meta["lut_rows"])  # m·k codebook entries
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        _as_double(vec_col).alias("qv"),
-        sq_norm(_as_double_sql(vec_col)).alias("qn"),
+    return _adc_topk(
+        _read_pq_index(spark, index_dir, by_residual=False),
+        queries, k, nprobe, query_id_col, vec_col,
     )
-    probes = (
-        q.join(F.broadcast(seed_row))
-        .select(
-            "query_id",
-            F.explode(
-                F.slice(_best_cells("qv", "qn"), 1, nprobe)
-            ).alias("p"),
-        )
-        .select("query_id", F.col("p")["cell"].alias("ivf_cell"))
-    )
-    qsub = q.select(
-        "query_id",
-        "qn",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}),"
-                f" s -> slice(qv, s * {sub} + 1, {sub}))"
-            )
-        ).alias("s", "qsv"),
-    )
-    dot_lut = qsub.join(F.broadcast(cents), "s").select(
-        "query_id", "qn", "s", "code",
-        dot("qsv", "cv").alias("dp"),
-    )
-    norm_lut = cents.select("s", "code", sq_norm("cv").alias("np"))
-    # probes and dot_lut are QUERY-proportional (|q|·nprobe and |q|·m·k
-    # rows) — hinted only while the batch provably fits the broadcast
-    # budget (r14 VERDICT item 3; see `_small_query_batch`). The probes
-    # hint is also what drives dynamic partition pruning on the codes/
-    # scan; an over-cap batch loses the pruning along with the hint,
-    # which is the right trade — a batch that large probes most cells
-    # anyway, and nothing gets pinned into executor memory. norm_lut
-    # stays unconditionally hinted: m·k rows, a codebook constant.
-    hb = _lut_hint(queries, lut_rows_per_query)
-    parts = (
-        codes.join(hb(probes), "ivf_cell")
-        .join(hb(dot_lut), ["query_id", "s", "code"])
-        .join(F.broadcast(norm_lut), ["s", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-    )
-    return _adc_fold_rank(parts, k)
 
 
 def pq_topk_rerank(
@@ -2136,8 +1917,8 @@ def pq_topk_rerank(
     would make the inner join silently drop shortlist candidates, so
     this function compares the two indexes' persisted quantizer
     fingerprints up front (`_quantizer_fingerprint` — one memoized
-    1-row read per distinct build, the `_pq_index_is_residual` cost
-    contract) and raises rather than returning a wrong top-k (r17
+    1-row read per distinct build, the `_artifact_row` cost contract)
+    and raises rather than returning a wrong top-k (r17
     ADVICE: the guard now lives at runtime, not only in the
     reachability test).
 
@@ -2165,36 +1946,11 @@ def pq_topk_rerank(
         spark, pq_index_dir, queries, k=k_short, nprobe=nprobe,
         query_id_col=query_id_col, vec_col=vec_col,
     ).select("query_id", "cand_id")
-    cells = spark.read.parquet(os.path.join(ivf_index_dir, "cells"))
-    seed_row = spark.read.parquet(os.path.join(ivf_index_dir, "quantizer"))
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    ).withColumn("qn", sq_norm("qv"))
-    probes = (
-        q.join(F.broadcast(seed_row))
-        .select(
-            "query_id", "qv", "qn",
-            F.explode(
-                F.slice(_best_cells("qv", "qn"), 1, nprobe)
-            ).alias("probe"),
-        )
-        .select("query_id", "qv", "qn", F.col("probe")["cell"].alias("cell"))
-    )
-    hb = _lut_hint(queries, k_short)
-    cand = probes.join(cells, ["cell"]).join(
-        hb(shortlist), ["query_id", "cand_id"]
-    )
-    cos = dot("qv", "cv") / F.nullif(
-        F.sqrt(F.col("qn") * F.col("cn")), F.lit(0.0)
-    )
-    scored = cand.withColumn("cos_sim", F.round(cos, 6))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cos_sim", "rank")
+    return _ivf_probe_topk(
+        spark.read.parquet(os.path.join(ivf_index_dir, "cells")),
+        spark.read.parquet(os.path.join(ivf_index_dir, "quantizer")),
+        queries, k, nprobe, query_id_col, vec_col,
+        within=_lut_hint(queries, k_short)(shortlist),
     )
 
 
@@ -2223,103 +1979,7 @@ def pq_residual_topk_probe(
     nlist·m·k rows — both broadcast-sized constants of the index
     geometry, never corpus-proportional; the codes scan itself is the
     same dynamic-partition-pruned ~nprobe/nlist fraction."""
-    import os
-
-    if not _pq_index_is_residual(spark, index_dir):
-        raise ValueError(
-            "index at %r holds RAW-VECTOR codes — probe it with "
-            "pq_topk_probe (a residual ADC fold over raw codes scores "
-            "garbage silently)" % index_dir
-        )
-    codes = spark.read.parquet(os.path.join(index_dir, "codes"))
-    cents = spark.read.parquet(os.path.join(index_dir, "codebooks"))
-    seed_row = spark.read.parquet(os.path.join(index_dir, "quantizer"))
-    meta = cents.agg(
-        (F.max("s") + 1).alias("m"),
-        F.max(F.size("cv")).alias("sub"),
-        F.count(F.lit(1)).alias("lut_rows"),
-    ).collect()[0]
-    m, sub = int(meta["m"]), int(meta["sub"])
-    lut_rows_per_query = int(meta["lut_rows"])  # m·k codebook entries
-    # the persisted quantizer row IS the center table: explode it back to
-    # (ivf_cell, ctr) and slice per subspace — tiny (nlist rows), and the
-    # single source of truth for every coarse role below
-    ctrs = seed_row.select(F.explode("seeds").alias("sd")).select(
-        F.col("sd")["seed_id"].alias("ivf_cell"),
-        F.col("sd")["sv"].alias("ctr"),
+    return _adc_topk(
+        _read_pq_index(spark, index_dir, by_residual=True),
+        queries, k, nprobe, query_id_col, vec_col,
     )
-    csub = ctrs.select(
-        "ivf_cell",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}),"
-                f" s -> slice(ctr, s * {sub} + 1, {sub}))"
-            )
-        ).alias("s", "csv"),
-    )
-    norm_lut = csub.join(cents, "s").select(
-        "ivf_cell",
-        "s",
-        "code",
-        sq_norm("zip_with(csv, cv, (x, y) -> x + y)").alias(
-            "np"
-        ),
-    )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        _as_double(vec_col).alias("qv"),
-        sq_norm(_as_double_sql(vec_col)).alias("qn"),
-    )
-    probes = (
-        q.join(F.broadcast(seed_row))
-        .select(
-            "query_id",
-            F.explode(
-                F.slice(_best_cells("qv", "qn"), 1, nprobe)
-            ).alias("p"),
-        )
-        .select("query_id", F.col("p")["cell"].alias("ivf_cell"))
-    )
-    qsub = q.select(
-        "query_id",
-        "qn",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}),"
-                f" s -> slice(qv, s * {sub} + 1, {sub}))"
-            )
-        ).alias("s", "qsv"),
-    )
-    dlut_res = qsub.join(F.broadcast(cents), "s").select(
-        "query_id", "qn", "s", "code",
-        dot("qsv", "cv").alias("dpr"),
-    )
-    dlut_ctr = (
-        qsub.join(probes, "query_id")
-        .join(F.broadcast(csub), ["ivf_cell", "s"])
-        .select(
-            "query_id", "ivf_cell", "s",
-            dot("qsv", "csv").alias("dpc"),
-        )
-    )
-    # probes / dlut_ctr / dlut_res are QUERY-proportional — hinted only
-    # while the batch provably fits the broadcast budget (see
-    # `_small_query_batch`); norm_lut stays unconditionally hinted:
-    # nlist·m·k rows, a constant of the index geometry.
-    hb = _lut_hint(queries, lut_rows_per_query)
-    parts = (
-        codes.join(hb(probes), "ivf_cell")
-        .join(hb(dlut_ctr), ["query_id", "ivf_cell", "s"])
-        .join(hb(dlut_res), ["query_id", "s", "code"])
-        .join(F.broadcast(norm_lut), ["ivf_cell", "s", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            "qn",
-            "s",
-            (F.col("dpc") + F.col("dpr")).alias("dp"),
-            "np",
-        )
-    )
-    return _adc_fold_rank(parts, k)

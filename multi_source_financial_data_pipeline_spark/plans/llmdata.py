@@ -7,6 +7,8 @@ hashes match bit-for-bit.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from multi_source_financial_data_pipeline_spark.operators import (
@@ -1298,18 +1300,6 @@ def _ivf_cache_root() -> str:
 _FALLBACK_CACHE_ROOT: str | None = None
 
 
-def _ivf_index_dir(
-    sf_dir: str, nlist: int, two_level: bool = False, refined: bool = False
-) -> str:
-    import os
-
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    suffix = ("_2l" if two_level else "") + (
-        f"_refkm{KM_ITERS}" if refined else ""
-    )
-    return os.path.join(_ivf_cache_root(), f"{tag}_nlist{nlist}{suffix}")
-
-
 def _ensure_ivf_index(
     spark: SparkSession,
     sf_dir: str,
@@ -1322,14 +1312,12 @@ def _ensure_ivf_index(
     configuration): the refined centers drive assignment AND are
     persisted as ``quantizer/``, so `ivf_topk_probe` — unchanged —
     probes the same centers structurally."""
-    import os
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    ident = {"src": src, "mtime_ns": st.st_mtime_ns, "size": st.st_size,
-             "nlist": nlist, "two_level": two_level}
+    params = {"nlist": nlist, "two_level": two_level}
     if refined:
-        ident.update({"refined": True, "km_iters": KM_ITERS})
+        params.update({"refined": True, "km_iters": KM_ITERS})
+    name = f"nlist{nlist}" + ("_2l" if two_level else "") + (
+        f"_refkm{KM_ITERS}" if refined else ""
+    )
 
     def _build(build_dir: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
@@ -1345,9 +1333,7 @@ def _ensure_ivf_index(
             coarse_centers=centers,
         )
 
-    return _ensure_index(
-        _ivf_index_dir(sf_dir, nlist, two_level, refined), ident, _build
-    )
+    return _ensure_index(sf_dir, "embeddings", name, params, _build)
 
 
 def _ensure_pq_index(
@@ -1369,24 +1355,14 @@ def _ensure_pq_index(
     quantizer Lloyd-refined (`kmeans_centroids`, KM_ITERS — the
     `ivfpq_residual_refined_recall` configuration) and the sub-codebooks
     trained on residuals against those refined centers."""
-    import os
-
     m = PQ_M if m is None else m
     k = PQ_K if k is None else k
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    ident = {"src": src, "mtime_ns": st.st_mtime_ns, "size": st.st_size,
-             "m": m, "k": k, "iters": PQ_ITERS, "nlist": IVF_NLIST,
-             "kind": "pq"}
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    suffix = ""
+    params = {"m": m, "k": k, "iters": PQ_ITERS, "nlist": IVF_NLIST,
+              "kind": "pq"}
+    name = f"pq_m{m}k{k}i{PQ_ITERS}nlist{IVF_NLIST}"
     if residual_refined:
-        ident.update({"residual": True, "km_iters": KM_ITERS})
-        suffix = f"_reskm{KM_ITERS}"
-    index_dir = os.path.join(
-        _ivf_cache_root(),
-        f"{tag}_pq_m{m}k{k}i{PQ_ITERS}nlist{IVF_NLIST}{suffix}",
-    )
+        params.update({"residual": True, "km_iters": KM_ITERS})
+        name += f"_reskm{KM_ITERS}"
 
     def _build(build_dir: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
@@ -1403,13 +1379,45 @@ def _ensure_pq_index(
             by_residual=residual_refined,
         )
 
-    return _ensure_index(index_dir, ident, _build)
+    return _ensure_index(sf_dir, "embeddings", name, params, _build)
 
 
-def _ensure_index(index_dir: str, ident: dict, build) -> str:
-    """Build a materialized index at ``index_dir`` if absent or stale
-    (source parquet changed). The marker records the source identity so a
-    regenerated testdata tree invalidates the cached index.
+@functools.lru_cache(maxsize=None)
+def _code_fingerprint() -> str:
+    """Hash of the package's ``.py`` sources (relative path + bytes),
+    computed once per process: an artifact's identity includes the code
+    that built it, so a changed `build_pq_index` or `kmeans_centroids`
+    rebuilds instead of serving a stale artifact."""
+    import hashlib
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    h = hashlib.sha256()
+    for path in sorted(root.rglob("*.py")):
+        h.update(path.relative_to(root).as_posix().encode() + b"\0")
+        h.update(path.read_bytes())
+    return h.hexdigest()[:16]
+
+
+def _artifact_ident(sf_dir: str, table: str, params: dict) -> dict:
+    """An artifact's identity marker: its source table's path, mtime and
+    size, the build ``params``, and the code fingerprint."""
+    import os
+
+    src = os.path.join(sf_dir, f"{table}.parquet")
+    st = os.stat(src)
+    return {"src": src, "mtime_ns": st.st_mtime_ns, "size": st.st_size,
+            **params, "code": _code_fingerprint()}
+
+
+def _ensure_index(
+    sf_dir: str, table: str, name: str, params: dict, build
+) -> str:
+    """Build the artifact ``<sf tag>_<name>`` under the cache root if
+    absent or stale: the ``_built.json`` marker records `_artifact_ident`
+    (source table identity, build params, code fingerprint), so a
+    regenerated testdata tree, a parameter change or changed build code
+    invalidates the cached artifact.
 
     Concurrency-safe: the index is built into a unique sibling temp dir
     (marker written LAST, inside it) and atomically renamed into place, so a
@@ -1419,6 +1427,10 @@ def _ensure_index(index_dir: str, ident: dict, build) -> str:
     import os
     import shutil
     import tempfile
+
+    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
+    index_dir = os.path.join(_ivf_cache_root(), f"{tag}_{name}")
+    ident = _artifact_ident(sf_dir, table, params)
 
     def _marker_matches(d: str) -> bool:
         try:
@@ -1604,27 +1616,20 @@ def _ensure_ivf_upsert_index(spark: SparkSession, sf_dir: str) -> str:
     half can be served stale. The build function is the only place
     `build_ivf_index` runs; the upsert itself is Lloyd-free and
     rebuild-free (monkeypatch-pinned in tests)."""
-    import os
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    ident = {
-        "src": src, "mtime_ns": st.st_mtime_ns, "size": st.st_size,
+    params = {
         "kind": "ivf_upsert", "nlist": IVF_NLIST,
         "chg": [UPS_CHG_MOD, UPS_CHG_SEL],
         "new": [UPS_NEW_MOD, UPS_NEW_SEL],
     }
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    index_dir = os.path.join(
-        _ivf_cache_root(), f"{tag}_upsert_nlist{IVF_NLIST}"
-    )
 
     def _build(build_dir: str) -> None:
         base, delta = _upsert_frames(load_table(spark, sf_dir, "embeddings"))
         similarity.build_ivf_index(spark, base, build_dir, nlist=IVF_NLIST)
         similarity.ivf_index_upsert(spark, build_dir, delta)
 
-    return _ensure_index(index_dir, ident, _build)
+    return _ensure_index(
+        sf_dir, "embeddings", f"upsert_nlist{IVF_NLIST}", params, _build
+    )
 
 
 def q_ivf_index_upsert_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2385,18 +2390,11 @@ def _ensure_bloom_filter(spark: SparkSession, sf_dir: str) -> str:
     rebuilds."""
     import os
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    ident = {
-        "src": src, "mtime_ns": st.st_mtime_ns, "size": st.st_size,
+    params = {
         "kind": "bloom", "m": BLOOM_M_BITS, "k": BLOOM_K,
         "ngram": DECON_NGRAM,
         "probe": [DECON_PROBE_MOD, DECON_PROBE_CAP],
     }
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    index_dir = os.path.join(
-        _ivf_cache_root(), f"{tag}_bloom_m{BLOOM_M_BITS}k{BLOOM_K}"
-    )
 
     def _build(build_dir: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
@@ -2414,7 +2412,10 @@ def _ensure_bloom_filter(spark: SparkSession, sf_dir: str) -> str:
             probe_grams, "s", BLOOM_M_BITS, BLOOM_K
         ).write.parquet(os.path.join(build_dir, "filter"))
 
-    return _ensure_index(index_dir, ident, _build)
+    return _ensure_index(
+        sf_dir, "documents", f"bloom_m{BLOOM_M_BITS}k{BLOOM_K}", params,
+        _build,
+    )
 
 
 def q_bloom_decontaminate_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3186,19 +3187,12 @@ def _ensure_manifest_index(spark: SparkSession, sf_dir: str) -> str:
     ride in the ident so a geometry change rebuilds."""
     import os
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    ident = {
-        "src": src, "mtime_ns": st.st_mtime_ns, "size": st.st_size,
+    params = {
         "kind": "manifest", "n_shards": N_SHARDS,
         "dirty": [MAN_DIRTY_MOD, MAN_DIRTY_SEL],
         "old": [SNAP_OLD_MOD, SNAP_OLD_DROP],
         "edit": [SNAP_EDIT_MOD, SNAP_EDIT_SEL],
     }
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    index_dir = os.path.join(
-        _ivf_cache_root(), f"{tag}_manifest_s{N_SHARDS}"
-    )
 
     def _build(build_dir: str) -> None:
         base = _snap_base(load_table(spark, sf_dir, "documents"))
@@ -3212,7 +3206,9 @@ def _ensure_manifest_index(spark: SparkSession, sf_dir: str) -> str:
             os.path.join(build_dir, "manifest")
         )
 
-    return _ensure_index(index_dir, ident, _build)
+    return _ensure_index(
+        sf_dir, "documents", f"manifest_s{N_SHARDS}", params, _build
+    )
 
 
 def q_manifest_delta_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4595,26 +4591,16 @@ def _ensure_lr_model(
     an identity-markered dir, so the probes pay the LRC_STEPS gradient
     iterations exactly once per (testdata tree, hyperparameters) and the
     probe itself never runs a training step. ``meta/`` records the
-    bucket width IN the artifact (the `_pq_index_is_residual` pattern,
+    bucket width IN the artifact (the PQ index `meta/` pattern,
     r17 VERDICT item 7) so serving derives its feature-space modulus
     from the model it scores with — no second copy to desynchronize, no
     per-call row-count guard job."""
     import os
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    ident = {
-        "src": src, "mtime_ns": st.st_mtime_ns, "size": st.st_size,
+    params = {
         "kind": "lr_model", "buckets": buckets, "steps": LRC_STEPS,
         "eta": LRC_ETA, "tau": LRC_TAU,
-        # artifact layout version: r18 added meta/ — caches built before
-        # it lack the width row and must rebuild, not 404 at serve time
-        "layout": "model+meta",
     }
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    index_dir = os.path.join(
-        _ivf_cache_root(), f"{tag}_lrc_b{buckets}s{LRC_STEPS}"
-    )
 
     def _build(build_dir: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
@@ -4629,12 +4615,9 @@ def _ensure_lr_model(
             [(int(buckets),)], "buckets int"
         ).write.parquet(os.path.join(build_dir, "meta"))
 
-    return _ensure_index(index_dir, ident, _build)
-
-
-#: (realpath, meta mtime_ns) -> buckets: the `_PQ_META_MEMO` cost
-#: contract — one tiny read per DISTINCT trained model, never per call
-_LR_META_MEMO: dict[tuple[str, int], int] = {}
+    return _ensure_index(
+        sf_dir, "documents", f"lrc_b{buckets}s{LRC_STEPS}", params, _build
+    )
 
 
 def _lr_model_buckets(spark: SparkSession, model_dir: str) -> int:
@@ -4642,16 +4625,11 @@ def _lr_model_buckets(spark: SparkSession, model_dir: str) -> int:
     serving's feature-space modulus comes from the artifact it scores
     with (r17 VERDICT item 7: the previous per-call `model.count()`
     guard was a Spark job in a serving path; this is one memoized 1-row
-    read per distinct model build)."""
+    read per distinct model build, `similarity._artifact_row`)."""
     import os
 
-    meta_dir = os.path.join(model_dir, "meta")
-    key = (os.path.realpath(meta_dir), os.stat(meta_dir).st_mtime_ns)
-    buckets = _LR_META_MEMO.get(key)
-    if buckets is None:
-        buckets = int(spark.read.parquet(meta_dir).collect()[0]["buckets"])
-        _LR_META_MEMO[key] = buckets
-    return buckets
+    meta = similarity._artifact_row(spark, os.path.join(model_dir, "meta"))
+    return int(meta["buckets"])
 
 
 def q_quality_classifier_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5270,22 +5248,12 @@ def _ensure_pq_upsert_index(spark: SparkSession, sf_dir: str) -> str:
     the PERSISTED codebooks, appended/replaced in their code cell
     partitions; no Lloyd, no retrain (monkeypatch-pinned). One identity
     marker describes the whole recipe."""
-    import os
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    ident = {
-        "src": src, "mtime_ns": st.st_mtime_ns, "size": st.st_size,
+    params = {
         "kind": "pq_upsert", "m": PQ_M, "k": PQ_K, "iters": PQ_ITERS,
         "nlist": IVF_NLIST,
         "chg": [UPS_CHG_MOD, UPS_CHG_SEL],
         "new": [UPS_NEW_MOD, UPS_NEW_SEL],
     }
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    index_dir = os.path.join(
-        _ivf_cache_root(),
-        f"{tag}_pqups_m{PQ_M}k{PQ_K}i{PQ_ITERS}nlist{IVF_NLIST}",
-    )
 
     def _build(build_dir: str) -> None:
         base, delta = _upsert_frames(load_table(spark, sf_dir, "embeddings"))
@@ -5295,7 +5263,10 @@ def _ensure_pq_upsert_index(spark: SparkSession, sf_dir: str) -> str:
         )
         similarity.pq_index_upsert(spark, build_dir, delta)
 
-    return _ensure_index(index_dir, ident, _build)
+    return _ensure_index(
+        sf_dir, "embeddings",
+        f"pqups_m{PQ_M}k{PQ_K}i{PQ_ITERS}nlist{IVF_NLIST}", params, _build,
+    )
 
 
 def q_ann_topk_pq_upsert_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5460,7 +5431,7 @@ def _sql_sqsum(a: str, b: str, width: int | None = None) -> str:
 #: RESIDUAL slices (rv = v − center, elementwise — list_transform keeps
 #: the per-component float op identical to Spark's zip_with), per-cell
 #: center LUTs (`dlutc`, probed cells only) and the (cell, s, code) norm
-#: LUT (`nlutr`), folded s-ordered exactly as `_adc_fold_rank`.
+#: LUT (`nlutr`), folded s-ordered exactly as `similarity._adc_topk`.
 SQL_IVFPQ_RESIDUAL_RECALL = f"""
 {_sql_ivf_common()},
 e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),

@@ -1755,9 +1755,9 @@ def _stream_ann_scored(spark: SparkSession, sf_dir: str, stream) -> DataFrame:
     memory-sink harness and the `foreachBatch` production sink — the
     `_man_fold` anti-drift discipline): live query vectors probe their
     best cells against the materialized index's coarse quantizer inlined
-    as a LITERAL (the persisted 1-row quantizer collected at plan build
-    — bounded index metadata, nlist × dim doubles, the same class as the
-    PQ probes' geometry collect; a literal because a stream-static CROSS
+    as a LITERAL (the persisted 1-row quantizer, read once per index
+    build via `similarity._artifact_row` — bounded index metadata,
+    nlist × dim doubles; a literal because a stream-static CROSS
     join is not in Structured Streaming's supported-join matrix), then a
     stream-static INNER equi join on ``cell`` fetches candidates from
     the cell-partitioned ``cells/`` — per micro-batch, each query
@@ -1768,9 +1768,9 @@ def _stream_ann_scored(spark: SparkSession, sf_dir: str, stream) -> DataFrame:
 
     ivf_dir = llmdata._ensure_ivf_index(spark, sf_dir)
     cells = spark.read.parquet(os.path.join(ivf_dir, "cells"))
-    seeds = spark.read.parquet(
-        os.path.join(ivf_dir, "quantizer")
-    ).collect()[0]["seeds"]
+    seeds = similarity._artifact_row(
+        spark, os.path.join(ivf_dir, "quantizer")
+    )["seeds"]
     seeds_lit = "array(" + ",".join(
         "named_struct('seed_id',{sid}L,'sv',array({vs}),'sn',{sn!r}D)".format(
             sid=int(s["seed_id"]),
@@ -1779,53 +1779,11 @@ def _stream_ann_scored(spark: SparkSession, sf_dir: str, stream) -> DataFrame:
         )
         for s in seeds
     ) + ")"
-    q = (
-        stream.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").cast("array<double>").alias("qv"),
-        )
-        .withColumn("qn", similarity.sq_norm("qv"))
-        .withColumn("seeds", F.expr(seeds_lit))
-    )
-    probes = (
-        q.select(
-            "query_id", "qv", "qn",
-            F.explode(
-                F.slice(
-                    similarity._best_cells(F.col("qv"), F.col("qn")),
-                    1, IVF_NPROBE,
-                )
-            ).alias("p"),
-        )
-        .select(
-            "query_id", "qv", "qn", F.col("p")["cell"].alias("cell")
-        )
-    )
-    cos = similarity.dot("qv", "cv") / F.nullif(
-        F.sqrt(F.col("qn") * F.col("cn")), F.lit(0.0)
-    )
-    return (
-        probes.join(cells, ["cell"])
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id", "cand_id", F.round(cos, 6).alias("cos_sim")
-        )
-    )
-
-
-#: top-k ranking shared by both streaming-retrieval sinks
-def _ann_rank_topk(df: DataFrame) -> DataFrame:
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
-    return (
-        df.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= TOPK)
-        .select("query_id", "cand_id", "cos_sim", "rank")
-    )
+    q = similarity._vec_side(
+        stream.filter(F.col("vec_id") < N_QUERIES), "vec_id", "embedding",
+        ("query_id", "qv", "qn"),
+    ).withColumn("seeds", F.expr(seeds_lit))
+    return similarity._ivf_scored(q, cells, IVF_NPROBE)
 
 
 def q_stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1853,7 +1811,7 @@ def q_stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         query.awaitTermination()
-    return _ann_rank_topk(spark.table(name))
+    return similarity._rank_topk(spark.table(name), TOPK)
 
 
 def q_stream_ann_topk_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1873,7 +1831,9 @@ def q_stream_ann_topk_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored = _stream_ann_scored(spark, sf_dir, stream)
 
         def _rank_and_write(batch_df: DataFrame, _batch_id: int) -> None:
-            _ann_rank_topk(batch_df).write.mode("append").parquet(sink_dir)
+            similarity._rank_topk(batch_df, TOPK).write.mode(
+                "append"
+            ).parquet(sink_dir)
 
         query = (
             scored.writeStream.foreachBatch(_rank_and_write)

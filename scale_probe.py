@@ -1476,27 +1476,12 @@ def ann_serving_growth(ks: tuple[int, ...] = (10, 30)) -> dict:
                 seed_row = spark.read.parquet(
                     os.path.join(pq_dir, "quantizer")
                 )
-                q = queries.select(
-                    "query_id",
-                    F.col("embedding").cast("array<double>").alias("qv"),
-                ).withColumn("qn", similarity.sq_norm(F.col("qv")))
-                probes = (
-                    q.join(F.broadcast(seed_row))
-                    .select(
-                        "query_id",
-                        F.explode(
-                            F.slice(
-                                similarity._best_cells(
-                                    F.col("qv"), F.col("qn")
-                                ),
-                                1,
-                                _ld.IVF_NPROBE,
-                            )
-                        ).alias("p"),
-                    )
-                    .select("query_id", F.col("p")["cell"].alias("cell"))
-                    .collect()
+                q = similarity._vec_side(
+                    queries, "query_id", "embedding", ("query_id", "qv", "qn")
                 )
+                probes = similarity._probe_cells(
+                    q.join(F.broadcast(seed_row)), _ld.IVF_NPROBE, ["query_id"]
+                ).collect()
                 cand = sum(
                     cell_sizes.get(int(r["cell"]), 0) for r in probes
                 )

@@ -6,6 +6,8 @@ at scale."""
 
 from __future__ import annotations
 
+import pytest
+
 from multi_source_financial_data_pipeline_spark.plans.registry import QUERIES
 
 
@@ -580,40 +582,43 @@ def test_pq_probe_lut_broadcast_is_batch_conditional(spark, sf_dir):
     (probes, dot LUT) must be broadcast ONLY while the batch provably fits
     the broadcast budget — never unconditionally pinned.
 
-    (a) At bench batch sizes (10 queries ≪ cap) the hint must be PRESENT:
+    At bench batch sizes (10 queries ≪ cap) the hint must be PRESENT:
     the serving plan keeps its zero-corpus-exchange shape — 3 broadcast
     joins (probes, dot LUT, norm LUT), dynamic partition pruning on the
     codes scan, no sort-merge join, and exactly the fold-agg + window
     exchanges (any third exchange means a corpus-side LUT shuffle crept
-    back in).
-
-    (b) With the broadcast budget disabled (the over-cap proxy: cap_q
-    drops to 0, exactly what a huge caller batch produces) the
-    query-proportional hints must VANISH — those joins degrade to shuffle
-    joins, only the constant-size codebook norm-LUT hint survives — and
-    the probe must still answer with identical rows."""
-    df = QUERIES["ann_topk_pq_probe"].fn(spark, sf_dir)
-    want = sorted(tuple(r) for r in df.collect())
-    plan = df._jdf.queryExecution().executedPlan().toString().split(
-        "== Initial Plan =="
-    )[0]
+    back in). The unhinted side is `test_adc_lut_unhinted_rows_equal_hinted`."""
+    plan = _final_plan(spark, sf_dir, "ann_topk_pq_probe")
     assert "dynamicpruning" in plan
     assert plan.count("BroadcastHashJoin") == 3
     assert "SortMergeJoin" not in plan
     assert plan.count("Exchange hashpartitioning") == 2
 
+
+@pytest.mark.parametrize(
+    "name",
+    ["ann_topk_pq_probe", "ann_topk_pq_refined_probe", "ann_topk_pq_rerank"],
+)
+def test_adc_lut_unhinted_rows_equal_hinted(spark, sf_dir, name):
+    """Both sides of the `_lut_hint` switch on every ADC serving path:
+    with the broadcast budget disabled (the over-cap proxy: cap_q drops
+    to 0, exactly what a huge caller batch produces) the
+    query-proportional hints must VANISH — those joins degrade to shuffle
+    joins — and the query must still answer with the hinted plan's rows.
+    On the raw probe only the two codebook-constant hints survive: cents
+    (the per-query LUT build join on s) and the norm LUT."""
+    want = sorted(tuple(r) for r in QUERIES[name].fn(spark, sf_dir).collect())
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     try:
-        df2 = QUERIES["ann_topk_pq_probe"].fn(spark, sf_dir)
-        got = sorted(tuple(r) for r in df2.collect())
-        plan2 = df2._jdf.queryExecution().executedPlan().toString().split(
+        df = QUERIES[name].fn(spark, sf_dir)
+        got = sorted(tuple(r) for r in df.collect())
+        plan = df._jdf.queryExecution().executedPlan().toString().split(
             "== Initial Plan =="
         )[0]
-        # the surviving hints are exactly the two codebook-constant frames:
-        # cents (the per-query LUT build join on s) and the norm LUT
-        assert plan2.count("BroadcastHashJoin") == 2
-        assert "SortMergeJoin" in plan2 or "ShuffledHashJoin" in plan2
+        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
+        if name == "ann_topk_pq_probe":
+            assert plan.count("BroadcastHashJoin") == 2
         assert got == want
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")

@@ -350,6 +350,43 @@ def test_ivf_index_cache_invalidates_on_source_change(spark, tmp_path):
     assert os.path.getmtime(marker) > mtime1
 
 
+def test_ivf_index_rebuilds_on_code_fingerprint_change(
+    spark, tmp_path, monkeypatch
+):
+    """The artifact identity includes a fingerprint of the package's
+    sources: an index built by different code must be rebuilt (marker
+    rewritten, fingerprint recorded), while an unchanged fingerprint reuses
+    the cached index — a changed `build_ivf_index` or `kmeans_centroids`
+    must never keep serving a stale artifact."""
+    import json
+    import os
+    import shutil
+
+    from multi_source_financial_data_pipeline_spark.plans import llmdata
+
+    sf_dir = str(tmp_path / "sf")
+    os.makedirs(sf_dir)
+    shutil.copy("/root/testdata/sf0.001/embeddings.parquet",
+                os.path.join(sf_dir, "embeddings.parquet"))
+
+    idx = llmdata._ensure_ivf_index(spark, sf_dir)
+    marker = os.path.join(idx, "_built.json")
+    mtime1 = os.path.getmtime(marker)
+    with open(marker) as fh:
+        assert json.load(fh)["code"] == llmdata._code_fingerprint()
+
+    # unchanged code -> reuse (marker untouched)
+    assert llmdata._ensure_ivf_index(spark, sf_dir) == idx
+    assert os.path.getmtime(marker) == mtime1
+
+    # changed code -> identity changes -> rebuild (marker rewritten)
+    monkeypatch.setattr(llmdata, "_code_fingerprint", lambda: "0" * 16)
+    assert llmdata._ensure_ivf_index(spark, sf_dir) == idx
+    assert os.path.getmtime(marker) > mtime1
+    with open(marker) as fh:
+        assert json.load(fh)["code"] == "0" * 16
+
+
 def test_ivf_index_keeps_concurrent_winners_fresh_build(spark, tmp_path,
                                                         monkeypatch):
     """If a concurrent builder lands an index with the SAME identity while
@@ -385,10 +422,10 @@ def test_ivf_index_keeps_concurrent_winners_fresh_build(spark, tmp_path,
         # at index_dir before our swap, with a sentinel proving it survives
         shutil.rmtree(idx)
         shutil.copytree(build_dir, idx)
-        src = os.path.join(sf_dir, "embeddings.parquet")
-        st = os.stat(src)
-        ident = {"src": src, "mtime_ns": st.st_mtime_ns, "size": st.st_size,
-                 "nlist": llmdata.IVF_NLIST, "two_level": False}
+        ident = llmdata._artifact_ident(
+            sf_dir, "embeddings",
+            {"nlist": llmdata.IVF_NLIST, "two_level": False},
+        )
         with open(os.path.join(idx, "_built.json"), "w") as fh:
             json.dump(ident, fh)
         open(os.path.join(idx, "_winner_sentinel"), "w").close()

@@ -155,14 +155,14 @@ def test_ivfpq_full_probe_equals_pq(spark):
     q = queries.select(
         F.col("query_id"),
         F.col("embedding").cast("array<double>").alias("qv"),
-    ).withColumn("qn", similarity.sq_norm(F.col("qv")))
+    ).withColumn("qn", similarity.sq_norm("qv"))
     probes = {
         (r["query_id"], r["p"]["cell"])
         for r in q.join(F.broadcast(seed_row))
         .select(
             "query_id",
             F.explode(
-                F.slice(similarity._best_cells(F.col("qv"), F.col("qn")), 1, 2)
+                F.slice(similarity._best_cells("qv", "qn"), 1, 2)
             ).alias("p"),
         )
         .collect()
@@ -588,14 +588,14 @@ def test_ivfpq_residual_identity_at_full_budget(spark):
     q = queries.select(
         F.col("query_id"),
         F.col("embedding").cast("array<double>").alias("qv"),
-    ).withColumn("qn", similarity.sq_norm(F.col("qv")))
+    ).withColumn("qn", similarity.sq_norm("qv"))
     probes = {
         (r["query_id"], r["p"]["cell"])
         for r in q.join(F.broadcast(seed_row))
         .select(
             "query_id",
             F.explode(
-                F.slice(similarity._best_cells(F.col("qv"), F.col("qn")), 1, 2)
+                F.slice(similarity._best_cells("qv", "qn"), 1, 2)
             ).alias("p"),
         )
         .collect()
@@ -1135,18 +1135,18 @@ def test_ivf_index_refined_centers_probe_consistency(spark, tmp_path):
     )
     q = queries.select(
         "query_id", F.col("embedding").cast("array<double>").alias("qv")
-    ).withColumn("qn", similarity.sq_norm(F.col("qv")))
+    ).withColumn("qn", similarity.sq_norm("qv"))
     probes = (
         q.join(F.broadcast(centers_row))
         .select(
             "query_id", "qv", "qn",
             F.explode(
-                F.slice(similarity._best_cells(F.col("qv"), F.col("qn")), 1, 2)
+                F.slice(similarity._best_cells("qv", "qn"), 1, 2)
             ).alias("p"),
         )
         .select("query_id", "qv", "qn", F.col("p")["cell"].alias("cell"))
     )
-    cos = similarity.dot(F.col("qv"), F.col("cv")) / F.nullif(
+    cos = similarity.dot("qv", "cv") / F.nullif(
         F.sqrt(F.col("qn") * F.col("cn")), F.lit(0.0)
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -1525,14 +1525,14 @@ def test_pq_rerank_rejects_divergent_quantizers_at_runtime(spark, tmp_path):
             spark, pq_dir, ivf_refined_dir, queries, k=3, k_short=6, nprobe=2
         )
     # memo contract: the fingerprint for an unchanged build is served
-    # from the memo, no second read job
+    # from the artifact-row memo, no second read job
     import os
 
     key = (
         os.path.realpath(os.path.join(pq_dir, "quantizer")),
         os.stat(os.path.join(pq_dir, "quantizer")).st_mtime_ns,
     )
-    assert key in similarity._QUANTIZER_FP_MEMO
+    assert key in similarity._ARTIFACT_ROWS
 
 
 def test_dedup_after_delete_equals_global_recompute(spark, sf_dir):
