@@ -29,7 +29,6 @@ DEFAULT_TICKERS = ["AAPL", "TSLA", "SPY", "GLD", "USO", "UUP"]
 def _connector(
     spark: SparkSession, tickers: list[str], start: str, end: str, source: str
 ) -> DataFrame:
-    market_source.register(spark)
     df = (
         spark.read.format("market_sim")
         .option("tickers", ",".join(tickers))
@@ -43,7 +42,6 @@ def _connector(
 
 
 def _macro(spark: SparkSession, start: str, end: str, categories) -> DataFrame:
-    market_source.register(spark)
     series = registry.resolve_categories(categories)
     names = ";".join(f"{s}={registry.series_name(s)}" for s in series)
     return (
@@ -83,6 +81,8 @@ def main(argv: list[str] | None = None) -> int:
     )
     spark = get_spark("msfdp-cli")
     spark.sparkContext.setLogLevel("WARN")
+    # once per request: the three readers below all resolve these formats
+    market_source.register(spark)
     result = run_pipeline(
         spark,
         cfg,

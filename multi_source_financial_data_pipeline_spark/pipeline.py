@@ -1,12 +1,15 @@
 """End-to-end pipeline orchestration (SURVEY.md §3, entry point 1).
 
-Mirrors the reference lifecycle (/root/reference/src/pipeline.py:109-311):
+Mirrors the reference lifecycle (src/pipeline.py:109-311):
 register request → extract → validate → transform → cross-validate → macro →
-load → report — but stages 3-9 are one lazy DataFrame DAG per output; actions
-happen only at sinks and report aggregations, so Catalyst fuses the
-projection/filter/feature chain into single stages. The ledger, quality
-scoring, and report assembly stay driver-side (they operate on a handful of
-collected scalars).
+load → report. The reference fetches each ticker once and runs every check
+on that one in-memory frame; here each source (primary feed, secondary feed,
+macro series) is read once into a persisted frame, and the feature frame is
+persisted right after ``transform``, before cross-validation. Every report
+aggregation and sink reads those copies, so one request never re-runs a
+connector and its report and stored rows describe the same fetch. Everything
+persisted is released in ``finally``. The ledger, quality scoring, and report
+assembly run in plain Python over a handful of collected scalars.
 
 Determinism: one injected ``run_ts`` replaces the reference's several
 ``datetime.now()`` stamps (SURVEY.md §2.7 F6).
@@ -155,11 +158,13 @@ def run_pipeline(
         )
         raw = raw.filter(
             F.col("date").between(F.lit(cfg.start_date), F.lit(cfg.end_date))
-        )
+        ).persist()
+        cached.append(raw)
 
         # --- validate + transform ------------------------------------------
         validated, basic_report = validate(raw)
-        features = transform(validated, run_ts)
+        features = transform(validated, run_ts).persist()
+        cached.append(features)
 
         # --- cross-validate (optional, graceful) ---------------------------
         cross_report: dict[str, Any] = {"performed": False}
@@ -171,7 +176,8 @@ def run_pipeline(
                     else synthetic.altsource_close(spark, tuple(cfg.tickers))
                 ).filter(
                     F.col("date").between(F.lit(cfg.start_date), F.lit(cfg.end_date))
-                )
+                ).persist()
+                cached.append(alt)
                 primary = features.select(
                     "ticker", "date", F.col("close").alias("yahoo_close")
                 )
@@ -209,7 +215,8 @@ def run_pipeline(
             try:
                 macro = (
                     macro_source(spark) if macro_source else synthetic.macro_series(spark)
-                )
+                ).persist()
+                cached.append(macro)
                 g = series_stats.global_summary(macro).collect()[0]
                 per_series = [
                     r.asDict() for r in series_stats.per_series_summary(macro).collect()
@@ -229,8 +236,6 @@ def run_pipeline(
                 tracker.add_error("macro", str(exc))
 
         # --- load (K2) ------------------------------------------------------
-        features = features.persist()
-        cached.append(features)
         to_store = features.withColumn("request_id", F.lit(req_id))
         saved_market = sinks.append_first_request_wins(
             to_store, os.path.join(cfg.db_dir, "market_data"), ["ticker", "date"]
@@ -329,7 +334,7 @@ def run_pipeline(
         raise
     finally:
         # release every persist taken this run — a long-lived session would
-        # otherwise leak one cached frame per pipeline invocation; the
+        # otherwise leak the cached frames of every pipeline invocation; the
         # returned market_features DF stays valid (recomputed if re-used)
         for df in cached:
             df.unpersist(blocking=False)

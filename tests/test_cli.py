@@ -55,7 +55,10 @@ def test_pipeline_degrades_gracefully_on_source_failure(spark, tmp_path):
         out_dir=str(tmp_path / "out"),
         db_dir=str(tmp_path / "db"),
     )
+    persisted_before = spark.sparkContext._jsc.getPersistentRDDs().size()
     result = run_pipeline(spark, cfg, alt_source=boom, macro_source=boom)
+    # the degraded run releases what it persisted, like a complete one
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted_before
     report = result.validation_report
     assert report["ticker_validation"]["cross_validation"]["performed"] is False
     assert report["macro_validation"]["performed"] is False

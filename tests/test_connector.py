@@ -146,14 +146,28 @@ def test_stream_ticks_incremental_batches(spark):
 # --- real HTTP transport against a local server ------------------------------
 
 
+def _month_firsts(start, end):
+    from datetime import date
+
+    d = date(start.year, start.month, 1)
+    if d < start:
+        d = date(d.year + 1, 1, 1) if d.month == 12 else date(d.year, d.month + 1, 1)
+    while d <= end:
+        yield d
+        d = date(d.year + 1, 1, 1) if d.month == 12 else date(d.year, d.month + 1, 1)
+
+
 class _QuoteHandler:
     """http.server handler factory serving /ohlcv as JSON from the same
     deterministic quote() generator, optionally failing the first N
     requests per ticker with a 500 (exercises the REAL retry loop over
-    REAL sockets)."""
+    REAL sockets), and /series as FRED observations with the simulator's
+    values (series BROKEN answers 500; MISSDOT's June value is "."). When
+    ``hits`` is given, every GET increments ``hits[(source, ticker)]``, or
+    ``hits[("fred", series)]`` for /series."""
 
     @staticmethod
-    def make(fail_first: int = 0, times: list | None = None):
+    def make(fail_first: int = 0, times: list | None = None, hits=None):
         import json
         import time
         from datetime import date
@@ -166,10 +180,44 @@ class _QuoteHandler:
             def log_message(self, *args):  # quiet
                 pass
 
+            def _send(self, body: bytes):
+                self.send_response(200)
+                self.send_header("Content-Type", "application/json")
+                self.send_header("Content-Length", str(len(body)))
+                self.end_headers()
+                self.wfile.write(body)
+
+            def _series(self, q):
+                sid = q["series"]
+                if hits is not None:
+                    hits[("fred", sid)] += 1
+                if sid == "BROKEN":
+                    self.send_error(500)
+                    return
+                # the REAL FRED observations payload: STRING values,
+                # realtime_* fields the client must ignore, and the literal
+                # "." for a missing observation (served for MISSDOT)
+                self._send(json.dumps({"observations": [
+                    {"realtime_start": "2024-01-01",
+                     "realtime_end": "9999-12-31",
+                     "date": d.isoformat(),
+                     "value": "."
+                     if sid == "MISSDOT" and d.month == 6
+                     else str((market_source._h(f"{sid}|{d.isoformat()}") % 100000) / 100.0)}
+                    for d in _month_firsts(
+                        date.fromisoformat(q["start"]), date.fromisoformat(q["end"])
+                    )
+                ]}).encode())
+
             def do_GET(self):
                 u = urlparse(self.path)
                 q = {k: v[0] for k, v in parse_qs(u.query).items()}
+                if u.path == "/series":
+                    self._series(q)
+                    return
                 ticker = q["ticker"]
+                if hits is not None:
+                    hits[(q["source"], ticker)] += 1
                 attempts[ticker] = attempts.get(ticker, 0) + 1
                 if times is not None:
                     times.append(time.monotonic())
@@ -258,21 +306,17 @@ class _QuoteHandler:
                         for r in quotes
                     ]
                     body = json.dumps({"rows": rows}).encode()
-                self.send_response(200)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
+                self._send(body)
 
         return Handler
 
 
-def _serve(fail_first: int = 0, times: list | None = None):
+def _serve(fail_first: int = 0, times: list | None = None, hits=None):
     import threading
     from http.server import ThreadingHTTPServer
 
     srv = ThreadingHTTPServer(
-        ("127.0.0.1", 0), _QuoteHandler.make(fail_first, times)
+        ("127.0.0.1", 0), _QuoteHandler.make(fail_first, times, hits)
     )
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
@@ -489,54 +533,7 @@ def test_macro_http_transport_matches_sim(spark):
     server serving /series observations must yield byte-identical rows to
     the in-process simulator, and a failing series must be skipped without
     failing the job."""
-    import json
-    import threading
-    from datetime import date
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-    from urllib.parse import parse_qs, urlparse
-
-    def month_firsts(start, end):
-        d = date(start.year, start.month, 1)
-        if d < start:
-            d = date(d.year + 1, 1, 1) if d.month == 12 else date(d.year, d.month + 1, 1)
-        while d <= end:
-            yield d
-            d = date(d.year + 1, 1, 1) if d.month == 12 else date(d.year, d.month + 1, 1)
-
-    class Handler(BaseHTTPRequestHandler):
-        def log_message(self, *args):
-            pass
-
-        def do_GET(self):
-            u = urlparse(self.path)
-            q = {k: v[0] for k, v in parse_qs(u.query).items()}
-            sid = q["series"]
-            if sid == "BROKEN":
-                self.send_error(500)
-                return
-            # the REAL FRED observations payload: STRING values,
-            # realtime_* fields the client must ignore, and the literal
-            # "." for a missing observation (served for MISSDOT below)
-            obs = [
-                {"realtime_start": "2024-01-01",
-                 "realtime_end": "9999-12-31",
-                 "date": d.isoformat(),
-                 "value": "."
-                 if sid == "MISSDOT" and d.month == 6
-                 else str((market_source._h(f"{sid}|{d.isoformat()}") % 100000) / 100.0)}
-                for d in month_firsts(
-                    date.fromisoformat(q["start"]), date.fromisoformat(q["end"])
-                )
-            ]
-            body = json.dumps({"observations": obs}).encode()
-            self.send_response(200)
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    url = f"http://127.0.0.1:{srv.server_address[1]}"
+    srv, url = _serve()
     try:
         market_source.register(spark)
 
@@ -572,3 +569,76 @@ def test_macro_http_transport_matches_sim(spark):
         assert all(isinstance(r[3], float) for r in rows if r[2].month != 6)
     finally:
         srv.shutdown()
+
+
+def test_run_pipeline_fetches_each_source_once(spark, tmp_path):
+    """One run_pipeline request over the http transport must GET each
+    (feed, ticker) and each macro series exactly once: every validation
+    aggregation, cross-validation join, append and export reads the
+    request's persisted copy instead of re-running the connector (a lazy
+    pipeline re-fetches per action: 11 primary, 2 secondary and 3 macro
+    GETs each)."""
+    from collections import Counter
+
+    from multi_source_financial_data_pipeline_spark.pipeline import (
+        PipelineConfig,
+        run_pipeline,
+    )
+
+    tickers, start, end = ["AAPL", "MSFT"], "2024-01-01", "2024-03-29"
+    hits: Counter = Counter()
+    srv, url = _serve(hits=hits)
+
+    def feed(source):
+        def read(s):
+            return (
+                s.read.format("market_sim")
+                .option("tickers", ",".join(tickers))
+                .option("start", start)
+                .option("end", end)
+                .option("source", source)
+                .option("transport", "http")
+                .option("base_url", url)
+                .load()
+                .withColumn("ingest_seq", F.monotonically_increasing_id())
+            )
+
+        return read
+
+    def macro(s):
+        return (
+            s.read.format("fred_sim")
+            .option("series", "UNRATE,DGS10")
+            .option("start", start)
+            .option("end", end)
+            .option("transport", "http")
+            .option("base_url", url)
+            .load()
+        )
+
+    try:
+        market_source.register(spark)
+        cfg = PipelineConfig(
+            tickers=tickers,
+            start_date=start,
+            end_date=end,
+            out_dir=str(tmp_path / "out"),
+            db_dir=str(tmp_path / "db"),
+        )
+        res = run_pipeline(
+            spark, cfg,
+            market_source=feed("yahoo"),
+            alt_source=feed("alpha"),
+            macro_source=macro,
+        )
+    finally:
+        srv.shutdown()
+    report = res.validation_report
+    assert report["ticker_validation"]["cross_validation"]["performed"] is True
+    assert report["macro_validation"]["performed"] is True
+    assert res.saved_market_rows == 130 and res.saved_macro_rows == 6
+    assert dict(hits) == {
+        ("yahoo", "AAPL"): 1, ("yahoo", "MSFT"): 1,
+        ("alpha", "AAPL"): 1, ("alpha", "MSFT"): 1,
+        ("fred", "UNRATE"): 1, ("fred", "DGS10"): 1,
+    }

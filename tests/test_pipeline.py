@@ -1,8 +1,8 @@
 """End-to-end pipeline test: run the full lifecycle against the deterministic
 synthetic sources and assert the reference's golden output shapes
 (FIXTURES.md F5): CSV header order (incl. the ret/return duplicate), the
-validation-report key tree, idempotent re-run behavior, and the ledger
-latest-status view."""
+validation-report key tree and values, idempotent re-run behavior, the ledger
+latest-status view, and the release of every frame a run persists."""
 
 from __future__ import annotations
 
@@ -19,6 +19,7 @@ from multi_source_financial_data_pipeline_spark.pipeline import (
     PipelineConfig,
     run_pipeline,
 )
+from multi_source_financial_data_pipeline_spark.sources import synthetic
 from multi_source_financial_data_pipeline_spark.sources.sinks import CSV_EXPORT_COLUMNS
 
 GOLDEN_CSV_HEADER = (
@@ -104,3 +105,157 @@ def test_execution_log_counts(result):
         log = json.load(f)
     assert log["execution_summary"]["total_market_records"] == res.saved_market_rows
     assert log["execution_summary"]["validation_performed"] is True
+
+
+def _at(ticker: str, day: str):
+    return (F.col("ticker") == ticker) & (F.col("date") == F.lit(day).cast("date"))
+
+
+def _defective_market(spark):
+    """The synthetic primary feed with every defect validate() counts: two
+    nulls, three keys delivered twice (the re-delivery has a later
+    ingest_seq and a different close), a negative close, a negative volume,
+    a 10x close spike and two missing AAPL business days."""
+    df = synthetic.market_ohlcv(spark, ("AAPL", "MSFT"))
+    df = (
+        df.filter(~_at("AAPL", "2023-01-16") & ~_at("AAPL", "2023-01-17"))
+        .withColumn(
+            "volume",
+            F.when(_at("AAPL", "2023-01-10"), None)
+            .when(_at("AAPL", "2023-03-15"), -F.col("volume"))
+            .otherwise(F.col("volume")),
+        )
+        .withColumn(
+            "open", F.when(_at("MSFT", "2023-02-01"), None).otherwise(F.col("open"))
+        )
+        .withColumn(
+            "close",
+            F.when(_at("MSFT", "2023-03-01"), -F.col("close"))
+            .when(_at("AAPL", "2023-02-15"), F.col("close") * 10)
+            .otherwise(F.col("close")),
+        )
+    )
+    redelivered = (
+        df.filter(
+            (F.col("ticker") == "MSFT")
+            & F.col("date").between("2023-04-03", "2023-04-05")
+        )
+        .withColumn("ingest_seq", F.col("ingest_seq") + 1_000_000)
+        .withColumn("close", F.col("close") + 1.0)
+    )
+    return df.unionByName(redelivered)
+
+
+def _macro_with_gap(spark):
+    """Two synthetic macro series, six months each, one DGS10 value null."""
+    m = synthetic.macro_series(spark, ("UNRATE", "DGS10"), n_periods=6)
+    return m.withColumn(
+        "value",
+        F.when(
+            (F.col("series_id") == "DGS10")
+            & (F.col("date") == F.lit("2023-03-01").cast("date")),
+            None,
+        ).otherwise(F.col("value")),
+    )
+
+
+def _defect_config(base) -> PipelineConfig:
+    return PipelineConfig(
+        tickers=["AAPL", "MSFT"],
+        start_date="2023-01-02",
+        end_date="2023-04-28",
+        out_dir=str(base / "outputs"),
+        db_dir=str(base / "data"),
+    )
+
+
+def _persisted_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_report_values_pinned(spark, tmp_path):
+    """Every value of ticker_validation and macro_validation for one fixed
+    request with planted defects, as the written JSON report carries them.
+    The literals were computed by the lazy pipeline that re-read its sources
+    on every action, so they hold the fetch-once pipeline to the same
+    numbers. Macro series are compared sorted by id: their order is the
+    group-by's, which no caller relies on."""
+    res = run_pipeline(
+        spark,
+        _defect_config(tmp_path),
+        market_source=_defective_market,
+        macro_source=_macro_with_gap,
+    )
+    with open(res.report_path) as f:
+        report = json.load(f)
+    assert report["ticker_validation"] == {
+        "basic_checks": {
+            "null_counts": {
+                "open": 1, "high": 0, "low": 0, "close": 0,
+                "adj_close": 0, "volume": 1,
+            },
+            "duplicate_rows": 6,
+            "negative_close": 1,
+            "negative_volume": 1,
+            "extreme_moves": 1,
+            "missing_business_days": {"AAPL": 2, "MSFT": 0},
+        },
+        "cross_validation": {
+            "performed": True,
+            "comparisons": 168,
+            "discrepancies": 10,
+            "tolerance_pct": 0.5,
+        },
+    }
+    macro = report["macro_validation"]
+    macro["series"] = sorted(macro["series"], key=lambda r: r["series_id"])
+    assert macro == {
+        "performed": True,
+        "total_records": 12,
+        "unique_series": 2,
+        "series": [
+            {
+                "series_id": "DGS10", "record_count": 6, "null_values": 1,
+                "min_value": 3.859332, "max_value": 5.699532,
+                "first_date": "2023-01-01", "last_date": "2023-06-01",
+            },
+            {
+                "series_id": "UNRATE", "record_count": 6, "null_values": 0,
+                "min_value": 1.016161, "max_value": 3.738754,
+                "first_date": "2023-01-01", "last_date": "2023-06-01",
+            },
+        ],
+    }
+    assert (res.saved_market_rows, res.saved_macro_rows) == (168, 12)
+
+
+def test_run_releases_persists_on_success_and_failure(spark, tmp_path):
+    """run_pipeline persists each source and the feature frame; its finally
+    block must release all of them whether the request completes or
+    raises. The failing request's out_dir is a regular file, so the CSV
+    export raises after the market append: the ledger must record 'failed'
+    and the error must reach the caller."""
+    before = _persisted_rdds(spark)
+    ok = run_pipeline(
+        spark,
+        _defect_config(tmp_path / "ok"),
+        market_source=_defective_market,
+        macro_source=_macro_with_gap,
+    )
+    assert ok.saved_market_rows > 0
+    assert _persisted_rdds(spark) == before
+
+    cfg = _defect_config(tmp_path / "bad")
+    os.makedirs(os.path.dirname(cfg.out_dir))
+    with open(cfg.out_dir, "w") as f:
+        f.write("not a directory")
+    with pytest.raises(FileExistsError):
+        run_pipeline(
+            spark, cfg, market_source=_defective_market, macro_source=_macro_with_gap
+        )
+    assert _persisted_rdds(spark) == before
+
+    ledger = spark.read.parquet(os.path.join(cfg.db_dir, "request_log"))
+    assert sorted(r["status"] for r in ledger.collect()) == ["failed", "started"]
+    latest = ledger_current_status(ledger).collect()
+    assert [r["status"] for r in latest] == ["failed"]
