@@ -413,8 +413,8 @@ def min_label_components(
     # big-graph path: materialize the edge list once — every round joins
     # against it, and without this the whole upstream pipeline (LSH
     # banding + Jaccard verification) would be re-executed per iteration.
-    # Non-eager (r19): persists on first use inside round 1's convergence
-    # job instead of burning a standalone job before the loop starts.
+    # With AQE on (the default) each non-eager cut here runs its shuffle
+    # and broadcast stages at the call; only the last waits for round 1.
     e = e_plan.localCheckpoint(eager=False)
     labels = (
         e.select(F.col("src").alias("id"))
@@ -445,10 +445,8 @@ def min_label_components(
         jump = stepped.select(
             F.col("id").alias("jid"), F.col("lbl").alias("jlbl")
         )
-        # non-eager: the convergence count below materializes the
-        # checkpoint in the SAME job — eager burned two jobs per round
-        # (checkpoint count() + convergence count(); guide §1.2: fixed
-        # per-job cost dominates these label-table rounds)
+        # with AQE on (the default) the call runs this round's shuffle and
+        # broadcast stages; the convergence count below runs the last one
         new_labels = (
             stepped.join(jump, stepped["lbl"] == jump["jid"])
             .select("id", F.col("jlbl").alias("lbl"), "old_lbl")

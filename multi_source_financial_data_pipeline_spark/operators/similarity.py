@@ -1541,10 +1541,9 @@ def ivf_index_upsert(
     `_quantizer_fingerprint` (and `pq_topk_rerank`'s cross-index guard)
     remain valid across upserts.
 
-    Caller's note: `_ensure_index`-style identity markers describe a
-    pure build of one source; a caller composing build+upsert should
-    write a marker describing the whole recipe (see
-    `plans.llmdata._ensure_ivf_upsert_index`)."""
+    Caller's note: an artifact identity marker describes a pure build
+    of one source; a caller composing build+upsert should write a marker
+    describing the whole recipe (see `plans.artifacts.ivf_upsert_index`)."""
     import os
 
     cells_dir = os.path.join(index_dir, "cells")
@@ -1782,15 +1781,17 @@ def build_pq_index(
 #: (realpath, mtime_ns) -> the one row of a one-row artifact directory (a
 #: PQ index's meta/, an index quantizer/, a model's meta/): one tiny read
 #: job per DISTINCT build, never one per serving call. The mtime key
-#: invalidates on rebuild — not because `_ensure_index`'s atomic directory
-#: rename touches the child dir's mtime (a rename does NOT), but because a
-#: rebuild writes a FRESH directory whose own creation time rides in with
-#: it. A missing directory raises: every served artifact carries its
-#: metadata.
+#: invalidates on rebuild — not because `plans.artifacts.ensure`'s atomic
+#: directory rename touches the child dir's mtime (a rename does NOT), but
+#: because a rebuild writes a FRESH directory whose own creation time rides
+#: in with it. A missing directory raises: every served artifact carries
+#: its metadata.
 _ARTIFACT_ROWS: dict[tuple[str, int], Row] = {}
 
 
-def _artifact_row(spark, path: str) -> Row:
+def artifact_row(spark, path: str) -> Row:
+    """The one row of the one-row artifact directory ``path``, read once
+    per (realpath, mtime_ns)."""
     import os
 
     key = (os.path.realpath(path), os.stat(path).st_mtime_ns)
@@ -1816,7 +1817,7 @@ def _read_pq_index(
         return spark.read.parquet(os.path.join(index_dir, name))
 
     flag = bool(
-        _artifact_row(spark, os.path.join(index_dir, "meta"))["by_residual"]
+        artifact_row(spark, os.path.join(index_dir, "meta"))["by_residual"]
     )
     if by_residual is not None and flag != by_residual:
         kind, probe = (
@@ -1850,10 +1851,10 @@ def _quantizer_fingerprint(spark, index_dir: str) -> int:
     runtime a PQ/IVF index pair built with divergent quantizers would
     make the rerank's inner join silently drop shortlist candidates).
     The quantizer row is nlist·dim doubles — index geometry, never
-    corpus-proportional — read once per build via `_artifact_row`."""
+    corpus-proportional — read once per build via `artifact_row`."""
     import os
 
-    seeds = _artifact_row(spark, os.path.join(index_dir, "quantizer"))["seeds"]
+    seeds = artifact_row(spark, os.path.join(index_dir, "quantizer"))["seeds"]
     return hash(tuple((s["seed_id"], tuple(s["sv"])) for s in seeds))
 
 
@@ -1917,7 +1918,7 @@ def pq_topk_rerank(
     would make the inner join silently drop shortlist candidates, so
     this function compares the two indexes' persisted quantizer
     fingerprints up front (`_quantizer_fingerprint` — one memoized
-    1-row read per distinct build, the `_artifact_row` cost contract)
+    1-row read per distinct build, the `artifact_row` cost contract)
     and raises rather than returning a wrong top-k (r17
     ADVICE: the guard now lives at runtime, not only in the
     reachability test).

@@ -612,15 +612,16 @@ def _bpe_train(
         # CollapseProject inlines each layer's full expression at every
         # `syms` reference of the next (~10-30 refs/layer), and by 8
         # layers Catalyst spins minutes on a 31-row vocab (measured; an
-        # explode over the stack multiplies it further). Non-eager, so
-        # materialization rides the next step's argmax job; content is
-        # deterministic, so collected merges and the oracle replay are
-        # unaffected. Reliability caveat (r14 ADVICE): localCheckpoint
-        # blocks live only on executors, so a lost executor plus the
-        # truncated lineage makes the job unrecoverable. Fine on
-        # local[n]; a ~30k-merge cluster deployment should truncate via
-        # reliable checkpoint() or periodic persisted-parquet snapshots
-        # of the vocab instead.
+        # explode over the stack multiplies it further). With AQE on (the
+        # default) the non-eager call still runs every shuffle and
+        # broadcast stage under the cut; only the last stage waits for the
+        # next argmax job. Content is deterministic, so collected merges
+        # and the oracle replay are unaffected. Reliability caveat (r14
+        # ADVICE): localCheckpoint blocks live only on executors, so a
+        # lost executor plus the truncated lineage makes the job
+        # unrecoverable. Fine on local[n]; a ~30k-merge cluster deployment
+        # should truncate via reliable checkpoint() or periodic
+        # persisted-parquet snapshots of the vocab instead.
         vocab = vocab.select(
             bpe_greedy_merge(
                 F.col("syms"), F.lit(lhs), F.lit(rhs)
@@ -865,11 +866,11 @@ def _lr_features(
                 F.lit(1.0).alias("xs"),
             )
         )
-        # lineage cut (VERDICT r16): compute the corpus-scan → explode →
-        # window → grid-join chain ONCE; every logits()/gradient
-        # reference reads the materialized frame. Non-eager, so
-        # materialization rides the first step's job; result-identical
-        # (same reliability caveat as _bpe_train's cut above).
+        # lineage cut: compute the corpus-scan → explode → window →
+        # grid-join chain ONCE for every logits()/gradient reference. With
+        # AQE on (the default) the call runs the chain's shuffle and
+        # broadcast stages; only the last waits for the first step's job.
+        # Result-identical (same reliability caveat as _bpe_train's cut).
         .localCheckpoint(eager=False)
     )
     return feat, n_docs, stats
@@ -929,9 +930,9 @@ def _lr_gradient_descent(
             # steps=8 vs 5.5 s at steps=4 on sf0.1 pre-cut. With the cut,
             # each step is exactly two aggregates over the materialized
             # feature frame: linear, the shape the docstring promises.
-            # (r19: a per-step driver-side collect was measured 2-5×
-            # SLOWER — `steps` separate fold jobs lose to one fused job;
-            # the non-eager checkpoint keeps training a single job.)
+            # (A per-step driver-side collect measured 2-5× slower. With
+            # AQE on, the default, this cut runs the step's shuffle and
+            # broadcast stages at the call: several jobs per step, not one.)
             .localCheckpoint(eager=False)
         )
     return w
@@ -1081,9 +1082,8 @@ def token_lr_score(
     modulus would silently score against the wrong feature space.
     ``check_model=False`` skips that guard — it is a per-call Spark job
     in a serving path (r17 VERDICT), so callers whose ``buckets`` was
-    READ FROM the model artifact's own meta (`plans.llmdata.
-    _lr_model_buckets`) pass False: a value sourced from the artifact
-    cannot mismatch it."""
+    READ FROM the model artifact's own meta (`plans.artifacts.lr_model`)
+    pass False: a value sourced from the artifact cannot mismatch it."""
     if check_model:
         n_model = model.count()  # tiny frame; guards silent feature-space skew
         if n_model != buckets + 1:

@@ -7,8 +7,6 @@ hashes match bit-for-bit.
 
 from __future__ import annotations
 
-import functools
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from multi_source_financial_data_pipeline_spark.operators import (
@@ -18,6 +16,37 @@ from multi_source_financial_data_pipeline_spark.operators import (
     similarity,
     text,
     validation,
+)
+from multi_source_financial_data_pipeline_spark.plans import artifacts
+from multi_source_financial_data_pipeline_spark.plans.artifacts import (
+    BLOOM_K,
+    BLOOM_M_BITS,
+    DECON_NGRAM,
+    DECON_PROBE_CAP,
+    DECON_PROBE_MOD,
+    EMB_DIM,
+    IVF_NLIST,
+    KM_ITERS,
+    LRC_BUCKETS,
+    LRC_ETA,
+    LRC_STEPS,
+    LRC_TAU,
+    MAN_DIRTY_MOD,
+    MAN_DIRTY_SEL,
+    N_SHARDS,
+    PQ_ITERS,
+    PQ_K,
+    PQ_M,
+    SNAP_EDIT_MOD,
+    SNAP_EDIT_SEL,
+    SNAP_NEW_DROP,
+    SNAP_NEW_MOD,
+    SNAP_OLD_DROP,
+    SNAP_OLD_MOD,
+    UPS_CHG_MOD,
+    UPS_CHG_SEL,
+    UPS_NEW_MOD,
+    UPS_NEW_SEL,
 )
 from multi_source_financial_data_pipeline_spark.plans.spec import QuerySpec
 from multi_source_financial_data_pipeline_spark.sources import load_table
@@ -44,14 +73,10 @@ def _sql_minhash(j: int) -> str:
     )
 
 
-#: embeddings are 64-dim (TESTDATA schema); the explicit unrolled sum below
-#: is the same left-associative float-op sequence as the JVM `aggregate`
-#: fold and the previous list_reduce oracle (bit-identical), but DuckDB
-#: evaluates the plain expression ~10× faster than the lambda — oracle-side
-#: cost only, the Spark plans are untouched.
-EMB_DIM = 64
-
-
+#: the explicit unrolled sum is the same left-associative float-op sequence
+#: as the JVM `aggregate` fold and the previous list_reduce oracle
+#: (bit-identical), but DuckDB evaluates the plain expression ~10× faster
+#: than the lambda — oracle-side cost only, the Spark plans are untouched.
 def _sql_dot(a: str, b: str, width: int | None = None) -> str:
     terms = " + ".join(
         f"{a}[{i}] * {b}[{i}]" for i in range(1, (width or EMB_DIM) + 1)
@@ -602,7 +627,7 @@ def q_semdedup_kept_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     nlist = _adaptive_nlist(load_table(spark, sf_dir, "embeddings").count())
-    index_dir = _ensure_ivf_index(spark, sf_dir, nlist=nlist, two_level=True)
+    index_dir = artifacts.ivf_index(spark, sf_dir, nlist=nlist, two_level=True)
     cells = spark.read.parquet(os.path.join(index_dir, "cells"))
     a = cells.select(
         F.col("cand_id").alias("vec_id"), F.col("cv").alias("v"), "cell"
@@ -1045,9 +1070,9 @@ def _canon_from_edges(docs: DataFrame, v: DataFrame) -> DataFrame:
 def _neardup_canon(docs: DataFrame) -> DataFrame:
     """The verified near-dup canonical chain over an arbitrary documents
     frame (ONE definition for the full-corpus query and the
-    component-local recluster in `q_dedup_after_delete` — the `_man_fold`
-    anti-drift discipline): MinHash+LSH candidates, exact n-gram Jaccard
-    verification, min-label components. Returns (doc_id, canonical_id)."""
+    component-local recluster in `q_dedup_after_delete`): MinHash+LSH
+    candidates, exact n-gram Jaccard verification, min-label components.
+    Returns (doc_id, canonical_id)."""
     return _canon_from_edges(docs, _neardup_edges(docs))
 
 
@@ -1229,7 +1254,6 @@ SELECT query_id, cand_id, cos_sim, rank FROM (
 
 # --- IVF index: cell assignment + probed approximate top-k -------------------
 
-IVF_NLIST = 16
 IVF_NPROBE = 2
 
 #: SemDeDup sizing rule (r08 VERDICT item 5): hold the EXPECTED cell size
@@ -1257,224 +1281,13 @@ def q_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_cache_root() -> str:
-    """Per-user (uid-scoped, 0700) cache root — a shared world-writable path
-    would be open to pre-creation/poisoning on multi-user hosts. Because the
-    uid-suffixed name is predictable under a world-writable tempdir, a
-    pre-existing directory is only accepted after verifying it is OURS and
-    not group/other-accessible; otherwise (attacker pre-created it) fall
-    back to a fresh mkdtemp root — losing the cross-session cache, never
-    trusting foreign contents."""
-    import os
-    import stat
-    import tempfile
-
-    root = os.path.join(
-        tempfile.gettempdir(), f"msfdp_ivf_index_{os.getuid()}"
-    )
-    try:
-        os.mkdir(root, mode=0o700)
-        return root
-    except FileExistsError:
-        pass
-    try:
-        st = os.lstat(root)
-        if (
-            stat.S_ISDIR(st.st_mode)
-            and not stat.S_ISLNK(st.st_mode)
-            and st.st_uid == os.getuid()
-            and not (st.st_mode & 0o077)
-        ):
-            return root
-    except OSError:
-        # removed between the failed mkdir and the lstat (TOCTOU on a
-        # world-writable tempdir) — take the private-fallback path below
-        pass
-    # untrusted pre-existing path: one fresh private root per process
-    global _FALLBACK_CACHE_ROOT
-    if _FALLBACK_CACHE_ROOT is None:
-        _FALLBACK_CACHE_ROOT = tempfile.mkdtemp(prefix="msfdp_ivf_index_")
-    return _FALLBACK_CACHE_ROOT
-
-
-_FALLBACK_CACHE_ROOT: str | None = None
-
-
-def _ensure_ivf_index(
-    spark: SparkSession,
-    sf_dir: str,
-    nlist: int = IVF_NLIST,
-    two_level: bool = False,
-    refined: bool = False,
-) -> str:
-    """``refined`` builds the index at a `kmeans_centroids`-refined coarse
-    quantizer (KM_ITERS Lloyd iterations — the trained-quantizer
-    configuration): the refined centers drive assignment AND are
-    persisted as ``quantizer/``, so `ivf_topk_probe` — unchanged —
-    probes the same centers structurally."""
-    params = {"nlist": nlist, "two_level": two_level}
-    if refined:
-        params.update({"refined": True, "km_iters": KM_ITERS})
-    name = f"nlist{nlist}" + ("_2l" if two_level else "") + (
-        f"_refkm{KM_ITERS}" if refined else ""
-    )
-
-    def _build(build_dir: str) -> None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        centers = (
-            similarity.kmeans_centroids(
-                emb, k=nlist, iters=KM_ITERS
-            ).localCheckpoint()  # train once; assign + quantizer share it
-            if refined
-            else None
-        )
-        similarity.build_ivf_index(
-            spark, emb, build_dir, nlist=nlist, two_level=two_level,
-            coarse_centers=centers,
-        )
-
-    return _ensure_index(sf_dir, "embeddings", name, params, _build)
-
-
-def _ensure_pq_index(
-    spark: SparkSession,
-    sf_dir: str,
-    m: int | None = None,
-    k: int | None = None,
-    residual_refined: bool = False,
-) -> str:
-    """The IVF-PQ twin of `_ensure_ivf_index`: build-once codebooks +
-    cell-partitioned codes under the same identity-markered cache, so the
-    serving queries (`q_ann_topk_pq_probe`, `q_ann_topk_pq256_probe`,
-    `q_ann_topk_pq_refined_probe`) pay training exactly once per
-    (testdata tree, code budget, encoding) and the probe itself never
-    runs a Lloyd iteration. ``m``/``k`` select the budget: the default is
-    the 4-bit harness twin (m=8, k=16); the production point passes
-    m=16, k=256. ``residual_refined`` builds the encoding the r15
-    frontier recommends for by_residual deployments: the coarse
-    quantizer Lloyd-refined (`kmeans_centroids`, KM_ITERS — the
-    `ivfpq_residual_refined_recall` configuration) and the sub-codebooks
-    trained on residuals against those refined centers."""
-    m = PQ_M if m is None else m
-    k = PQ_K if k is None else k
-    params = {"m": m, "k": k, "iters": PQ_ITERS, "nlist": IVF_NLIST,
-              "kind": "pq"}
-    name = f"pq_m{m}k{k}i{PQ_ITERS}nlist{IVF_NLIST}"
-    if residual_refined:
-        params.update({"residual": True, "km_iters": KM_ITERS})
-        name += f"_reskm{KM_ITERS}"
-
-    def _build(build_dir: str) -> None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        centers = (
-            similarity.kmeans_centroids(
-                emb, k=IVF_NLIST, iters=KM_ITERS
-            ).localCheckpoint()  # train once; assign + residual + quantizer share it
-            if residual_refined
-            else None
-        )
-        similarity.build_pq_index(
-            spark, emb, build_dir, m=m, k_codebook=k, iters=PQ_ITERS,
-            dim=EMB_DIM, nlist=IVF_NLIST, coarse_centers=centers,
-            by_residual=residual_refined,
-        )
-
-    return _ensure_index(sf_dir, "embeddings", name, params, _build)
-
-
-@functools.lru_cache(maxsize=None)
-def _code_fingerprint() -> str:
-    """Hash of the package's ``.py`` sources (relative path + bytes),
-    computed once per process: an artifact's identity includes the code
-    that built it, so a changed `build_pq_index` or `kmeans_centroids`
-    rebuilds instead of serving a stale artifact."""
-    import hashlib
-    import pathlib
-
-    root = pathlib.Path(__file__).resolve().parent.parent
-    h = hashlib.sha256()
-    for path in sorted(root.rglob("*.py")):
-        h.update(path.relative_to(root).as_posix().encode() + b"\0")
-        h.update(path.read_bytes())
-    return h.hexdigest()[:16]
-
-
-def _artifact_ident(sf_dir: str, table: str, params: dict) -> dict:
-    """An artifact's identity marker: its source table's path, mtime and
-    size, the build ``params``, and the code fingerprint."""
-    import os
-
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    st = os.stat(src)
-    return {"src": src, "mtime_ns": st.st_mtime_ns, "size": st.st_size,
-            **params, "code": _code_fingerprint()}
-
-
-def _ensure_index(
-    sf_dir: str, table: str, name: str, params: dict, build
-) -> str:
-    """Build the artifact ``<sf tag>_<name>`` under the cache root if
-    absent or stale: the ``_built.json`` marker records `_artifact_ident`
-    (source table identity, build params, code fingerprint), so a
-    regenerated testdata tree, a parameter change or changed build code
-    invalidates the cached artifact.
-
-    Concurrency-safe: the index is built into a unique sibling temp dir
-    (marker written LAST, inside it) and atomically renamed into place, so a
-    concurrent session can never observe a half-built index; if two sessions
-    race, the rename loser discards its build and uses the winner's."""
-    import json
-    import os
-    import shutil
-    import tempfile
-
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    index_dir = os.path.join(_ivf_cache_root(), f"{tag}_{name}")
-    ident = _artifact_ident(sf_dir, table, params)
-
-    def _marker_matches(d: str) -> bool:
-        try:
-            with open(os.path.join(d, "_built.json")) as fh:
-                return json.load(fh) == ident
-        except (OSError, ValueError):
-            return False
-
-    if _marker_matches(index_dir):
-        return index_dir
-    build_dir = tempfile.mkdtemp(
-        prefix=os.path.basename(index_dir) + ".build.",
-        dir=os.path.dirname(index_dir),
-    )
-    try:
-        build(build_dir)
-        with open(os.path.join(build_dir, "_built.json"), "w") as fh:
-            json.dump(ident, fh)
-        if _marker_matches(index_dir):
-            # a concurrent builder finished first with the SAME identity:
-            # swapping would rmtree a fresh index that live lazy plans may
-            # already reference — keep the winner's, discard ours
-            shutil.rmtree(build_dir, ignore_errors=True)
-            return index_dir
-        if os.path.isdir(index_dir):  # stale build from an older source tree
-            stale = index_dir + ".stale." + os.path.basename(build_dir)
-            os.rename(index_dir, stale)
-            shutil.rmtree(stale, ignore_errors=True)
-        os.rename(build_dir, index_dir)
-    except OSError:
-        # rename lost a race with a concurrent builder — use the winner's
-        shutil.rmtree(build_dir, ignore_errors=True)
-        if not _marker_matches(index_dir):
-            raise
-    return index_dir
-
-
 def q_ann_topk_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`ann_topk_ivf` against the build-once index (PERF.md's deployment
     mode): cells/ is read with dynamic partition pruning from the probe
     side, quantizer/ is a 1-row broadcast — the corpus is never re-scanned
     or re-assigned; only the tiny query slice reads the source table. Same
     nlist/nprobe, same results, shared oracle."""
-    index_dir = _ensure_ivf_index(spark, sf_dir)
+    index_dir = artifacts.ivf_index(spark, sf_dir)
     queries = _query_slice(load_table(spark, sf_dir, "embeddings"))
     return similarity.ivf_topk_probe(
         spark, index_dir, queries, k=TOPK, nprobe=IVF_NPROBE
@@ -1490,12 +1303,12 @@ def q_ann_topk_ivf_refined_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     centers row as the index quantizer, so `ivf_topk_probe` — the same
     unchanged probe plan, dynamic partition pruning and all — serves
     from the quantizer that shaped the cells. Training (the Lloyd loop)
-    runs only in the build, amortized by `_ensure_ivf_index`'s cache;
+    runs only in the build, amortized by `artifacts.ivf_index`'s cache;
     the probe is Lloyd-free (same monkeypatch pin as the PQ probes).
     Oracle: the `kmeans_refine` Lloyd replay feeding the raw-cosine IVF
     probe chain — assignment, probing and scoring all at the refined
     centers, bit-for-bit."""
-    index_dir = _ensure_ivf_index(spark, sf_dir, refined=True)
+    index_dir = artifacts.ivf_index(spark, sf_dir, refined=True)
     queries = _query_slice(load_table(spark, sf_dir, "embeddings"))
     return similarity.ivf_topk_probe(
         spark, index_dir, queries, k=TOPK, nprobe=IVF_NPROBE
@@ -1581,57 +1394,6 @@ SQL_ANN_TOPK_IVF = _sql_ann_topk_ivf()
 
 # --- incremental ANN index maintenance (r17 VERDICT item 2) -------------------
 
-#: the CDC split driving the upsert harness: docs with vec_id >= IVF_NLIST
-#: matching CHG are EDITED (vector perturbed by +0.5 per coordinate — an
-#: exact IEEE op both engines replay identically), docs matching NEW are
-#: ADDED (held out of the base build, arrive only via upsert). Both
-#: selectors exclude vec_id < IVF_NLIST so the seed quantizer — the first
-#: nlist vectors — is identical for the base corpus, the updated corpus,
-#: and a full rebuild: the exact-equality contract needs one fixed
-#: quantizer, and `ivf_index_upsert` never retrains it anyway.
-UPS_CHG_MOD, UPS_CHG_SEL = 7, 3
-UPS_NEW_MOD, UPS_NEW_SEL = 11, 5
-
-
-def _upsert_frames(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(base, delta) for the upsert harness: ``base`` is the corpus the
-    index was built on (new docs absent, edited docs at their ORIGINAL
-    vectors), ``delta`` the CDC batch (new + edited docs at their UPDATED
-    vectors) — so the upsert exercises both insert and replace."""
-    vid = F.col("vec_id")
-    is_new = (vid >= IVF_NLIST) & (vid % UPS_NEW_MOD == UPS_NEW_SEL)
-    is_chg = (vid >= IVF_NLIST) & (vid % UPS_CHG_MOD == UPS_CHG_SEL)
-    v = F.col("embedding").cast("array<double>")
-    upd = F.when(is_chg, F.transform(v, lambda x: x + F.lit(0.5))).otherwise(v)
-    base = emb.filter(~is_new).select("vec_id", "embedding")
-    delta = emb.filter(is_new | is_chg).select(
-        "vec_id", upd.alias("embedding")
-    )
-    return base, delta
-
-
-def _ensure_ivf_upsert_index(spark: SparkSession, sf_dir: str) -> str:
-    """Base-build + delta-upsert under one identity marker: the marker
-    describes the whole recipe (base split + CDC constants), so neither
-    half can be served stale. The build function is the only place
-    `build_ivf_index` runs; the upsert itself is Lloyd-free and
-    rebuild-free (monkeypatch-pinned in tests)."""
-    params = {
-        "kind": "ivf_upsert", "nlist": IVF_NLIST,
-        "chg": [UPS_CHG_MOD, UPS_CHG_SEL],
-        "new": [UPS_NEW_MOD, UPS_NEW_SEL],
-    }
-
-    def _build(build_dir: str) -> None:
-        base, delta = _upsert_frames(load_table(spark, sf_dir, "embeddings"))
-        similarity.build_ivf_index(spark, base, build_dir, nlist=IVF_NLIST)
-        similarity.ivf_index_upsert(spark, build_dir, delta)
-
-    return _ensure_index(
-        sf_dir, "embeddings", f"upsert_nlist{IVF_NLIST}", params, _build
-    )
-
-
 def q_ivf_index_upsert_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`ann_topk_ivf_probe` against an index maintained INCREMENTALLY
     (r17 VERDICT item 2 — the serving wall at 100 TB was the full
@@ -1652,7 +1414,7 @@ def q_ivf_index_upsert_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite; at day-local churn fractions the upsert is the difference
     between rewriting ~delta-sized partitions and re-materializing the
     corpus."""
-    index_dir = _ensure_ivf_upsert_index(spark, sf_dir)
+    index_dir = artifacts.ivf_upsert_index(spark, sf_dir)
     queries = _query_slice(load_table(spark, sf_dir, "embeddings"))
     return similarity.ivf_topk_probe(
         spark, index_dir, queries, k=TOPK, nprobe=IVF_NPROBE
@@ -2207,13 +1969,6 @@ FROM scored GROUP BY doc_id
 
 # --- decontamination: eval-set n-gram overlap --------------------------------
 
-DECON_NGRAM = 5
-DECON_PROBE_MOD = 20
-#: fixed eval-set bound: probe ids live in [0, CAP) — the probe COUNT is
-#: constant at any corpus scale (and key-shifted probe replicas never qualify)
-DECON_PROBE_CAP = 500
-
-
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: docs (stand-in eval set: every 20th doc
     BELOW the fixed id cap) donate their distinct 5-grams; every other doc
@@ -2229,9 +1984,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     FIXED benchmark set against a growing corpus; the cap models exactly
     that (≤ 25 probe docs at ANY scale), restoring the linear contract."""
     docs = load_table(spark, sf_dir, "documents")
-    is_probe = (F.col("doc_id") % DECON_PROBE_MOD == 0) & (
-        F.col("doc_id") < DECON_PROBE_CAP
-    )
+    is_probe = artifacts.is_decon_probe()
     return dedup.probe_overlap(
         docs.filter(~is_probe), docs.filter(is_probe), n=DECON_NGRAM
     )
@@ -2258,15 +2011,6 @@ GROUP BY doc_id
 
 # --- Bloom-prefiltered decontamination ----------------------------------------
 
-#: filter geometry: the probe side is the FIXED-cap eval set (~1.4k distinct
-#: 5-grams at every SF — measured), so m is a constant: 32768 bits = 1024
-#: 32-bit words = 4 KB dense array, k=4 → theoretical gram-level fpr
-#: (1-e^(-kn/m))^k ≈ 5e-4. m scales with the PROBE set only; corpus growth
-#: changes nothing on the build side.
-BLOOM_M_BITS = 32768
-BLOOM_K = 4
-
-
 def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-prefiltered decontamination, with the filter's error contract
     MEASURED against the exact join (`q_decontaminate`, same probe split).
@@ -2287,9 +2031,7 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_bloom_pos ≥ n_exact_pos row-wise — pinned in tests), so the
     prefilter never loses a contaminated document."""
     docs = load_table(spark, sf_dir, "documents")
-    is_probe = (F.col("doc_id") % DECON_PROBE_MOD == 0) & (
-        F.col("doc_id") < DECON_PROBE_CAP
-    )
+    is_probe = artifacts.is_decon_probe()
     probe_grams = (
         dedup.shingle_rows(docs.filter(is_probe), "doc_id", "text", DECON_NGRAM)
         .select("s")
@@ -2377,52 +2119,11 @@ WHERE f.n_bloom_pos > 0
 """
 
 
-def _ensure_bloom_filter(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once cache for the decontamination Bloom filter (r17 VERDICT
-    item 4: `bloom_build`'s 4 KB one-row filter was rebuilt per
-    invocation although it is exactly the persist-and-broadcast artifact
-    class of `_ensure_index`). The eval suite changes when benchmarks are
-    added — i.e. rarely — while decontamination runs per ingest batch,
-    so the filter build (a shingle scan of the PROBE docs + one bit_or
-    fold) belongs in the artifact tier with the PQ codebooks and the LR
-    model. ``filter/`` holds the single (bloom_words) row; geometry
-    constants ride in the ident so a (m, k, n-gram, probe-split) change
-    rebuilds."""
-    import os
-
-    params = {
-        "kind": "bloom", "m": BLOOM_M_BITS, "k": BLOOM_K,
-        "ngram": DECON_NGRAM,
-        "probe": [DECON_PROBE_MOD, DECON_PROBE_CAP],
-    }
-
-    def _build(build_dir: str) -> None:
-        docs = load_table(spark, sf_dir, "documents")
-        is_probe = (F.col("doc_id") % DECON_PROBE_MOD == 0) & (
-            F.col("doc_id") < DECON_PROBE_CAP
-        )
-        probe_grams = (
-            dedup.shingle_rows(
-                docs.filter(is_probe), "doc_id", "text", DECON_NGRAM
-            )
-            .select("s")
-            .distinct()
-        )
-        dedup.bloom_build(
-            probe_grams, "s", BLOOM_M_BITS, BLOOM_K
-        ).write.parquet(os.path.join(build_dir, "filter"))
-
-    return _ensure_index(
-        sf_dir, "documents", f"bloom_m{BLOOM_M_BITS}k{BLOOM_K}", params,
-        _build,
-    )
-
-
 def q_bloom_decontaminate_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination served from the PERSISTED Bloom filter — the
     deployment shape (r17 VERDICT item 4), `pq_topk_probe`'s pattern
     applied to the eval-set summary: the 4 KB (bloom_words) row is read
-    back from `_ensure_bloom_filter`'s cache and broadcast; the probe
+    back from `artifacts.bloom_filter`'s cache and broadcast; the probe
     never re-shingles the eval docs, never re-folds the filter (build
     monkeypatched-to-raise pin), and the eval docs' text is not in the
     plan at all — corpus-side membership is PURE MAP WORK (2 md5s +
@@ -2434,12 +2135,10 @@ def q_bloom_decontaminate_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     serving path."""
     import os
 
-    filter_dir = _ensure_bloom_filter(spark, sf_dir)
+    filter_dir = artifacts.bloom_filter(spark, sf_dir)
     bloom = spark.read.parquet(os.path.join(filter_dir, "filter"))
     docs = load_table(spark, sf_dir, "documents")
-    is_probe = (F.col("doc_id") % DECON_PROBE_MOD == 0) & (
-        F.col("doc_id") < DECON_PROBE_CAP
-    )
+    is_probe = artifacts.is_decon_probe()
     corpus_grams = dedup.shingle_rows(
         docs.filter(~is_probe), "doc_id", "text", DECON_NGRAM
     ).distinct()
@@ -2497,17 +2196,6 @@ HAVING count(*) FILTER (WHERE hit) > 0
 
 
 # --- snapshot delta: incremental-ingest corpus diff ---------------------------
-
-#: deterministic two-snapshot derivation from the one documents table: the
-#: md5-prefix doc hash (the same `hash_uniform` idiom every sampler uses)
-#: drops ~9% from the OLD snapshot (docs "added later"), ~8% from the NEW
-#: one ("removed"), and rewrites ~14% of NEW texts ("changed"). Pure row
-#: functions of doc_id — snapshot membership never depends on partitioning
-#: or engine.
-SNAP_OLD_MOD, SNAP_OLD_DROP = 11, 3
-SNAP_NEW_MOD, SNAP_NEW_DROP = 13, 5
-SNAP_EDIT_MOD, SNAP_EDIT_SEL = 7, 2
-
 
 def q_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental-ingest snapshot diff rolled up per (source, status):
@@ -2715,9 +2403,9 @@ def q_dedup_after_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The cut itself: when the edge list fits the session broadcast
     # budget (the min_label_components rule — broadcast-size ⇒
     # driver-collectable), materialize it as a local relation via ONE
-    # limit-probed collect; above the budget, localCheckpoint (r19 —
-    # checkpoint CREATION alone measured ~0.9 s of driver-side planning,
-    # so the small-edge case skips it entirely).
+    # limit-probed collect; above the budget, localCheckpoint(eager=False),
+    # which with AQE on (the default) runs the edge pipeline's shuffle and
+    # broadcast stages at the call (creation alone measured ~0.9 s).
     v = _neardup_edges(docs)
     _max_local = similarity._broadcast_bytes_threshold(spark) // 16
     _head = v.limit(_max_local + 1).collect() if _max_local > 0 else None
@@ -2876,72 +2564,7 @@ SELECT old_canonical, NULL, CAST(0 AS BIGINT), 'retired' FROM retired
 
 # --- manifest-level snapshot diff: the two-level scale path -------------------
 
-#: churn locality for the manifest diff: only shards ≡ MAN_DIRTY_SEL
-#: (mod MAN_DIRTY_MOD) carry the snapshot churn — the realistic ingest
-#: geometry (a day's crawl touches recent shards, not a uniform smear),
-#: and the property that makes manifest-level pruning WORTH anything.
-MAN_DIRTY_MOD, MAN_DIRTY_SEL = 4, 1
-
-#: deterministic hash-shard count shared by the export manifest and the
-#: manifest-level diff (defined here, above both f-string oracles)
-N_SHARDS = 16
-
 _SQL_H64 = "('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT"
-
-
-def _snap_base(docs: DataFrame) -> DataFrame:
-    """Shared synthetic-snapshot derivation for the manifest family: per
-    doc, its shard, the old/new membership flags and both content
-    fingerprints — the frame both `q_manifest_delta` legs and the
-    persisted-index build/probe read (identical expressions, so the
-    materialized old side and the recompute path certify the same
-    multisets)."""
-    h = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-    ).cast("bigint")
-    shard = (h % N_SHARDS).alias("shard")
-    churn = (h % N_SHARDS) % MAN_DIRTY_MOD == MAN_DIRTY_SEL
-    new_text = F.when(
-        churn & (F.col("__h") % SNAP_EDIT_MOD == SNAP_EDIT_SEL),
-        F.concat(F.col("text"), F.lit(" __rev2")),
-    ).otherwise(F.col("text"))
-    return docs.select(
-        "doc_id", "text", h.alias("__h"), shard,
-        (churn & (h % SNAP_OLD_MOD == SNAP_OLD_DROP)).alias("__skip_old"),
-        (churn & (h % SNAP_NEW_MOD == SNAP_NEW_DROP)).alias("__skip_new"),
-    ).select(
-        "doc_id", "shard", "__skip_old", "__skip_new",
-        F.md5("text").alias("fp_old"),
-        F.md5(new_text).alias("fp_new"),
-    )
-
-
-def _man_fold(rows: DataFrame, fp_col: str = "fp") -> DataFrame:
-    """The level-1 multiset fingerprint over (shard, doc_id, fp) rows:
-    h2 = hash(doc_id | content-fp) folded per shard as (sum, xor, count)
-    — any add/remove/CHANGE perturbs the state (see `q_manifest_delta`'s
-    false-clean disclosure for the collision budget). Emits (shard,
-    n_docs, members_fp)."""
-    h2 = F.conv(
-        F.substring(
-            F.md5(F.concat_ws("|", F.col("doc_id"), F.col(fp_col))), 1, 8
-        ),
-        16, 10,
-    ).cast("bigint")
-    agg = rows.select("shard", h2.alias("h2")).groupBy("shard").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.col("h2").cast("decimal(38,0)")).alias("__sum"),
-        F.expr("bit_xor(h2)").alias("__xor"),
-    )
-    fp = F.md5(
-        F.concat_ws(
-            "|",
-            F.col("__sum").cast("string"),
-            F.col("__xor").cast("string"),
-            F.col("n_docs").cast("string"),
-        )
-    )
-    return agg.select("shard", "n_docs", fp.alias("members_fp"))
 
 
 def q_manifest_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2998,15 +2621,12 @@ def q_manifest_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     the registered query keeps 32-bit h2 because the oracle replays the
     identical arithmetic."""
     docs = load_table(spark, sf_dir, "documents")
-    base = _snap_base(docs)
+    base = artifacts.snap_base(docs)
 
     def manifest(skip_col: str, fp_col: str) -> DataFrame:
-        # ONE fold definition for both the recompute path here and the
-        # persisted-index build (`_ensure_manifest_index`): delegating to
-        # `_man_fold` keeps the probe-vs-recompute equality contract from
-        # drifting (r17 ADVICE — this local fold used to duplicate the
-        # helper line-for-line).
-        return _man_fold(
+        # the same fold the persisted `artifacts.manifest_index` writes,
+        # so the probe and this recompute path certify equal multisets
+        return artifacts.man_fold(
             base.filter(~F.col(skip_col)).select(
                 "shard", "doc_id", F.col(fp_col).alias("fp")
             )
@@ -3175,42 +2795,6 @@ FROM shards s LEFT JOIN counts c ON c.shard = s.shard
 """
 
 
-def _ensure_manifest_index(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the OLD snapshot's CDC state once (the r17 PERF
-    finding's prescription: the two-level diff's asymptotic win belongs
-    to PERSISTED manifests, not recompute-both-sides): ``manifest/`` is
-    the N_SHARDS-row (shard, n_docs, members_fp) level-1 state and
-    ``digests/`` the (doc_id, fp) rows partitioned BY SHARD — so a later
-    diff reads level 1 without touching the old corpus at all and level
-    2's old side with real file-skipping partition pruning. Identity-
-    markered like every other index cache; the snapshot-shape constants
-    ride in the ident so a geometry change rebuilds."""
-    import os
-
-    params = {
-        "kind": "manifest", "n_shards": N_SHARDS,
-        "dirty": [MAN_DIRTY_MOD, MAN_DIRTY_SEL],
-        "old": [SNAP_OLD_MOD, SNAP_OLD_DROP],
-        "edit": [SNAP_EDIT_MOD, SNAP_EDIT_SEL],
-    }
-
-    def _build(build_dir: str) -> None:
-        base = _snap_base(load_table(spark, sf_dir, "documents"))
-        old = base.filter(~F.col("__skip_old")).select(
-            "shard", "doc_id", F.col("fp_old").alias("fp")
-        )
-        old.write.partitionBy("shard").mode("overwrite").parquet(
-            os.path.join(build_dir, "digests")
-        )
-        _man_fold(old).write.mode("overwrite").parquet(
-            os.path.join(build_dir, "manifest")
-        )
-
-    return _ensure_index(
-        sf_dir, "documents", f"manifest_s{N_SHARDS}", params, _build
-    )
-
-
 def q_manifest_delta_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`manifest_delta` served from PERSISTED old-side CDC state — the
     deployment shape the r17 crossover legs showed is where the
@@ -3230,16 +2814,18 @@ def q_manifest_delta_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     two payload scans + full digest shuffle — a structural win at any
     volume, not past a crossover. Same verdicts, same report schema,
     same oracle (the SQL replay recomputes both sides; the persisted
-    state holds identical multisets by the shared `_snap_base`
+    state holds identical multisets by the shared `artifacts.snap_base`
     derivation)."""
     import os
 
-    index_dir = _ensure_manifest_index(spark, sf_dir)
-    base = _snap_base(load_table(spark, sf_dir, "documents"))
+    index_dir = artifacts.manifest_index(spark, sf_dir)
+    base = artifacts.snap_base(load_table(spark, sf_dir, "documents"))
     new_digests = (
         base.filter(~F.col("__skip_new"))
         .select("shard", "doc_id", F.col("fp_new").alias("fp"))
-        .localCheckpoint(eager=False)  # one payload scan; 3 consumers
+        # no shuffle under the cut, so the call runs nothing; the first
+        # of the 3 consumers' jobs scans the payload once
+        .localCheckpoint(eager=False)
     )
     man_old = spark.read.parquet(os.path.join(index_dir, "manifest"))
     shards = (
@@ -3249,7 +2835,7 @@ def q_manifest_delta_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("members_fp").alias("__fp_o"),
         )
         .join(
-            _man_fold(new_digests).select(
+            artifacts.man_fold(new_digests).select(
                 "shard",
                 F.col("n_docs").alias("n_docs_new"),
                 F.col("members_fp").alias("__fp_n"),
@@ -3498,7 +3084,6 @@ FROM c
 # --- iterative Lloyd refinement over the IVF seed quantizer -----------------
 
 KM_K = 16
-KM_ITERS = 2
 
 
 def _sql_sqd(a: str, b: str, width: int | None = None) -> str:
@@ -4376,10 +3961,6 @@ FROM per_doc
 
 # --- model-based quality filter: fastText-style linear classifier -----------
 
-LRC_BUCKETS = 64   #: hashed unigram feature space (+1 bias)
-LRC_STEPS = 4      #: unrolled full-batch gradient iterations
-LRC_ETA = 4.0      #: step size on standardized features
-LRC_TAU = 0.06     #: label threshold on the stopword-ratio heuristic
 #: the production width: `lr_width_pick`'s choice on this corpus — the
 #: smallest power-of-two width whose hash map is injective on the
 #: label-bearing (stopword) buckets. The r17 sweep located the step
@@ -4582,56 +4163,6 @@ FROM z{fin}
 SQL_QUALITY_CLASSIFIER = _sql_quality_classifier()
 
 
-def _ensure_lr_model(
-    spark: SparkSession, sf_dir: str, buckets: int = LRC_BUCKETS
-) -> str:
-    """Train-once cache for the quality classifier's serving artifact
-    (the `_ensure_pq_index` pattern): `text.token_lr_train`'s
-    (buckets+1)-row (bucket, w, mu, sd) frame persisted as parquet under
-    an identity-markered dir, so the probes pay the LRC_STEPS gradient
-    iterations exactly once per (testdata tree, hyperparameters) and the
-    probe itself never runs a training step. ``meta/`` records the
-    bucket width IN the artifact (the PQ index `meta/` pattern,
-    r17 VERDICT item 7) so serving derives its feature-space modulus
-    from the model it scores with — no second copy to desynchronize, no
-    per-call row-count guard job."""
-    import os
-
-    params = {
-        "kind": "lr_model", "buckets": buckets, "steps": LRC_STEPS,
-        "eta": LRC_ETA, "tau": LRC_TAU,
-    }
-
-    def _build(build_dir: str) -> None:
-        docs = load_table(spark, sf_dir, "documents")
-        model = text.token_lr_train(
-            docs,
-            text.stopword_ratio(F.col("text")) >= LRC_TAU,
-            buckets=buckets, steps=LRC_STEPS, eta=LRC_ETA,
-        )
-        # buckets+1 rows: one file, one footer to read at serve time
-        model.repartition(1).write.parquet(os.path.join(build_dir, "model"))
-        spark.createDataFrame(
-            [(int(buckets),)], "buckets int"
-        ).write.parquet(os.path.join(build_dir, "meta"))
-
-    return _ensure_index(
-        sf_dir, "documents", f"lrc_b{buckets}s{LRC_STEPS}", params, _build
-    )
-
-
-def _lr_model_buckets(spark: SparkSession, model_dir: str) -> int:
-    """Bucket width read from the model artifact's own ``meta/`` —
-    serving's feature-space modulus comes from the artifact it scores
-    with (r17 VERDICT item 7: the previous per-call `model.count()`
-    guard was a Spark job in a serving path; this is one memoized 1-row
-    read per distinct model build, `similarity._artifact_row`)."""
-    import os
-
-    meta = similarity._artifact_row(spark, os.path.join(model_dir, "meta"))
-    return int(meta["buckets"])
-
-
 def q_quality_classifier_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`quality_classifier` against the build-once persisted model
     (VERDICT r16 item 3 — the `build_pq_index` → `pq_topk_probe`
@@ -4643,18 +4174,20 @@ def q_quality_classifier_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin, like the Lloyd-free ANN probes). Scores are byte-identical to
     the train-inline classifier (shared LR_Q folds), so the oracle is
     the same deterministic training replay."""
-    model_dir = _ensure_lr_model(spark, sf_dir)
-    import os
+    return _lr_serve(spark, sf_dir, LRC_BUCKETS)
 
-    model = spark.read.parquet(os.path.join(model_dir, "model"))
-    docs = load_table(spark, sf_dir, "documents")
+
+def _lr_serve(spark: SparkSession, sf_dir: str, buckets: int) -> DataFrame:
+    """Score ``documents`` with the persisted `artifacts.lr_model` of
+    width ``buckets``. The scoring width comes from the model's own
+    ``meta/``, so it cannot mismatch the model and the per-call count
+    guard is off."""
+    model, width = artifacts.lr_model(spark, sf_dir, buckets=buckets)
     return text.token_lr_score(
-        docs,
+        load_table(spark, sf_dir, "documents"),
         model,
         text.stopword_ratio(F.col("text")) >= LRC_TAU,
-        # width from the artifact's own meta (memoized 1-row read) —
-        # cannot mismatch the model, so the per-call count guard is off
-        buckets=_lr_model_buckets(spark, model_dir),
+        buckets=width,
         check_model=False,
     )
 
@@ -4675,25 +4208,12 @@ def q_quality_classifier_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     capacity knob — see LRC_BUCKETS_WIDE; accuracy ≥ 0.95 and
     picked == LRC_BUCKETS_WIDE both pinned by test).
     Train-once / serve-sparse exactly like
-    `quality_classifier_probe`: training is cached by `_ensure_lr_model`
+    `quality_classifier_probe`: training is cached by `artifacts.lr_model`
     (the dense corpus × (buckets+1) standardized grid exists only in the
     build), and serving is `token_lr_score`'s exact SPARSE fold —
     O(corpus tokens), WIDTH-INDEPENDENT serving cost (the sweep's
     measurement), width read from the artifact's meta."""
-    model_dir = _ensure_lr_model(spark, sf_dir, buckets=LRC_BUCKETS_WIDE)
-    import os
-
-    model = spark.read.parquet(os.path.join(model_dir, "model"))
-    docs = load_table(spark, sf_dir, "documents")
-    return text.token_lr_score(
-        docs,
-        model,
-        text.stopword_ratio(F.col("text")) >= LRC_TAU,
-        buckets=_lr_model_buckets(spark, model_dir),
-        check_model=False,
-    )
-
-
+    return _lr_serve(spark, sf_dir, LRC_BUCKETS_WIDE)
 
 
 # --- per-source distribution shift: KL(source ‖ corpus) over hashed grams ----
@@ -4897,9 +4417,6 @@ approx AS (
 
 # --- product quantization: ADC recall ----------------------------------------
 
-PQ_M = 8       # subspaces: 64 dims -> 8 blocks of 8
-PQ_K = 16      # centroids per subspace: a code is 8 x 4 bits
-PQ_ITERS = 2   # unrolled Lloyd iterations per subspace (KM_ITERS twin)
 PQ256_K = 256  # the production code budget: 8-bit sub-codebooks (FAISS IVFPQ's default nbits=8), VERDICT r13 item 3
 PQ256_M = 16   # subspaces at the production budget: 16 x 8-bit codes — the first budget the r14 frontier sweep shows reaching recall@10 >= 0.8 (VERDICT r14 item 2)
 _PQ_SUB = EMB_DIM // PQ_M
@@ -5077,7 +4594,7 @@ def q_ann_topk_pq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     m/k/iters/nlist/nprobe as `ivfpq_adc_topk`, so the oracle replays
     the training pipeline and the probe must reproduce its exact top-k
     rows from parquet."""
-    index_dir = _ensure_pq_index(spark, sf_dir)
+    index_dir = artifacts.pq_index(spark, sf_dir)
     queries = _query_slice(load_table(spark, sf_dir, "embeddings"))
     return similarity.pq_topk_probe(
         spark, index_dir, queries, k=TOPK, nprobe=IVF_NPROBE
@@ -5097,7 +4614,7 @@ def q_ann_topk_pq256_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same Lloyd-free monkeypatch pin). The probe reads the subspace
     geometry off the index metadata, so the only thing this function
     chooses is WHICH index to open."""
-    index_dir = _ensure_pq_index(spark, sf_dir, m=PQ256_M, k=PQ256_K)
+    index_dir = artifacts.pq_index(spark, sf_dir, m=PQ256_M, k=PQ256_K)
     queries = _query_slice(load_table(spark, sf_dir, "embeddings"))
     return similarity.pq_topk_probe(
         spark, index_dir, queries, k=TOPK, nprobe=IVF_NPROBE
@@ -5121,7 +4638,7 @@ def q_ann_topk_pq_refined_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained-quantizer residual ADC chain and the probe must reproduce its
     exact ranked top-k rows from parquet — NO Lloyd iteration at probe
     time (same monkeypatch pin as the raw-vector probes)."""
-    index_dir = _ensure_pq_index(spark, sf_dir, residual_refined=True)
+    index_dir = artifacts.pq_index(spark, sf_dir, residual_refined=True)
     queries = _query_slice(load_table(spark, sf_dir, "embeddings"))
     return similarity.pq_residual_topk_probe(
         spark, index_dir, queries, k=TOPK, nprobe=IVF_NPROBE
@@ -5241,34 +4758,6 @@ SELECT query_id, cand_id, cos_sim, rank FROM (
 """
 
 #: the production-budget serving oracle: the SAME chain at m=16, k=256.
-def _ensure_pq_upsert_index(spark: SparkSession, sf_dir: str) -> str:
-    """`_ensure_ivf_upsert_index`'s PQ twin: build the IVF-PQ index on
-    the BASE corpus (training runs here, once), then upsert the CDC
-    delta via `similarity.pq_index_upsert` — delta vectors coded with
-    the PERSISTED codebooks, appended/replaced in their code cell
-    partitions; no Lloyd, no retrain (monkeypatch-pinned). One identity
-    marker describes the whole recipe."""
-    params = {
-        "kind": "pq_upsert", "m": PQ_M, "k": PQ_K, "iters": PQ_ITERS,
-        "nlist": IVF_NLIST,
-        "chg": [UPS_CHG_MOD, UPS_CHG_SEL],
-        "new": [UPS_NEW_MOD, UPS_NEW_SEL],
-    }
-
-    def _build(build_dir: str) -> None:
-        base, delta = _upsert_frames(load_table(spark, sf_dir, "embeddings"))
-        similarity.build_pq_index(
-            spark, base, build_dir, m=PQ_M, k_codebook=PQ_K,
-            iters=PQ_ITERS, dim=EMB_DIM, nlist=IVF_NLIST,
-        )
-        similarity.pq_index_upsert(spark, build_dir, delta)
-
-    return _ensure_index(
-        sf_dir, "embeddings",
-        f"pqups_m{PQ_M}k{PQ_K}i{PQ_ITERS}nlist{IVF_NLIST}", params, _build,
-    )
-
-
 def q_ann_topk_pq_upsert_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`ann_topk_pq_probe` against an IVF-PQ index maintained
     INCREMENTALLY (the PQ half of r17 VERDICT item 2): codebooks and
@@ -5283,7 +4772,7 @@ def q_ann_topk_pq_upsert_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     green row certifies upsert ≡ re-encode. The probe plan is the
     unchanged `pq_topk_probe` (broadcast LUTs + partition-pruned code
     scan, Lloyd-free)."""
-    index_dir = _ensure_pq_upsert_index(spark, sf_dir)
+    index_dir = artifacts.pq_upsert_index(spark, sf_dir)
     queries = _query_slice(load_table(spark, sf_dir, "embeddings"))
     return similarity.pq_topk_probe(
         spark, index_dir, queries, k=TOPK, nprobe=IVF_NPROBE
@@ -5339,8 +4828,8 @@ def q_ann_topk_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells (`pq_topk_rerank`'s cross-index invariant, pinned by test).
     Oracle: the PQ-ADC training replay ranked to RERANK_SHORT, exact
     cosine from the shared `ew` CTE, re-ranked — bit-for-bit."""
-    pq_dir = _ensure_pq_index(spark, sf_dir)
-    ivf_dir = _ensure_ivf_index(spark, sf_dir)
+    pq_dir = artifacts.pq_index(spark, sf_dir)
+    ivf_dir = artifacts.ivf_index(spark, sf_dir)
     queries = _query_slice(load_table(spark, sf_dir, "embeddings"))
     return similarity.pq_topk_rerank(
         spark, pq_dir, ivf_dir, queries,

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from multi_source_financial_data_pipeline_spark.operators import grouped, multimodal, similarity, timeseries
+from multi_source_financial_data_pipeline_spark.plans import artifacts
 from multi_source_financial_data_pipeline_spark.plans.llmdata import (
     COS_THRESHOLD,
     IVF_NPROBE,
@@ -1752,23 +1753,21 @@ def _embedding_stream(spark: SparkSession, sf_dir: str):
 
 def _stream_ann_scored(spark: SparkSession, sf_dir: str, stream) -> DataFrame:
     """The shared streaming-retrieval probe chain (one definition for the
-    memory-sink harness and the `foreachBatch` production sink — the
-    `_man_fold` anti-drift discipline): live query vectors probe their
-    best cells against the materialized index's coarse quantizer inlined
-    as a LITERAL (the persisted 1-row quantizer, read once per index
-    build via `similarity._artifact_row` — bounded index metadata,
-    nlist × dim doubles; a literal because a stream-static CROSS
-    join is not in Structured Streaming's supported-join matrix), then a
+    memory-sink harness and the `foreachBatch` production sink): live
+    query vectors probe their best cells against the coarse quantizer of
+    the `artifacts.ivf_index` inlined as a LITERAL (the persisted 1-row
+    quantizer, read once per index build via `similarity.artifact_row` —
+    bounded index metadata, nlist × dim doubles; a literal because a
+    stream-static CROSS join is not in Structured Streaming's
+    supported-join matrix), then a
     stream-static INNER equi join on ``cell`` fetches candidates from
     the cell-partitioned ``cells/`` — per micro-batch, each query
     touches ~nprobe/nlist of the corpus, and the scoring is pure
     row-local expression work (append-safe, NO state). Returns the
     streaming (query_id, cand_id, cos_sim) scored-pair frame."""
-    from multi_source_financial_data_pipeline_spark.plans import llmdata
-
-    ivf_dir = llmdata._ensure_ivf_index(spark, sf_dir)
+    ivf_dir = artifacts.ivf_index(spark, sf_dir)
     cells = spark.read.parquet(os.path.join(ivf_dir, "cells"))
-    seeds = similarity._artifact_row(
+    seeds = similarity.artifact_row(
         spark, os.path.join(ivf_dir, "quantizer")
     )["seeds"]
     seeds_lit = "array(" + ",".join(

@@ -15,10 +15,10 @@ here is a set-based bulk write:
   duplicated ret/return pair (SURVEY.md §1.3);
 - K8/K9 reports are driver-side JSON over collected aggregates.
 
-At scale: appends are new parquet files (no read-modify-write of data), the
-anti-join probe reads only the key columns of existing data (column pruning),
-and a partition-pruned path applies when the incoming batch covers a bounded
-date range.
+At scale: K2/K3 appends are new unpartitioned parquet files (no
+read-modify-write of data). The anti-join probe reads only the key columns
+of existing data (column pruning) but every stored key: there is no
+partition pruning, whatever date range the incoming batch covers.
 """
 
 from __future__ import annotations

@@ -133,7 +133,7 @@ PROBE_QUERIES = [
     # with corpus TOKENS (the sparse fold never densifies to corpus ×
     # buckets), and the persisted-manifest diff with the single new-side
     # payload scan + dirty-fraction digest reads (its index rebuild rides
-    # the untimed warm pass via the _ensure cache)
+    # the untimed warm pass via the artifacts cache)
     "quality_classifier_probe",
     "manifest_delta_probe",
 ]
@@ -1042,12 +1042,13 @@ def ivf_upsert_crossover(ks: tuple[int, ...] = (10, 30)) -> dict:
     spark = get_spark("msfdp-ivf-upsert-crossover")
     spark.sparkContext.setLogLevel("WARN")
     from multi_source_financial_data_pipeline_spark.operators import similarity
+    from multi_source_financial_data_pipeline_spark.plans import artifacts
     from multi_source_financial_data_pipeline_spark.plans import llmdata as _ld
 
     # the FIXED delta: the registered query's CDC selection over the BASE
     # corpus (constant size at every scale)
     base_emb = load_table(spark, src, "embeddings")
-    _, delta = _ld._upsert_frames(base_emb)
+    _, delta = artifacts.upsert_frames(base_emb)
     delta = delta.localCheckpoint()  # freeze: derivation is not the probe
     n_delta = delta.count()
 
@@ -1165,7 +1166,9 @@ def manifest_dirty_sweep(k: int = 10) -> dict:
     src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("msfdp-manifest-sweep")
     spark.sparkContext.setLogLevel("WARN")
-    from multi_source_financial_data_pipeline_spark.plans import llmdata as _ld
+    # the churn constants have one binding, in artifacts: snap_base (the
+    # manifest queries and the persisted index) reads them at call time
+    from multi_source_financial_data_pipeline_spark.plans import artifacts as _art
 
     # (label, MOD, SEL): dirty shards are those ≡ SEL (mod MOD) of the 16
     fractions = [
@@ -1178,11 +1181,11 @@ def manifest_dirty_sweep(k: int = 10) -> dict:
         "metric": "manifest_dirty_sweep",
         "base_sf_dir": src,
         "k": k,
-        "n_shards": _ld.N_SHARDS,
+        "n_shards": _art.N_SHARDS,
         "fractions": {},
     }
     dst = tempfile.mkdtemp(prefix=f"msfdp_mansweep{k}_")
-    saved = (_ld.MAN_DIRTY_MOD, _ld.MAN_DIRTY_SEL)
+    saved = (_art.MAN_DIRTY_MOD, _art.MAN_DIRTY_SEL)
 
     def _timed(fn) -> float:
         fn(spark, dst).write.format("noop").mode("overwrite").save()
@@ -1206,14 +1209,14 @@ def manifest_dirty_sweep(k: int = 10) -> dict:
         ).save()
         out["snapshot_delta_sec"] = _timed(QUERIES["snapshot_delta"].fn)
         for label, mod, sel in fractions:
-            _ld.MAN_DIRTY_MOD, _ld.MAN_DIRTY_SEL = mod, sel
+            _art.MAN_DIRTY_MOD, _art.MAN_DIRTY_SEL = mod, sel
             n_dirty = sum(
-                1 for s in range(_ld.N_SHARDS) if s % mod == sel
+                1 for s in range(_art.N_SHARDS) if s % mod == sel
             )
             out["fractions"][label] = {
                 "manifest_delta_sec": _timed(QUERIES["manifest_delta"].fn),
                 # r17: the persisted-manifest serving shape, timed in the
-                # same leg — its _ensure ident includes the swapped churn
+                # same leg — its artifact params include the swapped churn
                 # constants, so each leg builds its own index during the
                 # warm rep and the timed reps measure pure serving
                 "manifest_delta_probe_sec": _timed(
@@ -1222,7 +1225,7 @@ def manifest_dirty_sweep(k: int = 10) -> dict:
                 "n_dirty_shards": n_dirty,
             }
     finally:
-        _ld.MAN_DIRTY_MOD, _ld.MAN_DIRTY_SEL = saved
+        _art.MAN_DIRTY_MOD, _art.MAN_DIRTY_SEL = saved
         shutil.rmtree(dst, ignore_errors=True)
         spark.stop()
     ys = out["snapshot_delta_sec"]

@@ -1419,15 +1419,13 @@ def test_pq_index_probe_prunes_cell_partitions_and_runs_no_training(
     probe must still answer (the index is pre-built, so any training call
     in the serving path would detonate)."""
     from multi_source_financial_data_pipeline_spark.operators import similarity
-    from multi_source_financial_data_pipeline_spark.plans import llmdata
+    from multi_source_financial_data_pipeline_spark.plans import artifacts, llmdata
 
-    index_dir = llmdata._ensure_pq_index(spark, sf_dir)
-    llmdata._ensure_pq_index(
-        spark, sf_dir, m=llmdata.PQ256_M, k=llmdata.PQ256_K
-    )
-    llmdata._ensure_pq_index(spark, sf_dir, residual_refined=True)
-    llmdata._ensure_ivf_index(spark, sf_dir, refined=True)
-    llmdata._ensure_ivf_index(spark, sf_dir)  # rerank's raw-vector side
+    index_dir = artifacts.pq_index(spark, sf_dir)
+    artifacts.pq_index(spark, sf_dir, m=llmdata.PQ256_M, k=llmdata.PQ256_K)
+    artifacts.pq_index(spark, sf_dir, residual_refined=True)
+    artifacts.ivf_index(spark, sf_dir, refined=True)
+    artifacts.ivf_index(spark, sf_dir)  # rerank's raw-vector side
 
     def _no_training(*a, **k):
         raise AssertionError("pq_train_encode invoked in the serving path")
@@ -1542,12 +1540,12 @@ def test_quality_probe_serves_without_training(spark, sf_dir, monkeypatch):
     call in the serving path detonates. And the served scores must be
     byte-identical to the train-inline classifier (shared LR_Q folds)."""
     from multi_source_financial_data_pipeline_spark.operators import text
-    from multi_source_financial_data_pipeline_spark.plans import llmdata
+    from multi_source_financial_data_pipeline_spark.plans import artifacts
 
     inline = QUERIES["quality_classifier"].fn(spark, sf_dir)
     want = sorted(tuple(r) for r in inline.collect())
 
-    llmdata._ensure_lr_model(spark, sf_dir)  # build before the patch
+    artifacts.lr_model(spark, sf_dir)  # build before the patch
 
     def _no_training(*a, **k):
         raise AssertionError("training invoked in the serving path")
@@ -1579,15 +1577,10 @@ def test_wide_classifier_serves_without_training_or_count_guard(
     memo is warm, building the plan runs ZERO Spark jobs (the old
     per-call `model.count()` guard was one per invocation)."""
     from multi_source_financial_data_pipeline_spark.operators import text
-    from multi_source_financial_data_pipeline_spark.plans import llmdata
+    from multi_source_financial_data_pipeline_spark.plans import artifacts, llmdata
 
-    llmdata._ensure_lr_model(
-        spark, sf_dir, buckets=llmdata.LRC_BUCKETS_WIDE
-    )  # build + warm the meta memo before the patch
-    llmdata._lr_model_buckets(
-        spark,
-        llmdata._ensure_lr_model(spark, sf_dir, buckets=llmdata.LRC_BUCKETS_WIDE),
-    )
+    # build + warm the meta memo before the patch
+    artifacts.lr_model(spark, sf_dir, buckets=llmdata.LRC_BUCKETS_WIDE)
 
     def _no_training(*a, **k):
         raise AssertionError("training invoked in the serving path")
@@ -1624,14 +1617,14 @@ def test_bloom_probe_serves_from_persisted_filter(spark, sf_dir, monkeypatch):
     membership arithmetic). The eval docs' text must not be in the probe
     plan: the only Generate (shingle explode) input is the corpus split."""
     from multi_source_financial_data_pipeline_spark.operators import dedup
-    from multi_source_financial_data_pipeline_spark.plans import llmdata
+    from multi_source_financial_data_pipeline_spark.plans import artifacts
 
     want = sorted(
         (r["doc_id"], r["n_grams"], r["n_bloom_pos"])
         for r in QUERIES["bloom_decontaminate"].fn(spark, sf_dir).collect()
     )
 
-    llmdata._ensure_bloom_filter(spark, sf_dir)  # build before the patch
+    artifacts.bloom_filter(spark, sf_dir)  # build before the patch
 
     def _no_build(*a, **k):
         raise AssertionError("bloom_build invoked in the serving path")

@@ -322,66 +322,66 @@ def test_schema_evolution_merge_on_read(spark, sf_dir, tmp_path):
 
 
 def test_ivf_index_cache_invalidates_on_source_change(spark, tmp_path):
-    """`_ensure_ivf_index` must rebuild when the source embeddings parquet
-    changes (mtime/size identity in the marker) and reuse the cached index
-    when it does not — a stale cell assignment would silently serve results
-    for the previous corpus."""
+    """`artifacts.ivf_index` must rebuild when the source embeddings
+    parquet changes (mtime/size identity in the marker) and reuse the
+    cached index when it does not — a stale cell assignment would silently
+    serve results for the previous corpus."""
     import os
     import shutil
 
-    from multi_source_financial_data_pipeline_spark.plans import llmdata
+    from multi_source_financial_data_pipeline_spark.plans import artifacts
 
     sf_dir = str(tmp_path / "sf")
     os.makedirs(sf_dir)
     shutil.copy("/root/testdata/sf0.001/embeddings.parquet",
                 os.path.join(sf_dir, "embeddings.parquet"))
 
-    idx1 = llmdata._ensure_ivf_index(spark, sf_dir)
+    idx1 = artifacts.ivf_index(spark, sf_dir)
     marker = os.path.join(idx1, "_built.json")
     mtime1 = os.path.getmtime(marker)
 
     # unchanged source -> reuse (marker untouched)
-    assert llmdata._ensure_ivf_index(spark, sf_dir) == idx1
+    assert artifacts.ivf_index(spark, sf_dir) == idx1
     assert os.path.getmtime(marker) == mtime1
 
     # touch the source -> identity changes -> rebuild (marker rewritten)
     os.utime(os.path.join(sf_dir, "embeddings.parquet"))
-    llmdata._ensure_ivf_index(spark, sf_dir)
+    artifacts.ivf_index(spark, sf_dir)
     assert os.path.getmtime(marker) > mtime1
 
 
 def test_ivf_index_rebuilds_on_code_fingerprint_change(
     spark, tmp_path, monkeypatch
 ):
-    """The artifact identity includes a fingerprint of the package's
-    sources: an index built by different code must be rebuilt (marker
-    rewritten, fingerprint recorded), while an unchanged fingerprint reuses
-    the cached index — a changed `build_ivf_index` or `kmeans_centroids`
-    must never keep serving a stale artifact."""
+    """The artifact identity includes a fingerprint of the build code: an
+    index built by different code must be rebuilt (marker rewritten,
+    fingerprint recorded), while an unchanged fingerprint reuses the
+    cached index — a changed `build_ivf_index` or `kmeans_centroids` must
+    never keep serving a stale artifact."""
     import json
     import os
     import shutil
 
-    from multi_source_financial_data_pipeline_spark.plans import llmdata
+    from multi_source_financial_data_pipeline_spark.plans import artifacts
 
     sf_dir = str(tmp_path / "sf")
     os.makedirs(sf_dir)
     shutil.copy("/root/testdata/sf0.001/embeddings.parquet",
                 os.path.join(sf_dir, "embeddings.parquet"))
 
-    idx = llmdata._ensure_ivf_index(spark, sf_dir)
+    idx = artifacts.ivf_index(spark, sf_dir)
     marker = os.path.join(idx, "_built.json")
     mtime1 = os.path.getmtime(marker)
     with open(marker) as fh:
-        assert json.load(fh)["code"] == llmdata._code_fingerprint()
+        assert json.load(fh)["code"] == artifacts.fingerprint()
 
     # unchanged code -> reuse (marker untouched)
-    assert llmdata._ensure_ivf_index(spark, sf_dir) == idx
+    assert artifacts.ivf_index(spark, sf_dir) == idx
     assert os.path.getmtime(marker) == mtime1
 
     # changed code -> identity changes -> rebuild (marker rewritten)
-    monkeypatch.setattr(llmdata, "_code_fingerprint", lambda: "0" * 16)
-    assert llmdata._ensure_ivf_index(spark, sf_dir) == idx
+    monkeypatch.setattr(artifacts, "fingerprint", lambda: "0" * 16)
+    assert artifacts.ivf_index(spark, sf_dir) == idx
     assert os.path.getmtime(marker) > mtime1
     with open(marker) as fh:
         assert json.load(fh)["code"] == "0" * 16
@@ -398,17 +398,26 @@ def test_ivf_index_keeps_concurrent_winners_fresh_build(spark, tmp_path,
     import shutil
 
     from multi_source_financial_data_pipeline_spark.operators import similarity
-    from multi_source_financial_data_pipeline_spark.plans import llmdata
+    from multi_source_financial_data_pipeline_spark.plans import artifacts
 
     sf_dir = str(tmp_path / "sf")
     os.makedirs(sf_dir)
     shutil.copy("/root/testdata/sf0.001/embeddings.parquet",
                 os.path.join(sf_dir, "embeddings.parquet"))
 
-    idx = llmdata._ensure_ivf_index(spark, sf_dir)
+    idx = artifacts.ivf_index(spark, sf_dir)
     # force a rebuild: new source identity
     os.utime(os.path.join(sf_dir, "embeddings.parquet"))
 
+    # the winner publishes exactly the identity this build computes
+    real_ident = artifacts.ident
+    idents = []
+
+    def recording_ident(*a):
+        idents.append(real_ident(*a))
+        return idents[-1]
+
+    monkeypatch.setattr(artifacts, "ident", recording_ident)
     real_build = similarity.build_ivf_index
 
     def winner_races_us(
@@ -422,16 +431,12 @@ def test_ivf_index_keeps_concurrent_winners_fresh_build(spark, tmp_path,
         # at index_dir before our swap, with a sentinel proving it survives
         shutil.rmtree(idx)
         shutil.copytree(build_dir, idx)
-        ident = llmdata._artifact_ident(
-            sf_dir, "embeddings",
-            {"nlist": llmdata.IVF_NLIST, "two_level": False},
-        )
         with open(os.path.join(idx, "_built.json"), "w") as fh:
-            json.dump(ident, fh)
+            json.dump(idents[-1], fh)
         open(os.path.join(idx, "_winner_sentinel"), "w").close()
 
     monkeypatch.setattr(similarity, "build_ivf_index", winner_races_us)
-    out = llmdata._ensure_ivf_index(spark, sf_dir)
+    out = artifacts.ivf_index(spark, sf_dir)
     assert out == idx
     # the winner's files were NOT replaced, and our build dir was cleaned up
     assert os.path.exists(os.path.join(idx, "_winner_sentinel"))
@@ -440,13 +445,14 @@ def test_ivf_index_keeps_concurrent_winners_fresh_build(spark, tmp_path,
     assert leftovers == []
 
 
-def test_ivf_cache_root_survives_root_removal_race(monkeypatch):
+def test_ivf_cache_root_survives_root_removal_race(monkeypatch, tmp_path):
     """TOCTOU: the cache root vanishing between the failed mkdir and the
     lstat must fall through to the private mkdtemp fallback, not crash
     (r06 ADVICE)."""
     import os
+    import tempfile
 
-    from multi_source_financial_data_pipeline_spark.plans import llmdata
+    from multi_source_financial_data_pipeline_spark.plans import artifacts
 
     real_mkdir = os.mkdir
 
@@ -460,12 +466,105 @@ def test_ivf_cache_root_survives_root_removal_race(monkeypatch):
     def lstat_gone(path, *a, **kw):
         raise FileNotFoundError(path)  # ...and it is gone by the lstat
 
+    # any fallback root lands under tmp_path, not the shared tempdir
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     monkeypatch.setattr(os, "mkdir", mkdir_then_vanish)
     monkeypatch.setattr(os, "lstat", lstat_gone)
-    monkeypatch.setattr(llmdata, "_FALLBACK_CACHE_ROOT", None)
-    root = llmdata._ivf_cache_root()
+    root = artifacts.cache_root()
     assert os.path.isdir(root)
     assert os.path.basename(root).startswith("msfdp_ivf_index_")
+
+
+def test_cache_root_is_the_per_user_tempdir_path(monkeypatch, tmp_path):
+    """On the normal branch the cache root is exactly
+    ``<tempdir>/msfdp_ivf_index_<uid>``, created 0700: the benchmark's
+    `plans.artifacts_built` counter lists that path, so a moved root
+    would silently read 0."""
+    import os
+    import stat
+    import tempfile
+
+    from multi_source_financial_data_pipeline_spark.plans import artifacts
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    root = artifacts.cache_root()
+    assert root == os.path.join(
+        tempfile.gettempdir(), f"msfdp_ivf_index_{os.getuid()}"
+    )
+    assert stat.S_IMODE(os.lstat(root).st_mode) == 0o700
+    assert artifacts.cache_root() == root  # the existing root is reused
+
+
+def test_failed_build_leaves_no_temp_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """A build that raises (a failed Spark job, here a RuntimeError) must
+    propagate its error and leave no ``<name>.build.*`` directory in the
+    cache root."""
+    import os
+    import tempfile
+
+    from multi_source_financial_data_pipeline_spark.operators import similarity
+    from multi_source_financial_data_pipeline_spark.plans import artifacts
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    os.makedirs(tempfile.tempdir)
+
+    def failing_build(*a, **k):
+        raise RuntimeError("build failed")
+
+    monkeypatch.setattr(similarity, "build_ivf_index", failing_build)
+    with pytest.raises(RuntimeError, match="build failed"):
+        artifacts.ivf_index(spark, sf_dir)
+    assert [e for e in os.listdir(artifacts.cache_root())
+            if ".build." in e] == []
+
+
+def test_fingerprint_covers_only_the_build_modules(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The code fingerprint hashes `artifacts` and the modules its builds
+    import, nothing else: an edit to a module outside that set (the
+    pipeline, the query modules) keeps a built artifact, while an edit to
+    one inside it (`similarity`) rebuilds it. An edit is simulated by
+    serving the named source files with an extra trailing comment."""
+    import os
+    import pathlib
+    import shutil
+
+    from multi_source_financial_data_pipeline_spark.plans import artifacts
+
+    src_dir = str(tmp_path / "sf")  # a private copy: the marker is ours
+    os.makedirs(src_dir)
+    shutil.copy(os.path.join(sf_dir, "embeddings.parquet"), src_dir)
+
+    real_read_bytes = pathlib.Path.read_bytes
+    edited: set[str] = set()
+
+    def read_bytes(path):
+        data = real_read_bytes(path)
+        return data + b"\n# edited\n" if path.name in edited else data
+
+    def edit(*names: str) -> None:
+        edited.clear()
+        edited.update(names)
+        artifacts.fingerprint.cache_clear()
+
+    monkeypatch.setattr(pathlib.Path, "read_bytes", read_bytes)
+    try:
+        edit()
+        idx = artifacts.ivf_index(spark, src_dir)
+        marker = os.path.join(idx, "_built.json")
+        mtime1 = os.path.getmtime(marker)
+
+        edit("pipeline.py", "llmdata.py", "financial.py")
+        assert artifacts.ivf_index(spark, src_dir) == idx
+        assert os.path.getmtime(marker) == mtime1
+
+        edit("similarity.py")
+        assert artifacts.ivf_index(spark, src_dir) == idx
+        assert os.path.getmtime(marker) > mtime1
+    finally:
+        monkeypatch.undo()
+        artifacts.fingerprint.cache_clear()
 
 
 def test_incremental_partition_refresh_matches_full_recompute(spark, sf_dir, tmp_path):
@@ -675,23 +774,32 @@ def test_bloom_filter_survives_storage_roundtrip(spark, tmp_path):
 
 
 def test_r17_model_caches_invalidate_on_source_and_geometry(spark, tmp_path):
-    """The two r17 `_ensure` caches inherit the ivf-index contract: reuse
+    """The two r17 caches (`artifacts.lr_model`,
+    `artifacts.manifest_index`) inherit the ivf-index contract: reuse
     while the source and hyperparameters are unchanged, rebuild when the
     source parquet is touched, and key the MANIFEST cache's identity on
     the churn geometry (the dirty sweep swaps MAN_DIRTY_* per leg — a
     stale old-side index built under different churn would silently
     certify the wrong shards clean)."""
+    import json
     import os
     import shutil
+    from urllib.parse import urlparse
 
-    from multi_source_financial_data_pipeline_spark.plans import llmdata
+    from multi_source_financial_data_pipeline_spark.plans import artifacts
 
     sf_dir = str(tmp_path / "sf")
     os.makedirs(sf_dir)
     shutil.copy("/root/testdata/sf0.001/documents.parquet",
                 os.path.join(sf_dir, "documents.parquet"))
 
-    for ensure in (llmdata._ensure_lr_model, llmdata._ensure_manifest_index):
+    def lr_model_dir(spark, sf_dir):
+        # the artifact directory holds model/<part file>
+        model, _ = artifacts.lr_model(spark, sf_dir)
+        part = urlparse(model.inputFiles()[0]).path
+        return os.path.dirname(os.path.dirname(part))
+
+    for ensure in (lr_model_dir, artifacts.manifest_index):
         idx = ensure(spark, sf_dir)
         marker = os.path.join(idx, "_built.json")
         mtime1 = os.path.getmtime(marker)
@@ -702,18 +810,18 @@ def test_r17_model_caches_invalidate_on_source_and_geometry(spark, tmp_path):
         assert os.path.getmtime(marker) > mtime1
 
     # geometry rides in the manifest ident: swapping the churn constants
-    # must rebuild even with the source untouched
-    marker = os.path.join(
-        llmdata._ensure_manifest_index(spark, sf_dir), "_built.json"
-    )
-    mtime1 = os.path.getmtime(marker)
-    saved = (llmdata.MAN_DIRTY_MOD, llmdata.MAN_DIRTY_SEL)
+    # (their one binding is in artifacts) must build a fresh index under
+    # the new geometry even with the source untouched
+    idx = artifacts.manifest_index(spark, sf_dir)
+    saved = (artifacts.MAN_DIRTY_MOD, artifacts.MAN_DIRTY_SEL)
     try:
-        llmdata.MAN_DIRTY_MOD, llmdata.MAN_DIRTY_SEL = 2, 0
-        llmdata._ensure_manifest_index(spark, sf_dir)
-        assert os.path.getmtime(marker) > mtime1
+        artifacts.MAN_DIRTY_MOD, artifacts.MAN_DIRTY_SEL = 2, 0
+        swapped = artifacts.manifest_index(spark, sf_dir)
     finally:
-        llmdata.MAN_DIRTY_MOD, llmdata.MAN_DIRTY_SEL = saved
+        artifacts.MAN_DIRTY_MOD, artifacts.MAN_DIRTY_SEL = saved
+    assert swapped != idx
+    with open(os.path.join(swapped, "_built.json")) as fh:
+        assert json.load(fh)["dirty"] == [2, 0]
 
 
 def test_token_lr_score_guards_bucket_mismatch(spark, sf_dir):

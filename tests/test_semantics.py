@@ -1660,11 +1660,11 @@ def test_pq_rerank_reaches_every_shortlist_candidate_and_lifts_recall(
     from pyspark.sql import functions as F
 
     from multi_source_financial_data_pipeline_spark.operators import similarity
-    from multi_source_financial_data_pipeline_spark.plans import llmdata
+    from multi_source_financial_data_pipeline_spark.plans import artifacts, llmdata
     from multi_source_financial_data_pipeline_spark.plans.registry import QUERIES
 
-    pq_dir = llmdata._ensure_pq_index(spark, sf_dir)
-    ivf_dir = llmdata._ensure_ivf_index(spark, sf_dir)
+    pq_dir = artifacts.pq_index(spark, sf_dir)
+    ivf_dir = artifacts.ivf_index(spark, sf_dir)
     queries = (
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         .filter(F.col("vec_id") < llmdata.N_QUERIES)
