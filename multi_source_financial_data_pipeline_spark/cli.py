@@ -4,7 +4,8 @@ same arguments (tickers, start, end, tolerance, output locations), same
 fetch → validate → transform → cross-validate → macro → persist → report
 flow, with the HTTP fetch layer replaced by the registered Python Data
 Source connectors (market_sim primary + perturbed secondary, fred_sim
-macro) — one input partition per ticker/series.
+macro) — tickers and series packed, in request order and never split, into
+at most ``defaultParallelism`` input partitions per read.
 
     python -m multi_source_financial_data_pipeline_spark \
         --tickers AAPL MSFT --start 2024-01-01 --end 2024-03-29 \
@@ -35,6 +36,7 @@ def _connector(
         .option("start", start)
         .option("end", end)
         .option("source", source)
+        .option("numPartitions", spark.sparkContext.defaultParallelism)
         .load()
     )
     # the pipeline's keep-last dedup needs an explicit ingest order
@@ -50,6 +52,7 @@ def _macro(spark: SparkSession, start: str, end: str, categories) -> DataFrame:
         .option("names", names)
         .option("start", start)
         .option("end", end)
+        .option("numPartitions", spark.sparkContext.defaultParallelism)
         .load()
     )
 

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
 from multi_source_financial_data_pipeline_spark.operators.text import tokens, word_ngrams
+from multi_source_financial_data_pipeline_spark.session import local_frame
 
 
 def shingles(text: Column, n: int = 3) -> Column:
@@ -407,8 +408,8 @@ def min_label_components(
                     T.StructField("lbl", id_type, True),
                 ]
             )
-            return edges.sparkSession.createDataFrame(
-                [(x, find(x)) for x in parent], schema=out_schema
+            return local_frame(
+                edges.sparkSession, [(x, find(x)) for x in parent], out_schema
             )
     # big-graph path: materialize the edge list once — every round joins
     # against it, and without this the whole upstream pipeline (LSH

@@ -17,9 +17,13 @@ def per_series_summary(
     series_col: str = "series_id",
     date_col: str = "date",
     value_col: str = "value",
+    order_col: str | None = None,
 ) -> DataFrame:
     """A8 (src/macro.py:309-322): per series — record count, null count,
-    min/max value, first/last date."""
+    min/max value, first/last date. With ``order_col``, each series also
+    carries its smallest ``order_col`` value under that name, so a caller
+    can list the series in row order from the same aggregate."""
+    first_row = [F.min(order_col).alias(order_col)] if order_col else []
     return df.groupBy(series_col).agg(
         F.count(F.lit(1)).alias("record_count"),
         (F.count(F.lit(1)) - F.count(value_col)).alias("null_values"),
@@ -27,6 +31,7 @@ def per_series_summary(
         F.max(value_col).alias("max_value"),
         F.min(date_col).alias("first_date"),
         F.max(date_col).alias("last_date"),
+        *first_row,
     )
 
 

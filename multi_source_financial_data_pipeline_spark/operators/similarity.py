@@ -18,6 +18,8 @@ from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Row, Window, functions as F
 
+from multi_source_financial_data_pipeline_spark.session import local_frame
+
 _ZERO = "cast(0.0 as double)"
 
 
@@ -124,11 +126,12 @@ KMEANS_Q = 1_000_000
 
 def _rematerialize_local(df: DataFrame) -> DataFrame:
     """Collect a BOUNDED frame (centroid/codebook scale: k·dim cells, never
-    corpus-proportional) and re-create it as a local relation — the
-    per-iteration lineage cut for the Lloyd loops (guide §5). Each
-    iteration's tiny centroid frame otherwise EMBEDS the full previous
-    chain, and every downstream reference (next assign, final encode, LUT
-    assembly) re-plans and re-executes it — the r18 plan audit counted 180
+    corpus-proportional) and re-create it as a local relation through
+    `local_frame` (a ``LocalTableScan``, no Python task) — the lineage cut
+    for the Lloyd loops (guide §5). Each iteration's tiny centroid frame
+    otherwise EMBEDS the full previous chain, and every downstream
+    reference (next assign, final encode, LUT assembly) re-plans and
+    re-executes it — the r18 plan audit counted 180
     Exchanges in one recall-harness plan from exactly this growth. A
     `localCheckpoint` also cuts the lineage but leaves an opaque RDD scan
     that costs ~1.3 s of Catalyst re-planning per reference chain
@@ -137,8 +140,7 @@ def _rematerialize_local(df: DataFrame) -> DataFrame:
     uses: centers come back to the driver every Lloyd iteration. Values
     are computed once and round-trip bit-exactly (collected IEEE doubles),
     so selections and the oracle replay are unaffected."""
-    spark = df.sparkSession
-    return spark.createDataFrame(df.collect(), schema=df.schema)
+    return local_frame(df.sparkSession, df.collect(), df.schema)
 
 
 def _km_assign(e: DataFrame, cents_df: DataFrame) -> DataFrame:
@@ -903,7 +905,8 @@ def cosine_neardup_pairs(
     )
     # block-pair enumeration is plan-time metadata (≤ num_blocks² tuples),
     # not data — broadcast-joined so each row fans out to its tiles only
-    tiles = sess.createDataFrame(
+    tiles = local_frame(
+        sess,
         [(i, j, i * num_blocks + j) for i in range(num_blocks) for j in range(i, num_blocks)],
         "bi int, bj int, tile int",
     )
@@ -1773,8 +1776,8 @@ def build_pq_index(
     index.quantizer.write.mode("overwrite").parquet(
         os.path.join(index_dir, "quantizer")
     )
-    spark.createDataFrame(
-        [(bool(by_residual),)], "by_residual boolean"
+    local_frame(
+        spark, [(bool(by_residual),)], "by_residual boolean"
     ).write.mode("overwrite").parquet(os.path.join(index_dir, "meta"))
 
 

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from multi_source_financial_data_pipeline_spark.session import local_frame
+
 #: Tiny English stopword list for the n-gram/stopword language heuristic.
 EN_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
 
@@ -563,9 +565,10 @@ def bpe_merge_steps(
     merges runs this same loop and persists the vocab every few hundred
     steps to cap lineage depth."""
     rows, _ = _bpe_train(df, n_merges, text_col)
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        rows, "step int, lhs string, rhs string, merged string, pair_count long"
+    return local_frame(
+        df.sparkSession,
+        rows,
+        "step int, lhs string, rhs string, merged string, pair_count long",
     )
 
 

@@ -34,6 +34,7 @@ from multi_source_financial_data_pipeline_spark.operators.timeseries import (
     rolling_std,
 )
 from multi_source_financial_data_pipeline_spark.schemas import REQUEST_LEDGER
+from multi_source_financial_data_pipeline_spark.session import local_frame
 from multi_source_financial_data_pipeline_spark.sources import sinks, synthetic
 
 
@@ -143,9 +144,7 @@ def run_pipeline(
             "validation_performed": metrics.get("validation_performed"),
             "error_count": metrics.get("error_count", 0),
         }
-        sinks.append_ledger(
-            spark.createDataFrame([row], schema=REQUEST_LEDGER), ledger_path
-        )
+        sinks.append_ledger(local_frame(spark, [row], REQUEST_LEDGER), ledger_path)
 
     ledger_event("started")
     cached: list[DataFrame] = []  # persisted frames, released in finally
@@ -218,8 +217,16 @@ def run_pipeline(
                 ).persist()
                 cached.append(macro)
                 g = series_stats.global_summary(macro).collect()[0]
+                # series in the order the feed delivers them: a group-by
+                # emits its groups in an order that follows the read's
+                # partition layout, so rank each series by its first row
+                summary = series_stats.per_series_summary(
+                    macro.withColumn("feed_row", F.monotonically_increasing_id()),
+                    order_col="feed_row",
+                ).collect()
                 per_series = [
-                    r.asDict() for r in series_stats.per_series_summary(macro).collect()
+                    {k: v for k, v in r.asDict().items() if k != "feed_row"}
+                    for r in sorted(summary, key=lambda r: r["feed_row"])
                 ]
                 macro_report = {
                     "performed": True,

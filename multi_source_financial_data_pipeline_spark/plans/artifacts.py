@@ -475,9 +475,9 @@ def lr_model(
         )
         # buckets+1 rows: one file, one footer to read at serve time
         model.repartition(1).write.parquet(os.path.join(out_dir, "model"))
-        spark.createDataFrame(
-            [(int(buckets),)], "buckets int"
-        ).write.parquet(os.path.join(out_dir, "meta"))
+        session.local_frame(spark, [(int(buckets),)], "buckets int").write.parquet(
+            os.path.join(out_dir, "meta")
+        )
 
     model_dir = ensure(spark, sf_dir, "documents", params, build)
     meta = similarity.artifact_row(spark, os.path.join(model_dir, "meta"))

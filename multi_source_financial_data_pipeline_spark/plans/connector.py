@@ -1,11 +1,12 @@
 """Python Data Source connector queries (SURVEY.md §2.1 S1-S3).
 
 The connector (sources/market_source.py) is registered per query and read
-through the normal scan path — one input partition per ticker. Quotes are
-md5-derived, so the DuckDB oracle rebuilds the identical feed symbolically
-(same hash→int mapping, same (int % const) / 100.0 double arithmetic) and the
-cross-validation query exercises the real two-source reconcile operator over
-two genuinely different connector reads.
+through the normal scan path — tickers (and macro series) packed, in
+request order and never split, into at most ``defaultParallelism`` input
+partitions. Quotes are md5-derived, so the DuckDB oracle rebuilds the
+identical feed symbolically (same hash→int mapping, same (int % const) /
+100.0 double arithmetic) and the cross-validation query exercises the real
+two-source reconcile operator over two genuinely different connector reads.
 """
 
 from __future__ import annotations
@@ -16,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from multi_source_financial_data_pipeline_spark.operators import crossval, series_stats
 from multi_source_financial_data_pipeline_spark.plans.spec import QuerySpec
-from multi_source_financial_data_pipeline_spark.session import pin_utc, tune_for_session_cores
+from multi_source_financial_data_pipeline_spark.session import local_frame, pin_utc, tune_for_session_cores
 from multi_source_financial_data_pipeline_spark.sources import market_source, registry
 
 TICKERS = ["AAPL", "GLD", "MSFT", "TSLA"]
@@ -34,6 +35,7 @@ def _read(spark: SparkSession, source: str) -> DataFrame:
         .option("start", START)
         .option("end", END)
         .option("source", source)
+        .option("numPartitions", spark.sparkContext.defaultParallelism)
         .load()
     )
 
@@ -244,7 +246,8 @@ def q_export_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(*CSV_EXPORT_COLUMNS)
     )
     quirk = export.agg(F.min(F.expr("ret <=> `return`")).alias("ok"))
-    cols = spark.createDataFrame(
+    cols = local_frame(
+        spark,
         [(i, c) for i, c in enumerate(export.columns)],
         "position INT, column_name STRING",
     )
@@ -268,7 +271,7 @@ FROM (VALUES
 """
 
 
-# --- macro series feed (S4-S6: category fan-out, per-series partitions) ------
+# --- macro series feed (S4-S6: category fan-out, packed series partitions) --
 
 MACRO_CATEGORIES = ["rates", "inflation"]
 MACRO_START, MACRO_END = "2020-01-01", "2023-12-31"
@@ -286,6 +289,7 @@ def _read_macro(spark: SparkSession) -> DataFrame:
         .option("names", names)
         .option("start", MACRO_START)
         .option("end", MACRO_END)
+        .option("numPartitions", spark.sparkContext.defaultParallelism)
         .load()
     )
 
@@ -339,7 +343,7 @@ SPECS = {
     "connector_ohlcv": QuerySpec(
         q_connector_ohlcv,
         SQL_CONNECTOR_OHLCV,
-        "Python Data Source OHLCV feed, one input partition per ticker",
+        "Python Data Source OHLCV feed, tickers packed into input partitions",
         ("source",),
     ),
     "connector_crossval": QuerySpec(
@@ -357,7 +361,7 @@ SPECS = {
     "connector_macro": QuerySpec(
         q_connector_macro,
         SQL_CONNECTOR_MACRO,
-        "FRED-shaped series feed, category fan-out, partition per series",
+        "FRED-shaped series feed, category fan-out, series packed into partitions",
         ("source",),
     ),
     "connector_macro_summary": QuerySpec(

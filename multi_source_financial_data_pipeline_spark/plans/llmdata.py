@@ -49,6 +49,7 @@ from multi_source_financial_data_pipeline_spark.plans.artifacts import (
     UPS_NEW_SEL,
 )
 from multi_source_financial_data_pipeline_spark.plans.spec import QuerySpec
+from multi_source_financial_data_pipeline_spark.session import local_frame
 from multi_source_financial_data_pipeline_spark.sources import load_table
 
 
@@ -2410,7 +2411,7 @@ def q_dedup_after_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     _max_local = similarity._broadcast_bytes_threshold(spark) // 16
     _head = v.limit(_max_local + 1).collect() if _max_local > 0 else None
     if _head is not None and len(_head) <= _max_local:
-        v = spark.createDataFrame(_head, schema=v.schema)
+        v = local_frame(spark, _head, v.schema)
     else:
         v = v.localCheckpoint(eager=False)
     state = _canon_from_edges(docs, v).select(
@@ -2706,10 +2707,11 @@ def q_manifest_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(F.col("status") == "changed", 1)).alias("n_changed"),
         )
     )
-    # explicit by-name tuples: createDataFrame maps Row objects to a DDL
+    # explicit by-name tuples: local_frame maps Row objects to a DDL
     # schema POSITIONALLY, so a reordering of the shards select upstream
     # would silently mis-map columns (r17 ADVICE)
-    shards_lit = spark.createDataFrame(
+    shards_lit = local_frame(
+        spark,
         [(int(r["shard"]), int(r["n_docs_new"]), r["status"]) for r in shard_rows],
         "shard bigint, n_docs_new bigint, status string",
     )
@@ -2887,10 +2889,11 @@ def q_manifest_delta_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(F.col("status") == "removed", 1)).alias("n_removed"),
         F.count(F.when(F.col("status") == "changed", 1)).alias("n_changed"),
     )
-    # explicit by-name tuples: createDataFrame maps Row objects to a DDL
+    # explicit by-name tuples: local_frame maps Row objects to a DDL
     # schema POSITIONALLY, so a reordering of the shards select upstream
     # would silently mis-map columns (r17 ADVICE)
-    shards_lit = spark.createDataFrame(
+    shards_lit = local_frame(
+        spark,
         [(int(r["shard"]), int(r["n_docs_new"]), r["status"]) for r in shard_rows],
         "shard bigint, n_docs_new bigint, status string",
     )

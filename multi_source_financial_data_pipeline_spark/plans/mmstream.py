@@ -26,7 +26,6 @@ from pyspark.sql import types as T
 from multi_source_financial_data_pipeline_spark.operators import grouped, multimodal, similarity, timeseries
 from multi_source_financial_data_pipeline_spark.plans import artifacts
 from multi_source_financial_data_pipeline_spark.plans.llmdata import (
-    COS_THRESHOLD,
     IVF_NPROBE,
     N_QUERIES,
     SQL_ANN_TOPK_IVF,
@@ -40,7 +39,7 @@ from multi_source_financial_data_pipeline_spark.plans.llmdata import (
 from multi_source_financial_data_pipeline_spark.plans.financial import RSI_N, SQL_RSI_BARS_4H
 from multi_source_financial_data_pipeline_spark.plans.spec import QuerySpec
 from multi_source_financial_data_pipeline_spark.schemas import TESTDATA
-from multi_source_financial_data_pipeline_spark.session import pin_utc, tune_for_session_cores
+from multi_source_financial_data_pipeline_spark.session import local_frame, pin_utc, tune_for_session_cores
 from multi_source_financial_data_pipeline_spark.sources import load_table
 from multi_source_financial_data_pipeline_spark.streaming import ingest
 
@@ -997,7 +996,7 @@ def q_stream_dedup_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         with tempfile.TemporaryDirectory() as ckpt:
             ingest.run_available_now(deduped, ckpt, writer)
-    return spark.createDataFrame([(sum(counts),)], "n_rows bigint")
+    return local_frame(spark, [(sum(counts),)], "n_rows bigint")
 
 
 SQL_STREAM_DEDUP = """

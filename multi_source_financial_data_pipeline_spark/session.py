@@ -10,8 +10,11 @@ sized to the harness (`SPARK_GRAFT_CPUS`) rather than the 200 default.
 from __future__ import annotations
 
 import os
+from datetime import timezone
+from typing import Any, Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, TimestampType
 
 
 def tune_for_session_cores(spark: SparkSession) -> None:
@@ -46,6 +49,50 @@ def pin_utc(spark: SparkSession) -> None:
             spark.conf.set("spark.sql.session.timeZone", "UTC")
     except Exception:  # pragma: no cover - conf access never fails in practice
         pass
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Any], schema: StructType | str
+) -> DataFrame:
+    """The one way to turn driver-side Python rows into a DataFrame: a JVM
+    local relation (``LocalTableScan``; one partition for one row) built
+    from a ``pyarrow.Table``, so reading it runs no Python worker task.
+
+    ``spark.createDataFrame`` over a Python list instead parallelizes the
+    rows into a Python RDD (``Scan ExistingRDD``, ``defaultParallelism``
+    slices), and every slice is a Python task. On a 4-core host a Python
+    task costs a few tenths of a CPU-second however few rows it carries:
+    each task's ``setup_spark_files`` calls ``importlib.invalidate_caches()``,
+    which re-reads the directory of the worker's ``pyspark.zip`` once per
+    zipimporter. Measured there, a one-row ledger write (4 slices) cost
+    1.1-1.8 CPU-s of the driver, JVM and workers that way, and 0.2-0.4
+    CPU-s as a local relation.
+
+    ``rows`` are tuples or ``Row``s (mapped to ``schema`` by position, as
+    ``createDataFrame`` maps them) or dicts (by field name). ``schema`` is
+    a ``StructType`` or a DDL string. A naive ``datetime`` in a timestamp
+    column is read as local time, as ``createDataFrame`` reads a list."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    names = schema.names
+    tuples = [
+        tuple(r.get(n) for n in names) if isinstance(r, dict) else tuple(r)
+        for r in rows
+    ]
+    columns = [list(c) for c in zip(*tuples)] if tuples else [[] for _ in names]
+    for i, f in enumerate(schema.fields):
+        if isinstance(f.dataType, TimestampType):
+            columns[i] = [
+                None if v is None else v.astimezone(timezone.utc) for v in columns[i]
+            ]
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=t) for c, t in zip(columns, arrow.types)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def get_spark(

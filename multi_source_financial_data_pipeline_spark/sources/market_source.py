@@ -4,11 +4,19 @@ S1-S3).
 The reference fetches OHLCV over HTTP per ticker with a thread pool
 (/root/reference/src/pipeline.py:28-42) and a secondary source for
 cross-validation (/root/reference/src/validation.py:128-185). The Spark-native
-connector shape: a registered ``DataSource`` whose reader emits **one input
-partition per ticker** — the cluster schedules ticker fetches as tasks, which
-is the distributed generalization of ``threads=True``. Retry/backoff and rate
-limiting (src/logger.py:75-132, src/validation.py:178) live inside
-``read(partition)``, per task, where a real HTTP client would go.
+connector shape: a registered ``DataSource`` whose reader packs the
+requested tickers, in request order, into at most ``numPartitions``
+contiguous groups, one input partition per group (the JDBC reader's option;
+without it, one partition per ticker). A ticker is never split across
+groups, and a group fetches its tickers one after another, so each ticker's
+rows stay contiguous and in fetch order. The cluster schedules the groups
+as tasks, the distributed generalization of ``threads=True``; every caller
+in this package sets ``numPartitions`` to the session's
+``defaultParallelism``, because each Python task carries a fixed cost
+(see ``session.local_frame``) however few rows it moves. Retry/backoff and
+rate limiting (src/logger.py:75-132, src/validation.py:178) wrap each
+ticker's fetch inside ``read(partition)``, where a real HTTP client would
+go.
 
 This offline build generates deterministic md5-derived quotes instead of
 calling an API, so the connector is oracle-checkable: every value is
@@ -35,6 +43,19 @@ SCHEMA = (
     "ticker string, date date, open double, high double, low double, "
     "close double, adj_close double, volume bigint, source string"
 )
+
+
+def pack(items: list[str], num_partitions: str | None) -> list[InputPartition]:
+    """``items`` in request order as at most ``num_partitions`` contiguous
+    groups of near-equal size, one ``InputPartition`` (a tuple of items)
+    per group; one group per item when the ``numPartitions`` option is
+    absent (None), since a reader cannot see the session's parallelism."""
+    m = len(items)
+    n = m if num_partitions is None else int(num_partitions)
+    if n < 1:
+        raise ValueError(f"numPartitions must be at least 1, got {n}")
+    k = min(n, m)
+    return [InputPartition(tuple(items[i * m // k : (i + 1) * m // k])) for i in range(k)]
 
 
 def _h(s: str) -> int:
@@ -209,16 +230,19 @@ def http_fetch_ohlcv(
 
 
 class MarketDataReader(DataSourceReader):
-    """Per-ticker partition reads with §2.11 resilience semantics: the fetch
-    body runs under retry-with-backoff (src/logger.py:75-132 formula), and a
-    partition whose retries are exhausted yields NO rows instead of failing
-    the job — the distributed form of the reference's skip-and-continue
-    series loop (/root/reference/src/macro.py:193-211). Failure injection for
-    tests: ``fail_tickers`` (csv) raise on the first ``fail_attempts``
-    attempts, so `fail_attempts <= max_retries` exercises recovery and a
-    larger value exercises skip."""
+    """Packed ticker reads (`pack`) with §2.11 resilience semantics per
+    ticker: each ticker's fetch runs under retry-with-backoff
+    (src/logger.py:75-132 formula), and a ticker whose retries are
+    exhausted yields NO rows instead of failing the job while the other
+    tickers of its partition still deliver theirs — the distributed form of
+    the reference's skip-and-continue series loop
+    (src/macro.py:193-211). Failure injection for tests:
+    ``fail_tickers`` (csv) raise on the first ``fail_attempts`` attempts, so
+    `fail_attempts <= max_retries` exercises recovery and a larger value
+    exercises skip."""
 
     def __init__(self, options: dict) -> None:
+        self.num_partitions = options.get("numPartitions")
         self.tickers = [t for t in options.get("tickers", "").split(",") if t]
         self.start = date.fromisoformat(options["start"])
         self.end = date.fromisoformat(options["end"])
@@ -237,15 +261,17 @@ class MarketDataReader(DataSourceReader):
         self.backoff_factor = float(options.get("backoff_factor", "2.0"))
 
     def partitions(self) -> list[InputPartition]:
-        # one partition per ticker: per-ticker fetch parallelism as tasks
-        return [InputPartition(t) for t in self.tickers]
+        return pack(self.tickers, self.num_partitions)
 
     def read(self, partition: InputPartition) -> Iterator[tuple]:
+        for ticker in partition.value:
+            yield from self._fetch(ticker)
+
+    def _fetch(self, ticker: str) -> list[tuple]:
         # where a real HTTP client would go: the whole per-ticker fetch under
         # retry-with-backoff, then skip-and-continue on exhaustion
         from multi_source_financial_data_pipeline_spark.functions.resilience import retry_with_backoff
 
-        ticker = partition.value
         attempt_box = {"n": 0}
 
         def fetch() -> list[tuple]:
@@ -273,10 +299,9 @@ class MarketDataReader(DataSourceReader):
             max_retries=self.max_retries, backoff_factor=self.backoff_factor
         )(fetch)
         try:
-            rows = wrapped()
+            return wrapped()
         except Exception:
-            return iter(())  # retries exhausted: skip this partition
-        return iter(rows)
+            return []  # retries exhausted: skip this ticker
 
 
 class MarketTickStreamReader(SimpleDataSourceStreamReader):
@@ -345,13 +370,15 @@ MACRO_SCHEMA = "series_id string, series_name string, date date, value double"
 
 
 class MacroSeriesReader(DataSourceReader):
-    """FRED-shaped series feed (SURVEY.md §2.1 S4-S5): one input partition
-    per series id — the cluster schedules series fetches as tasks, replacing
-    the reference's sequential skip-on-error loop
+    """FRED-shaped series feed (SURVEY.md §2.1 S4-S5): series ids packed
+    into at most ``numPartitions`` input partitions (`pack`), each series
+    fetched under its own retry-and-skip — the cluster schedules the groups
+    as tasks, replacing the reference's sequential skip-on-error loop
     (/root/reference/src/macro.py:193-211). Monthly observations on the
     first of each month, deterministic md5-derived values."""
 
     def __init__(self, options: dict) -> None:
+        self.num_partitions = options.get("numPartitions")
         self.series = [s for s in options.get("series", "").split(",") if s]
         self.names = dict(
             pair.split("=", 1)
@@ -369,7 +396,7 @@ class MacroSeriesReader(DataSourceReader):
         self.backoff_factor = float(options.get("backoff_factor", "2.0"))
 
     def partitions(self) -> list[InputPartition]:
-        return [InputPartition(s) for s in self.series]
+        return pack(self.series, self.num_partitions)
 
     def _sim_rows(self, sid: str, name: str) -> Iterator[tuple]:
         d = date(self.start.year, self.start.month, 1)
@@ -422,10 +449,12 @@ class MacroSeriesReader(DataSourceReader):
         ]
 
     def read(self, partition: InputPartition) -> Iterator[tuple]:
+        for sid in partition.value:
+            yield from self._fetch(sid, self.names.get(sid, sid))
+
+    def _fetch(self, sid: str, name: str) -> Iterator[tuple]:
         from multi_source_financial_data_pipeline_spark.functions.resilience import retry_with_backoff
 
-        sid = partition.value
-        name = self.names.get(sid, sid)
         if self.transport != "http":
             return self._sim_rows(sid, name)
         wrapped = retry_with_backoff(
@@ -470,11 +499,13 @@ def read_with_skip_report(
     **options: str,
 ):
     """S1-S3 fetch with the reference's skip-on-error accounting
-    (/root/reference/src/macro.py:206-208): read the connector (each
-    partition already retries and skips internally), then reconcile the
-    requested ticker list against the tickers that actually arrived and
-    record one ErrorTracker error per skipped ticker. The reconcile is a
-    distinct over the ticker column — ticker-list-sized, not data-sized."""
+    (src/macro.py:206-208): read the connector, packed to
+    the session's ``defaultParallelism`` unless ``options`` sets
+    ``numPartitions`` (each ticker already retries and skips inside its
+    partition), then reconcile the requested ticker list against the
+    tickers that actually arrived and record one ErrorTracker error per
+    skipped ticker. The reconcile is a distinct over the ticker column —
+    ticker-list-sized, not data-sized."""
     register(spark)
     reader = (
         spark.read.format("market_sim")
@@ -482,6 +513,7 @@ def read_with_skip_report(
         .option("start", start)
         .option("end", end)
         .option("source", source)
+        .option("numPartitions", spark.sparkContext.defaultParallelism)
     )
     for k, v in options.items():
         reader = reader.option(k, v)

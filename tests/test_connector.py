@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from multi_source_financial_data_pipeline_spark.sources import market_source
@@ -27,6 +28,64 @@ def test_one_partition_per_ticker(spark):
         lambda rows: [len({r["ticker"] for r in rows})]
     ).collect()
     assert per_part == [1, 1, 1]
+
+
+@pytest.mark.parametrize("num_partitions", [2, 1])
+@pytest.mark.parametrize(
+    "fmt, key_col, items_opt, items",
+    [
+        ("market_sim", "ticker", "tickers", ["AAPL", "MSFT", "TSLA"]),
+        ("fred_sim", "series_id", "series", ["UNRATE", "DGS10", "CPIAUCSL", "GDP", "M2SL"]),
+    ],
+    ids=["tickers", "series"],
+)
+def test_packed_partitions_keep_items_whole_and_in_fetch_order(
+    spark, fmt, key_col, items_opt, items, num_partitions
+):
+    """``numPartitions`` packs the items, in request order, into that many
+    contiguous groups: every item lands in exactly one partition, and
+    ``monotonically_increasing_id()`` rises with the date inside each item
+    (the order the pipeline's keep-last dedup reads as ``ingest_seq``). The
+    rows are the per-item layout's rows."""
+    market_source.register(spark)
+
+    def read(**extra):
+        return (
+            spark.read.format(fmt)
+            .option(items_opt, ",".join(items))
+            .option("start", "2024-01-01")
+            .option("end", "2024-06-30")
+            .options(**extra)
+            .load()
+        )
+
+    packed = read(numPartitions=str(num_partitions))
+    assert packed.rdd.getNumPartitions() == num_partitions
+    rows = (
+        packed.select(
+            key_col,
+            "date",
+            F.spark_partition_id().alias("part"),
+            F.monotonically_increasing_id().alias("seq"),
+        )
+        .collect()
+    )
+    parts = {}
+    for r in rows:
+        parts.setdefault(r[key_col], set()).add(r["part"])
+    assert set(parts) == set(items)
+    assert all(len(p) == 1 for p in parts.values())
+    assert {p for ps in parts.values() for p in ps} == set(range(num_partitions))
+    by_seq = sorted(rows, key=lambda r: r["seq"])
+    # contiguous and in request order: the item runs, in seq order, are
+    # the request list itself
+    runs = [k for i, k in enumerate(r[key_col] for r in by_seq)
+            if i == 0 or by_seq[i - 1][key_col] != k]
+    assert runs == items
+    for item in items:
+        dates = [r["date"] for r in by_seq if r[key_col] == item]
+        assert dates == sorted(dates) and len(set(dates)) == len(dates)
+    assert sorted(map(tuple, packed.collect())) == sorted(map(tuple, read().collect()))
 
 
 def test_feed_is_deterministic_and_business_days_only(spark):
@@ -68,6 +127,15 @@ def test_flaky_partition_retries_then_recovers(spark):
     )
     counts = {r["ticker"]: r["n"] for r in df.groupBy("ticker").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert counts == {"AAPL": 8, "MSFT": 8}
+    # packed into one partition with the healthy ticker, the flaky one
+    # still recovers and both deliver their full feed
+    packed = df.sparkSession.read.format("market_sim").options(
+        tickers="AAPL,MSFT", start="2024-01-01", end="2024-01-10",
+        fail_tickers="AAPL", fail_attempts="2", max_retries="3",
+        backoff_factor="0.001", numPartitions="1",
+    ).load()
+    assert packed.rdd.getNumPartitions() == 1
+    assert sorted(map(tuple, packed.collect())) == sorted(map(tuple, df.collect()))
 
 
 def test_dead_partition_skips_and_reports(spark):
@@ -96,6 +164,26 @@ def test_dead_partition_skips_and_reports(spark):
     assert summary["total_errors"] == 1
     assert summary["errors_by_operation"] == {"market_fetch": 1}
     assert "MSFT" in summary["errors"][0]["message"]
+
+    # packed with AAPL and TSLA into one partition, the dead ticker skips
+    # only its own rows
+    packed_tracker = ErrorTracker()
+    packed = market_source.read_with_skip_report(
+        spark,
+        ["AAPL", "MSFT", "TSLA"],
+        "2024-01-01",
+        "2024-01-10",
+        tracker=packed_tracker,
+        fail_tickers="MSFT",
+        fail_attempts="99",
+        max_retries="1",
+        backoff_factor="0.001",
+        numPartitions="1",
+    )
+    assert packed.rdd.getNumPartitions() == 1
+    assert packed.count() == 2 * 8
+    assert sorted(map(tuple, packed.collect())) == sorted(map(tuple, df.collect()))
+    assert packed_tracker.summary()["errors_by_operation"] == {"market_fetch": 1}
 
 
 def test_stream_ticks_incremental_batches(spark):
@@ -577,7 +665,8 @@ def test_run_pipeline_fetches_each_source_once(spark, tmp_path):
     aggregation, cross-validation join, append and export reads the
     request's persisted copy instead of re-running the connector (a lazy
     pipeline re-fetches per action: 11 primary, 2 secondary and 3 macro
-    GETs each)."""
+    GETs each). Both feeds and the macro read pack their items into one
+    partition, which fetches each item once in turn."""
     from collections import Counter
 
     from multi_source_financial_data_pipeline_spark.pipeline import (
@@ -599,6 +688,7 @@ def test_run_pipeline_fetches_each_source_once(spark, tmp_path):
                 .option("source", source)
                 .option("transport", "http")
                 .option("base_url", url)
+                .option("numPartitions", "1")
                 .load()
                 .withColumn("ingest_seq", F.monotonically_increasing_id())
             )
@@ -613,6 +703,7 @@ def test_run_pipeline_fetches_each_source_once(spark, tmp_path):
             .option("end", end)
             .option("transport", "http")
             .option("base_url", url)
+            .option("numPartitions", "1")
             .load()
         )
 

@@ -169,8 +169,8 @@ def _defect_config(base) -> PipelineConfig:
     )
 
 
-def _persisted_rdds(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+def _persisted_ids(spark) -> set[int]:
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
 
 
 def test_report_values_pinned(spark, tmp_path):
@@ -178,8 +178,8 @@ def test_report_values_pinned(spark, tmp_path):
     request with planted defects, as the written JSON report carries them.
     The literals were computed by the lazy pipeline that re-read its sources
     on every action, so they hold the fetch-once pipeline to the same
-    numbers. Macro series are compared sorted by id: their order is the
-    group-by's, which no caller relies on."""
+    numbers. Macro series are listed in the order the feed delivers them
+    (UNRATE first: the synthetic feed interleaves the two series)."""
     res = run_pipeline(
         spark,
         _defect_config(tmp_path),
@@ -207,21 +207,19 @@ def test_report_values_pinned(spark, tmp_path):
             "tolerance_pct": 0.5,
         },
     }
-    macro = report["macro_validation"]
-    macro["series"] = sorted(macro["series"], key=lambda r: r["series_id"])
-    assert macro == {
+    assert report["macro_validation"] == {
         "performed": True,
         "total_records": 12,
         "unique_series": 2,
         "series": [
             {
-                "series_id": "DGS10", "record_count": 6, "null_values": 1,
-                "min_value": 3.859332, "max_value": 5.699532,
+                "series_id": "UNRATE", "record_count": 6, "null_values": 0,
+                "min_value": 1.016161, "max_value": 3.738754,
                 "first_date": "2023-01-01", "last_date": "2023-06-01",
             },
             {
-                "series_id": "UNRATE", "record_count": 6, "null_values": 0,
-                "min_value": 1.016161, "max_value": 3.738754,
+                "series_id": "DGS10", "record_count": 6, "null_values": 1,
+                "min_value": 3.859332, "max_value": 5.699532,
                 "first_date": "2023-01-01", "last_date": "2023-06-01",
             },
         ],
@@ -234,8 +232,15 @@ def test_run_releases_persists_on_success_and_failure(spark, tmp_path):
     block must release all of them whether the request completes or
     raises. The failing request's out_dir is a regular file, so the CSV
     export raises after the market append: the ledger must record 'failed'
-    and the error must reach the caller."""
-    before = _persisted_rdds(spark)
+    and the error must reach the caller. RDD ids only grow, so the
+    request's persists are the ids above the largest one persisted before
+    it; counting all of them would let an earlier test's frame, released
+    asynchronously by the ContextCleaner meanwhile, move the comparison."""
+    floor = max(_persisted_ids(spark), default=-1)
+
+    def persisted_by_request() -> set[int]:
+        return {i for i in _persisted_ids(spark) if i > floor}
+
     ok = run_pipeline(
         spark,
         _defect_config(tmp_path / "ok"),
@@ -243,7 +248,7 @@ def test_run_releases_persists_on_success_and_failure(spark, tmp_path):
         macro_source=_macro_with_gap,
     )
     assert ok.saved_market_rows > 0
-    assert _persisted_rdds(spark) == before
+    assert persisted_by_request() == set()
 
     cfg = _defect_config(tmp_path / "bad")
     os.makedirs(os.path.dirname(cfg.out_dir))
@@ -253,9 +258,40 @@ def test_run_releases_persists_on_success_and_failure(spark, tmp_path):
         run_pipeline(
             spark, cfg, market_source=_defective_market, macro_source=_macro_with_gap
         )
-    assert _persisted_rdds(spark) == before
+    assert persisted_by_request() == set()
 
     ledger = spark.read.parquet(os.path.join(cfg.db_dir, "request_log"))
     assert sorted(r["status"] for r in ledger.collect()) == ["failed", "started"]
     latest = ledger_current_status(ledger).collect()
     assert [r["status"] for r in latest] == ["failed"]
+
+
+def test_ledger_event_is_one_local_row_and_one_file(spark, tmp_path):
+    """Each ledger event is written from a one-row local relation: one
+    parquet file per event, and the two rows of a cli request carry the
+    same ten values as when they were written through a Python RDD."""
+    import datetime as dt
+    import glob
+
+    from multi_source_financial_data_pipeline_spark.cli import main
+
+    db = str(tmp_path / "db")
+    main(
+        [
+            "--tickers", "AAPL", "MSFT",
+            "--start", "2024-01-01", "--end", "2024-03-29",
+            "--out-dir", str(tmp_path / "out"), "--db-dir", db,
+        ]
+    )
+    ledger = os.path.join(db, "request_log")
+    assert len(glob.glob(os.path.join(ledger, "*.parquet"))) == 2
+    rid = "20240101_120000_AAPL_MSFT_20240101_20240329"
+    common = (
+        rid, dt.datetime(2024, 1, 1, 12, 0), "AAPL,MSFT",
+        dt.date(2024, 1, 1), dt.date(2024, 3, 29),
+    )
+    rows = spark.read.parquet(ledger).orderBy("status").collect()
+    assert [tuple(r) for r in rows] == [
+        (*common, "completed", 130, 66, True, 0),
+        (*common, "started", None, None, None, 0),
+    ]
