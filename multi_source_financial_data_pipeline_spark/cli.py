@@ -43,8 +43,8 @@ def _connector(
     return df.withColumn("ingest_seq", F.monotonically_increasing_id())
 
 
-def _macro(spark: SparkSession, start: str, end: str, categories) -> DataFrame:
-    series = registry.resolve_categories(categories)
+def _macro(spark: SparkSession, start: str, end: str) -> DataFrame:
+    series = registry.resolve_categories()
     names = ";".join(f"{s}={registry.series_name(s)}" for s in series)
     return (
         spark.read.format("fred_sim")
@@ -91,7 +91,7 @@ def main(argv: list[str] | None = None) -> int:
         cfg,
         market_source=lambda s: _connector(s, args.tickers, args.start, args.end, "yahoo"),
         alt_source=lambda s: _connector(s, args.tickers, args.start, args.end, "alpha"),
-        macro_source=lambda s: _macro(s, args.start, args.end, cfg.macro_categories),
+        macro_source=lambda s: _macro(s, args.start, args.end),
     )
     print(
         f"request={result.request_id} market_rows={result.saved_market_rows} "

@@ -1,5 +1,5 @@
 """Deterministic identifiers + the injectable run clock (SURVEY.md §2.7
-F6-F8).
+F6-F7).
 
 The reference stamps several ``datetime.now()`` values per run
 (/root/reference/src/pipeline.py:87, src/database.py:186,
@@ -28,16 +28,6 @@ def request_id(
     start = start_date.replace("-", "")
     end = end_date.replace("-", "")
     return f"{ts}_{ticker_str}_{start}_{end}"
-
-
-def validation_id(request: str, vtype: str, run_ts: datetime) -> str:
-    """F8 (src/database.py:267)."""
-    return f"{request}_{vtype}_{run_ts.strftime('%H%M%S')}"
-
-
-def cross_validation_id(request: str, ticker: str, date_yyyymmdd: str) -> str:
-    """F8 (src/database.py:292): {request}_cross_{ticker}_{yyyymmdd}."""
-    return f"{request}_cross_{ticker}_{date_yyyymmdd}"
 
 
 def csv_export_name(

@@ -22,8 +22,6 @@ T = TypeVar("T")
 def retry_with_backoff(
     max_retries: int = 3,
     backoff_factor: float = 2.0,
-    retry_on: tuple[type[Exception], ...] = (Exception,),
-    sleep: Callable[[float], None] = time.sleep,
 ) -> Callable[[Callable[..., T]], Callable[..., T]]:
     """3 retries, delay = backoff_factor ** attempt (1s, 2s, 4s with the
     default factor) — src/logger.py:75-132, delay formula :114."""
@@ -35,7 +33,7 @@ def retry_with_backoff(
             for attempt in range(max_retries + 1):
                 try:
                     return fn(*args, **kwargs)
-                except retry_on as exc:  # noqa: PERF203
+                except Exception as exc:  # noqa: PERF203
                     last = exc
                     if attempt == max_retries:
                         break
@@ -44,7 +42,7 @@ def retry_with_backoff(
                         "%s failed (attempt %d/%d): %s — retrying in %.1fs",
                         fn.__name__, attempt + 1, max_retries, exc, delay,
                     )
-                    sleep(delay)
+                    time.sleep(delay)
             assert last is not None
             raise last
 

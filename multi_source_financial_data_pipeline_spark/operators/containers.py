@@ -652,12 +652,13 @@ def parse_h264_sps(nal: bytes) -> dict | None:
     }
 
 
-def avcc_box(sps: bytes, pps: bytes = b"\x68\xce\x38\x80") -> bytes:
+def avcc_box(sps: bytes) -> bytes:
     """AVCDecoderConfigurationRecord (ISO/IEC 14496-15 §5.3.3.1) as an
     `avcC` box: version 1, profile/compat/level copied from the SPS
-    bytes, 4-byte NALU lengths, one SPS + one PPS."""
+    bytes, 4-byte NALU lengths, one SPS + one fixed 4-byte PPS."""
     if len(sps) < 4:
         raise ValueError("SPS too short")
+    pps = b"\x68\xce\x38\x80"
     return _box(
         b"avcC",
         bytes([1, sps[1], sps[2], sps[3], 0xFF, 0xE1])
@@ -877,7 +878,6 @@ def vorbis_id_packet(
     channels: int,
     sample_rate: int,
     bitrate_nominal: int = 0,
-    blocksize_exp: tuple[int, int] = (8, 11),
 ) -> bytes:
     """Vorbis I identification header (spec §4.2.2): the 30-byte first
     packet of every Vorbis stream. This is CONTAINER-ADJACENT metadata —
@@ -885,10 +885,8 @@ def vorbis_id_packet(
     stdlib-feasible and moves the stub boundary one honest notch: with
     audio_sample_rate known, the OGG granule position (PCM sample count
     for Vorbis) converts to seconds. The comment/setup headers and the
-    audio packets stay stubbed (they need the full codebook machinery)."""
-    b0, b1 = blocksize_exp
-    if not (6 <= b0 <= b1 <= 13):
-        raise ValueError(f"blocksize exponents out of spec: {blocksize_exp}")
+    audio packets stay stubbed (they need the full codebook machinery).
+    Block sizes are 2^8 and 2^11."""
     if not (1 <= channels <= 255) or sample_rate <= 0:
         raise ValueError(f"bad channels/rate: {channels}/{sample_rate}")
     return (
@@ -902,7 +900,7 @@ def vorbis_id_packet(
             bitrate_nominal,
             0,                # bitrate_minimum
         )
-        + bytes([(b1 << 4) | b0, 0x01])  # blocksizes + framing flag
+        + bytes([(11 << 4) | 8, 0x01])  # blocksizes + framing flag
     )
 
 

@@ -25,25 +25,23 @@ def compare_sources(
     primary: DataFrame,
     secondary: DataFrame,
     on: Sequence[str],
-    primary_value: str = "yahoo_close",
-    secondary_value: str = "alpha_close",
     tolerance_pct: float = 0.5,
 ) -> DataFrame:
     """J1 + F1 + P3/P4 + F2: returns the discrepancy rows (strictly above
     tolerance), with resolved_close/resolved_as columns — the primary source
     always wins (src/validation.py:259-264)."""
     joined = primary.join(secondary, list(on), "inner").na.drop(
-        subset=[primary_value, secondary_value]
+        subset=["yahoo_close", "alpha_close"]
     )
-    price_diff = F.col(primary_value) - F.col(secondary_value)
+    price_diff = F.col("yahoo_close") - F.col("alpha_close")
     # nullif divisor: a zero primary price yields null diff (excluded by the
     # strict > filter) — ANSI-safe and identical in Spark and DuckDB
-    diff_pct = F.abs(price_diff / F.nullif(F.col(primary_value), F.lit(0.0)) * 100)
+    diff_pct = F.abs(price_diff / F.nullif(F.col("yahoo_close"), F.lit(0.0)) * 100)
     return (
         joined.withColumn("price_diff", price_diff)
         .withColumn("diff_pct", diff_pct)
         .filter(F.col("diff_pct") > F.lit(tolerance_pct))  # strict >, :247
-        .withColumn("resolved_close", F.col(primary_value))
+        .withColumn("resolved_close", F.col("yahoo_close"))
         .withColumn("resolved_as", F.lit("Yahoo"))
     )
 

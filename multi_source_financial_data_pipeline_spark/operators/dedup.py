@@ -25,31 +25,29 @@ from multi_source_financial_data_pipeline_spark.operators.text import tokens, wo
 from multi_source_financial_data_pipeline_spark.session import local_frame
 
 
-def shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-grams as an array (see text.word_ngrams for the
+def shingles(text: Column) -> Column:
+    """Distinct word 3-grams as an array (see text.word_ngrams for the
     zipped-slice construction and why the lambda must not re-index the token
-    array). Docs with < n tokens get an empty array, matching the oracle's
+    array). Docs with < 3 tokens get an empty array, matching the oracle's
     empty generate_series."""
-    return F.array_distinct(word_ngrams(text, n))
+    return F.array_distinct(word_ngrams(text, 3))
 
 
-def shingle_rows(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3
-) -> DataFrame:
+def shingle_rows(df: DataFrame, n: int = 3) -> DataFrame:
     """(id, shingle) rows: word n-grams via zipped array slices, exploded.
     Row-level slices + one explode keep all per-element work out of nested
     lambda evaluation (a `transform` whose lambda re-reads the token array
     re-tokenizes the document once per shingle — O(doc²) per row), and the
     exploded long form feeds codegen'd hash-aggregates. Docs with < n tokens
     produce no rows."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     width = F.size(toks) - (n - 1)
     z = F.when(
         F.size(toks) >= n,
         F.arrays_zip(*[F.slice(toks, k + 1, width) for k in range(n)]),
     )
-    return df.select(F.col(id_col), F.explode(z).alias("g")).select(
-        id_col,
+    return df.select(F.col("doc_id"), F.explode(z).alias("g")).select(
+        "doc_id",
         F.concat_ws(" ", *[F.col("g")[str(k)] for k in range(n)]).alias("s"),
     )
 
@@ -57,8 +55,6 @@ def shingle_rows(
 def probe_overlap(
     corpus: DataFrame,
     probes: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 5,
 ) -> DataFrame:
     """Decontamination: corpus documents sharing any word n-gram with a
@@ -74,21 +70,17 @@ def probe_overlap(
     the gram when it is not — still linear, never pairwise. Measured at the
     10× probe: the forced broadcast took 16.9 s, AQE-decided 2.1 s.
     """
-    probe_grams = (
-        shingle_rows(probes, id_col, text_col, n).select("s").distinct()
-    )
-    corpus_grams = shingle_rows(corpus, id_col, text_col, n).distinct()
+    probe_grams = shingle_rows(probes, n).select("s").distinct()
+    corpus_grams = shingle_rows(corpus, n).distinct()
     return (
         corpus_grams.join(probe_grams, "s")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_shared_ngrams"))
     )
 
 
 def dup_span_stats(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 20,
 ) -> DataFrame:
     """Substring-level duplication profile (the exact-substring-dedup shape
@@ -109,12 +101,12 @@ def dup_span_stats(
     tokenize pass — perfectly parallel, unlike a hot span). Linear in
     corpus tokens. Docs with < n tokens emit zero spans and are dropped —
     they have no substring of the profiled length."""
-    toks = df.select(id_col, tokens(F.col(text_col)).alias("__toks")).filter(
+    toks = df.select("doc_id", tokens(F.col("text")).alias("__toks")).filter(
         F.size("__toks") >= n
     )
     width = F.size(F.col("__toks")) - (n - 1)
     spans = toks.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.transform(
                 F.sequence(F.lit(1), width),
@@ -124,7 +116,7 @@ def dup_span_stats(
     )
     span_counts = spans.groupBy("s").agg(F.count(F.lit(1)).alias("c_s"))
     counted = spans.join(span_counts, "s")
-    return counted.groupBy(id_col).agg(
+    return counted.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_spans"),
         F.sum((F.col("c_s") > 1).cast("long")).alias("dup_spans"),
         (
@@ -155,10 +147,7 @@ def minhash_params(num_hashes: int = 8) -> list[tuple[int, int]]:
 
 def minhash_signatures(
     df: DataFrame,
-    text_col: str = "text",
     num_hashes: int = 8,
-    shingle_n: int = 3,
-    id_col: str = "doc_id",
     keep_all_docs: bool = True,
 ) -> DataFrame:
     """Per-doc MinHash signature columns mh0..mh{k-1} (null for docs with no
@@ -172,10 +161,10 @@ def minhash_signatures(
     second scan), returning only (id, mh*) for docs with ≥1 shingle — the
     right input for pair generation, where null-signature docs are dropped
     anyway."""
-    sh = shingle_rows(df.select(id_col, text_col), id_col, text_col, shingle_n)
+    sh = shingle_rows(df.select("doc_id", "text"), 3)
     x = F.conv(F.substring(F.md5("s"), 1, 8), 16, 10).cast("long")
-    hashed = sh.select(id_col, x.alias("x"))
-    aggd = hashed.groupBy(id_col).agg(
+    hashed = sh.select("doc_id", x.alias("x"))
+    aggd = hashed.groupBy("doc_id").agg(
         *[
             F.min((F.lit(a) * F.col("x") + F.lit(b)) % F.lit(MINHASH_P)).alias(
                 f"mh{j}"
@@ -185,12 +174,11 @@ def minhash_signatures(
     )
     if not keep_all_docs:
         return aggd
-    return df.join(aggd, [id_col], "left")
+    return df.join(aggd, ["doc_id"], "left")
 
 
 def lsh_candidate_pairs(
     sig: DataFrame,
-    id_col: str = "doc_id",
     num_hashes: int = 8,
     band_size: int = 2,
     max_bucket_size: int | None = None,
@@ -225,7 +213,7 @@ def lsh_candidate_pairs(
         ]
     )
     bands = sig.select(
-        F.col(id_col).alias("id"), F.posexplode(band_keys).alias("band", "band_key")
+        F.col("doc_id").alias("id"), F.posexplode(band_keys).alias("band", "band_key")
     ).filter(F.col("band_key") != "")
     buckets = (
         bands.groupBy("band", "band_key")
@@ -246,9 +234,6 @@ def lsh_candidate_pairs(
 
 def winnow_fingerprints(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window_n: int = 3,
     mod: int = 8,
 ) -> DataFrame:
     """Rolling-window document fingerprints with mod-p sampling (winnowing
@@ -257,31 +242,27 @@ def winnow_fingerprints(
     detection joins on (fp) instead of comparing full texts; the sample rate
     bounds index size at scale. Same explode → codegen'd filter shape as
     MinHash — linear in corpus tokens."""
-    sh = shingle_rows(df.select(id_col, text_col), id_col, text_col, window_n)
+    sh = shingle_rows(df.select("doc_id", "text"), 3)
     h = F.conv(F.substring(F.md5("s"), 1, 8), 16, 10).cast("long")
     return (
         sh.withColumn("fp", h)
         .filter(F.col("fp") % mod == 0)
-        .select(id_col, "fp")
+        .select("doc_id", "fp")
         .distinct()
     )
 
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    block_col: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
     threshold: float = 0.2,
 ) -> DataFrame:
     """Exact n-gram Jaccard over pairs inside a blocking key (language,
     source, LSH bucket, ...): |A∩B| / |A∪B| >= threshold. The block keeps the
     pair join bounded; never run this all-pairs at scale."""
     sh = df.select(
-        F.col(id_col).alias("id"),
-        F.col(block_col).alias("blk"),
-        shingles(F.col(text_col), shingle_n).alias("sh"),
+        F.col("doc_id").alias("id"),
+        F.col("mh0").alias("blk"),
+        shingles(F.col("text")).alias("sh"),
     )
     a = sh.alias("a")
     b = sh.alias("b")
@@ -302,14 +283,14 @@ def ngram_jaccard_pairs(
     )
 
 
-def simhash32(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def simhash32(df: DataFrame) -> DataFrame:
     """32-bit SimHash over the token multiset: per token, hash to 32 bits
     (md5-hex → int for oracle parity); per bit, sum +1/-1 across tokens;
     positive sums set the bit. One token explode + one map-side-combined
     groupBy carrying 32 conditional-sum aggregates — no (token × bit) row
     explosion, no pair joins, fully distributed."""
     tok = df.select(
-        F.col(id_col).alias("id"), F.explode(tokens(F.col(text_col))).alias("t")
+        F.col("doc_id").alias("id"), F.explode(tokens(F.col("text"))).alias("t")
     )
     h = tok.select(
         "id",
@@ -334,14 +315,10 @@ def simhash32(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
         ),
         start=F.lit(0).cast("long"),
     )
-    return bit_sums.select(F.col("id").alias(id_col), fingerprint.alias("simhash"))
+    return bit_sums.select(F.col("id").alias("doc_id"), fingerprint.alias("simhash"))
 
 
-def min_label_components(
-    edges: DataFrame,
-    id_col: str = "id",
-    nb_col: str = "nb",
-) -> DataFrame:
+def min_label_components(edges: DataFrame) -> DataFrame:
     """Connected components over a SYMMETRIC edge set by iterative min-label
     propagation with pointer jumping: every node starts labeled with itself;
     each round a node takes the min of its own label and its neighbors'
@@ -361,7 +338,7 @@ def min_label_components(
     label table (against the edge list, then itself). `localCheckpoint` cuts
     lineage so the plan doesn't grow exponentially with rounds.
 
-    Small-graph fast path (r19, guide §1.2/§3.1): when the edge list fits
+    Small-graph fast path: when the edge list fits
     the session's broadcast budget — the same size class the planner
     ships to every executor for a broadcast join, so by definition
     driver-collectable — the component minimum is computed locally by
@@ -373,16 +350,21 @@ def min_label_components(
     the budget (or with broadcasting disabled) the distributed loop runs
     unchanged. Threshold from spark.sql.autoBroadcastJoinThreshold at
     ~16 bytes/edge — conf-driven, not a local-mode constant."""
-    e_plan = edges.select(F.col(id_col).alias("src"), F.col(nb_col).alias("dst"))
+    e_plan = edges.select(F.col("id").alias("src"), F.col("nb").alias("dst"))
     from multi_source_financial_data_pipeline_spark.operators.similarity import (
         _broadcast_bytes_threshold,
     )
+    # materialize the edge list once, before the size probe: the probe and
+    # every round of the distributed loop read it, and without the cut each
+    # would re-execute the whole upstream pipeline (LSH banding + Jaccard
+    # verification)
+    e = e_plan.localCheckpoint()
     max_local_edges = _broadcast_bytes_threshold(edges.sparkSession) // 16
     if max_local_edges > 0:
         # limit+collect probes AND fetches in one job: a result within the
         # budget is by construction complete (the limit never truncated),
         # and the driver never holds more than budget+1 edge rows
-        head = e_plan.limit(max_local_edges + 1).collect()
+        head = e.limit(max_local_edges + 1).collect()
         if len(head) <= max_local_edges:
             parent: dict = {}
 
@@ -401,7 +383,7 @@ def min_label_components(
                     if rb < ra:
                         ra, rb = rb, ra
                     parent[rb] = ra  # min root wins -> component minimum
-            id_type = e_plan.schema["src"].dataType
+            id_type = e.schema["src"].dataType
             out_schema = T.StructType(
                 [
                     T.StructField("id", id_type, True),
@@ -411,12 +393,9 @@ def min_label_components(
             return local_frame(
                 edges.sparkSession, [(x, find(x)) for x in parent], out_schema
             )
-    # big-graph path: materialize the edge list once — every round joins
-    # against it, and without this the whole upstream pipeline (LSH
-    # banding + Jaccard verification) would be re-executed per iteration.
-    # With AQE on (the default) each non-eager cut here runs its shuffle
-    # and broadcast stages at the call; only the last waits for round 1.
-    e = e_plan.localCheckpoint(eager=False)
+    # big-graph path. With AQE on (the default) each non-eager cut below
+    # runs its shuffle and broadcast stages at the call; only the last
+    # waits for round 1.
     labels = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
@@ -460,13 +439,11 @@ def min_label_components(
     return labels
 
 
-def exact_dedup_groups(
-    df: DataFrame, key_col: str = "fingerprint", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup_groups(df: DataFrame) -> DataFrame:
     """Exact dedup as hash-groupBy: per fingerprint, the surviving (min) id
     and the group size."""
-    return df.groupBy(key_col).agg(
-        F.min(id_col).alias("keep_id"),
+    return df.groupBy("fingerprint").agg(
+        F.min("doc_id").alias("keep_id"),
         F.count(F.lit(1)).alias("group_size"),
     )
 
@@ -488,17 +465,15 @@ def _bloom_h32(key: Column, salt: str) -> Column:
     ).cast("long")
 
 
-def bloom_positions(
-    key: Column, m_bits: int, k: int, salt: str = "bloom"
-) -> list[Column]:
+def bloom_positions(key: Column, m_bits: int, k: int) -> list[Column]:
     """The k bit positions of a key, via Kirsch-Mitzenmacher double hashing
     (h1 + j*h2 mod m): two md5 hashes serve all k probes, so per-row cost is
     2 hashes + k integer ops no matter how many probes the false-positive
     budget demands. Returned as k PLAIN column expressions (no higher-order
     functions) so build and probe both stay inside whole-stage codegen —
     the lesson the r14 pq256 argmin paid for."""
-    h1 = _bloom_h32(key, f"{salt}1|")
-    h2 = _bloom_h32(key, f"{salt}2|")
+    h1 = _bloom_h32(key, "bloom1|")
+    h2 = _bloom_h32(key, "bloom2|")
     _check_bloom_geometry(m_bits, k)
     return [(h1 + F.lit(j) * h2) % F.lit(m_bits) for j in range(k)]
 
@@ -528,10 +503,8 @@ def _bloom_masks() -> Column:
 
 def bloom_build(
     keys: DataFrame,
-    key_col: str,
     m_bits: int,
     k: int,
-    salt: str = "bloom",
 ) -> DataFrame:
     """Build an m-bit Bloom filter over a key column and densify it to ONE
     row ``(bloom_words: array<long>)`` of m/32 words, ready to broadcast.
@@ -547,9 +520,7 @@ def bloom_build(
     n_words = m_bits // BLOOM_WORD_BITS
     masks = _bloom_masks()
     pos = keys.select(
-        F.explode(
-            F.array(*bloom_positions(F.col(key_col), m_bits, k, salt))
-        ).alias("p")
+        F.explode(F.array(*bloom_positions(F.col("s"), m_bits, k))).alias("p")
     )
     words = (
         pos.select(
@@ -580,7 +551,6 @@ def bloom_member(
     words: Column,
     m_bits: int,
     k: int,
-    salt: str = "bloom",
 ) -> Column:
     """Membership test against a dense ``bloom_words`` array (crossJoin the
     broadcast 1-row build first): AND of k codegen'd bit tests — PURE MAP
@@ -590,7 +560,7 @@ def bloom_member(
     reads — pinned in tests)."""
     masks = _bloom_masks()
     out: Column | None = None
-    for p in bloom_positions(key, m_bits, k, salt):
+    for p in bloom_positions(key, m_bits, k):
         word = F.element_at(words, (p / BLOOM_WORD_BITS).cast("int") + 1)
         mask = F.element_at(masks, (p % BLOOM_WORD_BITS).cast("int") + 1)
         test = word.bitwiseAND(mask) != 0

@@ -57,9 +57,9 @@ def _check_group_rows(n: int, key_value: object, max_rows: int) -> None:
 
 
 def _check_unique_order(pdf: "pd.DataFrame", col: str, key_value: object) -> None:
-    """``tiebreak=None`` (and ``wilder_last``'s ``order_col``) asserts the
+    """``tiebreak=None`` (and ``wilder_last``'s ``day``) asserts the
     sort column is unique within the key. That precondition is ENFORCED
-    here, not trusted (r12 ADVICE): ``pandas.sort_values`` is an unstable
+    here, not trusted: ``pandas.sort_values`` is an unstable
     quicksort, so a duplicate would silently make the fold order — and
     therefore the fold result — nondeterministic across runs instead of
     raising. O(n) per group: one hash-based ``nunique`` against ``len``."""
@@ -118,7 +118,6 @@ EWMA_SCHEMA = T.StructType(
 
 def ewma_last(
     df: DataFrame,
-    key: str,
     ts_col: str,
     tiebreak: str | None,
     value_col: str,
@@ -133,20 +132,20 @@ def ewma_last(
     def fold(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import pandas as pd
 
-        _check_group_rows(len(pdf), pdf[key].iloc[0], max_rows)
+        _check_group_rows(len(pdf), pdf["user_id"].iloc[0], max_rows)
         if tiebreak is None:
-            _check_unique_order(pdf, ts_col, pdf[key].iloc[0])
+            _check_unique_order(pdf, ts_col, pdf["user_id"].iloc[0])
         s = pdf.sort_values(order)[value_col].to_numpy()
         y = float(s[0])
         for x in s[1:]:
             y = y * b + a * float(x)
         return pd.DataFrame(
-            {"key": [pdf[key].iloc[0]], "n_rows": [len(s)], "ewma": [y]}
+            {"key": [pdf["user_id"].iloc[0]], "n_rows": [len(s)], "ewma": [y]}
         )
 
-    return df.select(key, *order, value_col).repartition(
-        _fold_partitions(df), key
-    ).groupBy(key).applyInPandas(
+    return df.select("user_id", *order, value_col).repartition(
+        _fold_partitions(df), "user_id"
+    ).groupBy("user_id").applyInPandas(
         fold, schema=EWMA_SCHEMA
     )
 
@@ -164,11 +163,9 @@ CUSUM_SCHEMA = T.StructType(
 
 def cusum_last(
     df: DataFrame,
-    key: str,
     ts_col: str,
     tiebreak: str | None,
     value_col: str,
-    max_rows: int = GROUPED_FOLD_MAX_ROWS,
 ) -> DataFrame:
     """Final one-sided CUSUM statistics per key against the key's own mean:
     c⁺ = max(0, c⁺ + (x − μ)) and c⁻ = max(0, c⁻ − (x − μ)) folded over
@@ -183,9 +180,9 @@ def cusum_last(
     def fold(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import pandas as pd
 
-        _check_group_rows(len(pdf), pdf[key].iloc[0], max_rows)
+        _check_group_rows(len(pdf), pdf["user_id"].iloc[0], GROUPED_FOLD_MAX_ROWS)
         if tiebreak is None:
-            _check_unique_order(pdf, ts_col, pdf[key].iloc[0])
+            _check_unique_order(pdf, ts_col, pdf["user_id"].iloc[0])
         s = pdf.sort_values(order)[value_col].to_numpy()
         total = 0.0
         for x in s:
@@ -198,7 +195,7 @@ def cusum_last(
             cn = max(0.0, cn - (float(x) - mu))
         return pd.DataFrame(
             {
-                "key": [pdf[key].iloc[0]],
+                "key": [pdf["user_id"].iloc[0]],
                 "n_rows": [len(s)],
                 "mean_value": [mu],
                 "cusum_pos": [cp],
@@ -206,9 +203,9 @@ def cusum_last(
             }
         )
 
-    return df.select(key, *order, value_col).repartition(
-        _fold_partitions(df), key
-    ).groupBy(key).applyInPandas(
+    return df.select("user_id", *order, value_col).repartition(
+        _fold_partitions(df), "user_id"
+    ).groupBy("user_id").applyInPandas(
         fold, schema=CUSUM_SCHEMA
     )
 
@@ -226,7 +223,6 @@ MACD_SCHEMA = T.StructType(
 
 def macd_last(
     df: DataFrame,
-    key: str,
     ts_col: str,
     tiebreak: str | None,
     value_col: str,
@@ -257,9 +253,9 @@ def macd_last(
     def fold(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import pandas as pd
 
-        _check_group_rows(len(pdf), pdf[key].iloc[0], max_rows)
+        _check_group_rows(len(pdf), pdf["user_id"].iloc[0], max_rows)
         if tiebreak is None:
-            _check_unique_order(pdf, ts_col, pdf[key].iloc[0])
+            _check_unique_order(pdf, ts_col, pdf["user_id"].iloc[0])
         s = pdf.sort_values(order)[value_col].to_numpy()
         e_f = float(s[0])
         e_s = float(s[0])
@@ -272,7 +268,7 @@ def macd_last(
             sig = sig * b_g + a_g * m
         return pd.DataFrame(
             {
-                "key": [pdf[key].iloc[0]],
+                "key": [pdf["user_id"].iloc[0]],
                 "n_rows": [len(s)],
                 "macd_line": [m],
                 "signal_line": [sig],
@@ -280,9 +276,9 @@ def macd_last(
             }
         )
 
-    return df.select(key, *order, value_col).repartition(
-        _fold_partitions(df), key
-    ).groupBy(key).applyInPandas(
+    return df.select("user_id", *order, value_col).repartition(
+        _fold_partitions(df), "user_id"
+    ).groupBy("user_id").applyInPandas(
         fold, schema=MACD_SCHEMA
     )
 
@@ -300,12 +296,10 @@ RSI_WILDER_SCHEMA = T.StructType(
 
 def rsi_wilder_last(
     df: DataFrame,
-    key: str,
     ts_col: str,
     tiebreak: str | None,
     value_col: str,
     n: int = 14,
-    max_rows: int = GROUPED_FOLD_MAX_ROWS,
 ) -> DataFrame:
     """Final Wilder-smoothed RSI state per key (the industry-standard RSI;
     `plans/financial.q_rsi` is the window-expressible Cutler variant): the
@@ -325,12 +319,12 @@ def rsi_wilder_last(
     def fold(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import pandas as pd
 
-        _check_group_rows(len(pdf), pdf[key].iloc[0], max_rows)
+        _check_group_rows(len(pdf), pdf["user_id"].iloc[0], GROUPED_FOLD_MAX_ROWS)
         if tiebreak is None:
-            _check_unique_order(pdf, ts_col, pdf[key].iloc[0])
+            _check_unique_order(pdf, ts_col, pdf["user_id"].iloc[0])
         s = pdf.sort_values(order)[value_col].to_numpy()
         diffs = [float(s[i]) - float(s[i - 1]) for i in range(1, len(s))]
-        out = {"key": [pdf[key].iloc[0]], "n_rows": [len(s)]}
+        out = {"key": [pdf["user_id"].iloc[0]], "n_rows": [len(s)]}
         if len(diffs) < n:
             out.update({"avg_gain": [None], "avg_loss": [None], "rsi": [None]})
             return pd.DataFrame(out)
@@ -351,9 +345,9 @@ def rsi_wilder_last(
         out.update({"avg_gain": [ag], "avg_loss": [al], "rsi": [rsi]})
         return pd.DataFrame(out)
 
-    return df.select(key, *order, value_col).repartition(
-        _fold_partitions(df), key
-    ).groupBy(key).applyInPandas(
+    return df.select("user_id", *order, value_col).repartition(
+        _fold_partitions(df), "user_id"
+    ).groupBy("user_id").applyInPandas(
         fold, schema=RSI_WILDER_SCHEMA
     )
 
@@ -369,27 +363,24 @@ WILDER_SCHEMA = T.StructType(
 
 def wilder_last(
     df: DataFrame,
-    key: str,
-    order_col: str,
     value_col: str,
     n: int = 14,
-    max_rows: int = GROUPED_FOLD_MAX_ROWS,
 ) -> DataFrame:
     """Final Wilder-smoothed value per key: mean of the first n values,
     then acc ← (acc·(n−1) + x)/n per later value — the ATR/ADX smoothing
     recursion (EWMA, α = 1/n, mean seed). NULL until n values exist.
-    `order_col` must be unique per key (e.g. the bar day) — enforced per
-    group by `_check_unique_order`, same contract as `tiebreak=None`."""
+    ``day`` must be unique per key — enforced per group by
+    `_check_unique_order`, same contract as `tiebreak=None`."""
     hi = float(n - 1)
     lo = float(n)
 
     def fold(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import pandas as pd
 
-        _check_group_rows(len(pdf), pdf[key].iloc[0], max_rows)
-        _check_unique_order(pdf, order_col, pdf[key].iloc[0])
-        s = pdf.sort_values(order_col)[value_col].to_numpy()
-        out = {"key": [pdf[key].iloc[0]], "n_rows": [len(s)]}
+        _check_group_rows(len(pdf), pdf["user_id"].iloc[0], GROUPED_FOLD_MAX_ROWS)
+        _check_unique_order(pdf, "day", pdf["user_id"].iloc[0])
+        s = pdf.sort_values("day")[value_col].to_numpy()
+        out = {"key": [pdf["user_id"].iloc[0]], "n_rows": [len(s)]}
         if len(s) < n:
             out["wilder"] = [None]
             return pd.DataFrame(out)
@@ -402,8 +393,8 @@ def wilder_last(
         out["wilder"] = [acc]
         return pd.DataFrame(out)
 
-    return df.select(key, order_col, value_col).repartition(
-        _fold_partitions(df), key
-    ).groupBy(key).applyInPandas(
+    return df.select("user_id", "day", value_col).repartition(
+        _fold_partitions(df), "user_id"
+    ).groupBy("user_id").applyInPandas(
         fold, schema=WILDER_SCHEMA
     )

@@ -42,12 +42,12 @@ def zorder_key(a: Column, b: Column, bits: int = 16) -> Column:
     return out
 
 
-def zorder_key_sql(a: str, b: str, bits: int = 16) -> str:
+def zorder_key_sql(bits: int = 16) -> str:
     """DuckDB twin of `zorder_key` — identical integer arithmetic."""
     terms = []
     for i in range(bits):
-        terms.append(f"(({a} >> {i}) & 1) * {1 << (2 * i)}")
-        terms.append(f"(({b} >> {i}) & 1) * {1 << (2 * i + 1)}")
+        terms.append(f"((ua >> {i}) & 1) * {1 << (2 * i)}")
+        terms.append(f"((di >> {i}) & 1) * {1 << (2 * i + 1)}")
     return "(" + " + ".join(terms) + ")"
 
 
@@ -56,15 +56,13 @@ def write_zordered(
     path: str,
     a: Column,
     b: Column,
-    bits: int = 16,
-    num_files: int = 16,
 ) -> None:
-    """Materialize `df` clustered by the Morton key of (a, b): one range
-    exchange + per-partition sort, `num_files` output files whose min/max
+    """Materialize `df` clustered by the 12-bit Morton key of (a, b): one
+    range exchange + per-partition sort, 16 output files whose min/max
     column statistics form tight 2-D boxes."""
-    keyed = df.withColumn("__z", zorder_key(a, b, bits))
+    keyed = df.withColumn("__z", zorder_key(a, b, 12))
     (
-        keyed.repartitionByRange(num_files, "__z")
+        keyed.repartitionByRange(16, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
         .write.mode("overwrite")

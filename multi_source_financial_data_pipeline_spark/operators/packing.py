@@ -34,7 +34,6 @@ def concat_chunk_packing(
     seq_len: int,
     tokens: Column,
     shard_col: str | list[str] = "source",
-    order_col: str = "doc_id",
 ) -> DataFrame:
     """Assign each document its packed position under per-shard
     concatenate-and-chunk with sequence length ``seq_len``.
@@ -48,15 +47,15 @@ def concat_chunk_packing(
     shard_cols = [shard_col] if isinstance(shard_col, str) else list(shard_col)
     w = (
         Window.partitionBy(*shard_cols)
-        .orderBy(order_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     out = df.select(
-        order_col, *shard_cols, tokens.cast("long").alias("n_tokens")
+        "doc_id", *shard_cols, tokens.cast("long").alias("n_tokens")
     ).withColumn("end_offset", F.sum("n_tokens").over(w))
     start = F.col("end_offset") - F.col("n_tokens")
     return out.select(
-        order_col,
+        "doc_id",
         *shard_cols,
         "n_tokens",
         start.alias("start_offset"),

@@ -32,27 +32,24 @@ def hash_uniform(key: Column) -> Column:
 
 def stratified_sample(
     df: DataFrame,
-    stratum_col: str,
     rates: dict[str, float],
-    default_rate: float = 0.0,
-    key_col: str = "doc_id",
 ) -> DataFrame:
-    """Keep each row iff hash_uniform(key) < rate(stratum). Expected kept
-    fraction per stratum equals its rate; the decision is row-local and
-    deterministic. Unlisted strata fall back to `default_rate` (0.0 = drop,
-    the safe default for an explicit mixture spec)."""
-    u = hash_uniform(F.col(key_col))
-    rate = F.lit(float(default_rate))
+    """Keep each row iff hash_uniform(doc_id) < rate(lang). Expected kept
+    fraction per language equals its rate; the decision is row-local and
+    deterministic. Unlisted languages get rate 0.0 (dropped, the safe
+    default for an explicit mixture spec)."""
+    u = hash_uniform(F.col("doc_id"))
+    rate = F.lit(0.0)
     for value, r in sorted(rates.items()):
-        rate = F.when(F.col(stratum_col) == value, F.lit(float(r))).otherwise(rate)
+        rate = F.when(F.col("lang") == value, F.lit(float(r))).otherwise(rate)
     return df.filter(u < rate)
 
 
-def sample_rate_sql(stratum_col: str, rates: dict[str, float], default_rate: float = 0.0) -> str:
+def sample_rate_sql(rates: dict[str, float]) -> str:
     """The DuckDB mirror of the rate ladder. Built from the same dict so the
     Spark plan and the oracle can never drift apart."""
     clauses = "".join(
-        f" WHEN {stratum_col} = '{v}' THEN {float(r)!r}"
+        f" WHEN lang = '{v}' THEN {float(r)!r}"
         for v, r in sorted(rates.items(), reverse=True)
     )
-    return f"CASE{clauses} ELSE {float(default_rate)!r} END"
+    return f"CASE{clauses} ELSE 0.0 END"

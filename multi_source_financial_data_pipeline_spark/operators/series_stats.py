@@ -15,8 +15,6 @@ from pyspark.sql import DataFrame, functions as F
 def per_series_summary(
     df: DataFrame,
     series_col: str = "series_id",
-    date_col: str = "date",
-    value_col: str = "value",
     order_col: str | None = None,
 ) -> DataFrame:
     """A8 (src/macro.py:309-322): per series — record count, null count,
@@ -26,11 +24,11 @@ def per_series_summary(
     first_row = [F.min(order_col).alias(order_col)] if order_col else []
     return df.groupBy(series_col).agg(
         F.count(F.lit(1)).alias("record_count"),
-        (F.count(F.lit(1)) - F.count(value_col)).alias("null_values"),
-        F.min(value_col).alias("min_value"),
-        F.max(value_col).alias("max_value"),
-        F.min(date_col).alias("first_date"),
-        F.max(date_col).alias("last_date"),
+        (F.count(F.lit(1)) - F.count("value")).alias("null_values"),
+        F.min("value").alias("min_value"),
+        F.max("value").alias("max_value"),
+        F.min("date").alias("first_date"),
+        F.max("date").alias("last_date"),
         *first_row,
     )
 
@@ -38,17 +36,15 @@ def per_series_summary(
 def global_summary(
     df: DataFrame,
     series_col: str = "series_id",
-    date_col: str = "date",
-    value_col: str = "value",
 ) -> DataFrame:
     """A9 + A6/A7 (src/macro.py:288-306, src/database.py:308-329): one row —
     totals, distinct series, overall date range, value nulls."""
     return df.agg(
         F.count(F.lit(1)).alias("total_records"),
         F.countDistinct(series_col).alias("unique_series"),
-        F.min(date_col).alias("first_date"),
-        F.max(date_col).alias("last_date"),
-        (F.count(F.lit(1)) - F.count(value_col)).alias("null_values"),
+        F.min("date").alias("first_date"),
+        F.max("date").alias("last_date"),
+        (F.count(F.lit(1)) - F.count("value")).alias("null_values"),
     )
 
 
@@ -70,13 +66,15 @@ def ledger_current_status(ledger: DataFrame) -> DataFrame:
     )
 
 
-def latest_per_key(df: DataFrame, key: str, order_cols: list[str]) -> DataFrame:
+def latest_per_key(df: DataFrame) -> DataFrame:
     """K6 'current status' view (src/database.py:159-175): the reference
     UPDATEs a ledger row in place; the idiomatic Spark ledger is append-only
     events + latest-row-per-key window."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(key).orderBy(*[F.col(c).desc() for c in order_cols])
+    w = Window.partitionBy("o_custkey").orderBy(
+        F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
+    )
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -84,12 +82,7 @@ def latest_per_key(df: DataFrame, key: str, order_cols: list[str]) -> DataFrame:
     )
 
 
-def return_correlation_matrix(
-    daily_returns: DataFrame,
-    series_col: str = "series_id",
-    date_col: str = "date",
-    ret_col: str = "ret",
-) -> DataFrame:
+def return_correlation_matrix(daily_returns: DataFrame) -> DataFrame:
     """Pairwise Pearson correlation of per-series returns — the data half of
     the reference's deleted report module (correlation heatmap,
     /root/reference/src/__init__.py:31-32; only report.cpython-311.pyc
@@ -103,9 +96,9 @@ def return_correlation_matrix(
     (tickers, macro series), not a scale axis; the date axis is the scale
     axis and it parallelizes per pair."""
     r = daily_returns.select(
-        F.col(series_col).alias("sid"),
-        F.col(date_col).alias("d"),
-        F.col(ret_col).alias("r"),
+        F.col("event_type").alias("sid"),
+        F.col("date").alias("d"),
+        F.col("ret").alias("r"),
     )
     a, b = r.alias("a"), r.alias("b")
     both = F.col("a.r").isNotNull() & F.col("b.r").isNotNull()
@@ -127,18 +120,11 @@ def return_correlation_matrix(
     )
 
 
-def rolling_vol_outliers(
-    df: DataFrame,
-    key: str,
-    order: list[str],
-    value_col: str = "value",
-    window_n: int = 20,
-    sigmas: float = 3.0,
-) -> DataFrame:
+def rolling_vol_outliers(df: DataFrame) -> DataFrame:
     """Rolling-volatility outlier detection — the reference report module's
-    outlier half: per key, daily return, rolling mean return and rolling
+    outlier half: per user, return, 20-row rolling mean return and rolling
     sample std (pandas min_periods semantics), flagging returns more than
-    `sigmas` rolling stds from the rolling mean. Emits only flagged rows.
+    3 rolling stds from the rolling mean. Emits only flagged rows.
 
     The comparison runs on the 6-decimal-rounded mean/std so both engines
     decide membership on identical doubles. One hash-exchange per key covers
@@ -151,14 +137,14 @@ def rolling_vol_outliers(
         rolling_std,
     )
 
-    w = Window.partitionBy(key).orderBy(*order)
-    frame = w.rowsBetween(-(window_n - 1), 0)
-    ret = pct_change(F.col(value_col), w)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    frame = w.rowsBetween(-19, 0)
+    ret = pct_change(F.col("value"), w)
     base = df.withColumn("ret", ret).withColumn(
-        "ma_ret", F.round(rolling_mean(F.col("ret"), frame, window_n), 6)
+        "ma_ret", F.round(rolling_mean(F.col("ret"), frame, 20), 6)
     ).withColumn(
-        "vol", F.round(rolling_std(F.col("ret"), frame, window_n), 6)
+        "vol", F.round(rolling_std(F.col("ret"), frame, 20), 6)
     )
     return base.filter(
-        F.abs(F.col("ret") - F.col("ma_ret")) > F.lit(sigmas) * F.col("vol")
+        F.abs(F.col("ret") - F.col("ma_ret")) > F.lit(3.0) * F.col("vol")
     )

@@ -27,64 +27,54 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    left_ts: str,
-    right_ts: str,
-    value_cols: list[str],
-    tiebreak: str,
 ) -> DataFrame:
     """For each left row, the latest right row of the same key with
-    right_ts <= left_ts (inclusive; ties among right rows break on the
-    largest `tiebreak`). Left rows with no prior right row keep nulls.
+    right ``ts`` <= left ``ts`` (inclusive; ties among right rows break on
+    the largest ``event_id``). Left rows with no prior right row keep nulls.
 
-    Returned columns: all left columns + ``asof_<value>`` for each value col
-    + ``asof_ts`` (epoch micros of the matched right row).
+    Returned columns: all left columns + ``asof_value`` + ``asof_ts`` (epoch
+    micros of the matched right row).
     """
     lcols = left.columns
     l = left.withColumn("__side", F.lit(1))
     r = right.select(
         F.col(key),
-        F.col(right_ts).alias(left_ts),
-        F.col(tiebreak),
+        F.col("ts").alias("ts"),
+        F.col("event_id"),
         F.lit(0).alias("__side"),
-        F.unix_micros(F.col(right_ts)).alias("__r_ts"),
-        *[F.col(c).alias(f"__r_{c}") for c in value_cols],
+        F.unix_micros(F.col("ts")).alias("__r_ts"),
+        F.col("value").alias("__r_value"),
     )
     combined = l.unionByName(r, allowMissingColumns=True)
     # right rows (side 0) sort before left rows at equal timestamps, so an
     # exactly-simultaneous right row is visible to the left row (<= semantics)
     w = (
         Window.partitionBy(key)
-        .orderBy(left_ts, "__side", tiebreak)
+        .orderBy("ts", "__side", "event_id")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    out = combined
-    for c in value_cols:
-        out = out.withColumn(
-            f"asof_{c}", F.last(F.col(f"__r_{c}"), ignorenulls=True).over(w)
-        )
-    out = out.withColumn("asof_ts", F.last(F.col("__r_ts"), ignorenulls=True).over(w))
-    return out.filter(F.col("__side") == 1).select(
-        *lcols, *[f"asof_{c}" for c in value_cols], "asof_ts"
+    out = combined.withColumn(
+        "asof_value", F.last(F.col("__r_value"), ignorenulls=True).over(w)
     )
+    out = out.withColumn("asof_ts", F.last(F.col("__r_ts"), ignorenulls=True).over(w))
+    return out.filter(F.col("__side") == 1).select(*lcols, "asof_value", "asof_ts")
 
 
 def sessionize(
     df: DataFrame,
     key: str,
-    ts_col: str,
-    tiebreak: str,
     gap_seconds: int = 1800,
 ) -> DataFrame:
     """Assign session ids per key: a new session starts when the gap from the
     previous event exceeds `gap_seconds`. Returns the input plus
     ``session_id`` (0-based per key)."""
-    w = Window.partitionBy(key).orderBy(ts_col, tiebreak)
-    prev_us = F.lag(F.unix_micros(F.col(ts_col))).over(w)
-    gap_us = F.unix_micros(F.col(ts_col)) - prev_us
+    w = Window.partitionBy(key).orderBy("ts", "event_id")
+    prev_us = F.lag(F.unix_micros(F.col("ts"))).over(w)
+    gap_us = F.unix_micros(F.col("ts")) - prev_us
     is_new = F.when(
         prev_us.isNull() | (gap_us > gap_seconds * 1_000_000), F.lit(1)
     ).otherwise(F.lit(0))
-    running = Window.partitionBy(key).orderBy(ts_col, tiebreak).rowsBetween(
+    running = Window.partitionBy(key).orderBy("ts", "event_id").rowsBetween(
         Window.unboundedPreceding, 0
     )
     return df.withColumn("session_id", F.sum(is_new).over(running) - 1)
@@ -92,43 +82,31 @@ def sessionize(
 
 def session_stats(
     df: DataFrame,
-    key: str,
-    ts_col: str,
-    tiebreak: str,
-    value_col: str,
     gap_seconds: int = 1800,
 ) -> DataFrame:
     """Per-session aggregates: bounds (epoch micros), event count, and a
     decimal-exact value sum (the 2-decimal input grid makes the sum
     bit-identical across engines)."""
-    s = sessionize(df, key, ts_col, tiebreak, gap_seconds)
-    return s.groupBy(key, "session_id").agg(
-        F.min(F.unix_micros(F.col(ts_col))).alias("session_start_us"),
-        F.max(F.unix_micros(F.col(ts_col))).alias("session_end_us"),
+    s = sessionize(df, "user_id", gap_seconds)
+    return s.groupBy("user_id", "session_id").agg(
+        F.min(F.unix_micros(F.col("ts"))).alias("session_start_us"),
+        F.max(F.unix_micros(F.col("ts"))).alias("session_end_us"),
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col(value_col).cast("decimal(12,2)"))
+        F.sum(F.col("value").cast("decimal(12,2)"))
         .cast("double")
         .alias("sum_value"),
     )
 
 
-def time_bucket_rollup(
-    df: DataFrame,
-    ts_col: str,
-    bucket: str,
-    group_cols: list[str],
-    value_col: str,
-) -> DataFrame:
-    """Continuous-aggregate-style rollup: truncate the event time to `bucket`
-    ('hour', 'day', ...) and aggregate per (bucket, groups)."""
-    b = F.date_trunc(bucket, F.col(ts_col))
-    return df.groupBy(
-        F.unix_micros(b).alias("bucket_us"), *group_cols
-    ).agg(
+def time_bucket_rollup(df: DataFrame) -> DataFrame:
+    """Continuous-aggregate-style rollup: truncate ``ts`` to the hour and
+    aggregate per (hour, event_type)."""
+    b = F.date_trunc("hour", F.col("ts"))
+    return df.groupBy(F.unix_micros(b).alias("bucket_us"), "event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col(value_col).cast("decimal(12,2)")).cast("double").alias("sum_value"),
-        F.min(value_col).alias("min_value"),
-        F.max(value_col).alias("max_value"),
+        F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias("sum_value"),
+        F.min("value").alias("min_value"),
+        F.max("value").alias("max_value"),
     )
 
 
@@ -136,13 +114,10 @@ def bucketed_range_join(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    left_ts: str,
-    right_ts: str,
     tolerance_us: int,
-    right_cols: list[str],
 ) -> DataFrame:
     """Range join — all (left, right) pairs of the same key with
-    ``|right_ts - left_ts| <= tolerance`` — as an equi join.
+    ``|right ts - left ts| <= tolerance`` — as an equi join.
 
     Naive range joins degenerate to a per-key nested loop (BroadcastNestedLoop
     at cluster scale: quadratic and unshardable). The scale-safe plan buckets
@@ -153,18 +128,18 @@ def bucketed_range_join(
     as a post-join filter. Each true pair matches exactly once (the left row
     has a single bucket; the three replicas carry distinct buckets).
 
-    Returned columns: all left columns + ``<right col>`` for each requested
-    right column + ``dt_us`` (right minus left, microseconds).
+    Returned columns: all left columns + the right row's ``value`` +
+    ``dt_us`` (right minus left, microseconds).
     """
     # integer `div` bucketing — double division risks flooring into the
     # neighboring bucket when epoch_us/tolerance lands within an ulp of an
     # integer; `div` is exact, and |bucket(x)-bucket(y)| <= 1 still holds for
     # |x-y| <= tolerance under truncating division (monotone, step <= 1)
-    l = left.withColumn("__l_us", F.unix_micros(F.col(left_ts))).withColumn(
+    l = left.withColumn("__l_us", F.unix_micros(F.col("ts"))).withColumn(
         "__bucket", F.expr(f"__l_us div {tolerance_us}")
     )
     r = (
-        right.withColumn("__r_us", F.unix_micros(F.col(right_ts)))
+        right.withColumn("__r_us", F.unix_micros(F.col("ts")))
         .withColumn("__r_bucket", F.expr(f"__r_us div {tolerance_us}"))
         .select(
             F.col(key),
@@ -172,7 +147,7 @@ def bucketed_range_join(
             F.explode(
                 F.array(*[F.col("__r_bucket") + k for k in (-1, 0, 1)])
             ).alias("__bucket"),
-            *[F.col(c).alias(f"__r_{c}") for c in right_cols],
+            F.col("value").alias("__r_value"),
         )
     )
     joined = l.join(r, [key, "__bucket"]).filter(
@@ -180,6 +155,6 @@ def bucketed_range_join(
     )
     return joined.select(
         *left.columns,
-        *[F.col(f"__r_{c}").alias(c) for c in right_cols],
+        F.col("__r_value").alias("value"),
         (F.col("__r_us") - F.col("__l_us")).alias("dt_us"),
     )

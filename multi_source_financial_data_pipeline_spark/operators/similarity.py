@@ -43,8 +43,8 @@ def _sq_norm_sql(a: str) -> str:
     return _fold_sum_sql(f"transform({a}, x -> x * x)")
 
 
-def _sq_dist_sql(a: str, b: str) -> str:
-    return _fold_sum_sql(f"zip_with({a}, {b}, (x, y) -> (x - y) * (x - y))")
+def _sq_dist_sql(a: str) -> str:
+    return _fold_sum_sql(f"zip_with({a}, c.cv, (x, y) -> (x - y) * (x - y))")
 
 
 def _cos_sql(dp: str, an: str, bn: str) -> str:
@@ -157,7 +157,7 @@ def _km_assign(e: DataFrame, cents_df: DataFrame) -> DataFrame:
     )
     best = F.expr(  # parse path — identical tree, ~60 ms/call cheaper
         "array_sort(transform(cs, c -> named_struct("
-        f"'d', round({_sq_dist_sql('v', 'c.cv')}, 6), 'cell', c.cell)))"
+        f"'d', round({_sq_dist_sql('v')}, 6), 'cell', c.cell)))"
     )[0]
     return e.join(F.broadcast(percell)).select(
         "vec_id",
@@ -171,8 +171,6 @@ def kmeans_centroids(
     embeddings: DataFrame,
     k: int = 16,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The Lloyd loop of `kmeans_refine`, exposed as the refined
     ``(cell, cv)`` centroid frame: deterministic seeds (the first ``k``
@@ -184,7 +182,7 @@ def kmeans_centroids(
     `ivfpq_residual_adc_topk(coarse_centers=...)` to measure what
     Lloyd-refined cells buy residual encoding."""
     e = embeddings.select(
-        F.col(id_col).alias("vec_id"), _as_double(vec_col).alias("v")
+        F.col("vec_id").alias("vec_id"), _as_double("embedding").alias("v")
     )
     cents = e.filter(F.col("vec_id") < k).select(
         F.col("vec_id").cast("int").alias("cell"), F.col("v").alias("cv")
@@ -215,8 +213,6 @@ def kmeans_refine(
     embeddings: DataFrame,
     k: int = 16,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """`iters` unrolled Lloyd iterations from deterministic seeds (the
     first `k` vectors by id — the ivf_seed convention), then a final
@@ -233,9 +229,9 @@ def kmeans_refine(
     iterations (here the plan re-reads it, keeping the DAG pure for the
     oracle)."""
     e = embeddings.select(
-        F.col(id_col).alias("vec_id"), _as_double(vec_col).alias("v")
+        F.col("vec_id").alias("vec_id"), _as_double("embedding").alias("v")
     )
-    cents = kmeans_centroids(embeddings, k, iters, id_col, vec_col)
+    cents = kmeans_centroids(embeddings, k, iters)
     final = _km_assign(e, cents)
     out = final.groupBy("cell").agg(
         F.count(F.lit(1)).alias("n_members"),
@@ -277,7 +273,7 @@ def _pq_assign_codes(subs: DataFrame, cents_df: DataFrame) -> DataFrame:
     )
     best = F.expr(  # parse path — identical tree, ~60 ms/call cheaper
         "array_sort(transform(cs, c -> named_struct("
-        f"'d', round({_sq_dist_sql('sv', 'c.cv')}, 6), 'cell', c.cell)))"
+        f"'d', round({_sq_dist_sql('sv')}, 6), 'cell', c.cell)))"
     )[0]
     return subs.join(F.broadcast(percell), "s").select(
         "vec_id",
@@ -293,7 +289,6 @@ def pq_encode(
     cents: DataFrame,
     m: int = 8,
     dim: int = 64,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """ENCODE-ONLY against an existing codebook frame ``(s, cell, cv)``
@@ -305,7 +300,7 @@ def pq_encode(
     against the broadcast codebook; returns (vec_id, s, cell)."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
-    subs = _pq_subvectors(embeddings, m, dim // m, id_col, vec_col)
+    subs = _pq_subvectors(embeddings, m, dim // m, "vec_id", vec_col)
     return _pq_assign_codes(subs, cents).select("vec_id", "s", "cell")
 
 
@@ -825,15 +820,13 @@ def brute_force_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Exact top-k neighbors per query by cosine. The query side is broadcast
     (queries ≪ corpus); ranking is a per-query window on the rounded
     similarity with an id tiebreak, so results are deterministic."""
-    cand = _vec_side(embeddings, id_col, vec_col, ("cand_id", "cv", "cn"))
-    q = _vec_side(queries, query_id_col, vec_col, ("query_id", "qv", "qn"))
+    cand = _vec_side(embeddings, "vec_id", vec_col, ("cand_id", "cv", "cn"))
+    q = _vec_side(queries, "query_id", vec_col, ("query_id", "qv", "qn"))
     scored = cand.join(
         F.broadcast(q), F.col("cand_id") != F.col("query_id")
     ).select("query_id", "cand_id", _cos("qv", "cv", "qn", "cn"))
@@ -872,21 +865,17 @@ def _dim_ordered_sq_norm(mat):
 def cosine_neardup_pairs(
     embeddings: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_blocks: int = 16,
 ) -> DataFrame:
     """All pairs above a cosine threshold (id_a < id_b), exact — as a
-    DISTRIBUTED block-pair join: vectors hash into `num_blocks` blocks, the
-    ``num_blocks*(num_blocks+1)/2`` unordered block pairs are enumerated as a
-    tiny broadcast table, both roles replicate to their block pairs, and a
-    cogrouped ``applyInPandas`` scores each block pair as one vectorized
-    matmul. Nothing is ever collected to the driver and no task holds more
-    than two blocks (~2n/num_blocks vectors), so the exact O(n²) flops
-    spread over the cluster with per-task memory you control via
-    `num_blocks` (shuffle volume is ~num_blocks/2 × input — the standard
-    exact-all-pairs tradeoff; raise `num_blocks` as the corpus grows, or use
-    `lsh_neardup_pairs` when approximate recall is acceptable).
+    DISTRIBUTED block-pair join: vectors hash into 16 blocks, the 136
+    unordered block pairs are enumerated as a tiny broadcast table, both
+    roles replicate to their block pairs, and a cogrouped
+    ``applyInPandas`` scores each block pair as one vectorized matmul.
+    Nothing is ever collected to the driver and no task holds more than
+    two blocks (~n/8 vectors), so the exact O(n²) flops spread over the
+    cluster (shuffle volume is ~8 × input — the standard exact-all-pairs
+    tradeoff; use `lsh_neardup_pairs` when approximate recall is
+    acceptable).
 
     Every unordered vector pair is scored exactly once: same-block pairs on
     the diagonal block (masked id_b > id_a), cross-block pairs on the single
@@ -899,15 +888,15 @@ def cosine_neardup_pairs(
 
     sess = embeddings.sparkSession
     e = embeddings.select(
-        F.col(id_col).alias("id"),
-        _as_double(vec_col).alias("v"),
-        F.pmod(F.hash(F.col(id_col)), F.lit(num_blocks)).alias("blk"),
+        F.col("vec_id").alias("id"),
+        _as_double("embedding").alias("v"),
+        F.pmod(F.hash(F.col("vec_id")), F.lit(16)).alias("blk"),
     )
-    # block-pair enumeration is plan-time metadata (≤ num_blocks² tuples),
+    # block-pair enumeration is plan-time metadata (136 tuples),
     # not data — broadcast-joined so each row fans out to its tiles only
     tiles = local_frame(
         sess,
-        [(i, j, i * num_blocks + j) for i in range(num_blocks) for j in range(i, num_blocks)],
+        [(i, j, i * 16 + j) for i in range(16) for j in range(i, 16)],
         "bi int, bj int, tile int",
     )
     a_rep = (
@@ -939,7 +928,7 @@ def cosine_neardup_pairs(
         with np.errstate(divide="ignore", invalid="ignore"):
             cos = _dim_ordered_dot(a_mat, b_mat) / denom
         (tile,) = key
-        diagonal = (tile % (num_blocks + 1)) == 0  # tile = bi*nb+bj with bi == bj
+        diagonal = (tile % 17) == 0  # tile = bi*16+bj with bi == bj
         if diagonal:
             mask = (b_ids[None, :] > a_ids[:, None]) & (cos >= raw_cut)
             i, j = np.nonzero(mask)
@@ -964,19 +953,13 @@ def cosine_neardup_pairs(
 def semdedup_screen(
     assigned: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-    cell_col: str = "cell",
     cell_type: str = "long",
-    chunk_rows: int = 1024,
 ) -> DataFrame:
     """SemDeDup screening over a cell-assigned corpus: keep a vector iff NO
     earlier-id vector in its cell has round(cosine, 6) >= threshold (Abbas
     et al. 2023 — drop all but one of each intra-cluster near-twin group).
 
-    ONE pass over the input (the r06 VERDICT fix: the previous cell-equi
-    self-join referenced the assign subtree twice, running the quantizer
-    argmax once per side): one shuffle by cell, then each cell scores its
+    ONE pass over the input: one shuffle by cell, then each cell scores its
     own pair block as a dimension-ordered numpy accumulation — bit-identical
     to the JVM ``aggregate`` fold / DuckDB ``list_reduce`` (same trick as
     `cosine_neardup_pairs`), at matmul speed instead of per-pair expression
@@ -986,23 +969,23 @@ def semdedup_screen(
     decision stays JVM-side for engine parity. -2.0 marks "no earlier
     peer / all peers zero-norm" (below any real threshold: cos ∈ [-1, 1]).
 
-    Rows are scored in `chunk_rows` slices, so task memory is
-    chunk × |cell| doubles + the cell's vectors — the same one-cell-per-task
+    Rows are scored in 1024-row slices, so task memory is
+    1024 × |cell| doubles + the cell's vectors — the same one-cell-per-task
     bound the materialized index (`cells/` partitionBy) already assumes; at
     100 TB you size nlist so cells fit, exactly as for the ANN probe path."""
     import numpy as np
     import pandas as pd
 
     def screen_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col, ignore_index=True)
-        ids = pdf[id_col].to_numpy()
-        cells_out = pdf[cell_col].to_numpy()
-        mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        pdf = pdf.sort_values("vec_id", ignore_index=True)
+        ids = pdf["vec_id"].to_numpy()
+        cells_out = pdf["cell"].to_numpy()
+        mat = np.stack(pdf["v"].to_numpy()).astype(np.float64)
         n = len(ids)
         sq = _dim_ordered_sq_norm(mat)
         max_prev = np.full(n, -2.0)
-        for s in range(0, n, chunk_rows):
-            e = min(s + chunk_rows, n)
+        for s in range(0, n, 1024):
+            e = min(s + 1024, n)
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = _dim_ordered_dot(mat[s:e], mat) / np.sqrt(
                     sq[s:e, None] * sq[None, :]
@@ -1016,32 +999,26 @@ def semdedup_screen(
                 chunk_max = masked.max(axis=1)
                 take = np.isfinite(chunk_max)
                 max_prev[s:e][take] = chunk_max[take]
-        return pd.DataFrame(
-            {id_col: ids, cell_col: cells_out, "max_prev": max_prev}
-        )
+        return pd.DataFrame({"vec_id": ids, "cell": cells_out, "max_prev": max_prev})
 
-    schema = (
-        f"{_quote(id_col)} long, {_quote(cell_col)} {cell_type}, max_prev double"
-    )
+    schema = f"`vec_id` long, `cell` {cell_type}, max_prev double"
     from multi_source_financial_data_pipeline_spark.operators.grouped import _fold_partitions
 
     screened = (
-        assigned.select(id_col, vec_col, cell_col)
+        assigned.select("vec_id", "v", "cell")
         # cells are many and small: pin grouped-map parallelism to cores
         # (see grouped._fold_partitions — AQE's byte-based coalescing
         # otherwise serializes every cell through one Python worker)
-        .repartition(_fold_partitions(assigned), cell_col)
-        .groupBy(cell_col)
+        .repartition(_fold_partitions(assigned), "cell")
+        .groupBy("cell")
         .applyInPandas(screen_cell, schema=schema)
     )
     return screened.filter(
         F.round(F.col("max_prev"), 6) < F.lit(threshold)
-    ).select(id_col, cell_col)
+    ).select("vec_id", "cell")
 
 
-def signed_planes(
-    num_planes: int = 16, dim: int = 64, seed: int = 7
-) -> list[list[float]]:
+def signed_planes(num_planes: int = 16, dim: int = 64) -> list[list[float]]:
     """Deterministic ±1 random-hyperplane matrix (md5-seeded). ±1 components
     keep the projection a plain signed sum — exactly mirrorable in a DuckDB
     oracle, and as effective as Gaussian planes for sign-LSH."""
@@ -1049,7 +1026,7 @@ def signed_planes(
 
     return [
         [
-            1.0 if hashlib.md5(f"{seed}|{p}|{d}".encode()).digest()[0] % 2 else -1.0
+            1.0 if hashlib.md5(f"7|{p}|{d}".encode()).digest()[0] % 2 else -1.0
             for d in range(dim)
         ]
         for p in range(num_planes)
@@ -1060,20 +1037,18 @@ def lsh_bucket(
     embeddings: DataFrame,
     num_planes: int = 16,
     dim: int = 64,
-    seed: int = 7,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Sign-random-hyperplane LSH bucket id per vector — the ANN scale path:
     bucket the corpus once (linear), generate candidates within buckets, then
     exact re-rank. At 100 TB the table is additionally partitioned by bucket
     so probes touch one partition."""
-    planes = signed_planes(num_planes, dim, seed)
+    planes = signed_planes(num_planes, dim)
     terms = []
     for p, plane in enumerate(planes):
         arr = ", ".join(f"cast({c:.1f} as double)" for c in plane)
         proj = (
-            f"aggregate(zip_with({_as_double_sql(vec_col)}, array({arr}),"
+            f"aggregate(zip_with({_as_double_sql('embedding')}, array({arr}),"
             f" (x, y) -> x * y), cast(0.0 as double), (acc, z) -> acc + z)"
         )
         terms.append(
@@ -1081,7 +1056,7 @@ def lsh_bucket(
             f" ELSE cast(0 as bigint) END)"
         )
     bucket = F.expr(" + ".join(terms))
-    return embeddings.select(F.col(id_col), F.col(vec_col), bucket.alias("bucket"))
+    return embeddings.select(F.col(id_col), F.col("embedding"), bucket.alias("bucket"))
 
 
 def lsh_topk(
@@ -1089,11 +1064,6 @@ def lsh_topk(
     queries: DataFrame,
     k: int = 10,
     num_planes: int = 4,
-    dim: int = 64,
-    seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH bucket,
     then exact cosine re-rank — the probe path over a bucket-partitioned
@@ -1101,12 +1071,12 @@ def lsh_topk(
     baseline). Few planes → big buckets → higher recall; the bucket join
     replaces the all-pairs crossjoin."""
     cand = _vec_side(
-        lsh_bucket(embeddings, num_planes, dim, seed, id_col, vec_col),
-        id_col, vec_col, ("cand_id", "cv", "cn"), "bucket",
+        lsh_bucket(embeddings, num_planes, 64, "vec_id"),
+        "vec_id", "embedding", ("cand_id", "cv", "cn"), "bucket",
     )
     qb = _vec_side(
-        lsh_bucket(queries, num_planes, dim, seed, query_id_col, vec_col),
-        query_id_col, vec_col, ("query_id", "qv", "qn"), "bucket",
+        lsh_bucket(queries, num_planes, 64, "query_id"),
+        "query_id", "embedding", ("query_id", "qv", "qn"), "bucket",
     )
     scored = (
         qb.join(cand, ["bucket"])
@@ -1121,17 +1091,14 @@ def lsh_neardup_pairs(
     threshold: float,
     num_planes: int = 8,
     dim: int = 64,
-    seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Near-dup pairs restricted to same-LSH-bucket candidates — the linear-
     ish scale path (recall < 1 by design; the brute-force operator is the
     exactness baseline). Bucket sizes are data-independent-ish (2^planes
     buckets), so the within-bucket self-join is skew-bounded."""
-    b = lsh_bucket(embeddings, num_planes, dim, seed, id_col, vec_col)
-    a = _vec_side(b, id_col, vec_col, ("id_a", "va", "na"), "bucket")
-    c = _vec_side(b, id_col, vec_col, ("id_b", "vb", "nb"), "bucket")
+    b = lsh_bucket(embeddings, num_planes, dim, "vec_id")
+    a = _vec_side(b, "vec_id", "embedding", ("id_a", "va", "na"), "bucket")
+    c = _vec_side(b, "vec_id", "embedding", ("id_b", "vb", "nb"), "bucket")
     return (
         a.join(c, ["bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -1140,11 +1107,7 @@ def lsh_neardup_pairs(
     )
 
 
-def label_centroids(
-    embeddings: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def label_centroids(embeddings: DataFrame) -> DataFrame:
     """Per-label centroid in LONG form (label, dim, centroid, n_vecs) — the
     coarse-quantizer construction step of an IVF index (bucket by nearest
     centroid, probe a few buckets) and the usual class-prototype summary.
@@ -1155,8 +1118,8 @@ def label_centroids(
     engines because float summation order differs across partial
     aggregates."""
     expl = embeddings.select(
-        F.col(label_col).alias("label"),
-        F.posexplode(_as_double(vec_col)).alias("dim", "x"),
+        F.col("label").alias("label"),
+        F.posexplode(_as_double("embedding")).alias("dim", "x"),
     )
     return expl.groupBy("label", "dim").agg(
         F.round(F.avg("x"), 6).alias("centroid"),
@@ -1186,9 +1149,7 @@ def ivf_seed_row(
     )
 
 
-def centers_seed_row(
-    centers: DataFrame, cell_col: str = "cell", vec_col: str = "cv"
-) -> DataFrame:
+def centers_seed_row(centers: DataFrame) -> DataFrame:
     """`ivf_seed_row`'s shape built from an ARBITRARY (cell, vector)
     centroid frame (e.g. `kmeans_centroids` output) instead of the first
     nlist corpus vectors — the seam that lets the coarse quantizer be
@@ -1196,8 +1157,8 @@ def centers_seed_row(
     sorted (seed_id, sv, sn) struct array every `_best_cells` consumer
     already broadcasts."""
     seeds = centers.select(
-        F.col(cell_col).cast("long").alias("seed_id"),
-        F.col(vec_col).alias("sv"),
+        F.col("cell").cast("long").alias("seed_id"),
+        F.col("cv").alias("sv"),
     ).withColumn("sn", sq_norm("sv"))
     return seeds.agg(
         F.sort_array(F.collect_list(F.struct("seed_id", "sv", "sn"))).alias("seeds")
@@ -1267,8 +1228,6 @@ def ivf_assign(
 def semdedup_assign(
     embeddings: DataFrame,
     nlist: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Two-level (hierarchical) coarse assignment for CORPUS-ADAPTIVE
     quantizer sizes — the assign path SemDeDup needs when nlist grows
@@ -1291,9 +1250,9 @@ def semdedup_assign(
     import math
 
     k1 = math.isqrt(max(nlist - 1, 0)) + 1
-    supers_row = ivf_seed_row(embeddings, k1, id_col, vec_col)
+    supers_row = ivf_seed_row(embeddings, k1, "vec_id", "embedding")
     seeds = _vec_side(
-        embeddings.filter(F.col(id_col) < nlist), id_col, vec_col,
+        embeddings.filter(F.col("vec_id") < nlist), "vec_id", "embedding",
         ("seed_id", "sv", "sn"),
     )
     seed_best = _best_cells("sv", "sn")[0]
@@ -1318,7 +1277,7 @@ def semdedup_assign(
             " g -> filter(all_seeds, x -> x.grp = g))"
         ).alias("super_groups")
     )
-    e = _vec_side(embeddings, id_col, vec_col, (id_col, "v", "vn"))
+    e = _vec_side(embeddings, "vec_id", "embedding", ("vec_id", "v", "vn"))
     # each vector scores only its super-cell's seeds: `_best_cells` over
     # the super_groups entry its first-level argmax picks
     best = _best_cells(
@@ -1328,11 +1287,11 @@ def semdedup_assign(
         e.join(F.broadcast(supers_row))
         .join(F.broadcast(groups_row))
         .select(
-            F.col(id_col), "v", "vn", "super_groups",
+            F.col("vec_id"), "v", "vn", "super_groups",
             _best_cells("v", "vn")[0]["cell"].alias("sup"),
         )
         .select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.col("v"),
             F.col("vn"),
             best["cell"].alias("cell"),
@@ -1347,9 +1306,6 @@ def ivf_topk(
     k: int = 10,
     nlist: int = 16,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Approximate top-k with an IVF index: assign the corpus to `nlist`
     cells once, probe each query's `nprobe` nearest cells, exact cosine
@@ -1359,14 +1315,12 @@ def ivf_topk(
     The probe side is tiny (queries × nprobe rows) and hash-joins the
     cell-partitioned corpus on `cell` — the crossjoin of `brute_force_topk`
     is replaced by a ~nprobe/nlist fraction scan."""
-    cells = ivf_assign(embeddings, nlist, id_col, vec_col).select(
-        F.col(id_col).alias("cand_id"), F.col("v").alias("cv"),
+    cells = ivf_assign(embeddings, nlist, "vec_id", "embedding").select(
+        F.col("vec_id").alias("cand_id"), F.col("v").alias("cv"),
         F.col("vn").alias("cn"), "cell",
     )
-    seed_row = ivf_seed_row(embeddings, nlist, id_col, vec_col)
-    return _ivf_probe_topk(
-        cells, seed_row, queries, k, nprobe, query_id_col, vec_col
-    )
+    seed_row = ivf_seed_row(embeddings, nlist, "vec_id", "embedding")
+    return _ivf_probe_topk(cells, seed_row, queries, k, nprobe)
 
 
 def _ivf_scored(
@@ -1392,14 +1346,12 @@ def _ivf_probe_topk(
     queries: DataFrame,
     k: int,
     nprobe: int,
-    query_id_col: str,
-    vec_col: str,
     within: DataFrame | None = None,
 ) -> DataFrame:
     """The IVF serving body shared by `ivf_topk` (cells assigned in
     memory), `ivf_topk_probe` (cells read from disk) and
     `pq_topk_rerank`'s exact stage."""
-    q = _vec_side(queries, query_id_col, vec_col, ("query_id", "qv", "qn"))
+    q = _vec_side(queries, "query_id", "embedding", ("query_id", "qv", "qn"))
     return _rank_topk(
         _ivf_scored(q.join(F.broadcast(seed_row)), cells, nprobe, within), k
     )
@@ -1420,8 +1372,6 @@ def build_ivf_index(
     embeddings: DataFrame,
     index_dir: str,
     nlist: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     two_level: bool = False,
     coarse_centers: DataFrame | None = None,
 ) -> None:
@@ -1452,16 +1402,16 @@ def build_ivf_index(
             )
         centers_row = centers_seed_row(coarse_centers)
         assigned = ivf_assign(
-            embeddings, nlist, id_col, vec_col, centers_row=centers_row
+            embeddings, nlist, "vec_id", "embedding", centers_row=centers_row
         )
         quantizer = centers_row
     else:
         assign_fn = semdedup_assign if two_level else ivf_assign
-        assigned = assign_fn(embeddings, nlist, id_col, vec_col)
-        quantizer = ivf_seed_row(embeddings, nlist, id_col, vec_col)
+        assigned = assign_fn(embeddings, nlist)
+        quantizer = ivf_seed_row(embeddings, nlist, "vec_id", "embedding")
     (
         assigned.select(
-            F.col(id_col).alias("cand_id"),
+            F.col("vec_id").alias("cand_id"),
             F.col("v").alias("cv"),
             F.col("vn").alias("cn"),
             "cell",
@@ -1481,8 +1431,6 @@ def ivf_topk_probe(
     queries: DataFrame,
     k: int = 10,
     nprobe: int = 2,
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k against a materialized IVF index (same semantics
     and same results as `ivf_topk` with the same nlist/nprobe — pinned by a
@@ -1495,7 +1443,7 @@ def ivf_topk_probe(
     return _ivf_probe_topk(
         spark.read.parquet(os.path.join(index_dir, "cells")),
         spark.read.parquet(os.path.join(index_dir, "quantizer")),
-        queries, k, nprobe, query_id_col, vec_col,
+        queries, k, nprobe,
     )
 
 
@@ -1504,12 +1452,10 @@ def ivf_index_upsert(
     index_dir: str,
     delta: DataFrame,
     deletes: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> None:
-    """Incremental maintenance for a materialized IVF index (r17 VERDICT
-    item 2 — the missing composition of the index family's build-once
-    discipline with the dedup family's delta discipline): upsert a
+    """Incremental maintenance for a materialized IVF index — the index
+    family's build-once discipline composed with the dedup family's delta
+    discipline: upsert a
     vector DELTA (new ids inserted, existing ids replaced) into
     ``index_dir``'s cell partitions WITHOUT a rebuild. No Lloyd
     iteration runs and `build_ivf_index` is never called (both pinned by
@@ -1535,7 +1481,7 @@ def ivf_index_upsert(
       (the read-overwrite hazard every compaction job has).
 
     ``deletes`` (optional) removes ids from the index. Each delete row
-    must carry the vector (``id_col``, ``vec_col``) — the CDC shape
+    must carry the vector (``vec_id``, ``embedding``) — the CDC shape
     where the old row is in hand — because the id's cell is a pure
     function of its VECTOR under the quantizer: re-deriving it keeps
     deletion work ∝ delta too (an id-only delete would have to scan
@@ -1552,9 +1498,9 @@ def ivf_index_upsert(
     cells_dir = os.path.join(index_dir, "cells")
     seed_row = spark.read.parquet(os.path.join(index_dir, "quantizer"))
     assigned = ivf_assign(
-        delta, id_col=id_col, vec_col=vec_col, centers_row=seed_row
+        delta, id_col="vec_id", vec_col="embedding", centers_row=seed_row
     ).select(
-        F.col(id_col).alias("cand_id"),
+        F.col("vec_id").alias("cand_id"),
         F.col("v").alias("cv"),
         F.col("vn").alias("cn"),
         "cell",
@@ -1562,8 +1508,8 @@ def ivf_index_upsert(
     gone = None
     if deletes is not None:
         gone = ivf_assign(
-            deletes, id_col=id_col, vec_col=vec_col, centers_row=seed_row
-        ).select(F.col(id_col).alias("cand_id"), "cell")
+            deletes, id_col="vec_id", vec_col="embedding", centers_row=seed_row
+        ).select(F.col("vec_id").alias("cand_id"), "cell")
     # touched cells: ≤ nlist rows (index geometry, never corpus size) —
     # a literal, so the survivors scan below partition-prunes to them
     touched_df = assigned.select("cell")
@@ -1613,8 +1559,6 @@ def pq_index_upsert(
     index_dir: str,
     delta: DataFrame,
     deletes: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> None:
     """`ivf_index_upsert`'s PQ twin (r17 VERDICT item 2's second half):
     upsert a vector delta into a materialized IVF-PQ index WITHOUT
@@ -1642,9 +1586,9 @@ def pq_index_upsert(
 
     def _coded(vectors: DataFrame) -> DataFrame:
         assigned = ivf_assign(
-            vectors, id_col=id_col, vec_col=vec_col, centers_row=seed_row
+            vectors, id_col="vec_id", vec_col="embedding", centers_row=seed_row
         ).select(
-            F.col(id_col).alias("vec_id"),
+            F.col("vec_id").alias("vec_id"),
             F.col("v"),
             F.col("cell").alias("ivf_cell"),
         )
@@ -1655,7 +1599,7 @@ def pq_index_upsert(
         )
         codes = pq_encode(
             src.select("vec_id", "rv"), cents, m=index.m,
-            dim=index.m * index.sub, id_col="vec_id", vec_col="rv",
+            dim=index.m * index.sub, vec_col="rv",
         ).withColumnRenamed("cell", "code")
         return codes.join(src.select("vec_id", "ivf_cell"), "vec_id")
 
@@ -1663,9 +1607,9 @@ def pq_index_upsert(
     gone = None
     if deletes is not None:
         gone = ivf_assign(
-            deletes, id_col=id_col, vec_col=vec_col, centers_row=seed_row
+            deletes, id_col="vec_id", vec_col="embedding", centers_row=seed_row
         ).select(
-            F.col(id_col).alias("vec_id"), F.col("cell").alias("ivf_cell")
+            F.col("vec_id").alias("vec_id"), F.col("cell").alias("ivf_cell")
         )
     touched_df = new_codes.select("ivf_cell")
     if gone is not None:
@@ -1867,8 +1811,6 @@ def pq_topk_probe(
     queries: DataFrame,
     k: int = 10,
     nprobe: int = 2,
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ADC top-k against a materialized IVF-PQ index — the PQ SERVING
     plan, split from training (same semantics and same results as
@@ -1885,7 +1827,7 @@ def pq_topk_probe(
     build."""
     return _adc_topk(
         _read_pq_index(spark, index_dir, by_residual=False),
-        queries, k, nprobe, query_id_col, vec_col,
+        queries, k, nprobe, "query_id", "embedding",
     )
 
 
@@ -1897,8 +1839,6 @@ def pq_topk_rerank(
     k: int = 10,
     k_short: int = 40,
     nprobe: int = 2,
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Two-stage ANN serving — the FAISS search-then-refine deployment
     pattern (`IndexRefineFlat`): stage 1 takes the ADC top-``k_short``
@@ -1948,12 +1888,11 @@ def pq_topk_rerank(
         )
     shortlist = pq_topk_probe(
         spark, pq_index_dir, queries, k=k_short, nprobe=nprobe,
-        query_id_col=query_id_col, vec_col=vec_col,
     ).select("query_id", "cand_id")
     return _ivf_probe_topk(
         spark.read.parquet(os.path.join(ivf_index_dir, "cells")),
         spark.read.parquet(os.path.join(ivf_index_dir, "quantizer")),
-        queries, k, nprobe, query_id_col, vec_col,
+        queries, k, nprobe,
         within=_lut_hint(queries, k_short)(shortlist),
     )
 
@@ -1964,8 +1903,6 @@ def pq_residual_topk_probe(
     queries: DataFrame,
     k: int = 10,
     nprobe: int = 2,
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ADC top-k against a materialized RESIDUAL IVF-PQ index — the
     serving twin of `ivfpq_residual_adc_topk(coarse_centers=...)` exactly
@@ -1985,5 +1922,5 @@ def pq_residual_topk_probe(
     same dynamic-partition-pruned ~nprobe/nlist fraction."""
     return _adc_topk(
         _read_pq_index(spark, index_dir, by_residual=True),
-        queries, k, nprobe, query_id_col, vec_col,
+        queries, k, nprobe, "query_id", "embedding",
     )

@@ -29,7 +29,6 @@ _DECOMPOSABLE = {
 
 def salted_agg(
     df: DataFrame,
-    keys: list[str],
     aggs: dict[str, tuple[str, Column]],
     num_salts: int = 16,
 ) -> DataFrame:
@@ -41,13 +40,13 @@ def salted_agg(
         if fn not in _DECOMPOSABLE:
             raise ValueError(f"{name}: '{fn}' is not decomposable over salts")
     salt = F.pmod(F.xxhash64(*df.columns), F.lit(num_salts))
-    partial = df.groupBy(*keys, salt.alias("__salt")).agg(
+    partial = df.groupBy("event_type", salt.alias("__salt")).agg(
         *[
             _DECOMPOSABLE[fn][0](col).alias(f"__p_{name}")
             for name, (fn, col) in aggs.items()
         ]
     )
-    return partial.groupBy(*keys).agg(
+    return partial.groupBy("event_type").agg(
         *[
             _DECOMPOSABLE[fn][1](F.col(f"__p_{name}")).alias(name)
             for name, (fn, _) in aggs.items()
@@ -58,12 +57,10 @@ def salted_agg(
 def skew_split_join(
     left: DataFrame,
     right: DataFrame,
-    on: list[str],
-    hot_threshold: int = 100_000,
     how: str = "inner",
 ) -> DataFrame:
-    """Hot/cold split join for Zipf-skewed join keys: keys whose LEFT-side
-    row count exceeds ``hot_threshold`` take the broadcast path (their
+    """Hot/cold split join on column ``k`` for Zipf-skewed join keys: keys
+    whose LEFT-side row count exceeds 500 take the broadcast path (their
     right-side rows are broadcast, so the hot keys' rows never converge on
     single reducers), everything else takes the normal shuffle join; the
     union is result-identical to the direct join.
@@ -79,14 +76,14 @@ def skew_split_join(
     if how not in ("inner", "left"):
         raise ValueError(f"skew_split_join supports inner/left, got {how!r}")
     hot_keys = (
-        left.groupBy(*on)
+        left.groupBy("k")
         .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > hot_threshold)
-        .select(*on)
+        .filter(F.col("__n") > 500)
+        .select("k")
     )
-    left_hot = left.join(F.broadcast(hot_keys), on, "left_semi")
-    left_cold = left.join(F.broadcast(hot_keys), on, "left_anti")
-    right_hot = right.join(F.broadcast(hot_keys), on, "left_semi")
-    joined_hot = left_hot.join(F.broadcast(right_hot), on, how)
-    joined_cold = left_cold.join(right, on, how)
+    left_hot = left.join(F.broadcast(hot_keys), ["k"], "left_semi")
+    left_cold = left.join(F.broadcast(hot_keys), ["k"], "left_anti")
+    right_hot = right.join(F.broadcast(hot_keys), ["k"], "left_semi")
+    joined_hot = left_hot.join(F.broadcast(right_hot), ["k"], how)
+    joined_cold = left_cold.join(right, ["k"], how)
     return joined_hot.unionByName(joined_cold)

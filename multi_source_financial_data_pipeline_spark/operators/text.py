@@ -46,9 +46,7 @@ REP_TOP_BIGRAM_MAX = 0.18
 REP_DUP_TRIGRAM_MAX = 0.30
 
 
-def repetition_stats(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Per-doc repetition metrics for training-data curation:
 
     - ``top_bigram_frac``: count of the single most frequent bigram over the
@@ -81,12 +79,12 @@ def repetition_stats(
     # HOF lambdas are interpreted per element, so the fold must not carry
     # strings or wide structs.
     grams = df.select(
-        id_col,
-        word_ngrams(F.col(text_col), 2).alias("__bi"),
-        word_ngrams(F.col(text_col), 3).alias("__tri"),
+        "doc_id",
+        word_ngrams(F.col("text"), 2).alias("__bi"),
+        word_ngrams(F.col("text"), 3).alias("__tri"),
     )
     sized = grams.select(
-        id_col,
+        "doc_id",
         F.array_sort("__bi").alias("__s"),
         F.size("__bi").cast("long").alias("__nb"),
         F.size(F.array_distinct("__tri")).cast("long").alias("__dt"),
@@ -101,7 +99,7 @@ def repetition_stats(
         lambda a, b: (a == b).cast("int"),
     )
     folded = sized.select(
-        id_col,
+        "doc_id",
         "__nb",
         "__dt",
         "__nt",
@@ -137,7 +135,7 @@ def repetition_stats(
         F.lit(1.0) - F.col("__dt").cast("double") / F.col("__nt").cast("double"),
     ).otherwise(F.lit(0.0))
     return folded.select(
-        id_col,
+        "doc_id",
         top.alias("top_bigram_frac"),
         dup.alias("dup_trigram_frac"),
         (
@@ -148,14 +146,14 @@ def repetition_stats(
     )
 
 
-def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def token_stats(df: DataFrame) -> DataFrame:
     """Per-doc token counting + type-token ratio."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     n_tokens = F.size(toks)
     n_distinct = F.size(F.array_distinct(toks))
     return df.select(
         "doc_id",
-        F.length(text_col).alias("n_chars_text"),
+        F.length("text").alias("n_chars_text"),
         n_tokens.alias("n_tokens"),
         n_distinct.alias("n_distinct_tokens"),
         (n_distinct / n_tokens).alias("type_token_ratio"),
@@ -177,12 +175,12 @@ def subwords(text: Column) -> Column:
     return F.regexp_extract_all(text, F.lit(SUBWORD_PATTERN), 0)
 
 
-def subword_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def subword_stats(df: DataFrame) -> DataFrame:
     """Per-doc subword counting next to whitespace counting: the ratio is
     the fertility estimate (subwords per word) used to budget token counts
     at corpus scale. One projection, linear, no shuffle."""
-    sw = subwords(F.col(text_col))
-    ws = tokens(F.col(text_col))
+    sw = subwords(F.col("text"))
+    ws = tokens(F.col("text"))
     n_sub = F.size(sw)
     return df.select(
         "doc_id",
@@ -200,11 +198,11 @@ def stopword_ratio(text: Column) -> Column:
     return n_stop / F.size(toks)
 
 
-def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def language_id(df: DataFrame) -> DataFrame:
     """Language-ID heuristic: stopword-hit ratio against a per-language
     function-word list (here only the English list — the synthetic corpus is
     English-ish regardless of its `lang` label)."""
-    ratio = stopword_ratio(F.col(text_col))
+    ratio = stopword_ratio(F.col("text"))
     return df.select(
         "doc_id",
         ratio.alias("stopword_ratio"),
@@ -212,14 +210,14 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_columns(text_col: str = "text") -> dict[str, Column]:
+def quality_columns() -> dict[str, Column]:
     """Column-level quality metrics, so callers can fuse them into a wider
     single-scan projection (the curation pipeline computes quality, lang-ID
     and token counts in ONE pass instead of joining three scans)."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     n_tokens = F.size(toks)
     ttr = F.size(F.array_distinct(toks)) / n_tokens
-    mean_tok_len = (F.length(text_col) - (n_tokens - 1)) / n_tokens
+    mean_tok_len = (F.length("text") - (n_tokens - 1)) / n_tokens
     length_score = F.when(n_tokens >= 50, F.lit(1.0)).otherwise(n_tokens / 50.0)
     quality = length_score * 0.5 + ttr * 0.3 + F.least(mean_tok_len / 10.0, F.lit(1.0)) * 0.2
     return {
@@ -230,35 +228,33 @@ def quality_columns(text_col: str = "text") -> dict[str, Column]:
     }
 
 
-def doc_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_quality(df: DataFrame) -> DataFrame:
     """Quality scoring from cheap structural signals: length band, lexical
     diversity, mean token length. Deterministic double arithmetic only."""
-    cols = quality_columns(text_col)
+    cols = quality_columns()
     return df.select(
         "doc_id", *[expr.alias(name) for name, expr in cols.items()]
     )
 
 
-def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Document fingerprint: md5 over the whitespace-normalized, lowercased
     text — the exact-dedup key."""
-    normalized = F.concat_ws(" ", tokens(F.lower(F.col(text_col))))
+    normalized = F.concat_ws(" ", tokens(F.lower(F.col("text"))))
     return df.withColumn("fingerprint", F.md5(normalized))
 
 
-def vocab_topk(
-    df: DataFrame, k: int = 50, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def vocab_topk(df: DataFrame, k: int = 50) -> DataFrame:
     """Corpus vocabulary heavy hitters: token → total count + document
     frequency, deterministic top-k (count desc, token asc). Explode +
     map-side-combined groupBy + TakeOrderedAndProject — the vocabulary-stats
     pass every tokenizer-training pipeline runs over its corpus."""
     from pyspark.sql import Window
 
-    tok = df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("t"))
+    tok = df.select(F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("t"))
     counts = tok.groupBy("t").agg(
         F.count(F.lit(1)).alias("n_occurrences"),
-        F.countDistinct(id_col).alias("n_docs"),
+        F.countDistinct("doc_id").alias("n_docs"),
     )
     # distributed top-k first (TakeOrderedAndProject — no global sort, no
     # single-partition window over the full vocabulary), then rank the k
@@ -272,9 +268,7 @@ def vocab_topk(
     )
 
 
-def scrub(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def scrub(df: DataFrame) -> DataFrame:
     """Text cleaning pass: lowercase, digit runs → '#', whitespace
     normalized — the canonicalization step before dedup/tokenization in a
     training-data pipeline. Patterns stay in the portable regex subset
@@ -282,10 +276,10 @@ def scrub(
     identically."""
     cleaned = F.concat_ws(
         " ",
-        tokens(F.regexp_replace(F.lower(F.col(text_col)), "[0-9]+", "#")),
+        tokens(F.regexp_replace(F.lower(F.col("text")), "[0-9]+", "#")),
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         cleaned.alias("scrubbed"),
         F.md5(cleaned).alias("scrubbed_fp"),
     )
@@ -309,33 +303,31 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def pii_columns(text_col: str = "text") -> dict[str, Column]:
+def pii_columns() -> dict[str, Column]:
     """Per-pattern match counts + the sequentially redacted text. One
     projection, no UDFs — regexp_extract_all/regexp_replace run inside
     whole-stage codegen."""
     cols: dict[str, Column] = {}
-    scrubbed = F.col(text_col)
+    scrubbed = F.col("text")
     for name, pattern, token in PII_PATTERNS:
         cols[f"n_{name}"] = F.size(
-            F.regexp_extract_all(F.col(text_col), F.lit(pattern), F.lit(0))
+            F.regexp_extract_all(F.col("text"), F.lit(pattern), F.lit(0))
         ).cast("long")
         scrubbed = F.regexp_replace(scrubbed, pattern, token)
     cols["scrubbed"] = scrubbed
     return cols
 
 
-def pii_scrub(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    cols = pii_columns(text_col)
+def pii_scrub(df: DataFrame) -> DataFrame:
+    cols = pii_columns()
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[cols[f"n_{name}"].alias(f"n_{name}") for name, _, _ in PII_PATTERNS],
         F.md5(cols["scrubbed"]).alias("scrubbed_fp"),
     )
 
 
-def token_chunks(
-    text_col: str = "text", width: int = 10
-) -> tuple[Column, Column, Column, Column]:
+def token_chunks(width: int = 10) -> tuple[Column, Column, Column, Column]:
     """Fixed `width`-token chunking of the whitespace token stream — the
     "paragraph" granularity for boilerplate detection on a corpus without
     layout. Returns ``(toks, seq, chunk, chunk_toks)``: ``toks`` is the
@@ -348,7 +340,7 @@ def token_chunks(
     (projection expressions get no CSE); slicing the attribute makes the
     chunk pass linear and keeps the token array inside one codegen stage
     (it must be projected away before any exchange)."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     mat = F.col("__toks")
     n_chunks = F.floor((F.size(mat) + (width - 1)) / width).cast("int")
     seq = F.sequence(F.lit(0), n_chunks - 1)
@@ -359,7 +351,7 @@ def token_chunks(
 
 
 def length_quantiles(
-    df: DataFrame, qs: tuple[float, ...] = (0.5, 0.9, 0.99), text_col: str = "text"
+    df: DataFrame, qs: tuple[float, ...] = (0.5, 0.9, 0.99)
 ) -> DataFrame:
     """Exact corpus length quantiles by rank: q-th quantile = the n_tokens at
     sorted position ceil(q·N), no interpolation — a definition every engine
@@ -373,7 +365,7 @@ def length_quantiles(
     from pyspark.sql import Window
 
     hist = (
-        df.select(F.size(tokens(F.col(text_col))).alias("n_tokens"))
+        df.select(F.size(tokens(F.col("text"))).alias("n_tokens"))
         .groupBy("n_tokens")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -396,13 +388,11 @@ def length_quantiles(
     return cum.crossJoin(F.broadcast(totals)).agg(*picks)
 
 
-def token_length_histogram(
-    df: DataFrame, bucket_width: int = 10, text_col: str = "text"
-) -> DataFrame:
+def token_length_histogram(df: DataFrame, bucket_width: int = 10) -> DataFrame:
     """Distribution of document lengths in tokens, bucketed by
     ``bucket_width`` — the corpus-shape profile used to pick sequence-length
     cutoffs. One explode-free pass: length per doc, integer-divide, count."""
-    n = F.size(tokens(F.col(text_col)))
+    n = F.size(tokens(F.col("text")))
     # pure integer arithmetic: float-division-then-cast rounds in some
     # engines and truncates in others
     bucket = n - n % bucket_width
@@ -416,8 +406,6 @@ def token_length_histogram(
 def tfidf_topk(
     df: DataFrame,
     k: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Top-k characteristic terms per document by tf·idf, with a RATIONAL
     idf — tf · (N − df + 0.5)/(df + 0.5), the BM25 idf argument without the
@@ -432,10 +420,10 @@ def tfidf_topk(
     N → per-doc window top-k. Ties break on the term for determinism."""
     from pyspark.sql import Window
 
-    tok = df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("t"))
-    tf = tok.groupBy(id_col, "t").agg(F.count(F.lit(1)).alias("tf"))
+    tok = df.select(F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("t"))
+    tf = tok.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
-    total = df.agg(F.countDistinct(id_col).alias("n_docs"))
+    total = df.agg(F.countDistinct("doc_id").alias("n_docs"))
     score = F.col("tf") * (
         (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
     )
@@ -444,18 +432,18 @@ def tfidf_topk(
         .crossJoin(F.broadcast(total))
         .withColumn("tfidf", score)
     )
-    w = Window.partitionBy(id_col).orderBy(F.col("tfidf").desc(), F.col("t").asc())
+    w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("t").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= k)
-        .select(id_col, F.col("t").alias("term"), "tf", "df", "tfidf", "rank")
+        .select("doc_id", F.col("t").alias("term"), "tf", "df", "tfidf", "rank")
     )
 
 
 # --- BPE merge training --------------------------------------------------------
 
 
-def bpe_vocab(df: DataFrame, text_col: str = "text") -> DataFrame:
+def bpe_vocab(df: DataFrame) -> DataFrame:
     """The Sennrich 2016 reduction that makes distributed BPE training
     tractable: collapse the corpus to its word-frequency VOCABULARY before
     any merge iteration touches it. One corpus scan + one word hash
@@ -464,7 +452,7 @@ def bpe_vocab(df: DataFrame, text_col: str = "text") -> DataFrame:
     becomes its character-symbol array plus the classic ``</w>``
     end-of-word marker, so merges can learn suffixes without crossing
     word boundaries."""
-    words = df.select(F.explode(tokens(F.col(text_col))).alias("w"))
+    words = df.select(F.explode(tokens(F.col("text"))).alias("w"))
     return words.groupBy("w").agg(F.count(F.lit(1)).alias("n")).select(
         F.concat(
             F.regexp_extract_all(F.col("w"), F.lit("."), 0),
@@ -541,9 +529,7 @@ def _bpe_apply_merge(symbols: Column, left: Column, right: Column) -> Column:
     return F.filter(rebuilt, lambda s: s.isNotNull())
 
 
-def bpe_merge_steps(
-    df: DataFrame, n_merges: int, text_col: str = "text"
-) -> DataFrame:
+def bpe_merge_steps(df: DataFrame, n_merges: int) -> DataFrame:
     """Distributed byte-pair-encoding merge training (Sennrich, Haddow &
     Birch 2016; the tokenizer-training algorithm behind GPT-2/RoBERTa
     vocabularies), unrolled for ``n_merges`` iterations: per step, ONE
@@ -564,7 +550,7 @@ def bpe_merge_steps(
     purely on O(steps²) recomputed exchanges. A deployment training ~30k
     merges runs this same loop and persists the vocab every few hundred
     steps to cap lineage depth."""
-    rows, _ = _bpe_train(df, n_merges, text_col)
+    rows, _ = _bpe_train(df, n_merges)
     return local_frame(
         df.sparkSession,
         rows,
@@ -573,10 +559,10 @@ def bpe_merge_steps(
 
 
 def _bpe_train(
-    df: DataFrame, n_merges: int, text_col: str
+    df: DataFrame, n_merges: int
 ) -> tuple[list[tuple[int, str, str, str, int]], DataFrame]:
     """The shared train loop: returns (merge rows, final merged vocab)."""
-    vocab = bpe_vocab(df, text_col)
+    vocab = bpe_vocab(df)
     rows: list[tuple[int, str, str, str, int]] = []
     for step in range(1, n_merges + 1):
         width = F.size(F.col("syms")) - 1
@@ -634,9 +620,7 @@ def _bpe_train(
     return rows, vocab
 
 
-def bpe_encode_stats(
-    df: DataFrame, n_merges: int, text_col: str = "text"
-) -> DataFrame:
+def bpe_encode_stats(df: DataFrame, n_merges: int) -> DataFrame:
     """The trained tokenizer APPLIED: encode the vocabulary with the
     n_merges learned merges and report the corpus-level effect in one
     row — total words, total emitted subword tokens, distinct symbol
@@ -646,7 +630,7 @@ def bpe_encode_stats(
     raw characters). Two 1-row aggregates over the final vocab (whole
     rows + exploded symbols), broadcast-crossed; encoding itself is the
     same literal-folded row-local merge chain training used."""
-    _, vocab = _bpe_train(df, n_merges, text_col)
+    _, vocab = _bpe_train(df, n_merges)
     totals = vocab.agg(
         F.sum("n").alias("total_words"),
         F.sum(F.col("n") * F.size(F.col("syms")))
@@ -683,8 +667,6 @@ def token_lr_classifier(
     buckets: int = 64,
     steps: int = 4,
     eta: float = 4.0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """fastText-style model-based document filter (Joulin et al. 2016,
     "Bag of Tricks for Efficient Text Classification" — the cheap linear
@@ -733,10 +715,10 @@ def token_lr_classifier(
     float SUMs of the loop quantize each term onto the `LR_Q` grid and
     fold BIGINTs; μ and σ round to 6 decimals; the weight update itself
     is plain IEEE arithmetic on identical inputs."""
-    feat, nrow, _stats = _lr_features(docs, label, buckets, id_col, text_col)
-    w = _lr_gradient_descent(feat, nrow, buckets, steps, eta, id_col)
-    return _lr_logits(feat, w, id_col).select(
-        id_col,
+    feat, nrow, _stats = _lr_features(docs, label, buckets)
+    w = _lr_gradient_descent(feat, nrow, buckets, steps, eta)
+    return _lr_logits(feat, w).select(
+        "doc_id",
         "is_target",
         F.round(_lr_sigmoid(F.col("z")), 6).alias("score"),
         (F.col("z") > 0.0).alias("predicted"),
@@ -750,19 +732,19 @@ def _lr_sigmoid(z: Column) -> Column:
     return F.lit(0.5) + z / (F.lit(2.0) * (F.lit(1.0) + F.abs(z)))
 
 
-def _lr_logits(feat: DataFrame, w: DataFrame, id_col: str) -> DataFrame:
+def _lr_logits(feat: DataFrame, w: DataFrame) -> DataFrame:
     """Per-doc logit under model ``w``: ONE broadcast join of the
     (buckets+1)-row model + one LR_Q-quantized BIGINT fold (order-proof)."""
     return (
         feat.join(F.broadcast(w), "bucket")
-        .groupBy(id_col, "is_target")
+        .groupBy("doc_id", "is_target")
         .agg(
             F.sum(
                 F.round(F.col("xs") * F.col("w") * LR_Q, 0).cast("long")
             ).alias("zq")
         )
         .select(
-            id_col,
+            "doc_id",
             "is_target",
             (F.col("zq").cast("double") / F.lit(float(LR_Q))).alias("z"),
         )
@@ -773,8 +755,6 @@ def _lr_features(
     docs: DataFrame,
     label: Column,
     buckets: int,
-    id_col: str,
-    text_col: str,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Shared feature build for `token_lr_classifier`/`token_lr_train`:
     returns (feat, n_docs, stats) — the lineage-cut dense standardized
@@ -788,14 +768,12 @@ def _lr_features(
         % buckets
     )
     pairs = docs.select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok")
-    ).select(id_col, bucket.alias("bucket"))
-    counts = pairs.groupBy(id_col, "bucket").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    w_doc = Window.partitionBy(id_col)
+        F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("tok")
+    ).select("doc_id", bucket.alias("bucket"))
+    counts = pairs.groupBy("doc_id", "bucket").agg(F.count(F.lit(1)).alias("c"))
+    w_doc = Window.partitionBy("doc_id")
     sparse = counts.select(
-        id_col,
+        "doc_id",
         "bucket",
         (
             F.col("c").cast("double") / F.sum("c").over(w_doc).cast("double")
@@ -843,17 +821,17 @@ def _lr_features(
         )
     )
     # dense standardized frame: every (doc, bucket) pair + the bias row
-    labeled = docs.select(F.col(id_col), label.alias("is_target"))
+    labeled = docs.select(F.col("doc_id"), label.alias("is_target"))
     grid = labeled.crossJoin(
         F.broadcast(
             spark.range(buckets).select(F.col("id").alias("bucket"))
         )
     )
     feat = (
-        grid.join(sparse, [id_col, "bucket"], "left")
+        grid.join(sparse, ["doc_id", "bucket"], "left")
         .join(F.broadcast(stats), "bucket")
         .select(
-            id_col,
+            "doc_id",
             "is_target",
             "bucket",
             (
@@ -863,7 +841,7 @@ def _lr_features(
         )
         .unionByName(
             labeled.select(
-                id_col,
+                "doc_id",
                 "is_target",
                 F.lit(buckets).cast("bigint").alias("bucket"),
                 F.lit(1.0).alias("xs"),
@@ -885,7 +863,6 @@ def _lr_gradient_descent(
     buckets: int,
     steps: int,
     eta: float,
-    id_col: str,
 ) -> DataFrame:
     """``steps`` unrolled full-batch gradient iterations over the
     materialized feature frame; returns the trained (bucket, w) model,
@@ -895,15 +872,15 @@ def _lr_gradient_descent(
         F.col("id").alias("bucket"), F.lit(0.0).alias("w")
     )
     for _ in range(steps):
-        resid = _lr_logits(feat, w, id_col).select(
-            id_col,
+        resid = _lr_logits(feat, w).select(
+            "doc_id",
             (
                 F.when(F.col("is_target"), F.lit(1.0)).otherwise(F.lit(0.0))
                 - _lr_sigmoid(F.col("z"))
             ).alias("r"),
         )
         grad = (
-            feat.join(resid, id_col)
+            feat.join(resid, "doc_id")
             .groupBy("bucket")
             .agg(
                 F.sum(
@@ -944,8 +921,6 @@ def _lr_gradient_descent(
 def stopword_bucket_injectivity(
     docs: DataFrame,
     widths: tuple[int, ...],
-    stopwords: tuple[str, ...] = EN_STOPWORDS,
-    text_col: str = "text",
 ) -> DataFrame:
     """The r17 bucket-sweep's deployment rule, made an operator (r17
     VERDICT item 3): before training a hashed-feature classifier whose
@@ -979,10 +954,10 @@ def stopword_bucket_injectivity(
         "bigint"
     )
     vocab = (
-        docs.select(F.explode(tokens(F.col(text_col))).alias("tok"))
+        docs.select(F.explode(tokens(F.col("text"))).alias("tok"))
         .distinct()
         .select(
-            "tok", hash32.alias("h"), F.col("tok").isin(*stopwords).alias("is_stop")
+            "tok", hash32.alias("h"), F.col("tok").isin(*EN_STOPWORDS).alias("is_stop")
         )
     )
     per_width = vocab.select(
@@ -1029,8 +1004,6 @@ def token_lr_train(
     buckets: int = 64,
     steps: int = 4,
     eta: float = 4.0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """`token_lr_classifier`'s TRAINING half, split out for the
     build-once / score-many deployment (the `build_pq_index` →
@@ -1045,8 +1018,8 @@ def token_lr_train(
     broadcastable constant, a k-means-codebook analogue) and serve with
     `token_lr_score`; byte-identical scores to the train-inline
     classifier are guaranteed by the shared quantized folds."""
-    feat, nrow, stats = _lr_features(docs, label, buckets, id_col, text_col)
-    w = _lr_gradient_descent(feat, nrow, buckets, steps, eta, id_col)
+    feat, nrow, stats = _lr_features(docs, label, buckets)
+    w = _lr_gradient_descent(feat, nrow, buckets, steps, eta)
     return w.join(F.broadcast(stats), "bucket", "left").select(
         "bucket",
         "w",
@@ -1060,8 +1033,6 @@ def token_lr_score(
     model: DataFrame,
     label: Column,
     buckets: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     check_model: bool = True,
 ) -> DataFrame:
     """`token_lr_classifier`'s SERVING half: score ``docs`` under a
@@ -1100,20 +1071,18 @@ def token_lr_score(
         % buckets
     )
     pairs = docs.select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok")
-    ).select(id_col, bucket.alias("bucket"))
-    counts = pairs.groupBy(id_col, "bucket").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    w_doc = Window.partitionBy(id_col)
+        F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("tok")
+    ).select("doc_id", bucket.alias("bucket"))
+    counts = pairs.groupBy("doc_id", "bucket").agg(F.count(F.lit(1)).alias("c"))
+    w_doc = Window.partitionBy("doc_id")
     sparse = counts.select(
-        id_col,
+        "doc_id",
         "bucket",
         (
             F.col("c").cast("double") / F.sum("c").over(w_doc).cast("double")
         ).alias("x"),
     )
-    labeled = docs.select(F.col(id_col), label.alias("is_target"))
+    labeled = docs.select(F.col("doc_id"), label.alias("is_target"))
     # SPARSE fold, bit-identical to the dense one (the docstring's 100 TB
     # shape, made exact): the dense zq is Σ_b round(xs_b·w_b·Q) + bias
     # with xs_b = (x_b − mu_b)/sd_b and x_b = 0 for absent buckets. Each
@@ -1136,7 +1105,7 @@ def token_lr_score(
     )
     deltas = (
         sparse.join(F.broadcast(model), "bucket")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum(
                 F.round(
@@ -1150,10 +1119,10 @@ def token_lr_score(
         )
     )
     z = (
-        labeled.join(deltas, id_col, "left")
+        labeled.join(deltas, "doc_id", "left")
         .crossJoin(F.broadcast(z0))
         .select(
-            id_col,
+            "doc_id",
             "is_target",
             (
                 (F.coalesce(F.col("dq"), F.lit(0)) + F.col("z0q"))
@@ -1163,7 +1132,7 @@ def token_lr_score(
         )
     )
     return z.select(
-        id_col,
+        "doc_id",
         "is_target",
         F.round(_lr_sigmoid(F.col("z")), 6).alias("score"),
         (F.col("z") > 0.0).alias("predicted"),

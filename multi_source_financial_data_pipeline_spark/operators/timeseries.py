@@ -53,29 +53,21 @@ def rolling_std(value: Column, w_frame, n: int) -> Column:
     return F.when(F.count(value).over(w_frame) == n, F.stddev_samp(value).over(w_frame))
 
 
-def trailing_range_frame(key: str, ts_numeric_col: str, lookback):
+def trailing_range_frame(lookback):
     """Event-time trailing window as a RANGE frame: every row aggregates the
-    rows whose order value lies in ``[ts - lookback, ts]`` — irregular
+    rows whose ``ts_us`` lies in ``[ts_us - lookback, ts_us]`` — irregular
     sampling handled by the frame itself, no calendar spine, no self-join.
 
-    Same scale shape as any window: one hash exchange on `key` + one sort per
+    Same scale shape as any window: one hash exchange on ``user_id`` + one sort per
     partition; the range frame is evaluated by a sliding pointer pass, so cost
     stays O(rows in partition), not O(rows × frame width). The order column
     must be numeric (epoch micros) — Spark range frames don't take intervals
     over timestamps directly.
     """
-    return (
-        Window.partitionBy(key).orderBy(ts_numeric_col).rangeBetween(-lookback, 0)
-    )
+    return (Window.partitionBy("user_id").orderBy("ts_us").rangeBetween(-lookback, 0))
 
 
-def gap_fill_daily(
-    df: DataFrame,
-    key: str,
-    date_col: str,
-    value_col: str,
-    order_cols: Sequence[str],
-) -> DataFrame:
+def gap_fill_daily(df: DataFrame) -> DataFrame:
     """Regularize an irregular per-key daily series: keep the last observation
     per (key, day), generate each key's full calendar spine between its first
     and last observed day, and forward-fill values across unobserved days
@@ -89,8 +81,8 @@ def gap_fill_daily(
     starts at an observation (always true: the span is [min obs, max obs])
     have no leading nulls, so the fill is total.
     """
-    w_last = Window.partitionBy(key, date_col).orderBy(
-        *[F.col(c).desc() for c in order_cols]
+    w_last = Window.partitionBy("user_id", "date").orderBy(
+        F.col("ts").desc(), F.col("event_id").desc()
     )
     # the key is renamed on this leg: spine and daily share lineage, and a
     # same-attribute `spine[key] == daily[key]` makes Spark construct (and
@@ -99,45 +91,39 @@ def gap_fill_daily(
         df.withColumn("__rn", F.row_number().over(w_last))
         .filter(F.col("__rn") == 1)
         .select(
-            F.col(key).alias("__k"),
-            F.col(date_col).alias("obs_date"),
-            F.col(value_col).alias("__v"),
+            F.col("user_id").alias("__k"),
+            F.col("date").alias("obs_date"),
+            F.col("value").alias("__v"),
         )
     )
-    bounds = daily.groupBy(F.col("__k").alias(key)).agg(
+    bounds = daily.groupBy(F.col("__k").alias("user_id")).agg(
         F.min("obs_date").alias("min_date"), F.max("obs_date").alias("max_date")
     )
     spine = bounds.select(
-        key,
+        "user_id",
         F.explode(
             F.sequence(F.col("min_date"), F.col("max_date"), F.expr("interval 1 day"))
         ).alias("cal_date"),
     )
     joined = spine.join(
         daily,
-        (F.col(key) == F.col("__k")) & (F.col("cal_date") == F.col("obs_date")),
+        (F.col("user_id") == F.col("__k")) & (F.col("cal_date") == F.col("obs_date")),
         "left",
-    ).select(key, "cal_date", "obs_date", "__v")
+    ).select("user_id", "cal_date", "obs_date", "__v")
     w_fill = (
-        Window.partitionBy(key)
+        Window.partitionBy("user_id")
         .orderBy("cal_date")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     return joined.select(
-        key,
+        "user_id",
         "cal_date",
         F.last("__v", ignorenulls=True).over(w_fill).alias("value_filled"),
         F.col("obs_date").isNotNull().cast("int").alias("is_observed"),
     )
 
 
-def gap_fill_interp(
-    df: DataFrame,
-    key: str,
-    date_col: str,
-    value_col: str,
-    order_cols: Sequence[str],
-) -> DataFrame:
+def gap_fill_interp(df: DataFrame) -> DataFrame:
     """Linear interpolation across unobserved days — `gap_fill_daily`'s
     ``pandas interpolate(method='time')`` sibling: each gap day takes
     prev + (next − prev) · (days since prev) / (days between anchors).
@@ -148,39 +134,39 @@ def gap_fill_interp(
     interpolation is total. Interpolated values are rounded at 6 on both
     engines (the anchors sit on the 2-decimal grid; the fraction divides
     exact day counts)."""
-    w_last = Window.partitionBy(key, date_col).orderBy(
-        *[F.col(c).desc() for c in order_cols]
+    w_last = Window.partitionBy("user_id", "date").orderBy(
+        F.col("ts").desc(), F.col("event_id").desc()
     )
     daily = (
         df.withColumn("__rn", F.row_number().over(w_last))
         .filter(F.col("__rn") == 1)
         .select(
-            F.col(key).alias("__k"),
-            F.col(date_col).alias("obs_date"),
-            F.col(value_col).alias("__v"),
+            F.col("user_id").alias("__k"),
+            F.col("date").alias("obs_date"),
+            F.col("value").alias("__v"),
         )
     )
-    bounds = daily.groupBy(F.col("__k").alias(key)).agg(
+    bounds = daily.groupBy(F.col("__k").alias("user_id")).agg(
         F.min("obs_date").alias("min_date"), F.max("obs_date").alias("max_date")
     )
     spine = bounds.select(
-        key,
+        "user_id",
         F.explode(
             F.sequence(F.col("min_date"), F.col("max_date"), F.expr("interval 1 day"))
         ).alias("cal_date"),
     )
     joined = spine.join(
         daily,
-        (F.col(key) == F.col("__k")) & (F.col("cal_date") == F.col("obs_date")),
+        (F.col("user_id") == F.col("__k")) & (F.col("cal_date") == F.col("obs_date")),
         "left",
-    ).select(key, "cal_date", "obs_date", "__v")
+    ).select("user_id", "cal_date", "obs_date", "__v")
     w_fwd = (
-        Window.partitionBy(key)
+        Window.partitionBy("user_id")
         .orderBy("cal_date")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     w_bwd = (
-        Window.partitionBy(key)
+        Window.partitionBy("user_id")
         .orderBy("cal_date")
         .rowsBetween(0, Window.unboundedFollowing)
     )
@@ -195,7 +181,7 @@ def gap_fill_interp(
         F.col("obs_date").isNotNull(), F.col("__v")
     ).otherwise(F.round(prev_v + (next_v - prev_v) * frac, 6))
     return joined.select(
-        key,
+        "user_id",
         "cal_date",
         interp.alias("value_interp"),
         F.col("obs_date").isNotNull().cast("int").alias("is_observed"),
@@ -209,26 +195,25 @@ def timeseries_features(
     value: str = "close",
     ma_windows: Sequence[int] = (20, 50),
     vol_window: int = 20,
-    ret_col: str = "ret",
 ) -> DataFrame:
     """transform() parity (src/pipeline.py:78-91): return + moving averages +
     rolling volatility per key, ordered by `order` (pass a tiebreaker column
     for deterministic results when the order key can repeat)."""
     w = Window.partitionBy(key).orderBy(*order)
-    out = df.withColumn(ret_col, pct_change(F.col(value), w))
+    out = df.withColumn("ret", pct_change(F.col(value), w))
     for n in ma_windows:
         frame = w.rowsBetween(-(n - 1), 0)
         out = out.withColumn(f"ma{n}", rolling_mean(F.col(value), frame, n))
     vol_frame = w.rowsBetween(-(vol_window - 1), 0)
     out = out.withColumn(
-        f"vol{vol_window}", rolling_std(F.col(ret_col), vol_frame, vol_window)
+        f"vol{vol_window}", rolling_std(F.col("ret"), vol_frame, vol_window)
     )
     return out
 
 
-def checked_decimal(v: Column, context: str, dtype: str = "decimal(18,2)") -> Column:
-    """``v`` cast to ``dtype`` with a LOUD overflow, independent of the
-    session's ``spark.sql.ansi.enabled`` (r12 ADVICE): the cast is
+def checked_decimal(v: Column, context: str) -> Column:
+    """``v`` cast to ``decimal(18,2)`` with a LOUD overflow, independent of the
+    session's ``spark.sql.ansi.enabled``: the cast is
     ``try_cast`` plus an explicit ``raise_error`` when a non-null input
     came back NULL (i.e. out of range). Under ``ansi=false`` a plain CAST
     would return NULL and silently drop the row from downstream exact
@@ -237,26 +222,21 @@ def checked_decimal(v: Column, context: str, dtype: str = "decimal(18,2)") -> Co
     `resample_bars` and the streaming bar aggregation
     (`plans/mmstream.q_stream_bars_ohlc_wm` — ``raise_error`` is legal
     inside streaming aggregates), so the two bar paths cannot drift."""
-    dec = v.try_cast(dtype)
+    dec = v.try_cast("decimal(18,2)")
     return F.when(
         v.isNotNull() & dec.isNull(),
         F.raise_error(
             F.concat(
-                F.lit(f"{context}: value out of {dtype.upper()} range: "),
+                F.lit(f"{context}: value out of DECIMAL(18,2) range: "),
                 v.cast("string"),
             )
-        ).cast(dtype),
+        ).cast("decimal(18,2)"),
     ).otherwise(dec)
 
 
 def resample_bars(
     df: DataFrame,
-    key_cols: str | Sequence[str],
-    ts_col: str,
-    value_col: str,
     interval: str | int,
-    tiebreak_cols: Sequence[str] = (),
-    bar_col: str = "bar_ts",
     exact_sum: bool = True,
 ) -> DataFrame:
     """Downsample an irregular per-key series to OHLC bars of arbitrary
@@ -275,7 +255,7 @@ def resample_bars(
     `atr_wilder`): those materialize one key's FULL history per task and
     refuse above ``GROUPED_FOLD_MAX_ROWS``; resampling first bounds the
     per-key series to ``#bars`` rows (fold the ``close_value`` column,
-    ordered by ``bar_col``). Crucially the pre-step itself is SKEW-IMMUNE
+    ordered by ``bar_ts``). Crucially the pre-step itself is SKEW-IMMUNE
     where the fold is not: both the tagging window and the aggregate
     partition by ``(key, bar)``, so a single 10-billion-row key spreads
     across its bars instead of landing on one task.
@@ -283,14 +263,14 @@ def resample_bars(
     Plan shape (one exchange): the bar key is projected FIRST so the
     window partitioning and the final groupBy share the exact same
     attribute; a row_number pair tags each bar's first/last observation
-    (ties broken on ``tiebreak_cols``, the explicit ingest order), then a
+    (ties broken on ``event_id``, the explicit ingest order), then a
     groupBy on the SAME keys folds open/high/low/close/count/sum —
     Catalyst reuses the window's hash partitioning.
 
     ``exact_sum=True`` sums through DECIMAL(18,2) (bit-exact across
     engines for 2-dp inputs, the registry's oracle discipline; 18,2
     rather than 12,2 so |value| up to 1e16 casts losslessly). A value
-    beyond that range FAILS LOUDLY on both engines (r12 ADVICE): the
+    beyond that range FAILS LOUDLY on both engines: the
     cast is ``try_cast`` plus an explicit ``raise_error`` on a non-null
     input that didn't fit, so the overflow contract no longer depends on
     the session's ``spark.sql.ansi.enabled`` — under ``ansi=false`` a
@@ -298,46 +278,37 @@ def resample_bars(
     ``sum_value`` while the DuckDB oracle raises. ``exact_sum=False``
     keeps a plain double sum (cheaper, order-dependent rounding).
     """
-    keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     if isinstance(interval, int):
         if interval <= 0:
             raise ValueError(f"interval seconds must be positive: {interval}")
         bar = F.timestamp_seconds(
-            F.floor(F.unix_timestamp(F.col(ts_col)) / F.lit(interval)).cast(
-                "long"
-            )
+            F.floor(F.unix_timestamp(F.col("ts")) / F.lit(interval)).cast("long")
             * F.lit(interval)
         )
     else:
-        bar = F.date_trunc(interval, F.col(ts_col))
-    base = df.select(
-        *keys,
-        bar.alias(bar_col),
-        ts_col,
-        *tiebreak_cols,
-        value_col,
+        bar = F.date_trunc(interval, F.col("ts"))
+    base = df.select("user_id", bar.alias("bar_ts"), "ts", "event_id", "value")
+    w_asc = Window.partitionBy("user_id", "bar_ts").orderBy(
+        F.col("ts").asc(), F.col("event_id").asc()
     )
-    order_asc = [F.col(ts_col).asc()] + [F.col(c).asc() for c in tiebreak_cols]
-    order_desc = [F.col(ts_col).desc()] + [
-        F.col(c).desc() for c in tiebreak_cols
-    ]
-    w_asc = Window.partitionBy(*keys, bar_col).orderBy(*order_asc)
-    w_desc = Window.partitionBy(*keys, bar_col).orderBy(*order_desc)
+    w_desc = Window.partitionBy("user_id", "bar_ts").orderBy(
+        F.col("ts").desc(), F.col("event_id").desc()
+    )
     tagged = base.select(
-        *keys,
-        bar_col,
-        value_col,
+        "user_id",
+        "bar_ts",
+        "value",
         F.row_number().over(w_asc).alias("__rn_a"),
         F.row_number().over(w_desc).alias("__rn_d"),
     )
-    v = F.col(value_col)
+    v = F.col("value")
     if exact_sum:
         sum_expr = F.sum(checked_decimal(v, "resample_bars exact_sum")).cast(
             "double"
         )
     else:
         sum_expr = F.sum(v)
-    return tagged.groupBy(*keys, bar_col).agg(
+    return tagged.groupBy("user_id", "bar_ts").agg(
         F.max(F.when(F.col("__rn_a") == 1, v)).alias("open_value"),
         F.max(v).alias("high_value"),
         F.min(v).alias("low_value"),

@@ -62,7 +62,6 @@ def count_where(cond: Column, name: str) -> Column:
 
 def pooled_zscore_outliers(
     df: DataFrame,
-    value: str,
     threshold: float = 6.0,
 ) -> DataFrame:
     """A4 (src/pipeline.py:62-63): |(x - mean) / std| > threshold with the
@@ -73,35 +72,29 @@ def pooled_zscore_outliers(
     are emitted so cross-engine float-summation-order differences can't
     perturb a hash comparison.
     """
-    stats = df.agg(
-        F.avg(value).alias("__mu"), F.stddev_samp(value).alias("__sigma")
-    )
+    stats = df.agg(F.avg("ret").alias("__mu"), F.stddev_samp("ret").alias("__sigma"))
     joined = df.join(F.broadcast(stats))  # scalar broadcast, no shuffle
-    z = (F.col(value) - F.col("__mu")) / F.col("__sigma")
+    z = (F.col("ret") - F.col("__mu")) / F.col("__sigma")
     return joined.agg(
         count_where(F.abs(z) > threshold, "n_outliers"),
-        F.count(F.col(value)).alias("n_total"),
+        F.count(F.col("ret")).alias("n_total"),
     )
 
 
-def business_day_calendar(
-    bounds: DataFrame, key: str, min_col: str = "min_date", max_col: str = "max_date"
-) -> DataFrame:
+def business_day_calendar(bounds: DataFrame, key: str) -> DataFrame:
     """F5 (src/pipeline.py:71): pd.bdate_range — Mon-Fri, deliberately no
     holiday calendar. One row per (key, business day in [min,max]])."""
     cal = bounds.select(
         key,
         F.explode(
-            F.sequence(F.col(min_col), F.col(max_col), F.expr("interval 1 day"))
+            F.sequence(F.col("min_date"), F.col("max_date"), F.expr("interval 1 day"))
         ).alias("cal_date"),
     )
     # Spark dayofweek: 1=Sunday .. 7=Saturday
     return cal.filter(~F.dayofweek("cal_date").isin(1, 7))
 
 
-def missing_business_days(
-    df: DataFrame, key: str, date_col: str = "date"
-) -> DataFrame:
+def missing_business_days(df: DataFrame, key: str) -> DataFrame:
     """A5 (src/pipeline.py:66-74): per key, business days between that key's
     min and max observed date with no row. Keys with zero gaps are retained
     with count 0 (the reference emits an entry per ticker).
@@ -115,10 +108,10 @@ def missing_business_days(
     # same-attribute `cal[key] == observed[key]` makes Spark construct (and
     # warn about) a trivially-true predicate before auto-disambiguating
     observed = df.select(
-        F.col(key).alias("__k"), F.col(date_col).alias("obs_date")
+        F.col(key).alias("__k"), F.col("date").alias("obs_date")
     ).distinct()
     bounds = df.groupBy(key).agg(
-        F.min(date_col).alias("min_date"), F.max(date_col).alias("max_date")
+        F.min("date").alias("min_date"), F.max("date").alias("max_date")
     )
     cal = business_day_calendar(bounds, key)
     missing = cal.join(
@@ -138,22 +131,21 @@ def snapshot_diff(
     old: DataFrame,
     new: DataFrame,
     key: Sequence[str],
-    fingerprint: str,
 ) -> DataFrame:
     """CDC-style snapshot diff: per-key status in {added, removed, changed,
     unchanged} from a full-outer join of two corpus snapshots on the key,
-    comparing a caller-supplied content fingerprint (md5 of the payload —
+    comparing the ``fp`` content fingerprint column (md5 of the payload —
     compare WIDE content by a constant-width digest, never by the payload
     itself).
 
-    Scale shape: both sides are pruned to (key, fingerprint) before the
+    Scale shape: both sides are pruned to (key, fp) before the
     join — the only wide thing ever shuffled is the digest — and the diff
     is ONE key-partitioned full-outer hash join, map-side prunable, no
     windows, no driver state. This is the incremental-ingest primitive: at
     100 TB you diff yesterday's manifest against today's and reprocess
     only 'added' + 'changed' keys instead of the corpus.
 
-    PRECONDITION (r14 ADVICE): the key must be UNIQUE within each
+    PRECONDITION: the key must be UNIQUE within each
     snapshot — duplicate keys fan out through the full-outer join and
     yield one status row per matched (old, new) pair, silently inflating
     downstream rollups. Callers with non-unique keys must pre-aggregate
@@ -162,8 +154,8 @@ def snapshot_diff(
     that is SUPPOSED to be keyed uniquely surfaces its duplication in
     the row counts instead of being papered over."""
     keys = list(key)
-    o = old.select(*keys, F.col(fingerprint).alias("__fp_old"))
-    n = new.select(*keys, F.col(fingerprint).alias("__fp_new"))
+    o = old.select(*keys, F.col("fp").alias("__fp_old"))
+    n = new.select(*keys, F.col("fp").alias("__fp_new"))
     status = (
         F.when(F.col("__fp_old").isNull(), F.lit("added"))
         .when(F.col("__fp_new").isNull(), F.lit("removed"))

@@ -48,7 +48,6 @@ class PipelineConfig:
     db_dir: str = "data"
     with_cross_validation: bool = True
     with_macro: bool = True
-    macro_categories: list[str] | None = None
 
 
 @dataclass
@@ -80,9 +79,7 @@ def validate(df: DataFrame) -> tuple[DataFrame, dict[str, Any]]:
 
     w = Window.partitionBy("ticker").orderBy("date")
     with_ret = clean.withColumn("ret", pct_change(F.col("close"), w))
-    extremes = validation.pooled_zscore_outliers(
-        with_ret, "ret", threshold=6.0
-    ).collect()[0]
+    extremes = validation.pooled_zscore_outliers(with_ret, threshold=6.0).collect()[0]
 
     missing = {
         r["ticker"]: r["missing_bdays"]

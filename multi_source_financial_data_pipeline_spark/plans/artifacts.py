@@ -264,16 +264,14 @@ def snap_base(docs: DataFrame) -> DataFrame:
     )
 
 
-def man_fold(rows: DataFrame, fp_col: str = "fp") -> DataFrame:
+def man_fold(rows: DataFrame) -> DataFrame:
     """The per-shard multiset fingerprint of (shard, doc_id, fp) rows:
     h2 = 32-bit md5 prefix of ``doc_id|fp``, folded per shard as
     (decimal sum, xor, count) and hashed. Emits (shard, n_docs,
     members_fp). Identical multisets always fold equal; different ones
     collide only if all three folds agree."""
     h2 = F.conv(
-        F.substring(
-            F.md5(F.concat_ws("|", F.col("doc_id"), F.col(fp_col))), 1, 8
-        ),
+        F.substring(F.md5(F.concat_ws("|", F.col("doc_id"), F.col("fp"))), 1, 8),
         16, 10,
     ).cast("bigint")
     agg = rows.select("shard", h2.alias("h2")).groupBy("shard").agg(
@@ -413,14 +411,12 @@ def bloom_filter(spark: SparkSession, sf_dir: str) -> str:
 
     def build(docs: DataFrame, out_dir: str) -> None:
         probe_grams = (
-            dedup.shingle_rows(
-                docs.filter(is_decon_probe()), "doc_id", "text", DECON_NGRAM
-            )
+            dedup.shingle_rows(docs.filter(is_decon_probe()), DECON_NGRAM)
             .select("s")
             .distinct()
         )
         dedup.bloom_build(
-            probe_grams, "s", BLOOM_M_BITS, BLOOM_K
+            probe_grams, BLOOM_M_BITS, BLOOM_K
         ).write.parquet(os.path.join(out_dir, "filter"))
 
     return ensure(spark, sf_dir, "documents", params, build)

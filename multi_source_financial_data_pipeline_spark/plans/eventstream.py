@@ -37,10 +37,6 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         left,
         right,
         key="user_id",
-        left_ts="ts",
-        right_ts="ts",
-        value_cols=["value"],
-        tiebreak="event_id",
     )
     return out.select(
         "event_id",
@@ -96,10 +92,6 @@ def q_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
         left,
         right,
         key="user_id",
-        left_ts="ts",
-        right_ts="ts",
-        value_cols=["value"],
-        tiebreak="event_id",
     )
     ts_us = F.unix_micros(F.col("ts"))
     in_tol = F.col("asof_ts") >= ts_us - F.lit(ASOF_TOL_US)
@@ -149,10 +141,6 @@ GAP_SECONDS = 1800
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessions.session_stats(
         _events(spark, sf_dir),
-        key="user_id",
-        ts_col="ts",
-        tiebreak="event_id",
-        value_col="value",
         gap_seconds=GAP_SECONDS,
     )
 
@@ -184,13 +172,7 @@ FROM s2 GROUP BY user_id, session_id
 # --- time-bucket rollup: hourly continuous aggregate per event type ----------
 
 def q_time_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sessions.time_bucket_rollup(
-        _events(spark, sf_dir),
-        ts_col="ts",
-        bucket="hour",
-        group_cols=["event_type"],
-        value_col="value",
-    )
+    return sessions.time_bucket_rollup(_events(spark, sf_dir))
 
 
 SQL_TIME_BUCKET = """
@@ -212,7 +194,6 @@ def q_skewed_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs."""
     return skew.salted_agg(
         _events(spark, sf_dir),
-        ["event_type"],
         {
             "n_events": ("count", F.lit(1)),
             "sum_value": ("sum", F.col("value").cast("decimal(12,2)")),
@@ -242,7 +223,6 @@ _EWMA_B = 1.0 - EWMA_ALPHA
 def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = grouped.ewma_last(
         _events(spark, sf_dir),
-        key="user_id",
         ts_col="ts",
         tiebreak="event_id",
         value_col="value",
@@ -287,10 +267,7 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         errors,
         purchases,
         key="user_id",
-        left_ts="ts",
-        right_ts="ts",
         tolerance_us=RANGE_TOL_US,
-        right_cols=["value"],
     )
     return pairs.groupBy("event_id", "user_id").agg(
         F.count(F.lit(1)).alias("n_nearby"),
@@ -905,7 +882,6 @@ _MACD_BG = 1.0 - _MACD_AG
 def q_macd_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = grouped.macd_last(
         _events(spark, sf_dir),
-        key="user_id",
         ts_col="ts",
         tiebreak="event_id",
         value_col="value",
@@ -1135,9 +1111,7 @@ FROM k GROUP BY 1
 def _sql_zorder_locality() -> str:
     from multi_source_financial_data_pipeline_spark.operators.layout import zorder_key_sql
 
-    return SQL_ZORDER_LOCALITY.replace(
-        "{zkey}", zorder_key_sql("ua", "di", bits=Z_BITS)
-    )
+    return SQL_ZORDER_LOCALITY.replace("{zkey}", zorder_key_sql(bits=Z_BITS))
 
 
 # --- SCD2: type-2 slowly-changing-dimension intervals from the event log ----

@@ -128,7 +128,7 @@ def q_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("value", 1).over(w)
     ret = ev.withColumn("ret", F.col("value") / F.nullif(prev, F.lit(0.0)) - 1)
-    return validation.pooled_zscore_outliers(ret, "ret", threshold=3.0)
+    return validation.pooled_zscore_outliers(ret, threshold=3.0)
 
 
 SQL_ZSCORE_OUTLIERS = """
@@ -147,7 +147,7 @@ FROM base
 
 def q_missing_bdays(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").withColumn("date", F.to_date("ts"))
-    return validation.missing_business_days(ev, "user_id", "date")
+    return validation.missing_business_days(ev, "user_id")
 
 
 SQL_MISSING_BDAYS = """
@@ -176,9 +176,7 @@ GROUP BY bo.user_id
 
 def q_series_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").withColumn("date", F.to_date("ts"))
-    return series_stats.per_series_summary(
-        ev, series_col="event_type", date_col="date", value_col="value"
-    )
+    return series_stats.per_series_summary(ev, series_col="event_type")
 
 
 SQL_SERIES_SUMMARY = """
@@ -195,9 +193,7 @@ FROM events GROUP BY event_type
 
 def q_global_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").withColumn("date", F.to_date("ts"))
-    return series_stats.global_summary(
-        ev, series_col="event_type", date_col="date", value_col="value"
-    )
+    return series_stats.global_summary(ev, series_col="event_type")
 
 
 SQL_GLOBAL_SUMMARY = """
@@ -419,9 +415,7 @@ def q_ledger_latest_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").withColumn(
         "o_orderdate", F.to_date("o_orderdate")
     )
-    latest = series_stats.latest_per_key(
-        orders, "o_custkey", ["o_orderdate", "o_orderkey"]
-    )
+    latest = series_stats.latest_per_key(orders)
     return latest.select(
         "o_custkey",
         F.col("o_orderkey").alias("latest_orderkey"),
@@ -466,9 +460,7 @@ def q_return_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy("event_type").orderBy("date")
     r = daily.withColumn("ret", pct_change(F.col("px"), w))
-    return series_stats.return_correlation_matrix(
-        r, series_col="event_type", date_col="date", ret_col="ret"
-    )
+    return series_stats.return_correlation_matrix(r)
 
 
 SQL_RETURN_CORRELATION = """
@@ -496,10 +488,7 @@ def q_vol_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership decision taken on 6-decimal-rounded statistics on both
     engines."""
     ev = load_table(spark, sf_dir, "events")
-    out = series_stats.rolling_vol_outliers(
-        ev, key="user_id", order=["ts", "event_id"], value_col="value",
-        window_n=20, sigmas=3.0,
-    )
+    out = series_stats.rolling_vol_outliers(ev)
     return out.select("event_id", "user_id", "ret", "ma_ret", "vol")
 
 
@@ -659,7 +648,7 @@ def q_trailing_7d_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     (DuckDB windows aggregate via segment trees — float order differs).
     """
     ev = load_table(spark, sf_dir, "events").withColumn("ts_us", F.unix_micros(F.col("ts")))
-    w = trailing_range_frame("user_id", "ts_us", _7D_US)
+    w = trailing_range_frame(_7D_US)
     return ev.select(
         "event_id",
         "user_id",
@@ -689,9 +678,7 @@ def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from 2-row bounds (sequence + explode) — never collected, never a
     calendar-table join; fill is one unbounded-preceding window pass."""
     ev = load_table(spark, sf_dir, "events").withColumn("date", F.to_date("ts"))
-    return gap_fill_daily(
-        ev, "user_id", "date", "value", order_cols=("ts", "event_id")
-    )
+    return gap_fill_daily(ev)
 
 
 SQL_GAP_FILL = """
@@ -728,9 +715,7 @@ def q_gap_fill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").withColumn("date", F.to_date("ts"))
     from multi_source_financial_data_pipeline_spark.operators.timeseries import gap_fill_interp
 
-    return gap_fill_interp(
-        ev, "user_id", "date", "value", order_cols=("ts", "event_id")
-    )
+    return gap_fill_interp(ev)
 
 
 SQL_GAP_FILL_INTERP = """
@@ -974,11 +959,7 @@ def q_bars_4h(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole multiples of 14400) — no timestamp/timezone surface."""
     bars = resample_bars(
         load_table(spark, sf_dir, "events"),
-        "user_id",
-        "ts",
-        "value",
         BAR_4H_SECONDS,
-        ("event_id",),
     )
     return bars.select(
         "user_id",
@@ -1274,7 +1255,6 @@ _W_LO = repr(float(RSI_N))  # 14.0
 def q_rsi_wilder(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = grouped.rsi_wilder_last(
         load_table(spark, sf_dir, "events"),
-        key="user_id",
         ts_col="ts",
         tiebreak="event_id",
         value_col="value",
@@ -1343,15 +1323,10 @@ def q_rsi_bars_4h(spark: SparkSession, sf_dir: str) -> DataFrame:
     EWMA fold over the same bar-ordered list."""
     bars = resample_bars(
         load_table(spark, sf_dir, "events"),
-        "user_id",
-        "ts",
-        "value",
         BAR_4H_SECONDS,
-        ("event_id",),
     )
     out = grouped.rsi_wilder_last(
         bars,
-        key="user_id",
         ts_col="bar_ts",
         tiebreak=None,  # bar_ts is unique per (key, bar) by construction
         value_col="close_value",
@@ -1425,9 +1400,7 @@ def q_atr_wilder(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.greatest(h - low, F.abs(h - prev_close), F.abs(low - prev_close))
     )
     with_tr = bars.select("user_id", "day", tr.alias("tr"))
-    out = grouped.wilder_last(
-        with_tr, key="user_id", order_col="day", value_col="tr", n=ATR_N
-    )
+    out = grouped.wilder_last(with_tr, value_col="tr", n=ATR_N)
     return out.select(
         F.col("key").alias("user_id"),
         F.col("n_rows").alias("n_bars"),

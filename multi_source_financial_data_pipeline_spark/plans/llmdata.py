@@ -85,10 +85,10 @@ def _sql_dot(a: str, b: str, width: int | None = None) -> str:
     return f"(0.0 + {terms})"
 
 
-def _sql_cos(a: str, b: str) -> str:
+def _sql_cos(b: str) -> str:
     return (
-        f"({_sql_dot(a, b)}"
-        f" / nullif(sqrt({_sql_dot(a, a)} * {_sql_dot(b, b)}), 0))"
+        f"({_sql_dot('qv', b)}"
+        f" / nullif(sqrt({_sql_dot('qv', 'qv')} * {_sql_dot(b, b)}), 0))"
     )
 
 
@@ -159,7 +159,7 @@ SAMPLE_RATES = {"en": 1.0, "de": 0.5, "fr": 0.5, "es": 0.25, "zh": 0.25}
 
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampling.stratified_sample(
-        load_table(spark, sf_dir, "documents"), "lang", SAMPLE_RATES
+        load_table(spark, sf_dir, "documents"), SAMPLE_RATES
     ).select("doc_id", "lang", "source")
 
 
@@ -167,7 +167,7 @@ SQL_STRATIFIED_SAMPLE = f"""
 SELECT doc_id, lang, source
 FROM documents
 WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT / 4294967296.0
-      < {sampling.sample_rate_sql("lang", SAMPLE_RATES)}
+      < {sampling.sample_rate_sql(SAMPLE_RATES)}
 """
 
 
@@ -346,9 +346,9 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_cms_hash(tok: str, salt: int) -> str:
+def _sql_cms_hash(salt: int) -> str:
     return (
-        f"(('0x' || substr(md5('cms{salt}|' || {tok}), 1, 8))::BIGINT"
+        f"(('0x' || substr(md5('cms{salt}|' || tok), 1, 8))::BIGINT"
         f" % {CMS_W})"
     )
 
@@ -358,7 +358,7 @@ WITH toks AS (
   SELECT unnest({_SQL_TOKS}) AS tok FROM documents
 ), rows_ AS (
   SELECT tok, j,
-         CASE j {' '.join(f"WHEN {j} THEN {_sql_cms_hash('tok', j)}" for j in range(CMS_D))} END AS bucket
+         CASE j {' '.join(f"WHEN {j} THEN {_sql_cms_hash(j)}" for j in range(CMS_D))} END AS bucket
   FROM toks, unnest(generate_series(0, {CMS_D - 1})) t(j)
 ), cms AS (
   SELECT j, bucket, count(*) AS c FROM rows_ GROUP BY j, bucket
@@ -367,7 +367,7 @@ WITH toks AS (
   ORDER BY n_exact DESC, tok ASC LIMIT {CMS_TOP}
 ), probes AS (
   SELECT tok, n_exact, j,
-         CASE j {' '.join(f"WHEN {j} THEN {_sql_cms_hash('tok', j)}" for j in range(CMS_D))} END AS bucket
+         CASE j {' '.join(f"WHEN {j} THEN {_sql_cms_hash(j)}" for j in range(CMS_D))} END AS bucket
   FROM exact, unnest(generate_series(0, {CMS_D - 1})) t(j)
 )
 SELECT p.tok, CAST(p.n_exact AS BIGINT) AS n_exact,
@@ -565,9 +565,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs within each block."""
     docs = load_table(spark, sf_dir, "documents")
     sig = dedup.minhash_signatures(docs, num_hashes=1)
-    return dedup.ngram_jaccard_pairs(
-        sig, block_col="mh0", threshold=JACCARD_THRESHOLD
-    )
+    return dedup.ngram_jaccard_pairs(sig, threshold=JACCARD_THRESHOLD)
 
 
 SQL_NGRAM_JACCARD_PAIRS = f"""
@@ -753,7 +751,7 @@ def q_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode path, not 8 redundant digests per shingle
     payload = docs.select(
         F.col("doc_id"),
-        dedup.shingles(F.col("text"), 3).alias("sh"),
+        dedup.shingles(F.col("text")).alias("sh"),
     ).select(
         "doc_id",
         "sh",
@@ -847,7 +845,7 @@ def q_quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (stage, n_docs) rows. Counts are integers — engine-exact by
     construction."""
     docs = load_table(spark, sf_dir, "documents")
-    quality = text.quality_columns("text")["quality_score"]
+    quality = text.quality_columns()["quality_score"]
     fp = F.md5(F.concat_ws(" ", text.tokens(F.lower(F.col("text")))))
     flagged = docs.select(
         F.col("doc_id"),
@@ -1149,7 +1147,7 @@ def q_curation_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(~F.col("is_dup"))
         .select("doc_id")
     )
-    qc = text.quality_columns("text")
+    qc = text.quality_columns()
     metrics = docs.select(
         "doc_id",
         qc["n_tokens"].alias("n_tokens"),
@@ -2034,14 +2032,12 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     is_probe = artifacts.is_decon_probe()
     probe_grams = (
-        dedup.shingle_rows(docs.filter(is_probe), "doc_id", "text", DECON_NGRAM)
+        dedup.shingle_rows(docs.filter(is_probe), DECON_NGRAM)
         .select("s")
         .distinct()
     )
-    corpus_grams = dedup.shingle_rows(
-        docs.filter(~is_probe), "doc_id", "text", DECON_NGRAM
-    ).distinct()
-    bloom = dedup.bloom_build(probe_grams, "s", BLOOM_M_BITS, BLOOM_K)
+    corpus_grams = dedup.shingle_rows(docs.filter(~is_probe), DECON_NGRAM).distinct()
+    bloom = dedup.bloom_build(probe_grams, BLOOM_M_BITS, BLOOM_K)
     probed = corpus_grams.crossJoin(F.broadcast(bloom)).select(
         "doc_id",
         dedup.bloom_member(
@@ -2071,8 +2067,8 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_bloom_h(col: str, seed: int) -> str:
-    return f"('0x' || substr(md5('bloom{seed}|' || {col}), 1, 8))::BIGINT"
+def _sql_bloom_h(seed: int) -> str:
+    return f"('0x' || substr(md5('bloom{seed}|' || s), 1, 8))::BIGINT"
 
 
 SQL_BLOOM_DECONTAMINATE = f"""
@@ -2088,7 +2084,7 @@ WITH g AS (
   SELECT doc_id, s FROM g
   WHERE NOT (doc_id % {DECON_PROBE_MOD} = 0 AND doc_id < {DECON_PROBE_CAP})
 ), bpos AS (
-  SELECT ({_sql_bloom_h('s', 1)} + j * {_sql_bloom_h('s', 2)}) % {BLOOM_M_BITS} AS p
+  SELECT ({_sql_bloom_h(1)} + j * {_sql_bloom_h(2)}) % {BLOOM_M_BITS} AS p
   FROM probe, unnest(generate_series(0, {BLOOM_K - 1})) t(j)
 ), words AS (
   SELECT p // 32 AS widx,
@@ -2100,7 +2096,7 @@ WITH g AS (
                    & (CAST(1 AS BIGINT) << CAST(c.p % 32 AS INTEGER))) <> 0) AS hit
   FROM (
     SELECT doc_id, s,
-           ({_sql_bloom_h('s', 1)} + j * {_sql_bloom_h('s', 2)}) % {BLOOM_M_BITS} AS p
+           ({_sql_bloom_h(1)} + j * {_sql_bloom_h(2)}) % {BLOOM_M_BITS} AS p
     FROM corpus, unnest(generate_series(0, {BLOOM_K - 1})) t(j)
   ) c LEFT JOIN words w ON w.widx = c.p // 32
   GROUP BY doc_id, s
@@ -2140,9 +2136,7 @@ def q_bloom_decontaminate_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     bloom = spark.read.parquet(os.path.join(filter_dir, "filter"))
     docs = load_table(spark, sf_dir, "documents")
     is_probe = artifacts.is_decon_probe()
-    corpus_grams = dedup.shingle_rows(
-        docs.filter(~is_probe), "doc_id", "text", DECON_NGRAM
-    ).distinct()
+    corpus_grams = dedup.shingle_rows(docs.filter(~is_probe), DECON_NGRAM).distinct()
     probed = corpus_grams.crossJoin(F.broadcast(bloom)).select(
         "doc_id",
         dedup.bloom_member(
@@ -2172,7 +2166,7 @@ WITH g AS (
   SELECT doc_id, s FROM g
   WHERE NOT (doc_id % {DECON_PROBE_MOD} = 0 AND doc_id < {DECON_PROBE_CAP})
 ), bpos AS (
-  SELECT ({_sql_bloom_h('s', 1)} + j * {_sql_bloom_h('s', 2)}) % {BLOOM_M_BITS} AS p
+  SELECT ({_sql_bloom_h(1)} + j * {_sql_bloom_h(2)}) % {BLOOM_M_BITS} AS p
   FROM probe, unnest(generate_series(0, {BLOOM_K - 1})) t(j)
 ), words AS (
   SELECT p // 32 AS widx,
@@ -2184,7 +2178,7 @@ WITH g AS (
                    & (CAST(1 AS BIGINT) << CAST(c.p % 32 AS INTEGER))) <> 0) AS hit
   FROM (
     SELECT doc_id, s,
-           ({_sql_bloom_h('s', 1)} + j * {_sql_bloom_h('s', 2)}) % {BLOOM_M_BITS} AS p
+           ({_sql_bloom_h(1)} + j * {_sql_bloom_h(2)}) % {BLOOM_M_BITS} AS p
     FROM corpus, unnest(generate_series(0, {BLOOM_K - 1})) t(j)
   ) c LEFT JOIN words w ON w.widx = c.p // 32
   GROUP BY doc_id, s
@@ -2225,7 +2219,7 @@ def q_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     new = base.filter(F.col("__h") % SNAP_NEW_MOD != SNAP_NEW_DROP).select(
         "doc_id", F.md5(new_text).alias("fp")
     )
-    st = validation.snapshot_diff(old, new, ["doc_id"], "fp")
+    st = validation.snapshot_diff(old, new, ["doc_id"])
     return (
         st.join(base.select("doc_id", "source", "__h"), "doc_id")
         .groupBy("source", "status")
@@ -2295,9 +2289,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     new = base.filter(F.col("__h") % SNAP_NEW_MOD != SNAP_NEW_DROP).select(
         "doc_id", "source", F.md5(new_text).alias("fp")
     )
-    st = validation.snapshot_diff(
-        old, new.select("doc_id", "fp"), ["doc_id"], "fp"
-    )
+    st = validation.snapshot_diff(old, new.select("doc_id", "fp"), ["doc_id"])
     tagged = new.join(st, "doc_id")
     delta = tagged.filter(F.col("status").isin("added", "changed"))
     existing = (
@@ -2393,27 +2385,24 @@ def q_dedup_after_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     size, never the corpus), and its pair work is LSH-banded within
     that slice."""
     docs = load_table(spark, sf_dir, "documents")
-    # ONE MinHash→LSH→verify pass (r18 VERDICT item 3; was two): the
-    # verified edge list is computed once, lineage-cut (both component
-    # passes and the endpoint restriction reference it), and the
-    # post-delete edge set is derived by RESTRICTION — shingles,
-    # signatures and band keys are per-doc functions, so candidates and
-    # Jaccard over the survivor subset equal the full-corpus values
-    # filtered to surviving endpoints (see `_neardup_edges`); exactness
-    # is pinned by test_dedup_after_delete_equals_global_recompute.
-    # The cut itself: when the edge list fits the session broadcast
-    # budget (the min_label_components rule — broadcast-size ⇒
-    # driver-collectable), materialize it as a local relation via ONE
-    # limit-probed collect; above the budget, localCheckpoint(eager=False),
-    # which with AQE on (the default) runs the edge pipeline's shuffle and
-    # broadcast stages at the call (creation alone measured ~0.9 s).
-    v = _neardup_edges(docs)
+    # ONE MinHash→LSH→verify pass: the verified edge list is computed
+    # once, lineage-cut (both component passes and the endpoint
+    # restriction reference it), and the post-delete edge set is derived
+    # by RESTRICTION — shingles, signatures and band keys are per-doc
+    # functions, so candidates and Jaccard over the survivor subset equal
+    # the full-corpus values filtered to surviving endpoints (see
+    # `_neardup_edges`); exactness is pinned by
+    # test_dedup_after_delete_equals_global_recompute.
+    # The cut runs the edge pipeline once; the size probe then reads the
+    # cut. When the edge list fits the session broadcast budget (the
+    # min_label_components rule — broadcast-size ⇒ driver-collectable),
+    # it becomes a local relation.
+    v = _neardup_edges(docs).localCheckpoint()
     _max_local = similarity._broadcast_bytes_threshold(spark) // 16
-    _head = v.limit(_max_local + 1).collect() if _max_local > 0 else None
-    if _head is not None and len(_head) <= _max_local:
-        v = local_frame(spark, _head, v.schema)
-    else:
-        v = v.localCheckpoint(eager=False)
+    if _max_local > 0:
+        _head = v.limit(_max_local + 1).collect()
+        if len(_head) <= _max_local:
+            v = local_frame(spark, _head, v.schema)
     state = _canon_from_edges(docs, v).select(
         "doc_id", F.col("canonical_id").alias("old_canonical")
     )
@@ -2687,7 +2676,7 @@ def q_manifest_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(in_dirty)
         .select("doc_id", F.col("fp_new").alias("fp"))
     )
-    st = validation.snapshot_diff(old_rows, new_rows, ["doc_id"], "fp")
+    st = validation.snapshot_diff(old_rows, new_rows, ["doc_id"])
     # shard is a pure row function of doc_id — re-derive, no extra join
     st_shard = st.select(
         (
@@ -2873,7 +2862,7 @@ def q_manifest_delta_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "fp")
     )
     new_rows = new_digests.filter(in_dirty).select("doc_id", "fp")
-    st = validation.snapshot_diff(old_rows, new_rows, ["doc_id"], "fp")
+    st = validation.snapshot_diff(old_rows, new_rows, ["doc_id"])
     st_shard = st.select(
         (
             F.conv(
@@ -3058,7 +3047,6 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         seq_len=SEQ_LEN,
         tokens=F.size(text.tokens(F.col("text"))),
         shard_col=["source", "shard"],
-        order_col="doc_id",
     )
 
 
@@ -3089,9 +3077,9 @@ FROM c
 KM_K = 16
 
 
-def _sql_sqd(a: str, b: str, width: int | None = None) -> str:
+def _sql_sqd(a: str, width: int | None = None) -> str:
     terms = " + ".join(
-        f"({a}[{i}] - {b}[{i}]) * ({a}[{i}] - {b}[{i}])"
+        f"({a}[{i}] - c.cv[{i}]) * ({a}[{i}] - c.cv[{i}])"
         for i in range(1, (width or EMB_DIM) + 1)
     )
     return f"(0.0 + {terms})"
@@ -3103,7 +3091,7 @@ def _sql_km_assign(name: str, cents: str) -> str:
     SELECT vec_id, v, cell, d,
            row_number() OVER (PARTITION BY vec_id
                               ORDER BY d ASC, cell ASC) AS rn
-    FROM (SELECT e.vec_id, e.v, c.cell, round({_sql_sqd('e.v', 'c.cv')}, 6) AS d
+    FROM (SELECT e.vec_id, e.v, c.cell, round({_sql_sqd('e.v')}, 6) AS d
           FROM e CROSS JOIN {cents} c)
   ) WHERE rn = 1
 )"""
@@ -3182,7 +3170,7 @@ def q_chunk_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     a second row-local tokenize pass for the spread branch. Never
     materializes a pair space; all shuffles are linear."""
     docs = load_table(spark, sf_dir, "documents")
-    toks, seq, chunk, chunk_toks = text.token_chunks("text", width=CHUNK_W)
+    toks, seq, chunk, chunk_toks = text.token_chunks(width=CHUNK_W)
     # tokenize ONCE per doc; the exploded chunk rows slice the materialized
     # __toks attribute (O(width) each) instead of re-splitting the document
     # per chunk — __toks stays inside the pre-exchange codegen stage and is
@@ -4405,7 +4393,7 @@ deq AS (
 q AS (SELECT vec_id AS query_id, dv AS qv FROM deq WHERE vec_id < {N_QUERIES}),
 scored AS (
   SELECT q.query_id, c.vec_id AS cand_id,
-         round({_sql_cos("qv", "c.dv")}, 6) AS cos_sim
+         round({_sql_cos("c.dv")}, 6) AS cos_sim
   FROM deq c JOIN q ON c.vec_id != q.query_id
 ),
 approx AS (
@@ -4475,7 +4463,7 @@ def _sql_pq_assign(
            row_number() OVER (PARTITION BY vec_id, s
                               ORDER BY d ASC, cell ASC) AS rn
     FROM (SELECT {src}.vec_id, {src}.s, {src}.sv, c.cell,
-                 round({_sql_sqd(f'{src}.sv', 'c.cv', sub)}, 6) AS d
+                 round({_sql_sqd(f'{src}.sv', sub)}, 6) AS d
           FROM {src} JOIN {cents} c ON {src}.s = c.s)
   ) WHERE rn = 1
 )"""
@@ -4907,12 +4895,12 @@ def q_ivfpq_residual_refined_recall(spark: SparkSession, sf_dir: str) -> DataFra
     return _recall_at_k(spark, sf_dir, approx)
 
 
-def _sql_sqsum(a: str, b: str, width: int | None = None) -> str:
-    """``Σ (a[i] + b[i])²`` in the module's unrolled left-fold term order
-    — the oracle twin of ``sq_norm(zip_with(a, b, +))`` (the residual
-    norm-LUT partial: |center_s + cv|²)."""
+def _sql_sqsum(width: int | None = None) -> str:
+    """``Σ (cs.csv[i] + pc.cv[i])²`` in the module's unrolled left-fold
+    term order — the oracle twin of ``sq_norm(zip_with(csv, cv, +))`` (the
+    residual norm-LUT partial: |center_s + cv|²)."""
     terms = " + ".join(
-        f"({a}[{i}] + {b}[{i}]) * ({a}[{i}] + {b}[{i}])"
+        f"(cs.csv[{i}] + pc.cv[{i}]) * (cs.csv[{i}] + pc.cv[{i}])"
         for i in range(1, (width or EMB_DIM) + 1)
     )
     return f"(0.0 + {terms})"
@@ -4954,7 +4942,7 @@ csub AS (
 ),
 nlutr AS (
   SELECT cs.ivf_cell, cs.s, pc.cell AS code,
-         {_sql_sqsum('cs.csv', 'pc.cv', _PQ_SUB)} AS np
+         {_sql_sqsum(_PQ_SUB)} AS np
   FROM csub cs JOIN pc2 pc ON pc.s = cs.s
 ),
 probes AS (
@@ -5075,7 +5063,7 @@ csub AS (
 ),
 nlutr AS (
   SELECT cs.ivf_cell, cs.s, pc.cell AS code,
-         {_sql_sqsum('cs.csv', 'pc.cv', _PQ_SUB)} AS np
+         {_sql_sqsum(_PQ_SUB)} AS np
   FROM csub cs JOIN pc2 pc ON pc.s = cs.s
 ),
 probes AS (

@@ -812,7 +812,7 @@ b AS (SELECT vec_id, v, {_sql_bucket(LSH_TOPK_PLANES)} AS bucket FROM e),
 q AS (SELECT vec_id AS query_id, v AS qv, bucket FROM b WHERE vec_id < {N_QUERIES}),
 scored AS (
   SELECT q.query_id, c.vec_id AS cand_id,
-         round({_sql_cos("qv", "c.v")}, 6) AS cos_sim
+         round({_sql_cos("c.v")}, 6) AS cos_sim
   FROM b c JOIN q ON c.bucket = q.bucket AND c.vec_id != q.query_id
 )
 SELECT query_id, cand_id, cos_sim, rank FROM (
@@ -992,7 +992,7 @@ def q_stream_dedup_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with _event_stream(spark, sf_dir) as stream:
         deduped = ingest.dedup_with_watermark(
-            stream, "ts", ["user_id", "event_type"], "1 day"
+            stream, ["user_id", "event_type"], "1 day"
         )
         with tempfile.TemporaryDirectory() as ckpt:
             ingest.run_available_now(deduped, ckpt, writer)
@@ -1135,11 +1135,6 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         classes = stateful.incremental_dedup_classes(
             keyed,
-            fp_col="fp",
-            ts_col="ts",
-            id_col="event_id",
-            carry_col="carry",
-            in_index_col="in_index",
             horizon_ms=STREAM_DEDUP_HORIZON_MS,
         )
         query = (
@@ -1426,7 +1421,7 @@ def q_stream_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = f"stream_totals_{next(_qname)}"
     with _event_stream(spark, sf_dir) as stream:
-        totals = stateful.running_totals(stream, "user_id", "value")
+        totals = stateful.running_totals(stream)
         query = (
             totals.writeStream.format("memory")
             .queryName(name)
@@ -1475,13 +1470,7 @@ def q_stream_scd2_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = f"stream_scd2_{next(_qname)}"
     with _event_stream(spark, sf_dir) as stream:
-        closed = stateful.scd2_closed_intervals(
-            stream,
-            key_col="user_id",
-            ts_col="ts",
-            tiebreak_col="event_id",
-            state_col="event_type",
-        )
+        closed = stateful.scd2_closed_intervals(stream)
         query = (
             closed.writeStream.format("memory")
             .queryName(name)
@@ -1615,7 +1604,6 @@ def q_stream_bars_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = grouped.rsi_wilder_last(
         bar_state,
-        key="user_id",
         ts_col="bar_ts",
         tiebreak=None,
         value_col="close_value",

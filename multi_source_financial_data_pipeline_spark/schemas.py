@@ -33,40 +33,6 @@ MARKET_OHLCV = T.StructType(
     ]
 )
 
-#: Market rows after validate()+transform() (src/pipeline.py:44-91).
-MARKET_FEATURES = T.StructType(
-    MARKET_OHLCV.fields
-    + [
-        T.StructField("ret", T.DoubleType(), True),
-        T.StructField("return", T.DoubleType(), True),
-        T.StructField("ma20", T.DoubleType(), True),
-        T.StructField("ma50", T.DoubleType(), True),
-        T.StructField("vol20", T.DoubleType(), True),
-        T.StructField("updated_at", T.TimestampType(), True),
-    ]
-)
-
-#: Secondary-source close series (src/validation.py:160-169).
-ALTSOURCE_CLOSE = T.StructType(
-    [
-        T.StructField("ticker", T.StringType(), False),
-        T.StructField("date", T.DateType(), False),
-        T.StructField("close", T.DoubleType(), True),
-        T.StructField("source", T.StringType(), False),
-    ]
-)
-
-#: Long-form macro series (src/macro.py:148-155, src/database.py:73-86).
-MACRO_SERIES = T.StructType(
-    [
-        T.StructField("series_id", T.StringType(), False),
-        T.StructField("date", T.DateType(), False),
-        T.StructField("value", T.DoubleType(), True),
-        T.StructField("series_name", T.StringType(), True),
-        T.StructField("category", T.StringType(), True),
-    ]
-)
-
 #: Request ledger (src/database.py:33-46). Append-only events; "current
 #: status" is a latest-per-request view (idiomatic Spark replaces UPDATE).
 REQUEST_LEDGER = T.StructType(
@@ -81,36 +47,6 @@ REQUEST_LEDGER = T.StructType(
         T.StructField("macro_records_fetched", T.LongType(), True),
         T.StructField("validation_performed", T.BooleanType(), True),
         T.StructField("error_count", T.LongType(), True),
-    ]
-)
-
-#: Cross-validation results (src/database.py:105-117).
-CROSS_VALIDATION = T.StructType(
-    [
-        T.StructField("validation_id", T.StringType(), False),
-        T.StructField("request_id", T.StringType(), False),
-        T.StructField("ticker", T.StringType(), False),
-        T.StructField("date", T.DateType(), False),
-        T.StructField("yahoo_close", T.DoubleType(), True),
-        T.StructField("alpha_close", T.DoubleType(), True),
-        T.StructField("price_diff", T.DoubleType(), True),
-        T.StructField("diff_pct", T.DoubleType(), True),
-        T.StructField("resolved_close", T.DoubleType(), True),
-        T.StructField("resolved_as", T.StringType(), True),
-    ]
-)
-
-#: Validation issue log (src/database.py:89-102); `details` is a map rendered
-#: with to_json at the sink (JSON-in-TEXT in the reference).
-VALIDATION_LOG = T.StructType(
-    [
-        T.StructField("validation_id", T.StringType(), False),
-        T.StructField("request_id", T.StringType(), False),
-        T.StructField("validation_type", T.StringType(), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("severity", T.DoubleType(), True),
-        T.StructField("details", T.MapType(T.StringType(), T.StringType()), True),
-        T.StructField("created_at", T.TimestampType(), True),
     ]
 )
 

@@ -4,7 +4,7 @@ The driver supplies its own SparkSession to ``__spark_entry__``; this factory
 is used by tests and ``bench.py``. Settings chosen for a 100 TB posture:
 AQE on (runtime join-strategy switches, skew-join splitting, partition
 coalescing), Arrow for any pandas exchange, and a shuffle-partition count
-sized to the harness (`SPARK_GRAFT_CPUS`) rather than the 200 default.
+sized to the cores in use rather than the 200 default.
 """
 
 from __future__ import annotations
@@ -97,19 +97,18 @@ def local_frame(
 
 def get_spark(
     app_name: str = "msfdp-spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if master is None:
-        master = f"local[{cpus}]"
+    """A ``local[n]`` session: ``n`` is ``SPARK_GRAFT_CPUS`` when set, else
+    the number of cores this process may run on."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     if shuffle_partitions is None:
         shuffle_partitions = cpus
 
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
+        .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

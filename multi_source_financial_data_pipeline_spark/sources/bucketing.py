@@ -34,13 +34,12 @@ def write_bucketed(
     )
 
 
-def colocated_join(
-    spark: SparkSession, left_table: str, right_table: str, on: list[str]
-) -> DataFrame:
-    """Equi-join two tables bucketed on the join key. With matching bucket
+def colocated_join(spark: SparkSession) -> DataFrame:
+    """Equi-join ``b_lineitem`` and ``b_orders``, both bucketed on
+    ``o_orderkey``. With matching bucket
     counts the planner emits a SortMergeJoin with zero Exchange operators
     (verified in tests via the physical plan)."""
-    return spark.table(left_table).join(spark.table(right_table), on)
+    return spark.table("b_lineitem").join(spark.table("b_orders"), ["o_orderkey"])
 
 
 #: (applicationId, sf_dir) -> (lineitem_table, orders_table) built this

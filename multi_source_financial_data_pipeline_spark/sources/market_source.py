@@ -112,7 +112,6 @@ def http_fetch_ohlcv(
     start: date,
     end: date,
     source: str,
-    timeout_s: float = 10.0,
     min_interval_ms: int = 0,
 ) -> list[tuple]:
     """REAL HTTP transport (stdlib urllib, no deps): GET
@@ -157,7 +156,7 @@ def http_fetch_ohlcv(
             "source": source,
         }
     )
-    with urlopen(f"{base_url}/ohlcv?{qs}", timeout=timeout_s) as resp:
+    with urlopen(f"{base_url}/ohlcv?{qs}", timeout=10.0) as resp:
         if resp.status != 200:
             raise ConnectionError(f"HTTP {resp.status} for {ticker}")
         payload = _json.load(resp)
@@ -251,7 +250,6 @@ class MarketDataReader(DataSourceReader):
         #: against `base_url` — the slot a production feed plugs into)
         self.transport = options.get("transport", "sim")
         self.base_url = options.get("base_url", "")
-        self.timeout_s = float(options.get("timeout_s", "10"))
         self.min_interval_ms = int(options.get("min_interval_ms", "0"))
         self.fail_tickers = {
             t for t in options.get("fail_tickers", "").split(",") if t
@@ -283,7 +281,6 @@ class MarketDataReader(DataSourceReader):
                     self.start,
                     self.end,
                     self.source,
-                    timeout_s=self.timeout_s,
                     min_interval_ms=self.min_interval_ms,
                 )
             if ticker in self.fail_tickers and attempt_box["n"] <= self.fail_attempts:
@@ -391,7 +388,6 @@ class MacroSeriesReader(DataSourceReader):
         # reference's FRED API calls live, src/macro.py:113-163)
         self.transport = options.get("transport", "sim")
         self.base_url = options.get("base_url", "")
-        self.timeout_s = float(options.get("timeout_s", "10"))
         self.max_retries = int(options.get("max_retries", "3"))
         self.backoff_factor = float(options.get("backoff_factor", "2.0"))
 
@@ -432,7 +428,7 @@ class MacroSeriesReader(DataSourceReader):
             {"series": sid, "start": self.start.isoformat(),
              "end": self.end.isoformat()}
         )
-        with urlopen(f"{self.base_url}/series?{qs}", timeout=self.timeout_s) as resp:
+        with urlopen(f"{self.base_url}/series?{qs}", timeout=10.0) as resp:
             if resp.status != 200:
                 raise ConnectionError(f"HTTP {resp.status} for {sid}")
             payload = _json.load(resp)
@@ -491,15 +487,12 @@ def register(spark) -> None:
 
 def read_with_skip_report(
     spark,
-    tickers: list[str],
-    start: str,
-    end: str,
-    source: str = "yahoo",
     tracker=None,
     **options: str,
 ):
     """S1-S3 fetch with the reference's skip-on-error accounting
-    (src/macro.py:206-208): read the connector, packed to
+    (src/macro.py:206-208): read AAPL, MSFT and TSLA from the Yahoo feed
+    for 2024-01-01..2024-01-10 through the connector, packed to
     the session's ``defaultParallelism`` unless ``options`` sets
     ``numPartitions`` (each ticker already retries and skips inside its
     partition), then reconcile the requested ticker list against the
@@ -509,10 +502,10 @@ def read_with_skip_report(
     register(spark)
     reader = (
         spark.read.format("market_sim")
-        .option("tickers", ",".join(tickers))
-        .option("start", start)
-        .option("end", end)
-        .option("source", source)
+        .option("tickers", ",".join(["AAPL", "MSFT", "TSLA"]))
+        .option("start", "2024-01-01")
+        .option("end", "2024-01-10")
+        .option("source", "yahoo")
         .option("numPartitions", spark.sparkContext.defaultParallelism)
     )
     for k, v in options.items():
@@ -520,7 +513,7 @@ def read_with_skip_report(
     df = reader.load()
     if tracker is not None:
         present = {r[0] for r in df.select("ticker").distinct().collect()}
-        for t in tickers:
+        for t in ["AAPL", "MSFT", "TSLA"]:
             if t not in present:
                 tracker.add_error(
                     "market_fetch",

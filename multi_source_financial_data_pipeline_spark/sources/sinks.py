@@ -59,12 +59,10 @@ CSV_EXPORT_COLUMNS = [
 def write_partitioned(
     df: DataFrame,
     path: str,
-    partition_by: Sequence[str] = ("ticker",),
-    mode: str = "overwrite",
 ) -> None:
     """K1 (src/pipeline.py:93-97): full-replace write; partitioning ≈ the
     reference's (ticker, date) composite index."""
-    df.write.mode(mode).partitionBy(*partition_by).parquet(path)
+    df.write.mode("overwrite").partitionBy("ticker").parquet(path)
 
 
 def append_first_request_wins(
@@ -87,12 +85,12 @@ def append_first_request_wins(
     return saved
 
 
-def upsert_by_key(df: DataFrame, path: str, key: Sequence[str]) -> int:
+def upsert_by_key(df: DataFrame, path: str) -> int:
     """K4 (src/database.py:284-305): INSERT OR REPLACE — dedup the batch on
-    its key (arbitrary-but-deterministic survivor via max) then
+    column ``k`` (arbitrary-but-deterministic survivor via max) then
     first-request-wins against existing data."""
-    deduped = df.dropDuplicates(list(key))
-    return append_first_request_wins(deduped, path, key)
+    deduped = df.dropDuplicates(["k"])
+    return append_first_request_wins(deduped, path, ["k"])
 
 
 def export_csv(
@@ -141,12 +139,13 @@ def append_ledger(df: DataFrame, path: str) -> None:
     df.write.mode("append").parquet(path)
 
 
-def list_outputs(out_dir: str, pattern: str = "*") -> dict[str, Any]:
-    """S8 (src/output_manager.py:286-302): glob the output dir, return count
-    and latest file by mtime. Plain-filesystem utility, not a data operator."""
+def list_outputs(out_dir: str) -> dict[str, Any]:
+    """S8 (src/output_manager.py:286-302): glob the output dir for
+    ``prices_*.csv``, return count and latest file by mtime.
+    Plain-filesystem utility, not a data operator."""
     import glob as _glob
 
-    files = _glob.glob(os.path.join(out_dir, pattern))
+    files = _glob.glob(os.path.join(out_dir, "prices_*.csv"))
     latest = max(files, key=os.path.getmtime) if files else None
     return {"count": len(files), "files": sorted(files), "latest": latest}
 

@@ -25,14 +25,11 @@ def _uniform(*cols, seed: int) -> "F.Column":
 def market_ohlcv(
     spark: SparkSession,
     tickers: tuple[str, ...] = TICKERS,
-    start_date: str = "2023-01-02",
-    n_days: int = 260,
-    seed: int = 42,
 ) -> DataFrame:
     """F1: per-(ticker, business day) OHLCV bars with deterministic
     pseudo-random walks, plus an explicit ingest-order column."""
     n = len(tickers)
-    base = spark.range(n * n_days).select(
+    base = spark.range(n * 260).select(
         F.col("id").alias("ingest_seq"),
         (F.col("id") % n).cast("int").alias("tidx"),
         (F.col("id") / n).cast("long").alias("day_idx"),
@@ -41,10 +38,10 @@ def market_ohlcv(
     # business days: day_idx -> calendar date skipping Sat/Sun
     week = (F.col("day_idx") / 5).cast("long")
     dow = F.col("day_idx") % 5
-    date = F.date_add(F.lit(start_date).cast("date"), (week * 7 + dow).cast("int"))
-    u1 = _uniform(F.col("tidx"), F.col("day_idx"), seed=seed)
-    u2 = _uniform(F.col("tidx"), F.col("day_idx"), seed=seed + 1)
-    u3 = _uniform(F.col("tidx"), F.col("day_idx"), seed=seed + 2)
+    date = F.date_add(F.lit("2023-01-02").cast("date"), (week * 7 + dow).cast("int"))
+    u1 = _uniform(F.col("tidx"), F.col("day_idx"), seed=42)
+    u2 = _uniform(F.col("tidx"), F.col("day_idx"), seed=43)
+    u3 = _uniform(F.col("tidx"), F.col("day_idx"), seed=44)
     close = F.round(50.0 + (F.col("tidx") + 1) * 20.0 + (u1 - 0.5) * 10.0, 4)
     spread = F.round(u2 * 2.0, 4)
     return base.select(
@@ -63,19 +60,14 @@ def market_ohlcv(
 def altsource_close(
     spark: SparkSession,
     tickers: tuple[str, ...] = TICKERS,
-    start_date: str = "2023-01-02",
-    n_days: int = 260,
-    seed: int = 42,
-    noise_pct: float = 0.3,
-    discrepancy_every: int = 40,
 ) -> DataFrame:
-    """F2: secondary-source closes = primary ± small noise, with a planted
-    discrepancy (> tolerance) every `discrepancy_every`-th row."""
-    prim = market_ohlcv(spark, tickers, start_date, n_days, seed)
-    u = _uniform(F.col("ingest_seq"), seed=seed + 10)
-    noisy = F.col("close") * (1.0 + (u - 0.5) * 2 * noise_pct / 100.0)
+    """F2: secondary-source closes = primary ± 0.3% noise, with a planted
+    discrepancy (> tolerance) every 40th row."""
+    prim = market_ohlcv(spark, tickers)
+    u = _uniform(F.col("ingest_seq"), seed=52)
+    noisy = F.col("close") * (1.0 + (u - 0.5) * 2 * 0.3 / 100.0)
     planted = F.col("close") * 1.02  # 2% off -> always above 0.5% tolerance
-    is_planted = (F.col("ingest_seq") % discrepancy_every) == 0
+    is_planted = (F.col("ingest_seq") % 40) == 0
     return prim.select(
         "ticker",
         "date",
@@ -87,9 +79,7 @@ def altsource_close(
 def macro_series(
     spark: SparkSession,
     series: tuple[str, ...] = ("FEDFUNDS", "CPIAUCSL", "UNRATE", "DGS10"),
-    start_date: str = "2023-01-01",
     n_periods: int = 24,
-    seed: int = 42,
 ) -> DataFrame:
     """F3: long-form monthly macro observations."""
     from multi_source_financial_data_pipeline_spark.sources.registry import FRED_SERIES
@@ -100,14 +90,12 @@ def macro_series(
         (F.col("id") / n).cast("long").alias("pidx"),
     )
     sid = F.element_at(F.array(*[F.lit(s) for s in series]), F.col("sidx") + 1)
-    date = F.add_months(F.lit(start_date).cast("date"), F.col("pidx").cast("int"))
-    u = _uniform(F.col("sidx"), F.col("pidx"), seed=seed + 20)
+    date = F.add_months(F.lit("2023-01-01").cast("date"), F.col("pidx").cast("int"))
+    u = _uniform(F.col("sidx"), F.col("pidx"), seed=62)
     value = F.round(1.0 + F.col("sidx") * 2.0 + u * 3.0, 6)
     name_map = F.create_map(
         *[F.lit(x) for kv in FRED_SERIES.items() for x in kv]
     )
-    cat_map = None  # category attached by callers that need it
-    _ = cat_map
     return base.select(
         sid.alias("series_id"),
         date.alias("date"),

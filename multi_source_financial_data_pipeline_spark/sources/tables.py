@@ -70,5 +70,5 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES):
-    return {n: load_table(spark, sf_dir, n) for n in names}
+def load_tables(spark: SparkSession, sf_dir: str):
+    return {n: load_table(spark, sf_dir, n) for n in TABLE_NAMES}

@@ -26,29 +26,23 @@ def read_event_stream(
     spark: SparkSession,
     landing_dir: str,
     schema: T.StructType,
-    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     reader = (
         spark.readStream.schema(schema)
         .format("parquet")
         .option("path", landing_dir)
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.load()
 
 
 def dedup_with_watermark(
     stream: DataFrame,
-    event_time_col: str,
     key_cols: list[str],
     late_threshold: str = "1 day",
 ) -> DataFrame:
-    """K2-equivalent late/duplicate handling: watermark bounds the dedup
-    state; duplicates on the natural key within the horizon are dropped."""
-    return stream.withWatermark(event_time_col, late_threshold).dropDuplicates(
-        key_cols
-    )
+    """K2-equivalent late/duplicate handling: a watermark on ``ts`` bounds
+    the dedup state; duplicates on the natural key within the horizon are dropped."""
+    return stream.withWatermark("ts", late_threshold).dropDuplicates(key_cols)
 
 
 def run_available_now(

@@ -44,9 +44,7 @@ OUTPUT_SCHEMA = T.StructType(
 )
 
 
-def running_totals(
-    stream: DataFrame, key_col: str, value_col: str
-) -> DataFrame:
+def running_totals(stream: DataFrame) -> DataFrame:
     """Per-key running (count, sum, min, max) maintained in group state;
     emits the updated totals for every key seen in each micro-batch."""
 
@@ -61,7 +59,7 @@ def running_totals(
             state.get if state.exists else (0, 0, None, None)
         )
         for pdf in batches:
-            vals = pdf[value_col]
+            vals = pdf["value"]
             n += len(vals)
             # per-value integer cents: exact and associative across
             # arbitrary batch splits
@@ -81,8 +79,8 @@ def running_totals(
         )
 
     return (
-        stream.select(key_col, value_col)
-        .groupBy(key_col)
+        stream.select("user_id", "value")
+        .groupBy("user_id")
         .applyInPandasWithState(
             update,
             outputStructType=OUTPUT_SCHEMA,
@@ -111,13 +109,7 @@ SCD2_OUTPUT_SCHEMA = T.StructType(
 )
 
 
-def scd2_closed_intervals(
-    stream: DataFrame,
-    key_col: str,
-    ts_col: str,
-    tiebreak_col: str,
-    state_col: str,
-) -> DataFrame:
+def scd2_closed_intervals(stream: DataFrame) -> DataFrame:
     """Live type-2 SCD maintenance: per key, group state holds the OPEN
     interval (current attribute value + its start); each arriving change
     CLOSES the previous interval, which is emitted immediately — the sink
@@ -151,19 +143,17 @@ def scd2_closed_intervals(
         # bound the batch applyInPandas folds already carry.
         chunks = [c for c in batches if len(c)]
         if chunks:
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(
-                [ts_col, tiebreak_col]
-            )
+            pdf = pd.concat(chunks, ignore_index=True).sort_values(["ts", "event_id"])
             for row in pdf.itertuples(index=False):
-                st = getattr(row, state_col)
-                ts_us = int(getattr(row, ts_col).value // 1000)
+                st = getattr(row, "event_type")
+                ts_us = int(getattr(row, "ts").value // 1000)
                 if cur_state is None:
                     cur_state, cur_from_us = st, ts_us
-                    cur_from_event = int(getattr(row, tiebreak_col))
+                    cur_from_event = int(getattr(row, "event_id"))
                 elif st != cur_state:
                     closed.append((key[0], cur_state, cur_from_us, ts_us))
                     cur_state, cur_from_us = st, ts_us
-                    cur_from_event = int(getattr(row, tiebreak_col))
+                    cur_from_event = int(getattr(row, "event_id"))
         state.update((cur_state, cur_from_us, cur_from_event))
         yield pd.DataFrame(
             closed,
@@ -171,8 +161,8 @@ def scd2_closed_intervals(
         )
 
     return (
-        stream.select(key_col, ts_col, tiebreak_col, state_col)
-        .groupBy(key_col)
+        stream.select("user_id", "ts", "event_id", "event_type")
+        .groupBy("user_id")
         .applyInPandasWithState(
             update,
             outputStructType=SCD2_OUTPUT_SCHEMA,
@@ -199,17 +189,12 @@ DEDUP_OUTPUT_SCHEMA = T.StructType(
 
 def incremental_dedup_classes(
     stream: DataFrame,
-    fp_col: str,
-    ts_col: str,
-    id_col: str,
-    carry_col: str,
-    in_index_col: str,
     horizon_ms: int,
 ) -> DataFrame:
     """Streaming incremental dedup (the streaming twin of
-    `plans/llmdata.q_incremental_dedup`, VERDICT r15 item 4): each
+    `plans/llmdata.q_incremental_dedup`): each
     arriving row classifies against (a) a STATIC fingerprint index the
-    caller joins on beforehand (``in_index_col`` — the carried corpus's
+    caller joins on beforehand (``in_index`` — the carried corpus's
     fps, the batch classifier's ``existing`` side) and (b) per-fp group
     state tracking whether the fp was already seen IN the stream:
 
@@ -217,7 +202,7 @@ def incremental_dedup_classes(
       and the fp never allocates a state row (state stays O(new fps),
       not O(stream fps));
     - ``new_unique``: first stream arrival of an un-indexed fp (within a
-      batch, first by (ts, id) — the deterministic within-batch canon);
+      batch, first by (ts, event_id) — the deterministic within-batch canon);
     - ``dup_within_delta``: any later arrival of that fp.
 
     State is one counter per un-indexed fp with an EVENT-TIME timeout at
@@ -236,7 +221,8 @@ def incremental_dedup_classes(
 
     Ordering contract (same as `scd2_closed_intervals`): in-order
     delivery across batches; within a batch the group sorts on
-    (ts, id) before classifying."""
+    (ts, event_id) before classifying. The stream carries ``fp``, ``ts``,
+    ``event_id``, ``carry`` and ``in_index``."""
 
     def update(
         key: tuple[Any, ...],
@@ -251,12 +237,10 @@ def incremental_dedup_classes(
         chunks = [c for c in batches if len(c)]
         if not chunks:
             return
-        pdf = pd.concat(chunks, ignore_index=True).sort_values(
-            [ts_col, id_col]
-        )
+        pdf = pd.concat(chunks, ignore_index=True).sort_values(["ts", "event_id"])
         n_rows = len(pdf)
         # in_index is a property of the fp — constant across the group
-        if bool(pdf[in_index_col].iloc[0]):
+        if bool(pdf["in_index"].iloc[0]):
             classes = ["dup_of_existing"] * n_rows
         else:
             (n_seen,) = state.get if state.exists else (0,)
@@ -268,7 +252,7 @@ def incremental_dedup_classes(
             # evict once the watermark passes last-seen + horizon; the
             # max() guard keeps the timeout legal (> current watermark)
             # even if a straggler group's newest event already trails it
-            last_ms = int(pdf[ts_col].max().value // 1_000_000)
+            last_ms = int(pdf["ts"].max().value // 1_000_000)
             state.setTimeoutTimestamp(
                 max(
                     last_ms + horizon_ms,
@@ -277,16 +261,16 @@ def incremental_dedup_classes(
             )
         yield pd.DataFrame(
             {
-                "fp": pdf[fp_col].to_numpy(),
-                "row_id": pdf[id_col].to_numpy(),
-                "carry": pdf[carry_col].to_numpy(),
+                "fp": pdf["fp"].to_numpy(),
+                "row_id": pdf["event_id"].to_numpy(),
+                "carry": pdf["carry"].to_numpy(),
                 "dedup_class": classes,
             }
         )
 
     return (
-        stream.select(fp_col, ts_col, id_col, carry_col, in_index_col)
-        .groupBy(fp_col)
+        stream.select("fp", "ts", "event_id", "carry", "in_index")
+        .groupBy("fp")
         .applyInPandasWithState(
             update,
             outputStructType=DEDUP_OUTPUT_SCHEMA,

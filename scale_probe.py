@@ -314,8 +314,7 @@ def fold_skew_probe(spark, k: int) -> dict:
 
         def _cusum_fold():
             return grouped.cusum_last(
-                load_table(spark, d, "events"), "user_id", "ts", "event_id",
-                "value",
+                load_table(spark, d, "events"), "ts", "event_id", "value",
             )
 
         legs = [
@@ -799,11 +798,6 @@ def incdedup_state_growth(ks: tuple[int, ...] = (10, 30)) -> dict:
                 )
                 classes = _st.incremental_dedup_classes(
                     keyed,
-                    fp_col="fp",
-                    ts_col="ts",
-                    id_col="event_id",
-                    carry_col="carry",
-                    in_index_col="in_index",
                     horizon_ms=_mm.STREAM_DEDUP_HORIZON_MS,
                 )
                 t0 = time.perf_counter()
@@ -954,7 +948,7 @@ def incremental_fixed_growth(ks: tuple[int, ...] = (10, 30)) -> dict:
     new = base.filter(
         F.col("__h") % _ld.SNAP_NEW_MOD != _ld.SNAP_NEW_DROP
     ).select("doc_id", "source", F.md5(new_text).alias("fp"))
-    st = validation.snapshot_diff(old, new.select("doc_id", "fp"), ["doc_id"], "fp")
+    st = validation.snapshot_diff(old, new.select("doc_id", "fp"), ["doc_id"])
     delta = (
         new.join(st, "doc_id")
         .filter(F.col("status").isin("added", "changed"))

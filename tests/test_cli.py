@@ -32,7 +32,7 @@ def test_cli_end_to_end(spark, tmp_path):
 
     from multi_source_financial_data_pipeline_spark.sources.sinks import list_outputs
 
-    listing = list_outputs(out, "prices_*.csv")
+    listing = list_outputs(out)
     assert listing["count"] == 1
     assert listing["latest"].endswith(csvs[0])
 
@@ -77,9 +77,29 @@ def test_upsert_by_key_replaces_within_batch(spark, tmp_path):
 
     path = str(tmp_path / "upsert")
     first = spark.createDataFrame([(1, "a"), (1, "b"), (2, "c")], "k int, v string")
-    saved = upsert_by_key(first, path, ["k"])
+    saved = upsert_by_key(first, path)
     assert saved == 2  # batch deduped on key before write
     again = spark.createDataFrame([(2, "zzz"), (3, "d")], "k int, v string")
-    saved = upsert_by_key(again, path, ["k"])
+    saved = upsert_by_key(again, path)
     assert saved == 1  # existing key 2 not rewritten (first write wins)
     assert spark.read.parquet(path).count() == 3
+
+
+def test_get_spark_defaults_to_usable_cores(monkeypatch):
+    """Without ``SPARK_GRAFT_CPUS`` the session runs one task slot and one
+    shuffle partition per core this process may use. The builder's conf is
+    captured in place of ``getOrCreate``, so no second session starts."""
+    import os
+
+    from pyspark.sql import SparkSession
+
+    from multi_source_financial_data_pipeline_spark.session import get_spark
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(
+        SparkSession.Builder, "getOrCreate", lambda self: dict(self._options)
+    )
+    conf = get_spark("msfdp-cli")
+    cores = len(os.sched_getaffinity(0))
+    assert conf["spark.master"] == f"local[{cores}]"
+    assert conf["spark.sql.shuffle.partitions"] == str(cores)

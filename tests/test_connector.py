@@ -148,9 +148,6 @@ def test_dead_partition_skips_and_reports(spark):
     tracker = ErrorTracker()
     df = market_source.read_with_skip_report(
         spark,
-        ["AAPL", "MSFT", "TSLA"],
-        "2024-01-01",
-        "2024-01-10",
         tracker=tracker,
         fail_tickers="MSFT",
         fail_attempts="99",
@@ -170,9 +167,6 @@ def test_dead_partition_skips_and_reports(spark):
     packed_tracker = ErrorTracker()
     packed = market_source.read_with_skip_report(
         spark,
-        ["AAPL", "MSFT", "TSLA"],
-        "2024-01-01",
-        "2024-01-10",
         tracker=packed_tracker,
         fail_tickers="MSFT",
         fail_attempts="99",

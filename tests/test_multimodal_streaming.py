@@ -226,7 +226,7 @@ def test_streaming_available_now_dedup(spark, sf_dir, tmp_path):
     events.filter(F.col("event_id") >= 400).write.mode("append").parquet(landing)
 
     stream = read_event_stream(spark, landing, TESTDATA["events"])
-    deduped = dedup_with_watermark(stream, "ts", ["event_id"], "1 day")
+    deduped = dedup_with_watermark(stream, ["event_id"], "1 day")
 
     def writer(batch_df, _batch_id):
         append_first_request_wins(batch_df, out, ["event_id"])
@@ -254,7 +254,7 @@ def test_streaming_checkpoint_restart_exactly_once(spark, sf_dir, tmp_path):
     events.filter(F.col("event_id") < 500).write.mode("append").parquet(landing)
 
     stream = read_event_stream(spark, landing, TESTDATA["events"])
-    deduped = dedup_with_watermark(stream, "ts", ["event_id"], "30 days")
+    deduped = dedup_with_watermark(stream, ["event_id"], "30 days")
 
     def writer(batch_df, _batch_id):
         append_first_request_wins(batch_df, out, ["event_id"])
@@ -269,7 +269,7 @@ def test_streaming_checkpoint_restart_exactly_once(spark, sf_dir, tmp_path):
     ).write.mode("append").parquet(landing)
 
     stream2 = read_event_stream(spark, landing, TESTDATA["events"])
-    deduped2 = dedup_with_watermark(stream2, "ts", ["event_id"], "30 days")
+    deduped2 = dedup_with_watermark(stream2, ["event_id"], "30 days")
     seen2 = []
 
     def writer2(batch_df, _batch_id):
@@ -366,10 +366,7 @@ def test_stream_scd2_state_survives_restart(spark, sf_dir, tmp_path):
 
     def drain():
         stream = read_event_stream(spark, landing, TESTDATA["events"])
-        closed = scd2_closed_intervals(
-            stream, key_col="user_id", ts_col="ts",
-            tiebreak_col="event_id", state_col="event_type",
-        )
+        closed = scd2_closed_intervals(stream)
         q = (
             closed.writeStream.format("parquet")
             .option("path", out)
@@ -466,11 +463,7 @@ def test_stream_scd2_hot_key_spanning_arrow_chunks(spark, tmp_path):
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
     try:
-        closed = scd2_closed_intervals(
-            read_event_stream(spark, landing, schema),
-            key_col="user_id", ts_col="ts",
-            tiebreak_col="event_id", state_col="event_type",
-        )
+        closed = scd2_closed_intervals(read_event_stream(spark, landing, schema))
         q = (
             closed.writeStream.format("parquet")
             .option("path", out)

@@ -77,7 +77,7 @@ def test_pooled_zscore_is_global_not_per_key(spark):
     # one huge value in ticker B; pooled std is inflated by design
     rows = [("A", float(i), i) for i in range(20)] + [("B", 1000.0, 20)]
     df = spark.createDataFrame(rows, "ticker string, ret double, seq long")
-    got = pooled_zscore_outliers(df, "ret", threshold=3.0).collect()[0]
+    got = pooled_zscore_outliers(df, threshold=3.0).collect()[0]
     pdf = pd.DataFrame(rows, columns=["ticker", "ret", "seq"])
     z = (pdf["ret"] - pdf["ret"].mean()) / pdf["ret"].std()  # ddof=1 pooled
     assert got["n_outliers"] == int((z.abs() > 3.0).sum())
@@ -152,7 +152,7 @@ def test_gap_fill_matches_pandas_resample_ffill(spark):
         rows, "user_id long, ts string, value double, event_id long"
     ).withColumn("ts", F.to_timestamp("ts")).withColumn("date", F.to_date("ts"))
     got = (
-        gap_fill_daily(df, "user_id", "date", "value", order_cols=("ts", "event_id"))
+        gap_fill_daily(df)
         .toPandas()
         .sort_values(["user_id", "cal_date"])
         .reset_index(drop=True)
@@ -201,7 +201,7 @@ def test_concat_chunk_packing_prefix_sums(spark):
         r["doc_id"]: r.asDict()
         for r in concat_chunk_packing(
             df, seq_len=4, tokens=F.size(F.split(F.col("text"), r"\s+")),
-            shard_col="source", order_col="doc_id",
+            shard_col="source",
         ).collect()
     }
     # doc1: [0,3) -> seq 0 only; doc2: [3,8) -> seqs 0..1; doc3: [8,12) -> seq 2
@@ -313,7 +313,7 @@ def test_macd_matches_pandas_ewm(spark):
             rows.append((key, i, i, float(v)))
     df = spark.createDataFrame(rows, "user_id long, ts long, event_id long, value double")
     got = (
-        macd_last(df, key="user_id", ts_col="ts", tiebreak="event_id", value_col="value")
+        macd_last(df, ts_col="ts", tiebreak="event_id", value_col="value")
         .toPandas().sort_values("key").reset_index(drop=True)
     )
     pdf = pd.DataFrame(rows, columns=["user_id", "ts", "event_id", "value"])
@@ -370,21 +370,17 @@ def test_grouped_fold_enforces_per_key_history_bound(spark):
     df = spark.createDataFrame(
         rows, "user_id long, day double, event_id long, value double"
     )
-    out = grouped.ewma_last(df, "user_id", "day", "event_id", "value")
+    out = grouped.ewma_last(df, "day", "event_id", "value")
     assert out.count() == 1  # default bound: folds normally
 
-    capped = grouped.ewma_last(
-        df, "user_id", "day", "event_id", "value", max_rows=10
-    )
+    capped = grouped.ewma_last(df, "day", "event_id", "value", max_rows=10)
     with pytest.raises(Exception) as ei:
         capped.collect()
     assert "per-key history bound" in str(ei.value)
     assert "pre-aggregate" in str(ei.value)
 
     # same contract on the most expensive member of the family
-    capped_macd = grouped.macd_last(
-        df, "user_id", "day", "event_id", "value", max_rows=10
-    )
+    capped_macd = grouped.macd_last(df, "day", "event_id", "value", max_rows=10)
     with pytest.raises(Exception) as ei:
         capped_macd.collect()
     assert "per-key history bound" in str(ei.value)
@@ -409,11 +405,11 @@ def test_fold_family_optional_tiebreak_matches_tiebreak_form(spark):
                grouped.rsi_wilder_last):
         with_tb = {
             r["key"]: r.asDict()
-            for r in fn(df, "user_id", "day", "event_id", "value").collect()
+            for r in fn(df, "day", "event_id", "value").collect()
         }
         without = {
             r["key"]: r.asDict()
-            for r in fn(df, "user_id", "day", None, "value").collect()
+            for r in fn(df, "day", None, "value").collect()
         }
         assert with_tb == without, fn.__name__
 
@@ -437,13 +433,13 @@ def test_fold_tiebreak_none_rejects_duplicate_ts(spark):
     for fn in (grouped.ewma_last, grouped.cusum_last, grouped.macd_last,
                grouped.rsi_wilder_last):
         with pytest.raises(Exception) as ei:
-            fn(df, "user_id", "day", None, "value").collect()
+            fn(df, "day", None, "value").collect()
         msg = str(ei.value)
         assert "duplicate" in msg and "tiebreak=None" in msg, fn.__name__
         # the 2-column-sort form remains the sanctioned path for raw events
-        fn(df, "user_id", "day", "event_id", "value").collect()
+        fn(df, "day", "event_id", "value").collect()
     with pytest.raises(Exception) as ei:
-        grouped.wilder_last(df, "user_id", "day", "value").collect()
+        grouped.wilder_last(df, "value").collect()
     assert "duplicate" in str(ei.value)
 
 
@@ -465,7 +461,7 @@ def test_resample_bars_exact_sum_survives_wide_values(spark):
     df = spark.createDataFrame(
         rows, "user_id long, ts timestamp, value double, event_id long"
     )
-    out = resample_bars(df, "user_id", "ts", "value", 3600, ("event_id",)).collect()
+    out = resample_bars(df, 3600).collect()
     assert len(out) == 1
     bar = out[0]
     assert bar["n_events"] == 3
@@ -496,9 +492,7 @@ def test_resample_bars_exact_sum_overflow_fails_loudly(spark):
         for ansi in ("true", "false"):
             spark.conf.set("spark.sql.ansi.enabled", ansi)
             with pytest.raises(Exception) as ei:
-                resample_bars(
-                    df, "user_id", "ts", "value", 3600, ("event_id",)
-                ).collect()
+                resample_bars(df, 3600).collect()
             msg = str(ei.value)
             assert "exact_sum" in msg and "DECIMAL(18,2) range" in msg, ansi
     finally:
@@ -532,7 +526,7 @@ def test_resample_bars_matches_pandas_ohlc_and_second_width_path(spark):
         "value",
     )
     got = (
-        resample_bars(df, "user_id", "ts", "value", "hour", ("event_id",))
+        resample_bars(df, "hour")
         .orderBy("bar_ts")
         .toPandas()
     )
@@ -548,7 +542,7 @@ def test_resample_bars_matches_pandas_ohlc_and_second_width_path(spark):
     assert list(got["n_events"]) == list(n_want[n_want > 0])
 
     got_sec = (
-        resample_bars(df, "user_id", "ts", "value", 3600, ("event_id",))
+        resample_bars(df, 3600)
         .orderBy("bar_ts")
         .toPandas()
     )
@@ -577,18 +571,14 @@ def test_resample_bars_prestep_unblocks_fold_above_history_bound(spark):
             F.lit(100.0) + (F.col("id") % 997).cast("double") * F.lit(0.25)
         ).alias("value"),
     )
-    direct = grouped.ewma_last(ev, "user_id", "ts", "event_id", "value")
+    direct = grouped.ewma_last(ev, "ts", "event_id", "value")
     with pytest.raises(Exception) as ei:
         direct.collect()
     assert "per-key history bound" in str(ei.value)
     assert "resample_bars" in str(ei.value)
 
-    bars = resample_bars(
-        ev, "user_id", "ts", "value", "hour", ("event_id",), exact_sum=False
-    )
-    folded = grouped.ewma_last(
-        bars, "user_id", "bar_ts", "n_events", "close_value"
-    ).collect()
+    bars = resample_bars(ev, "hour", exact_sum=False)
+    folded = grouped.ewma_last(bars, "bar_ts", "n_events", "close_value").collect()
     assert len(folded) == 1
 
     # independent fold of the post-aggregated series: hour h's close is

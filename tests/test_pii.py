@@ -43,7 +43,7 @@ def test_pii_span_parity(spark):
     sdf = spark.createDataFrame(
         [(i, s) for i, s in enumerate(CRAFTED)], "doc_id long, text string"
     )
-    cols = pii_columns("text")
+    cols = pii_columns()
     got = (
         sdf.select(
             "doc_id",

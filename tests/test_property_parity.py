@@ -129,10 +129,6 @@ def test_asof_join_matches_pandas_merge_asof(spark, left_ts, right_ts):
             spark.createDataFrame(left),
             spark.createDataFrame(right),
             key="key",
-            left_ts="ts",
-            right_ts="ts",
-            value_cols=["value"],
-            tiebreak="event_id",
         )
         .orderBy("event_id")
         .toPandas()
@@ -161,7 +157,7 @@ def test_sessionize_matches_reference_gap_logic(spark, gaps):
         }
     )
     got = (
-        sessionize(spark.createDataFrame(pdf), "user", "ts", "event_id", 1800)
+        sessionize(spark.createDataFrame(pdf), "user", 1800)
         .orderBy("event_id")
         .toPandas()["session_id"]
         .to_numpy()
@@ -209,10 +205,7 @@ def test_bucketed_range_join_matches_naive_pairs(spark, left_ts, right_ts, tol):
         spark.createDataFrame(left),
         spark.createDataFrame(right),
         key="key",
-        left_ts="ts",
-        right_ts="ts",
         tolerance_us=tol_us,
-        right_cols=["value"],
     ).toPandas()
     got_pairs = sorted(zip(got["event_id"], got["value"]))
     want_pairs = sorted(
@@ -242,7 +235,7 @@ def test_packing_invariants(spark, toks, seq_len):
     out = (
         concat_chunk_packing(
             df, seq_len=seq_len, tokens=F.size(F.split(F.col("text"), r"\s+")),
-            shard_col="source", order_col="doc_id",
+            shard_col="source",
         )
         .orderBy("doc_id")
         .collect()
@@ -290,7 +283,7 @@ def test_gap_fill_matches_pandas_ffill(spark, obs):
         .withColumn("date", F.to_date("ts"))
     )
     got = (
-        gap_fill_daily(df, "user_id", "date", "value", order_cols=("ts", "event_id"))
+        gap_fill_daily(df)
         .orderBy("cal_date")
         .toPandas()
     )
@@ -329,7 +322,7 @@ def test_wilder_fold_matches_reference(spark, vals):
     rows = [(1, i, i, float(v)) for i, v in enumerate(vals)]
     df = spark.createDataFrame(rows, "user_id long, ts long, event_id long, value double")
     got = rsi_wilder_last(
-        df, key="user_id", ts_col="ts", tiebreak="event_id", value_col="value"
+        df, ts_col="ts", tiebreak="event_id", value_col="value"
     ).collect()[0]
     diffs = [vals[i] - vals[i - 1] for i in range(1, len(vals))]
     if len(diffs) < 14:

@@ -22,7 +22,7 @@ def test_salted_agg_matches_direct_groupby(spark, sf_dir):
         "min_value": ("min", F.col("value")),
         "max_value": ("max", F.col("value")),
     }
-    salted = salted_agg(ev, ["event_type"], aggs, num_salts=8)
+    salted = salted_agg(ev, aggs, num_salts=8)
     direct = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(12,2)")).alias("sum_value"),
@@ -39,7 +39,7 @@ def test_salted_agg_matches_direct_groupby(spark, sf_dir):
 def test_salted_agg_rejects_non_decomposable(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     try:
-        salted_agg(ev, ["event_type"], {"bad": ("avg", F.col("value"))})
+        salted_agg(ev, {"bad": ("avg", F.col("value"))})
         raise AssertionError("expected ValueError")
     except ValueError as e:
         assert "not decomposable" in str(e)
@@ -58,7 +58,7 @@ def test_partitioned_write_prunes_on_read(spark, sf_dir, tmp_path):
         .select("ticker", "event_id", "value")
     )
     path = str(tmp_path / "by_ticker")
-    write_partitioned(ev, path, ["ticker"])
+    write_partitioned(ev, path)
     scan = spark.read.parquet(path).filter(F.col("ticker") == "click")
     plan = scan._jdf.queryExecution().executedPlan().toString()
     # the ticker predicate must land in PartitionFilters (directory pruning),
@@ -86,7 +86,7 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
     try:
         # force a merge join so the assertion is about bucketing, not size
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = colocated_join(spark, "b_lineitem", "b_orders", ["o_orderkey"])
+        joined = colocated_join(spark)
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan
         assert "Exchange" not in plan, plan
@@ -134,6 +134,45 @@ def test_min_label_components_transitive_chain(spark, sf_dir, threshold):
     expected = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
     expected.update({20 + i: 20 for i in range(7)})
     assert got == expected
+
+
+def test_min_label_components_runs_edge_pipeline_once_above_budget(spark):
+    """Above the broadcast budget the edge list is cut before the size
+    probe, so the pipeline that produced it runs once: a counting UDF in
+    that pipeline sees each edge row exactly once. The pipeline ends in a
+    shuffle, as the LSH + verify edge pipeline does, so a probe that read
+    the uncut pipeline would run the UDF over every row a second time."""
+    from multi_source_financial_data_pipeline_spark.operators.dedup import min_label_components
+
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def counted(x):
+        seen.add(1)
+        return x
+
+    pairs = spark.range(20, numPartitions=4).select(
+        F.col("id").alias("a"), (F.col("id") + 1).alias("b")
+    )
+    edges = (
+        pairs.select(counted("a").alias("id"), F.col("b").alias("nb"))
+        .unionByName(pairs.select(counted("b").alias("id"), F.col("a").alias("nb")))
+        .distinct()
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "64")  # a budget of 4 edges; the chain has 40
+    try:
+        got = {
+            r["id"]: r["lbl"] for r in min_label_components(edges).collect()
+        }
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert got == {i: 0 for i in range(21)}
+    assert seen.value == 40
 
 
 def test_neardup_canonical_is_fixpoint(spark, sf_dir):
@@ -191,7 +230,7 @@ def test_skew_split_join_matches_direct_join(spark, sf_dir):
     right = spark.range(0, 97).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("rv")
     )
-    got = skew_split_join(left, right, ["k"], hot_threshold=500)
+    got = skew_split_join(left, right)
     want = left.join(right, ["k"])
     assert got.count() == want.count()
     assert (
@@ -199,7 +238,7 @@ def test_skew_split_join_matches_direct_join(spark, sf_dir):
     )
     # left join keeps unmatched cold rows
     right_partial = right.filter(F.col("k") < 50)
-    got_l = skew_split_join(left, right_partial, ["k"], hot_threshold=500, how="left")
+    got_l = skew_split_join(left, right_partial, how="left")
     want_l = left.join(right_partial, ["k"], "left")
     assert got_l.count() == want_l.count()
     assert got_l.exceptAll(want_l).count() == 0
@@ -683,9 +722,7 @@ def test_zorder_layout_prunes_2d_boxes(spark, sf_dir, tmp_path):
         "value",
     )
     zpath, lpath = str(tmp_path / "z"), str(tmp_path / "lin")
-    layout.write_zordered(
-        ev, zpath, F.col("user_id"), F.col("di"), bits=12, num_files=16
-    )
+    layout.write_zordered(ev, zpath, F.col("user_id"), F.col("di"))
     (
         ev.repartitionByRange(16, "user_id")
         .sortWithinPartitions("user_id")
@@ -744,7 +781,7 @@ def test_bloom_filter_survives_storage_roundtrip(spark, tmp_path):
     keys = spark.range(200).select(
         F.concat(F.lit("g"), F.col("id").cast("string")).alias("s")
     )
-    bloom = dedup.bloom_build(keys, "s", m_bits, k)
+    bloom = dedup.bloom_build(keys, m_bits, k)
     path = str(tmp_path / "bloom")
     bloom.write.mode("overwrite").parquet(path)
     reloaded = spark.read.parquet(path)

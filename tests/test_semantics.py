@@ -707,7 +707,7 @@ def test_bloom_no_false_negatives(spark):
     keys = spark.range(300).select(
         F.concat(F.lit("key-"), F.col("id").cast("string")).alias("s")
     )
-    bloom = dedup.bloom_build(keys, "s", m_bits, k)
+    bloom = dedup.bloom_build(keys, m_bits, k)
     words = bloom.collect()[0]["bloom_words"]
     assert len(words) == m_bits // dedup.BLOOM_WORD_BITS
     assert all(isinstance(w, int) for w in words)
@@ -737,14 +737,14 @@ def test_bloom_rejects_broken_geometry(spark):
     keys = spark.range(4).select(F.col("id").cast("string").alias("s"))
     for m_bits, k in ((100, 4), (0, 4), (-32, 4), (4096, 0)):
         with pytest.raises(ValueError):
-            dedup.bloom_build(keys, "s", m_bits, k)
+            dedup.bloom_build(keys, m_bits, k)
         with pytest.raises(ValueError):
             dedup.bloom_member(
                 F.col("s"), F.array(F.lit(0).cast("long")), m_bits, k
             )
     # the boundary that IS legal: one word exactly
     assert (
-        dedup.bloom_build(keys, "s", dedup.BLOOM_WORD_BITS, 1)
+        dedup.bloom_build(keys, dedup.BLOOM_WORD_BITS, 1)
         .collect()[0]["bloom_words"]
     )
 
@@ -788,7 +788,7 @@ def test_snapshot_diff_statuses(spark):
     )
     got = {
         r["k"]: r["status"]
-        for r in validation.snapshot_diff(old, new, ["k"], "fp").collect()
+        for r in validation.snapshot_diff(old, new, ["k"]).collect()
     }
     assert got == {1: "removed", 2: "unchanged", 3: "changed", 4: "added"}
 
@@ -1000,7 +1000,7 @@ def test_bloom_build_matches_reference_bits(spark):
             words[p // 32] |= 1 << (p % 32)
 
     df = spark.createDataFrame([(s,) for s in keys], ["s"])
-    got = dedup.bloom_build(df, "s", m_bits, k).collect()[0]["bloom_words"]
+    got = dedup.bloom_build(df, m_bits, k).collect()[0]["bloom_words"]
     assert got == words
 
 
@@ -1037,7 +1037,7 @@ def test_manifest_delta_pruning_loses_nothing(spark, sf_dir):
     new = docs.filter(
         ~(churn & (h % llmdata.SNAP_NEW_MOD == llmdata.SNAP_NEW_DROP))
     ).select("doc_id", F.md5(new_text).alias("fp"))
-    full = validation.snapshot_diff(old, new, ["doc_id"], "fp").select(
+    full = validation.snapshot_diff(old, new, ["doc_id"]).select(
         (
             F.conv(
                 F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),

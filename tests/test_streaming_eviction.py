@@ -140,9 +140,7 @@ def test_watermarked_bars_emit_once_and_evict_state(spark, tmp_path):
             r["open_value"], r["high_value"], r["low_value"],
             r["close_value"], r["n_events"], r["sum_value"],
         )
-        for r in resample_bars(
-            all_events, "user_id", "ts", "value", 14400, ("event_id",)
-        ).collect()
+        for r in resample_bars(all_events, 14400).collect()
     }
     got_rows = spark.table("evict_pin").collect()
     assert len(got_rows) == len(emitted_prev)
@@ -252,11 +250,6 @@ def test_incremental_dedup_state_classifies_and_evicts(spark, tmp_path):
     stream = spark.readStream.schema(schema).parquet(landing)
     classes = stateful.incremental_dedup_classes(
         stream.withWatermark("ts", "0 seconds"),
-        fp_col="fp",
-        ts_col="ts",
-        id_col="event_id",
-        carry_col="carry",
-        in_index_col="in_index",
         horizon_ms=24 * 3600 * 1000,  # 1 day
     )
     query = (
