@@ -39,7 +39,7 @@ def asof_join(
     l = left.withColumn("__side", F.lit(1))
     r = right.select(
         F.col(key),
-        F.col("ts").alias("ts"),
+        F.col("ts"),
         F.col("event_id"),
         F.lit(0).alias("__side"),
         F.unix_micros(F.col("ts")).alias("__r_ts"),

@@ -182,7 +182,7 @@ def kmeans_centroids(
     `ivfpq_residual_adc_topk(coarse_centers=...)` to measure what
     Lloyd-refined cells buy residual encoding."""
     e = embeddings.select(
-        F.col("vec_id").alias("vec_id"), _as_double("embedding").alias("v")
+        F.col("vec_id"), _as_double("embedding").alias("v")
     )
     cents = e.filter(F.col("vec_id") < k).select(
         F.col("vec_id").cast("int").alias("cell"), F.col("v").alias("cv")
@@ -229,7 +229,7 @@ def kmeans_refine(
     iterations (here the plan re-reads it, keeping the DAG pure for the
     oracle)."""
     e = embeddings.select(
-        F.col("vec_id").alias("vec_id"), _as_double("embedding").alias("v")
+        F.col("vec_id"), _as_double("embedding").alias("v")
     )
     cents = kmeans_centroids(embeddings, k, iters)
     final = _km_assign(e, cents)
@@ -1118,7 +1118,7 @@ def label_centroids(embeddings: DataFrame) -> DataFrame:
     engines because float summation order differs across partial
     aggregates."""
     expl = embeddings.select(
-        F.col("label").alias("label"),
+        F.col("label"),
         F.posexplode(_as_double("embedding")).alias("dim", "x"),
     )
     return expl.groupBy("label", "dim").agg(
@@ -1588,7 +1588,7 @@ def pq_index_upsert(
         assigned = ivf_assign(
             vectors, id_col="vec_id", vec_col="embedding", centers_row=seed_row
         ).select(
-            F.col("vec_id").alias("vec_id"),
+            F.col("vec_id"),
             F.col("v"),
             F.col("cell").alias("ivf_cell"),
         )
@@ -1609,7 +1609,7 @@ def pq_index_upsert(
         gone = ivf_assign(
             deletes, id_col="vec_id", vec_col="embedding", centers_row=seed_row
         ).select(
-            F.col("vec_id").alias("vec_id"), F.col("cell").alias("ivf_cell")
+            F.col("vec_id"), F.col("cell").alias("ivf_cell")
         )
     touched_df = new_codes.select("ivf_cell")
     if gone is not None:

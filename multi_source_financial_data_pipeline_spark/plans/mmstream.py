@@ -40,7 +40,7 @@ from multi_source_financial_data_pipeline_spark.plans.financial import RSI_N, SQ
 from multi_source_financial_data_pipeline_spark.plans.spec import QuerySpec
 from multi_source_financial_data_pipeline_spark.schemas import TESTDATA
 from multi_source_financial_data_pipeline_spark.session import local_frame, pin_utc, tune_for_session_cores
-from multi_source_financial_data_pipeline_spark.sources import load_table
+from multi_source_financial_data_pipeline_spark.sources import load_table, tables
 from multi_source_financial_data_pipeline_spark.streaming import ingest
 
 N_MEDIA = 240
@@ -859,37 +859,25 @@ _STREAM_STATE_PARTITIONS = 8
 def _event_stream(spark: SparkSession, sf_dir: str):
     """Stream the driver's events parquet: the file source wants a directory,
     so the single file is symlinked into a temp landing dir. The declared
-    stream schema mirrors the file's PHYSICAL timestamp layout (probed with a
-    one-off batch read of the footer — cheap, no data scan) and the yielded
-    frame normalizes to TIMESTAMP: nanos-as-long divides to micros, naive
-    timestamp[us] (read as TIMESTAMP_NTZ) casts under the pinned UTC session
-    tz. Hard-coding either layout silently corrupts event times when the
-    testdata generation changes — r03 lost 4 streaming queries to exactly
-    that. Shuffle partitions are clamped to `_STREAM_STATE_PARTITIONS` for
-    the stream's lifetime (state-store sizing, see above) and restored for
-    subsequent batch plans."""
+    stream schema mirrors the file's PHYSICAL timestamp layout (the
+    `tables.footer_schema` memo) and the yielded frame normalizes to
+    TIMESTAMP as `load_table` does (`tables.timestamp_fixes`). Hard-coding
+    either layout silently corrupts event times when the testdata generation
+    changes — r03 lost 4 streaming queries to exactly that. Shuffle
+    partitions are clamped to `_STREAM_STATE_PARTITIONS` for the stream's
+    lifetime (state-store sizing, see above) and restored for subsequent
+    batch plans."""
     pin_utc(spark)
     tune_for_session_cores(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     clamped = str(min(int(prev), _STREAM_STATE_PARTITIONS))
     events_path = os.path.join(sf_dir, "events.parquet")
-    physical = dict(spark.read.parquet(events_path).dtypes)
-    fields = []
-    fixes = {}
-    for f in TESTDATA["events"].fields:
-        if isinstance(f.dataType, T.TimestampType):
-            phys = physical.get(f.name)
-            if phys == "bigint":
-                fields.append(T.StructField(f.name, T.LongType()))
-                fixes[f.name] = F.expr(f"timestamp_micros({f.name} div 1000)")
-            elif phys == "timestamp_ntz":
-                fields.append(T.StructField(f.name, T.TimestampNTZType()))
-                fixes[f.name] = F.col(f.name).cast("timestamp")
-            else:
-                fields.append(T.StructField(f.name, T.TimestampType()))
-        else:
-            fields.append(T.StructField(f.name, f.dataType))
+    footer = tables.footer_schema(spark, events_path)
+    fixes = tables.timestamp_fixes("events", footer)
+    fields = [
+        T.StructField(f.name, footer[f.name].dataType if f.name in fixes else f.dataType)
+        for f in TESTDATA["events"].fields
+    ]
     try:
         spark.conf.set("spark.sql.shuffle.partitions", clamped)
         with tempfile.TemporaryDirectory() as landing:
@@ -1722,13 +1710,13 @@ SELECT b.* FROM b, wm WHERE (b.bar_epoch + 14400) * 1000 <= wm.wm_ms
 def _embedding_stream(spark: SparkSession, sf_dir: str):
     """File-stream the embeddings parquet (the `_event_stream` pattern
     minus timestamp normalization — the table carries none): single file
-    symlinked into a landing dir, schema probed from the footer, shuffle
-    partitions clamped for the stream's lifetime."""
+    symlinked into a landing dir, schema from the `tables.footer_schema`
+    memo, shuffle partitions clamped for the stream's lifetime."""
     tune_for_session_cores(spark)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     clamped = str(min(int(prev), _STREAM_STATE_PARTITIONS))
     path = os.path.join(sf_dir, "embeddings.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = tables.footer_schema(spark, path)
     try:
         spark.conf.set("spark.sql.shuffle.partitions", clamped)
         with tempfile.TemporaryDirectory() as landing:

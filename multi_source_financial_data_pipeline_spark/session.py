@@ -5,6 +5,17 @@ is used by tests and ``bench.py``. Settings chosen for a 100 TB posture:
 AQE on (runtime join-strategy switches, skew-join splitting, partition
 coalescing), Arrow for any pandas exchange, and a shuffle-partition count
 sized to the cores in use rather than the 200 default.
+
+Generated code: Spark compiles each whole-stage and expression class with
+Janino and keeps it in one JVM-wide LRU cache of
+``spark.sql.codegen.cache.maxEntries`` classes, 100 by default. A pass of the
+engine's repeated work cycles through more classes than that, so the default
+cache evicts every class before the pass comes back to it, and each pass
+compiles, loads and JIT-compiles its whole working set again. ``get_spark``
+sizes the cache to ``CODEGEN_CACHE_ENTRIES``. The conf is static: it holds
+only when set before the session starts, so a session the engine did not
+build (the session a caller hands to ``__spark_entry__``) keeps Spark's
+default.
 """
 
 from __future__ import annotations
@@ -95,6 +106,17 @@ def local_frame(
     return spark.createDataFrame(table, schema)
 
 
+#: Spark's codegen cache size. Distinct classes one warm pass compiles,
+#: counted with ``CodegenMetrics`` under a cache that evicts nothing (4
+#: cores): 133 for the perfbench ``curation_iter`` ops, 180 for one
+#: ``cli.main`` request, 1870 for ``bench.py``'s 131-query headline at
+#: sf0.01. The default 100 made each headline pass recompile about 2700
+#: classes, and each ``curation_iter`` pass 127. Twice
+#: the largest set leaves headroom: Guava's cache evicts per segment, so a
+#: working set near the limit would still be evicted in part.
+CODEGEN_CACHE_ENTRIES = 4096
+
+
 def get_spark(
     app_name: str = "msfdp-spark",
     shuffle_partitions: int | None = None,
@@ -115,6 +137,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
     )

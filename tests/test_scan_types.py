@@ -73,3 +73,28 @@ def test_driver_testdata_ts_is_timestamp(spark, sf_dir):
         df = load_table(spark, sf_dir, name)
         for col, dtype in df.dtypes:
             assert dtype != "timestamp_ntz", f"{name}.{col} leaked NTZ"
+
+
+def test_load_table_reads_each_footer_once(spark, tmp_path):
+    """A second scan of an unchanged file runs no Spark job (its footer
+    schema is memoized per file version), and a file rewritten with another
+    timestamp layout is read back with its new footer."""
+    sc = spark.sparkContext
+    sf_dir = _write_events(tmp_path, pa.timestamp("ns"))
+    load_table(spark, sf_dir, "events")
+    sc.setJobGroup("test_footer_once", "second load_table")
+    try:
+        load_table(spark, sf_dir, "events")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("test_footer_once")) == []
+
+    path = os.path.join(sf_dir, "events.parquet")
+    before = os.stat(path).st_mtime_ns
+    _write_events(tmp_path, pa.timestamp("us"))
+    # a later write: the file's mtime moves on even where the clock is coarse
+    os.utime(path, ns=(before, before + 1_000_000_000))
+    df = load_table(spark, sf_dir, "events")
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    got = sorted(r.us for r in df.select(F.unix_micros("ts").alias("us")).collect())
+    assert got == sorted(_EPOCH_US)
